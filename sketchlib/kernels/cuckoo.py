@@ -645,30 +645,16 @@ class CuckooFilter:
         (the sparse partial format) interchangeably."""
         if not parts:
             raise ValueError("nothing to merge")
-        geo: tuple[int, int] | None = None
-        broken = False
-        all_b: list[np.ndarray] = []
-        all_f: list[np.ndarray] = []
-        for p in parts:
-            if not isinstance(p, CuckooFilter) and is_pairs_blob(bytes(p)):
-                size, fpsize, b, fp = unpack_pairs(bytes(p))
-            else:
-                f = p if isinstance(p, CuckooFilter) else cls.from_bytes(p)
-                size, fpsize = f.nbytes, f.fpsize
-                b, fp = f.extract_pairs(canonical=True)
-                broken = broken or f.broken
-            if geo is None:
-                geo = (size, fpsize)
-            elif geo != (size, fpsize):
-                raise ValueError("merge requires equal (size, fpsize)")
-            all_b.append(np.asarray(b, dtype=np.uint64))
-            all_f.append(np.asarray(fp, dtype=DTYPE[fpsize]))
-        out = cls.create(geo[0], geo[1], seed=seed)
-        bidx = np.concatenate(all_b) if all_b else np.empty(0, dtype=np.uint64)
-        fps = np.concatenate(all_f) if all_f else np.empty(0, dtype=DTYPE[geo[1]])
+        read = [_read_part(p) for p in parts]
+        size, fpsize = read[0][:2]
+        if any(r[:2] != (size, fpsize) for r in read):
+            raise ValueError("merge requires equal (size, fpsize)")
+        out = cls.create(size, fpsize, seed=seed)
+        bidx = np.concatenate([r[2] for r in read])
+        fps = np.concatenate([r[3] for r in read])
         order = np.lexsort((fps, bidx))
         out.add_batch(bidx[order], fps[order], on_toofull=on_toofull)
-        out.broken = broken
+        out.broken = any(r[4] for r in read)
         return out
 
     def merge_into(self, parts: list, on_toofull: str = "raise") -> None:
@@ -686,42 +672,21 @@ class CuckooFilter:
         canonical-sorted order so the fast path itself is deterministic
         for a fixed batch sequence."""
         for p in parts:
-            if not isinstance(p, CuckooFilter) and is_pairs_blob(bytes(p)):
-                size, fpsize, b, fp = unpack_pairs(bytes(p))
-                broken = False
-            else:
-                f = p if isinstance(p, CuckooFilter) else CuckooFilter.from_bytes(bytes(p))
-                size, fpsize = f.nbytes, f.fpsize
-                b, fp = f.extract_pairs(canonical=True)
-                broken = f.broken
+            size, fpsize, b, fp, broken = _read_part(p)
             if (size, fpsize) != (self.nbytes, self.fpsize):
                 raise ValueError("merge_into requires equal (size, fpsize)")
-            b = np.asarray(b, dtype=np.uint64)
-            fp = np.asarray(fp, dtype=DTYPE[fpsize])
             order = np.lexsort((fp, b))
             self.add_batch(b[order], fp[order], on_toofull=on_toofull)
             self.broken = self.broken or broken
 
-    @classmethod
-    def concat_pair_blobs(cls, parts: list) -> bytes:
-        """Intermediate tree-merge stage for sparse partials: concatenate
-        pair multisets WITHOUT building a filter (cheap, associative).
-        Dense inputs are converted by canonical extraction."""
-        geo: tuple[int, int] | None = None
-        all_b: list[np.ndarray] = []
-        all_f: list[np.ndarray] = []
-        for p in parts:
-            blob = bytes(p) if not isinstance(p, CuckooFilter) else None
-            if blob is not None and is_pairs_blob(blob):
-                size, fpsize, b, fp = unpack_pairs(blob)
-            else:
-                f = p if isinstance(p, CuckooFilter) else cls.from_bytes(blob)
-                size, fpsize = f.nbytes, f.fpsize
-                b, fp = f.extract_pairs(canonical=True)
-            if geo is None:
-                geo = (size, fpsize)
-            elif geo != (size, fpsize):
-                raise ValueError("concat requires equal (size, fpsize)")
-            all_b.append(np.asarray(b, dtype=np.uint64))
-            all_f.append(np.asarray(fp, dtype=np.uint32))
-        return pack_pairs(np.concatenate(all_b), np.concatenate(all_f), geo[0], geo[1])
+
+def _read_part(p) -> tuple[int, int, np.ndarray, np.ndarray, bool]:
+    """Any merge input — a filter, a dense blob or a packed pair blob — as
+    ``(size, fpsize, canonical bucket idx, fp, broken)``. Pair blobs come
+    from unbuilt partials, which cannot be broken."""
+    if not isinstance(p, CuckooFilter) and is_pairs_blob(bytes(p)):
+        size, fpsize, bidx, fps = unpack_pairs(bytes(p))
+        return size, fpsize, bidx, fps, False
+    f = p if isinstance(p, CuckooFilter) else CuckooFilter.from_bytes(bytes(p))
+    bidx, fps = f.extract_pairs(canonical=True)
+    return f.nbytes, f.fpsize, bidx.astype(np.uint64), fps, f.broken

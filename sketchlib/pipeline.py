@@ -258,7 +258,6 @@ def checkpointed_build(
     spec,
     key,
     checkpoint_dir: str,
-    fanin: int = 64,
     input_id: str | None = None,
 ) -> DataFrame:
     """Resumable distributed cuckoo build (north_rule requirement).
@@ -315,6 +314,6 @@ def checkpointed_build(
         fresh = build_partials(df, spec, key=key, skip_pids=done or None)
         fresh.write.mode("append").parquet(partials_path)
     all_partials = spark.read.parquet(partials_path).filter(F.col("name") == spec.name)
-    merged = merge_partials(all_partials, fanin=fanin)
+    merged = merge_partials(all_partials)
     merged.write.mode("overwrite").parquet(os.path.join(checkpoint_dir, "merged"))
     return spark.read.parquet(os.path.join(checkpoint_dir, "merged"))

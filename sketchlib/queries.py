@@ -58,7 +58,7 @@ def _build_docs_filter(spark, sf_dir, fpsize: int, num_shards: int = 2):
     n = docs.count()
     # per-SHARD size sized for the FULL count: shards split rows by hash, so
     # each holds ~n/num_shards — sizing every shard for n absorbs any skew
-    # at test scale for a few KiB (size is per shard, like bench.py)
+    # at test scale for a few KiB (size is per shard)
     size = max(size_for(max(n, 1), fpsize), 1024)
     spec = CuckooSpec(name=f"docs-fp{fpsize * 8}", size=size, fpsize=fpsize, num_shards=num_shards)
     merged = build_filter(docs, spec, key=_doc_key())

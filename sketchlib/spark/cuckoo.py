@@ -4,13 +4,14 @@ The Spark-native re-expression of the reference's command surface
 (``/root/reference/src/redis-cuckoofilter.zig:157-183``; SURVEY.md §2.1):
 
 - ``CF.INIT``   → :class:`CuckooSpec` (declares name/size/fpsize/shards)
-- ``CF.ADD``    → :func:`build_partials` — per-input-partition partial
-  filters via Arrow-batched ``mapInPandas`` (NO shuffle for the build; no
-  per-row Python: each Arrow batch is one vectorized kernel call)
-- merge (distributed-only need) → :func:`merge_partials` — fan-in-bounded
-  tree of ``applyInPandas`` stages shuffling only the small partial blobs;
-  canonical merge makes the result byte-identical for ANY tree shape or
-  input partitioning (SURVEY.md §2.3)
+- ``CF.ADD``    → :func:`build_partials` — per-input-partition partials of
+  packed canonical pairs via Arrow-batched ``mapInPandas`` (NO shuffle for
+  the build; no per-row Python: each Arrow batch is one vectorized kernel
+  call)
+- merge (distributed-only need) → :func:`merge_partials` — one lazy
+  ``applyInPandas`` stage per (name, shard) shuffling only the partial
+  blobs; canonical merge makes the result byte-identical for ANY input
+  partitioning or build path (SURVEY.md §2.3)
 - ``CF.CHECK``  → :func:`probe` — merged blobs broadcast once per executor,
   probes answered by a vectorized ``mapInPandas`` (semantically a broadcast
   left-semi join with bounded one-sided false positives)
@@ -29,7 +30,6 @@ broadcast ships each executor only the blob dictionary once.
 
 from __future__ import annotations
 
-import math
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -108,60 +108,37 @@ def build_partials(
     key=None,
     hash_col: str = HASH_COL,
     fp_col: str = FP_COL,
-    deterministic_partials: bool = False,
     skip_pids: set | None = None,
-    partial_format: str = "pairs",
 ) -> DataFrame:
-    """CF.ADD, distributed: one partial filter per (input partition × shard),
-    built shuffle-free with ``mapInPandas`` (Arrow batches → one vectorized
-    ``add_batch`` call each).
+    """CF.ADD, distributed: one partial per (input partition × shard), built
+    shuffle-free with ``mapInPandas`` (Arrow batches → one vectorized
+    ``canonical_pairs`` call each).
 
-    Partial bytes depend on within-partition row order; the canonical merge
-    erases that, so the MERGED filter is invariant. For byte-stable partials
-    under task retry (the reference's replicate-verbatim determinism,
-    redis-cuckoofilter.zig:233), pass ``deterministic_partials=True`` to sort
-    within partitions first.
+    A partial is a packed canonical-pair blob — ~12 bytes/row, NO kicking,
+    no PRNG — so shuffle volume scales with data, never with partitions ×
+    filter size. Its bytes follow within-partition row order; the canonical
+    merge sorts the pairs, so the MERGED filter is invariant.
 
     ``skip_pids`` (checkpoint resume): partitions whose partials already
     exist emit nothing. The skip happens INSIDE this operator so the resumed
     plan is identical to the original — inserting a filter between an
     upstream repartition and this build would change projection pushdown and
     thereby the row→partition assignment of round-robin exchanges.
-
-    ``partial_format``: "pairs" (default) emits packed canonical-pair blobs
-    — ~12 bytes/row, NO kicking, no PRNG; shuffle volume scales with data,
-    never with partitions × filter size (the dense format costs the full
-    filter size per partition × shard, which inverts scaling on large
-    clusters). "dense" emits real per-partition filters (the
-    reference-shaped aggregator, kept for parity tests and for workloads
-    that probe partials directly). Both merge to byte-identical results.
     """
     if key is not None:
         df = with_hash_fp(df, key, hash_col, fp_col)
     sel = df.select(
         F.col(hash_col).cast("long").alias(hash_col), F.col(fp_col).cast("long").alias(fp_col)
     )
-    if deterministic_partials:
-        sel = sel.sortWithinPartitions(hash_col, fp_col)
-    name, size, fpsize, num_shards, seed = (
-        spec.name,
-        spec.size,
-        spec.fpsize,
-        spec.num_shards,
-        spec.seed,
-    )
-
-    use_pairs = partial_format == "pairs"
+    name, size, fpsize, num_shards = spec.name, spec.size, spec.fpsize, spec.num_shards
 
     def build(batches):
         pid = TaskContext.get().partitionId()
         if skip_pids and pid in skip_pids:
             return
-        filters: dict[int, CuckooFilter] = {}
         pairs_b: dict[int, list] = {}
         pairs_f: dict[int, list] = {}
         rows: dict[int, int] = {}
-        dropped: dict[int, int] = {}
         for pdf in batches:
             if pdf.empty:
                 continue
@@ -172,18 +149,10 @@ def build_partials(
                 m = sh == s
                 s = int(s)
                 rows[s] = rows.get(s, 0) + int(m.sum())
-                if use_pairs:
-                    b, fp = canonical_pairs(h[m], f[m], size, fpsize)
-                    pairs_b.setdefault(s, []).append(b)
-                    pairs_f.setdefault(s, []).append(fp.astype(np.uint32))
-                else:
-                    flt = filters.get(s)
-                    if flt is None:
-                        flt = CuckooFilter.create(size, fpsize, seed=stable_seed(name, s, pid, seed))
-                        filters[s] = flt
-                        dropped[s] = 0
-                    dropped[s] += flt.add_batch(h[m], f[m], on_toofull="count")
-        if use_pairs and pairs_b:
+                b, fp = canonical_pairs(h[m], f[m], size, fpsize)
+                pairs_b.setdefault(s, []).append(b)
+                pairs_f.setdefault(s, []).append(fp.astype(np.uint32))
+        if pairs_b:
             shards = sorted(pairs_b)
             yield pd.DataFrame(
                 {
@@ -203,20 +172,6 @@ def build_partials(
                     "dropped": 0,
                 }
             )
-        elif filters:
-            yield pd.DataFrame(
-                {
-                    "name": name,
-                    "shard": list(filters),
-                    "part_id": pid,
-                    "sketch": [flt.to_bytes() for flt in filters.values()],
-                    "fpcount": [flt.fpcount for flt in filters.values()],
-                    "toofull": [flt.is_toofull() for flt in filters.values()],
-                    "broken": [flt.is_broken() for flt in filters.values()],
-                    "rows": [rows[s] for s in filters],
-                    "dropped": [dropped[s] for s in filters],
-                }
-            )
 
     return sel.mapInPandas(build, PARTIAL_SCHEMA)
 
@@ -224,75 +179,47 @@ def build_partials(
 # ----------------------------------------------------------------- merge
 
 
-def _merge_group(key, pdf, final=True):
+def _filter_row(name: str, shard: int, flt: CuckooFilter, rows: int, dropped: int) -> dict:
+    """The PARTIAL_SCHEMA row of one shard's built filter; ``part_id`` is
+    -1 because a built filter spans input partitions."""
+    return {
+        "name": name,
+        "shard": shard,
+        "part_id": -1,
+        "sketch": flt.to_bytes(),
+        "fpcount": flt.fpcount,
+        "toofull": flt.is_toofull(),
+        "broken": flt.is_broken(),
+        "rows": rows,
+        "dropped": dropped,
+    }
+
+
+def _merge_group(key, pdf):
     name, shard = str(key[0]), int(key[1])
-    blobs = [bytes(b) for b in pdf["sketch"]]
-    in_fp = int(pdf["fpcount"].sum())
-    any_broken = bool(pdf["broken"].any())
-    if final:
-        m = CuckooFilter.merge(blobs, seed=stable_seed("merge", name, shard), on_toofull="count")
-        sketch = m.to_bytes()
-        fpcount = m.fpcount
-        toofull, broken = m.is_toofull(), m.is_broken() or any_broken
-        dropped = int(pdf["dropped"].sum()) + (in_fp - m.fpcount)
-    else:
-        # intermediate tree stage: cheap pair concatenation, no filter build
-        sketch = CuckooFilter.concat_pair_blobs(blobs)
-        fpcount = in_fp
-        toofull, broken = bool(pdf["toofull"].any()), any_broken
-        dropped = int(pdf["dropped"].sum())
-    return pd.DataFrame(
-        {
-            "name": [name],
-            "shard": [shard],
-            "part_id": [-1],  # merged rows span partitions
-            "sketch": [sketch],
-            "fpcount": [fpcount],
-            "toofull": [toofull],
-            "broken": [broken],
-            "rows": [int(pdf["rows"].sum())],
-            "dropped": [dropped],
-        }
+    m = CuckooFilter.merge(
+        [bytes(b) for b in pdf["sketch"]], seed=stable_seed("merge", name, shard), on_toofull="count"
     )
+    dropped = int(pdf["dropped"].sum()) + int(pdf["fpcount"].sum()) - m.fpcount
+    return pd.DataFrame([_filter_row(name, shard, m, int(pdf["rows"].sum()), dropped)])
 
 
-def merge_partials(partials: DataFrame, fanin: int = 64) -> DataFrame:
-    """Tree-reduce the partials to one row per (name, shard).
+def merge_partials(partials: DataFrame) -> DataFrame:
+    """One row per (name, shard): a single ``applyInPandas`` stage merges
+    all of a shard's partials canonically. Only partial blobs shuffle.
 
-    Stages with more than ``fanin`` partials per shard are pre-merged in
-    groups (group assignment hashes the blob — arbitrary but deterministic;
-    the canonical merge makes any grouping byte-equivalent), so no single
-    task ever merges more than ``fanin`` blobs. Only partial blobs shuffle.
-
-    Partials are materialized eagerly (localCheckpoint) before the sizing
-    count so the expensive build stage runs exactly once — without this the
-    count action would re-execute the whole upstream build.
+    One stage suffices: pair partials cost ~12 B/key, so a shard's task
+    holds exactly the pairs it re-inserts, and pre-merging them in earlier
+    stages would bound nothing. The result is lazy, like
+    :func:`build_filter_direct`: a caller that acts on it more than once
+    materializes it first.
     """
-    df = partials.localCheckpoint(eager=True)
-    while True:
-        mx = (
-            df.groupBy("name", "shard")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .agg(F.max("c").alias("m"))
-            .first()["m"]
-        )
-        if mx is None or mx <= fanin:
-            break
-        groups = math.ceil(mx / fanin)
-        df = (
-            df.withColumn("_g", F.pmod(F.xxhash64("sketch"), F.lit(groups)))
-            .groupBy("name", "shard", "_g")
-            .applyInPandas(lambda key, pdf: _merge_group(key[:2], pdf, final=False), PARTIAL_SCHEMA)
-        ).localCheckpoint(eager=True)
-    return df.groupBy("name", "shard").applyInPandas(
-        lambda key, pdf: _merge_group(key, pdf, final=True), PARTIAL_SCHEMA
-    )
+    return partials.groupBy("name", "shard").applyInPandas(_merge_group, PARTIAL_SCHEMA)
 
 
 def build_filter(df: DataFrame, spec: CuckooSpec, key=None, **kw) -> DataFrame:
     """build_partials + merge_partials in one call."""
-    fanin = kw.pop("fanin", 64)
-    return merge_partials(build_partials(df, spec, key=key, **kw), fanin=fanin)
+    return merge_partials(build_partials(df, spec, key=key, **kw))
 
 
 def fold_partials_into(prior: DataFrame, partials: DataFrame, spec: CuckooSpec) -> DataFrame:
@@ -306,7 +233,6 @@ def fold_partials_into(prior: DataFrame, partials: DataFrame, spec: CuckooSpec) 
     canonical path (see ``CuckooFilter.merge_into``). ``prior`` may be
     empty (first batch folds into a fresh filter seeded exactly like the
     canonical merge)."""
-    import pandas as pd
 
     def fold(key, pdf: pd.DataFrame) -> pd.DataFrame:
         name, shard = key[0], int(key[1])
@@ -320,19 +246,8 @@ def fold_partials_into(prior: DataFrame, partials: DataFrame, spec: CuckooSpec) 
             )
         expected = flt.fpcount + int(rest["fpcount"].sum())
         flt.merge_into([bytes(b) for b in rest["sketch"]], on_toofull="count")
-        return pd.DataFrame(
-            {
-                "name": [name],
-                "shard": [shard],
-                "part_id": [-1],
-                "sketch": [flt.to_bytes()],
-                "fpcount": [flt.fpcount],
-                "toofull": [flt.is_toofull()],
-                "broken": [flt.is_broken()],
-                "rows": [int(pdf["rows"].sum())],
-                "dropped": [int(pdf["dropped"].sum()) + (expected - flt.fpcount)],
-            }
-        )
+        dropped = int(pdf["dropped"].sum()) + (expected - flt.fpcount)
+        return pd.DataFrame([_filter_row(name, shard, flt, int(pdf["rows"].sum()), dropped)])
 
     tagged = prior.withColumn("_prior", F.lit(True)).unionByName(
         partials.withColumn("_prior", F.lit(False))
@@ -346,7 +261,6 @@ def build_filter_direct(
     key=None,
     hash_col: str = HASH_COL,
     fp_col: str = FP_COL,
-    reduce_partitions: int | None = None,
 ) -> DataFrame:
     """One-shuffle build: repartition the (hash, fp) pairs by shard and build
     each shard's FINAL filter in a single reduce pass — no partial blobs, no
@@ -366,7 +280,7 @@ def build_filter_direct(
     name, size, fpsize, num_shards = spec.name, spec.size, spec.fpsize, spec.num_shards
     sel = df.select(
         F.col(hash_col).cast("long").alias(hash_col), F.col(fp_col).cast("long").alias(fp_col)
-    ).repartition(reduce_partitions or num_shards, _shard_col(hash_col, num_shards))
+    ).repartition(num_shards, _shard_col(hash_col, num_shards))
 
     def reduce_shards(batches):
         hs: dict[int, list] = {}
@@ -390,19 +304,7 @@ def build_filter_direct(
             order = np.lexsort((fp, bidx))
             flt = CuckooFilter.create(size, fpsize, seed=stable_seed("merge", name, s))
             dropped = flt.add_batch(bidx[order], fp[order], on_toofull="count")
-            out.append(
-                {
-                    "name": name,
-                    "shard": s,
-                    "part_id": -1,
-                    "sketch": flt.to_bytes(),
-                    "fpcount": flt.fpcount,
-                    "toofull": flt.is_toofull(),
-                    "broken": flt.is_broken(),
-                    "rows": rows[s],
-                    "dropped": dropped,
-                }
-            )
+            out.append(_filter_row(name, s, flt, rows[s], dropped))
         if out:
             yield pd.DataFrame(out)
 
@@ -485,7 +387,6 @@ def probe(
     hash_col: str = HASH_COL,
     fp_col: str = FP_COL,
     result_col: str = "member",
-    keep_hash_cols: bool = False,
 ) -> DataFrame:
     """CF.CHECK, distributed: broadcast the shard blobs once, answer probes
     with a vectorized ``mapInPandas`` (one kernel call per Arrow batch).
@@ -516,29 +417,21 @@ def probe(
         df = with_hash_fp(df, key, hash_col, fp_col)
     spark = df.sparkSession
     bc = spark.sparkContext.broadcast(sharded.blobs())
-    num_shards = sharded.spec.num_shards
+    spec = sharded.spec
     out_schema = T.StructType(df.schema.fields + [T.StructField(result_col, T.BooleanType())])
 
     def run(batches):
-        flts = {s: CuckooFilter.from_bytes(b) for s, b in bc.value.items()}
+        filters = ShardedCuckoo(spec, {s: CuckooFilter.from_bytes(b) for s, b in bc.value.items()})
         for pdf in batches:
             if pdf.empty:
                 yield pdf.assign(**{result_col: np.empty(0, dtype=bool)})
                 continue
             h = i64_to_u64(pdf[hash_col].to_numpy())
             f = i64_to_u64(pdf[fp_col].to_numpy())
-            hit = np.zeros(len(h), dtype=bool)
-            sh = shard_of(h, num_shards)
-            for s in np.unique(sh):
-                flt = flts.get(int(s))
-                if flt is None:
-                    continue
-                m = sh == s
-                hit[m] = flt.contains_batch(h[m], f[m], raise_broken_on_miss=False)
-            yield pdf.assign(**{result_col: hit})
+            yield pdf.assign(**{result_col: filters.contains_arrays(h, f)})
 
     out = df.mapInPandas(run, out_schema)
-    if had_key and not keep_hash_cols:
+    if had_key:
         out = out.drop(hash_col, fp_col)
     return out
 
@@ -646,8 +539,8 @@ def semi_join_via_filter(
     fingerprints and silently drop items), and the build's drop/too-full
     counters are checked — a dropped fingerprint would be a silent false
     negative, so it raises instead. The merged filter is localCheckpointed
-    before probing (the sizing aggregate and blob collect would otherwise
-    re-execute the build shuffle — the merge_partials precedent).
+    before probing: the build is lazy, and the guard aggregate, the sizing
+    aggregate and the blob collect would each re-execute its shuffle.
     """
     from sketchlib.kernels.cuckoo import TooFullError, size_for
 
@@ -756,19 +649,7 @@ def remove_keys(
                 flt.remove_batch(h[order], f[order])
             except BrokenError:
                 pass  # shard poisoned; flag carried in the row
-        return pd.DataFrame(
-            {
-                "name": [name],
-                "shard": [shard],
-                "part_id": [-1],
-                "sketch": [flt.to_bytes()],
-                "fpcount": [flt.fpcount],
-                "toofull": [flt.is_toofull()],
-                "broken": [flt.is_broken()],
-                "rows": [rows],
-                "dropped": [drop],
-            }
-        )
+        return pd.DataFrame([_filter_row(name, shard, flt, rows, drop)])
 
     return (
         merged.groupby("name", "shard")

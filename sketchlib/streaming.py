@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -35,9 +36,48 @@ from sketchlib.spark.cuckoo import (
 )
 
 
-def incremental_cuckoo_sink(
-    spec: CuckooSpec, key, state_dir: str, fanin: int = 64, mode: str = "canonical"
-):
+def _read_commit(state_dir: str) -> dict | None:
+    """The committed ``epoch.json`` pointer, or None before the first commit."""
+    epoch_path = os.path.join(state_dir, "epoch.json")
+    if not os.path.exists(epoch_path):
+        return None
+    with open(epoch_path) as f:
+        return json.load(f)
+
+
+def _commit_state(
+    state_dir: str, merged: DataFrame, name: str, pointer: dict, prior: dict | None
+) -> None:
+    """Crash-atomic commit of a new filter state: ``merged`` lands in its
+    own ``state_dir/name`` directory, then ``epoch.json`` (``pointer`` plus
+    the new state path) flips via an fsync'd tmp file and ``os.replace``
+    only after the write succeeded.
+
+    GC keeps the new AND the ``prior`` commit's state directory.
+    read_state returns a LAZY DataFrame over the resolved directory —
+    deleting the previous state at commit time would FileNotFound any
+    reader that resolved before this commit and acts after it. One-commit
+    retention gives such readers a full micro-batch interval to act;
+    readers held across MULTIPLE commits must materialize
+    (collect/localCheckpoint) — see read_state."""
+    new_state = os.path.join(state_dir, name)
+    merged.write.mode("overwrite").parquet(new_state)
+    epoch_path = os.path.join(state_dir, "epoch.json")
+    tmp = epoch_path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump({**pointer, "state": new_state}, f)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, epoch_path)
+    keep = {name}
+    if prior is not None:
+        keep.add(os.path.basename(prior["state"]))
+    for d in os.listdir(state_dir):
+        if d.startswith("state_epoch") and d not in keep:
+            shutil.rmtree(os.path.join(state_dir, d), ignore_errors=True)
+
+
+def incremental_cuckoo_sink(spec: CuckooSpec, key, state_dir: str, mode: str = "canonical"):
     """Returns a ``foreachBatch`` function maintaining a merged cuckoo
     filter under ``state_dir`` (one parquet row per shard, current epoch
     resolved via ``epoch.json``; read it back with :func:`read_state`).
@@ -61,19 +101,10 @@ def incremental_cuckoo_sink(
              .foreachBatch(incremental_cuckoo_sink(spec, F.col("url"), dir))
              .start())
     """
-    epoch_path = os.path.join(state_dir, "epoch.json")
-
-    def _commit() -> dict | None:
-        if os.path.exists(epoch_path):
-            with open(epoch_path) as f:
-                return json.load(f)
-        return None
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        import shutil
-
         os.makedirs(state_dir, exist_ok=True)
-        commit = _commit()
+        commit = _read_commit(state_dir)
         if commit is not None and epoch_id <= commit["epoch"]:
             return  # replayed micro-batch: already folded in
         spark = batch_df.sparkSession
@@ -88,30 +119,8 @@ def incremental_cuckoo_sink(
             if commit is not None:
                 prior = spark.read.parquet(commit["state"])
                 partials = prior.unionByName(partials)
-            merged = merge_partials(partials, fanin=fanin)
-        # crash-atomic commit: new state lands in its own directory; the
-        # pointer file flips via os.replace only after the write succeeded
-        new_state = os.path.join(state_dir, f"state_epoch{epoch_id}")
-        merged.write.mode("overwrite").parquet(new_state)
-        tmp = epoch_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"epoch": epoch_id, "state": new_state}, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, epoch_path)
-        # GC: keep the current AND the immediately-previous epoch directory.
-        # read_state returns a LAZY DataFrame over the resolved directory —
-        # deleting the previous epoch at commit time would FileNotFound any
-        # reader that resolved before this commit and acts after it (ADVICE
-        # r2). One-epoch retention gives such readers a full micro-batch
-        # interval to act; readers held across MULTIPLE commits must
-        # materialize (collect/localCheckpoint) — see read_state.
-        keep = {os.path.basename(new_state)}
-        if commit is not None:
-            keep.add(os.path.basename(commit["state"]))
-        for d in os.listdir(state_dir):
-            if d.startswith("state_epoch") and d not in keep:
-                shutil.rmtree(os.path.join(state_dir, d), ignore_errors=True)
+            merged = merge_partials(partials)
+        _commit_state(state_dir, merged, f"state_epoch{epoch_id}", {"epoch": epoch_id}, commit)
 
     return sink
 
@@ -130,9 +139,7 @@ def read_state(spark, state_dir: str) -> DataFrame:
         return spark.read.parquet(json.load(f)["state"])
 
 
-def incremental_paragraph_dedup_sink(
-    spec: CuckooSpec, state_dir: str, out_dir: str, fanin: int = 64
-):
+def incremental_paragraph_dedup_sink(spec: CuckooSpec, state_dir: str, out_dir: str):
     """``foreachBatch`` sink: Dolma-style corpus-wide paragraph dedup
     over a CONTINUOUS document stream — the crawl-ingestion shape, where
     "the corpus" is every batch seen so far. The accumulated dedup state
@@ -168,22 +175,15 @@ def incremental_paragraph_dedup_sink(
     every batch would skip as a "replay" — the sink emits a loud
     RuntimeWarning for that signature (epoch strictly below the
     committed one) instead of dropping data silently."""
-    import shutil
-
     from pyspark.sql import Window
 
     from sketchlib.dedup import paragraph_table
     from sketchlib.spark.cuckoo import ShardedCuckoo, probe
 
-    epoch_path = os.path.join(state_dir, "epoch.json")
-
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         os.makedirs(state_dir, exist_ok=True)
         os.makedirs(out_dir, exist_ok=True)
-        commit = None
-        if os.path.exists(epoch_path):
-            with open(epoch_path) as f:
-                commit = json.load(f)
+        commit = _read_commit(state_dir)
         if commit is not None and epoch_id <= commit["epoch"]:
             if epoch_id < commit["epoch"]:
                 # a genuine same-checkpoint replay only re-delivers the
@@ -238,20 +238,7 @@ def incremental_paragraph_dedup_sink(
         if prior is None:
             prior = spark.createDataFrame([], partials.schema)
         merged = fold_partials_into(prior, partials, spec)
-        new_state = os.path.join(state_dir, f"state_epoch{epoch_id}")
-        merged.write.mode("overwrite").parquet(new_state)
-        tmp = epoch_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"epoch": epoch_id, "state": new_state}, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, epoch_path)
-        keep_dirs = {os.path.basename(new_state)}
-        if commit is not None:
-            keep_dirs.add(os.path.basename(commit["state"]))
-        for d in os.listdir(state_dir):
-            if d.startswith("state_epoch") and d not in keep_dirs:
-                shutil.rmtree(os.path.join(state_dir, d), ignore_errors=True)
+        _commit_state(state_dir, merged, f"state_epoch{epoch_id}", {"epoch": epoch_id}, commit)
 
     return sink
 
@@ -274,13 +261,10 @@ def retract_paragraphs_from_state(
     distinct paragraph classes removed. Commits crash-atomically under a
     retract-suffixed state directory; the epoch counter is untouched, so
     the stream's replay guard is unaffected."""
-    import shutil
-
     from sketchlib.dedup import paragraph_table
     from sketchlib.spark.cuckoo import remove_keys
 
-    epoch_path = os.path.join(state_dir, "epoch.json")
-    with open(epoch_path) as f:
+    with open(os.path.join(state_dir, "epoch.json")) as f:
         commit = json.load(f)
     spark = kept_docs.sparkSession
     prior = spark.read.parquet(commit["state"])
@@ -293,20 +277,13 @@ def retract_paragraphs_from_state(
     n = norms.count()
     merged = remove_keys(prior, norms, spec, key=F.col("__norm"))
     k = int(commit.get("retracts", 0)) + 1
-    new_state = os.path.join(state_dir, f"state_epoch{commit['epoch']}r{k}")
-    merged.write.mode("overwrite").parquet(new_state)
-    tmp = epoch_path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(
-            {"epoch": commit["epoch"], "retracts": k, "state": new_state}, f
-        )
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, epoch_path)
-    keep_dirs = {os.path.basename(new_state), os.path.basename(commit["state"])}
-    for d in os.listdir(state_dir):
-        if d.startswith("state_epoch") and d not in keep_dirs:
-            shutil.rmtree(os.path.join(state_dir, d), ignore_errors=True)
+    _commit_state(
+        state_dir,
+        merged,
+        f"state_epoch{commit['epoch']}r{k}",
+        {"epoch": commit["epoch"], "retracts": k},
+        commit,
+    )
     return n
 
 

@@ -489,9 +489,9 @@ def pack_sequences(
     # partitions, so spark_partition_id() assignment is guaranteed
     # identical between the totals collect and the final projection (a
     # cache could evict and recompute under pressure — correctness here
-    # depends on stable pids), truncates lineage like merge_partials, and
-    # is released when the DataFrame is GC'd instead of living in the
-    # cache for the session lifetime. The range-shuffle plan shape is
+    # depends on stable pids), truncates lineage, and is released when
+    # the DataFrame is GC'd instead of living in the cache for the
+    # session lifetime. The range-shuffle plan shape is
     # asserted on _pack_layout (the checkpoint hides it from explain).
     d = _pack_layout(d, id_col).localCheckpoint(eager=True)
     w = (

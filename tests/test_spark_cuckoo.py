@@ -72,19 +72,17 @@ def test_build_probe_remove_end_to_end(spark, docs, num_shards):
 
 
 def test_merged_blob_partition_invariant(spark, docs):
-    """Same input at different partition counts and merge fan-ins must give
-    a byte-identical merged filter (SURVEY.md §2.3)."""
+    """Same input at different partition counts must give a byte-identical
+    merged filter (SURVEY.md §2.3)."""
     spec = CuckooSpec(name="inv", size=size_for(2000, 2), fpsize=2, num_shards=2)
 
-    def blob_set(df, fanin):
-        merged = merge_partials(
-            build_partials(df, spec, key=F.col("doc_id").cast("string")), fanin=fanin
-        )
+    def blob_set(df):
+        merged = merge_partials(build_partials(df, spec, key=F.col("doc_id").cast("string")))
         return {(r["shard"]): bytes(r["sketch"]) for r in merged.collect()}
 
-    a = blob_set(docs.repartition(2), fanin=64)
-    b = blob_set(docs.repartition(7), fanin=64)
-    c = blob_set(docs.repartition(13), fanin=2)  # forces multi-stage tree
+    a = blob_set(docs.repartition(2))
+    b = blob_set(docs.repartition(7))
+    c = blob_set(docs.repartition(80))  # > 64 partials per shard in one merge task
     assert a == b == c
     # and equals a single-process kernel build over the same keys
     rows = with_hash_fp(docs, F.col("doc_id").cast("string")).select(
@@ -109,20 +107,19 @@ def test_merged_blob_partition_invariant(spark, docs):
 
 
 def test_pairs_and_dense_partials_merge_identically(spark, docs):
-    """The sparse (canonical-pair) and dense partial formats must produce
-    byte-identical merged filters — they feed the same canonical multiset."""
+    """Pair partials and a merged (dense) filter fed back as a partial must
+    merge to byte-identical filters — they carry the same canonical
+    multiset, so re-canonicalizing a merged state is a no-op."""
     spec = CuckooSpec(name="fmt", size=size_for(2000, 2), fpsize=2, num_shards=2)
     key = F.col("doc_id").cast("string")
 
-    def blobs(fmt, fanin=64):
-        m = merge_partials(
-            build_partials(docs.repartition(5), spec, key=key, partial_format=fmt), fanin=fanin
-        )
-        return {r["shard"]: bytes(r["sketch"]) for r in m.collect()}
+    def blobs(df):
+        return {r["shard"]: bytes(r["sketch"]) for r in df.collect()}
 
-    assert blobs("pairs") == blobs("dense") == blobs("pairs", fanin=2)
+    p = build_partials(docs.repartition(5), spec, key=key).localCheckpoint(eager=True)
+    merged = merge_partials(p).localCheckpoint(eager=True)
+    assert blobs(merge_partials(merged)) == blobs(merged)
     # pairs partials are small: ~12B/row, not the filter size
-    p = build_partials(docs.repartition(5), spec, key=key, partial_format="pairs")
     sizes = [(r["rows"], len(bytes(r["sketch"]))) for r in p.collect()]
     for rows, nbytes in sizes:
         assert nbytes <= 12 * rows + 64
@@ -143,6 +140,28 @@ def test_direct_build_matches_tree_merge(spark, docs):
     assert direct == tree
     sc = ShardedCuckoo.from_df(build_filter_direct(docs, spec, key=key), spec)
     assert sc.count() == docs.count()
+
+
+def test_merge_partials_is_lazy(spark, docs):
+    """merge_partials over checkpointed partials starts no Spark job; one
+    action on its result gives the direct build's filter."""
+    from sketchlib.spark.cuckoo import build_filter_direct
+
+    spec = CuckooSpec(name="lazy", size=size_for(2000, 2), fpsize=2, num_shards=4)
+    key = F.col("doc_id").cast("string")
+    parts = build_partials(docs.repartition(7), spec, key=key).localCheckpoint(eager=True)
+    sc = spark.sparkContext
+    group = "test_merge_partials_is_lazy"
+    sc.setJobGroup(group, "merge_partials")
+    try:
+        merged = merge_partials(parts)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        lazy = ShardedCuckoo.from_df(merged, spec)
+        assert list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    direct = ShardedCuckoo.from_df(build_filter_direct(docs, spec, key=key), spec)
+    assert lazy.digest() == direct.digest()
 
 
 def test_remove_nonmember_poisons_shard(spark, docs):
