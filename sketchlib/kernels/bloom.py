@@ -16,6 +16,7 @@ import struct
 import numpy as np
 
 from sketchlib.kernels.bitutil import mix_u64
+from sketchlib.kernels.fold import FoldMerge
 
 _MAGIC = b"SKBL"
 _HEADER = struct.Struct("<4sHHIQQ")  # magic, version, k, reserved, m_bits, count
@@ -29,7 +30,7 @@ def optimal_params(n: int, fp_rate: float) -> tuple[int, int]:
     return m_bits, min(k, 30)
 
 
-class BloomFilter:
+class BloomFilter(FoldMerge):
     __slots__ = ("m_bits", "k", "words", "count")
 
     def __init__(self, m_bits: int, k: int):
@@ -87,10 +88,5 @@ class BloomFilter:
         out.count = count
         return out
 
-    @classmethod
-    def merge(cls, parts: list) -> "BloomFilter":
-        filters = [p if isinstance(p, cls) else cls.from_bytes(p) for p in parts]
-        out = cls(filters[0].m_bits, filters[0].k)
-        for f in filters:
-            out.merge_with(f)
-        return out
+    def _empty_like(self) -> "BloomFilter":
+        return BloomFilter(self.m_bits, self.k)

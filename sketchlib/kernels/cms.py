@@ -14,6 +14,7 @@ import struct
 import numpy as np
 
 from sketchlib.kernels.bitutil import mix_u64
+from sketchlib.kernels.fold import FoldMerge
 
 _MAGIC = b"SKCM"
 _HEADER = struct.Struct("<4sHHIQQ")  # magic, version, d, reserved, w, total
@@ -26,7 +27,7 @@ def params_for(eps: float, delta: float) -> tuple[int, int]:
     return w, d
 
 
-class CountMinSketch:
+class CountMinSketch(FoldMerge):
     __slots__ = ("d", "w", "counters", "total")
 
     def __init__(self, w: int = 2048, d: int = 5):
@@ -83,10 +84,5 @@ class CountMinSketch:
         out.total = total
         return out
 
-    @classmethod
-    def merge(cls, parts: list) -> "CountMinSketch":
-        filters = [p if isinstance(p, cls) else cls.from_bytes(p) for p in parts]
-        out = cls(filters[0].w, filters[0].d)
-        for f in filters:
-            out.merge_with(f)
-        return out
+    def _empty_like(self) -> "CountMinSketch":
+        return CountMinSketch(self.w, self.d)

@@ -16,6 +16,7 @@ import struct
 import numpy as np
 
 from sketchlib.kernels.bitutil import bit_length_u64
+from sketchlib.kernels.fold import FoldMerge
 
 _MAGIC = b"SKHL"
 _HEADER = struct.Struct("<4sHBBQ")  # magic, version, p, reserved, count
@@ -31,7 +32,7 @@ def _alpha(m: int) -> float:
     return 0.7213 / (1 + 1.079 / m)
 
 
-class HyperLogLog:
+class HyperLogLog(FoldMerge):
     __slots__ = ("p", "registers", "count")
 
     def __init__(self, p: int = 14):
@@ -85,10 +86,5 @@ class HyperLogLog:
         out.count = count
         return out
 
-    @classmethod
-    def merge(cls, parts: list) -> "HyperLogLog":
-        filters = [p if isinstance(p, cls) else cls.from_bytes(p) for p in parts]
-        out = cls(filters[0].p)
-        for f in filters:
-            out.merge_with(f)
-        return out
+    def _empty_like(self) -> "HyperLogLog":
+        return HyperLogLog(self.p)

@@ -19,13 +19,14 @@ import struct
 
 import numpy as np
 
+from sketchlib.kernels.fold import FoldMerge
 from sketchlib.kernels.prng import Xoroshiro128Plus
 
 _MAGIC = b"SKKL"
 _HEADER = struct.Struct("<4sHHIQQQQ")  # magic, ver, k, nlevels, count, s0, s1, reserved
 
 
-class KLLSketch:
+class KLLSketch(FoldMerge):
     __slots__ = ("k", "levels", "count", "prng")
 
     def __init__(self, k: int = 256, seed: int = 42):
@@ -132,11 +133,6 @@ class KLLSketch:
             out.levels = [np.empty(0, dtype=np.float64)]
         return out
 
-    @classmethod
-    def merge(cls, parts: list) -> "KLLSketch":
-        sk = [p if isinstance(p, cls) else cls.from_bytes(p) for p in parts]
-        out = cls(sk[0].k)
-        out.prng = Xoroshiro128Plus(seed=42)
-        for s in sk:
-            out.merge_with(s)
-        return out
+    def _empty_like(self) -> "KLLSketch":
+        # every merge compacts with the same fixed PRNG, whatever the parts
+        return KLLSketch(self.k, seed=42)

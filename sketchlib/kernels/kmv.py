@@ -25,12 +25,14 @@ import struct
 
 import numpy as np
 
+from sketchlib.kernels.fold import FoldMerge
+
 _MAGIC = b"SKKM"
 _HEADER = struct.Struct("<4sHHIQ")  # magic, version, reserved, k, count
 _U64_SPAN = float(1 << 64)
 
 
-class KMVSketch:
+class KMVSketch(FoldMerge):
     __slots__ = ("k", "mins", "count")
 
     def __init__(self, k: int = 1024):
@@ -131,10 +133,5 @@ class KMVSketch:
         out.count = count
         return out
 
-    @classmethod
-    def merge(cls, parts: list) -> "KMVSketch":
-        sketches = [p if isinstance(p, cls) else cls.from_bytes(p) for p in parts]
-        out = cls(sketches[0].k)
-        for s in sketches:
-            out.merge_with(s)
-        return out
+    def _empty_like(self) -> "KMVSketch":
+        return KMVSketch(self.k)

@@ -13,11 +13,13 @@ import struct
 
 import numpy as np
 
+from sketchlib.kernels.fold import FoldMerge
+
 _MAGIC = b"SKTD"
 _HEADER = struct.Struct("<4sHHIQdd")  # magic, ver, delta, ncentroids, count, min, max
 
 
-class TDigest:
+class TDigest(FoldMerge):
     __slots__ = ("delta", "means", "weights", "count", "vmin", "vmax", "_buf")
 
     def __init__(self, delta: int = 200):
@@ -142,10 +144,5 @@ class TDigest:
         out.weights = np.frombuffer(blob, dtype=np.float64, count=nc, offset=off + 8 * nc).copy()
         return out
 
-    @classmethod
-    def merge(cls, parts: list) -> "TDigest":
-        sk = [p if isinstance(p, cls) else cls.from_bytes(p) for p in parts]
-        out = cls(sk[0].delta)
-        for s in sk:
-            out.merge_with(s)
-        return out
+    def _empty_like(self) -> "TDigest":
+        return TDigest(self.delta)

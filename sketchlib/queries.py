@@ -778,7 +778,7 @@ def sketch_semi_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: tools/check_oracles.py (which runs ALL entries) and pytest, and
 #: cf_membership_inserted additionally stays smoke-checked via entry().
 _GATE_FRONT = [
-    # r8 rotation (mechanically planned by tools/gate_rotation.py; VERDICT
+    # r8 rotation (planned from the per-round driver greens; VERDICT
     # r7 #1). Arithmetic before consolidation: 100 entries, must-front
     # EXACTLY 50 (6 r5-deferred + 44 r6-greens) — zero slack for the
     # round's 3 new entries. The VERDICT r7 #2 consolidation is therefore

@@ -2,10 +2,12 @@
 
 One shape for every sibling sketch (SURVEY.md §2.6 "aggregations"): build
 one partial per input partition with ``mapInPandas`` (zero shuffle, Arrow
-batches → vectorized kernel updates), then tree-merge the partial blobs with
-fan-in-bounded ``applyInPandas`` stages. Bloom/HLL/CMS merges (OR/max/add)
-are byte-deterministic under any order or partitioning; KLL/t-digest are
-estimate-stable within their published error.
+batches → vectorized kernel updates), then merge the partial blobs in one
+lazy ``applyInPandas`` stage keyed by sketch. That merge task holds one
+partial per non-empty input partition; a caller with very many input
+partitions bounds it by coalescing the input. Bloom/HLL/CMS/KMV merges
+(OR/max/add/union) are byte-deterministic under any order or partitioning;
+KLL/t-digest are estimate-stable within their published error.
 
 Built-in cross-checks at query level: ``approx_count_distinct`` (Spark's
 HLL++) and ``percentile_approx`` — our sketches must agree with the exact
@@ -14,7 +16,6 @@ oracle within bound wherever those do.
 
 from __future__ import annotations
 
-import math
 from dataclasses import dataclass
 
 import numpy as np
@@ -86,7 +87,7 @@ class SketchSpec:
     def mode(self) -> str:
         return _KINDS[self.kind][2]
 
-    def merge_blobs(self, blobs: list):
+    def merge_blobs(self, blobs):
         return _KINDS[self.kind][1](blobs)
 
 
@@ -129,46 +130,36 @@ def build_sketch_partials(df: DataFrame, spec: SketchSpec, col, col_is_hash: boo
     return sel.mapInPandas(build, SKETCH_SCHEMA)
 
 
-def merge_sketch_partials(partials: DataFrame, spec: SketchSpec, fanin: int = 64) -> DataFrame:
-    """Tree-reduce to one row per (name, kind); only blobs shuffle."""
+def _merge_by(df: DataFrame, spec: SketchSpec, keys: list, estimate=None) -> DataFrame:
+    """One ``applyInPandas`` stage over the string columns ``keys``: fold
+    each group's blobs into one sketch, decoding one blob at a time, and
+    emit one row per group — the keys, the merged ``sketch`` (or
+    ``estimate(sketch)`` as a double column ``estimate``) and summed
+    ``rows``."""
+    out_col, out_type = ("sketch", "binary") if estimate is None else ("estimate", "double")
+    schema = ", ".join([f"{k} string" for k in keys] + [f"{out_col} {out_type}", "rows long"])
 
     def mrg(key, pdf):
-        m = spec.merge_blobs([bytes(b) for b in pdf["sketch"]])
-        return pd.DataFrame(
-            {
-                "name": [str(key[0])],
-                "kind": [str(key[1])],
-                "sketch": [m.to_bytes()],
-                "rows": [int(pdf["rows"].sum())],
-            }
-        )
+        m = spec.merge_blobs(bytes(b) for b in pdf["sketch"])
+        out = {k: [v] for k, v in zip(keys, key)}
+        out[out_col] = [m.to_bytes() if estimate is None else float(estimate(m))]
+        out["rows"] = [int(pdf["rows"].sum())]
+        return pd.DataFrame(out)
 
-    # eager materialization: the sizing count must not re-run the build
-    df = partials.localCheckpoint(eager=True)
-    while True:
-        mx = (
-            df.groupBy("name", "kind")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .agg(F.max("c").alias("m"))
-            .first()["m"]
-        )
-        if mx is None or mx <= fanin:
-            break
-        groups = math.ceil(mx / fanin)
-        df = (
-            df.withColumn("_g", F.pmod(F.xxhash64("sketch"), F.lit(groups)))
-            .groupBy("name", "kind", "_g")
-            .applyInPandas(lambda key, pdf: mrg(key[:2], pdf), SKETCH_SCHEMA)
-        ).localCheckpoint(eager=True)
-    return df.groupBy("name", "kind").applyInPandas(mrg, SKETCH_SCHEMA)
+    return df.groupBy(*keys).applyInPandas(mrg, schema)
 
 
-def build_sketch(df: DataFrame, spec: SketchSpec, col, col_is_hash: bool = False, fanin: int = 64):
+def merge_sketch_partials(partials: DataFrame, spec: SketchSpec) -> DataFrame:
+    """One row per (name, kind), from one lazy stage in which only the
+    blobs shuffle. The merge task holds one partial per non-empty input
+    partition; callers with very many input partitions coalesce first."""
+    return _merge_by(partials, spec, ["name", "kind"])
+
+
+def build_sketch(df: DataFrame, spec: SketchSpec, col, col_is_hash: bool = False):
     """build + merge + collect: returns the kernel object on the driver."""
-    merged = merge_sketch_partials(
-        build_sketch_partials(df, spec, col, col_is_hash=col_is_hash), spec, fanin=fanin
-    )
-    rows = merged.collect()
+    partials = build_sketch_partials(df, spec, col, col_is_hash=col_is_hash)
+    rows = merge_sketch_partials(partials, spec).collect()
     if not rows:
         return spec.make(0)
     assert len(rows) == 1
@@ -217,14 +208,7 @@ def build_sketch_grouped(
         return pd.DataFrame({group_col: [key[0]], "sketch": [sk.to_bytes()], "rows": [len(pdf)]})
 
     partials = sel.groupBy(group_col, "_salt").applyInPandas(build, partial_schema)
-
-    def mrg(key, pdf):
-        m = spec.merge_blobs([bytes(b) for b in pdf["sketch"]])
-        return pd.DataFrame(
-            {group_col: [key[0]], "sketch": [m.to_bytes()], "rows": [int(pdf["rows"].sum())]}
-        )
-
-    return partials.groupBy(group_col).applyInPandas(mrg, partial_schema)
+    return _merge_by(partials, spec, [group_col])
 
 
 def grouped_estimates(grouped: DataFrame, spec: SketchSpec, group_col: str) -> DataFrame:
@@ -232,23 +216,16 @@ def grouped_estimates(grouped: DataFrame, spec: SketchSpec, group_col: str) -> D
     cardinality; CMS/bloom → count; KLL/t-digest → median)."""
     kind = spec.kind
 
-    def est(key, pdf):
-        m = spec.merge_blobs([bytes(b) for b in pdf["sketch"]])
+    def est(m):
         if kind in ("hll", "kmv"):
-            v = m.estimate()
-        elif kind in ("cms",):
-            v = float(m.total)
-        elif kind == "bloom":
-            v = float(m.approx_count_distinct())
-        else:
-            v = m.quantile(0.5)
-        return pd.DataFrame(
-            {group_col: [key[0]], "estimate": [float(v)], "rows": [int(pdf["rows"].sum())]}
-        )
+            return m.estimate()
+        if kind == "cms":
+            return m.total
+        if kind == "bloom":
+            return m.approx_count_distinct()
+        return m.quantile(0.5)
 
-    return grouped.groupBy(group_col).applyInPandas(
-        est, f"{group_col} string, estimate double, rows long"
-    )
+    return _merge_by(grouped, spec, [group_col], estimate=est)
 
 
 def bloom_probe(df: DataFrame, bloom: BloomFilter, key, result_col: str = "member") -> DataFrame:

@@ -1,8 +1,8 @@
 """SparkSession factory tuned for sketchlib workloads.
 
 Local mode is a stand-in for a multi-executor cluster (SURVEY.md §7.3 #6):
-partition counts model executors; all scale-sensitive logic (tree-merge
-fan-in, sharding, salting) is exercised through partitioning.
+partition counts model executors; all scale-sensitive logic (partials per
+merge, sharding, salting) is exercised through partitioning.
 """
 
 from __future__ import annotations

@@ -37,14 +37,35 @@ def test_merge_partition_invariant_bytes(spark, events, kind, params, col):
     """OR/max/add merges: byte-identical merged blob at any partitioning."""
     spec = SketchSpec(f"inv-{kind}", kind, params)
 
-    def blob(df, fanin=64):
-        m = merge_sketch_partials(build_sketch_partials(df, spec, col), spec, fanin=fanin)
+    def blob(df):
+        m = merge_sketch_partials(build_sketch_partials(df, spec, col), spec)
         return bytes(m.first()["sketch"])
 
     a = blob(events.repartition(2))
     b = blob(events.repartition(9))
-    c = blob(events.repartition(13), fanin=2)  # multi-stage tree
+    c = blob(events.repartition(80))  # more than 64 partials in one merge
     assert a == b == c
+
+
+def test_merge_sketch_partials_is_lazy(spark, events):
+    """merge_sketch_partials over checkpointed partials starts no Spark job;
+    one action on its result gives one row with the 2-partition blob."""
+    spec = SketchSpec("lazy-hll", "hll", (12,))
+    parts = build_sketch_partials(events.repartition(7), spec, "user_id")
+    parts = parts.localCheckpoint(eager=True)
+    sc = spark.sparkContext
+    group = "test_merge_sketch_partials_is_lazy"
+    sc.setJobGroup(group, "merge_sketch_partials")
+    try:
+        merged = merge_sketch_partials(parts, spec)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        rows = merged.collect()
+        assert list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(rows) == 1
+    ref = merge_sketch_partials(build_sketch_partials(events.repartition(2), spec, "user_id"), spec)
+    assert bytes(rows[0]["sketch"]) == bytes(ref.first()["sketch"])
 
 
 def test_hll_vs_exact_distinct(spark, events):

@@ -1,7 +1,7 @@
 """Physical-plan evidence: prints `.explain("formatted")` for the core
 operators and checks the scale-critical properties (column pruning to the
-key, broadcast where expected, no stray shuffles). Output is reviewed into
-PLANS.md per round.
+key, broadcast where expected, no stray shuffles). A failed check raises, so
+the script exits non-zero.
 
 Usage: python tools/explain_plans.py [sf_dir]
 """
@@ -19,7 +19,13 @@ def main():
     from pyspark.sql import functions as F
 
     from sketchlib.kernels.cuckoo import size_for
-    from sketchlib.spark.cuckoo import CuckooSpec, build_filter_direct, build_partials
+    from sketchlib.spark.agg import SketchSpec, build_sketch_partials, merge_sketch_partials
+    from sketchlib.spark.cuckoo import (
+        CuckooSpec,
+        build_filter_direct,
+        build_partials,
+        merge_partials,
+    )
     from sketchlib.spark.session import get_spark
 
     spark = get_spark(app="plans", cores=4, shuffle_partitions=8)
@@ -47,6 +53,21 @@ def main():
     show(
         "cuckoo direct build (single shuffle on shard)",
         build_filter_direct(docs, spec, key=key),
+        checks=[
+            ("scan reads only doc_id", lambda p: "ReadSchema: struct<doc_id:bigint>" in p),
+            ("exactly one exchange", lambda p: p.count("Exchange hashpartitioning") == 1),
+        ],
+    )
+    # both partial merges are one lazy stage: a fan-in tree would add exchanges
+    show(
+        "cuckoo merge of partials (one per-shard stage)",
+        merge_partials(build_partials(docs, spec, key=key)),
+        checks=[("exactly one exchange", lambda p: p.count("Exchange hashpartitioning") == 1)],
+    )
+    hll_spec = SketchSpec("plans-hll", "hll", (12,))
+    show(
+        "sibling sketch merge of partials (one stage, key-pruned scan)",
+        merge_sketch_partials(build_sketch_partials(docs, hll_spec, key), hll_spec),
         checks=[
             ("scan reads only doc_id", lambda p: "ReadSchema: struct<doc_id:bigint>" in p),
             ("exactly one exchange", lambda p: p.count("Exchange hashpartitioning") == 1),
