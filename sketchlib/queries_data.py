@@ -1450,7 +1450,7 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     "FROM documents WHERE lang IS NOT NULL GROUP BY lang",
 )
 def hll_distinct_docs_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grouped sketches: one HLL per language (skew-safe two-phase build),
+    """Grouped sketches: one HLL per language (map-side partials, one merge),
     each estimate checked against the exact per-group distinct count."""
     import numpy as np
 
@@ -1480,9 +1480,9 @@ def hll_distinct_docs_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     "WHERE isfinite(value) AND event_type IS NOT NULL GROUP BY event_type",
 )
 def tdigest_median_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grouped quantile sketches: one t-digest per event_type (skew-safe
-    two-phase build), each median estimate rank-checked against the exact
-    per-group distribution in a single pass (|rank − 0.5| ≤ 0.02)."""
+    """Grouped quantile sketches: one t-digest per event_type (map-side
+    partials, one merge), each median estimate rank-checked against the
+    exact per-group distribution in a single pass (|rank − 0.5| ≤ 0.02)."""
     from sketchlib.queries import _events
     from sketchlib.spark.agg import (
         SketchSpec,

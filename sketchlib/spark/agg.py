@@ -1,13 +1,16 @@
 """Generic mergeable-sketch aggregation over DataFrames.
 
 One shape for every sibling sketch (SURVEY.md §2.6 "aggregations"): build
-one partial per input partition with ``mapInPandas`` (zero shuffle, Arrow
-batches → vectorized kernel updates), then merge the partial blobs in one
-lazy ``applyInPandas`` stage keyed by sketch. That merge task holds one
-partial per non-empty input partition; a caller with very many input
-partitions bounds it by coalescing the input. Bloom/HLL/CMS/KMV merges
-(OR/max/add/union) are byte-deterministic under any order or partitioning;
-KLL/t-digest are estimate-stable within their published error.
+partials map-side with one ``mapInPandas`` pass (zero shuffle, Arrow
+batches → vectorized kernel updates) — one per input partition, or one
+per group value in each input partition for grouped sketches — then merge
+the partial blobs in one lazy ``applyInPandas`` stage keyed by sketch or
+group. Only blobs shuffle, never rows, so a hot group needs no special
+handling. A merge task holds one partial per non-empty input partition; a
+caller with very many input partitions bounds it by coalescing the input.
+Bloom/HLL/CMS/KMV merges (OR/max/add/union) are byte-deterministic under
+any order or partitioning; KLL/t-digest are estimate-stable within their
+published error.
 
 Built-in cross-checks at query level: ``approx_count_distinct`` (Spark's
 HLL++) and ``percentile_approx`` — our sketches must agree with the exact
@@ -32,8 +35,6 @@ from sketchlib.kernels.kmv import KMVSketch
 from sketchlib.kernels.tdigest import TDigest
 from sketchlib.util import i64_to_u64, stable_seed
 
-SKETCH_SCHEMA = "name string, kind string, sketch binary, rows long"
-
 _HASH_COL = "__sk_hash"
 _VAL_COL = "__sk_val"
 
@@ -50,14 +51,14 @@ def finite_values(col):
     c = (F.col(col) if isinstance(col, str) else col).cast("double")
     return c.isNotNull() & ~F.isnan(c) & (c >= -DBL_MAX) & (c <= DBL_MAX)
 
-#: kind -> (factory(params, seed), merge_from_blobs, input mode)
+#: kind -> (sketch class, input mode); of these only KLL takes a seed
 _KINDS = {
-    "bloom": (lambda p, s: BloomFilter(*p), BloomFilter.merge, "hash"),
-    "hll": (lambda p, s: HyperLogLog(*p), HyperLogLog.merge, "hash"),
-    "cms": (lambda p, s: CountMinSketch(*p), CountMinSketch.merge, "hash"),
-    "kll": (lambda p, s: KLLSketch(*p, seed=s), KLLSketch.merge, "value"),
-    "kmv": (lambda p, s: KMVSketch(*p), KMVSketch.merge, "hash"),
-    "tdigest": (lambda p, s: TDigest(*p), TDigest.merge, "value"),
+    "bloom": (BloomFilter, "hash"),
+    "hll": (HyperLogLog, "hash"),
+    "cms": (CountMinSketch, "hash"),
+    "kll": (KLLSketch, "value"),
+    "kmv": (KMVSketch, "hash"),
+    "tdigest": (TDigest, "value"),
 }
 
 
@@ -80,54 +81,72 @@ class SketchSpec:
         self.make(0)  # validate params eagerly
 
     def make(self, partition_id: int):
-        factory, _, _ = _KINDS[self.kind]
-        return factory(self.params, stable_seed(self.name, self.kind, partition_id, self.seed))
+        cls = _KINDS[self.kind][0]
+        if cls is KLLSketch:
+            return cls(*self.params, seed=stable_seed(self.name, self.kind, partition_id, self.seed))
+        return cls(*self.params)
 
     @property
     def mode(self) -> str:
-        return _KINDS[self.kind][2]
+        return _KINDS[self.kind][1]
 
     def merge_blobs(self, blobs):
-        return _KINDS[self.kind][1](blobs)
+        return _KINDS[self.kind][0].merge(blobs)
 
 
-def build_sketch_partials(df: DataFrame, spec: SketchSpec, col, col_is_hash: bool = False) -> DataFrame:
-    """One partial sketch per input partition, shuffle-free.
-
-    ``col`` is hashed in-plan with xxhash64 for hash-fed sketches
-    (bloom/hll/cms) unless ``col_is_hash``; value-fed sketches (kll/tdigest)
-    cast it to double. Only that single column is scanned.
-    """
+def _map_partials(df: DataFrame, spec: SketchSpec, col, keys: list) -> DataFrame:
+    """The one partial build, a single shuffle-free ``mapInPandas`` pass:
+    each input partition keeps one sketch per distinct value of the
+    ``keys`` columns (one sketch when ``keys`` is empty) and emits one row
+    per sketch — the keys as strings, the ``sketch`` blob and its ``rows``.
+    Only ``col`` and ``keys`` are scanned; rows with a NULL key are dropped."""
     col = F.col(col) if isinstance(col, str) else col
     if spec.mode == "hash":
-        # NULL keys are ignored, matching COUNT(DISTINCT ...) semantics —
+        # NULL values are ignored, matching COUNT(DISTINCT ...) semantics —
         # xxhash64(NULL) would otherwise count as one phantom distinct value
-        expr = col.cast("long") if col_is_hash else F.xxhash64(col)
-        sel = df.where(col.isNotNull()).select(expr.alias(_HASH_COL))
+        keep, val = col.isNotNull(), F.xxhash64(col).alias(_HASH_COL)
     else:
-        sel = df.where(finite_values(col)).select(col.cast("double").alias(_VAL_COL))
-    name, kind = spec.name, spec.kind
+        keep, val = finite_values(col), col.cast("double").alias(_VAL_COL)
+    for k in keys:
+        keep = keep & F.col(k).isNotNull()
+    sel = df.where(keep).select(*[F.col(k).cast("string").alias(k) for k in keys], val)
+    schema = ", ".join([f"{k} string" for k in keys] + ["sketch binary", "rows long"])
 
     def build(batches):
         pid = TaskContext.get().partitionId()
-        sk = None
-        rows = 0
+        parts = {}  # key tuple -> [sketch, rows]
         for pdf in batches:
             if pdf.empty:
                 continue
-            if sk is None:
-                sk = spec.make(pid)
-            if spec.mode == "hash":
-                sk.add_hashes(i64_to_u64(pdf[_HASH_COL].to_numpy()))
-            else:
-                sk.add_values(pdf[_VAL_COL].to_numpy(dtype=np.float64))
-            rows += len(pdf)
-        if sk is not None:
+            for key, g in pdf.groupby(keys, sort=False) if keys else [((), pdf)]:
+                if key not in parts:
+                    parts[key] = [spec.make(pid), 0]
+                part = parts[key]
+                if spec.mode == "hash":
+                    part[0].add_hashes(i64_to_u64(g[_HASH_COL].to_numpy()))
+                else:
+                    part[0].add_values(g[_VAL_COL].to_numpy(dtype=np.float64))
+                part[1] += len(g)
+        if parts:
             yield pd.DataFrame(
-                {"name": [name], "kind": [kind], "sketch": [sk.to_bytes()], "rows": [rows]}
+                [(*key, sk.to_bytes(), rows) for key, (sk, rows) in parts.items()],
+                columns=[*keys, "sketch", "rows"],
             )
 
-    return sel.mapInPandas(build, SKETCH_SCHEMA)
+    return sel.mapInPandas(build, schema)
+
+
+def build_sketch_partials(df: DataFrame, spec: SketchSpec, col) -> DataFrame:
+    """One partial sketch per non-empty input partition, shuffle-free, as
+    rows ``(name, kind, sketch, rows)``.
+
+    ``col`` is hashed in-plan with xxhash64 for hash-fed sketches
+    (bloom/hll/cms/kmv); value-fed sketches (kll/tdigest) cast it to double.
+    Only that single column is scanned.
+    """
+    return _map_partials(df, spec, col, []).select(
+        F.lit(spec.name).alias("name"), F.lit(spec.kind).alias("kind"), "sketch", "rows"
+    )
 
 
 def _merge_by(df: DataFrame, spec: SketchSpec, keys: list, estimate=None) -> DataFrame:
@@ -156,10 +175,9 @@ def merge_sketch_partials(partials: DataFrame, spec: SketchSpec) -> DataFrame:
     return _merge_by(partials, spec, ["name", "kind"])
 
 
-def build_sketch(df: DataFrame, spec: SketchSpec, col, col_is_hash: bool = False):
+def build_sketch(df: DataFrame, spec: SketchSpec, col):
     """build + merge + collect: returns the kernel object on the driver."""
-    partials = build_sketch_partials(df, spec, col, col_is_hash=col_is_hash)
-    rows = merge_sketch_partials(partials, spec).collect()
+    rows = merge_sketch_partials(build_sketch_partials(df, spec, col), spec).collect()
     if not rows:
         return spec.make(0)
     assert len(rows) == 1
@@ -167,48 +185,22 @@ def build_sketch(df: DataFrame, spec: SketchSpec, col, col_is_hash: bool = False
     return spec.merge_blobs([blob])
 
 
-def build_sketch_grouped(
-    df: DataFrame,
-    group_col: str,
-    spec: SketchSpec,
-    col,
-    col_is_hash: bool = False,
-    salt_buckets: int = 8,
-) -> DataFrame:
+def build_sketch_grouped(df: DataFrame, group_col: str, spec: SketchSpec, col) -> DataFrame:
     """One merged sketch PER GROUP (e.g. an HLL per language, a t-digest per
-    host) — the grouped form of the mergeable-aggregator pattern.
+    event type) — the grouped form of the mergeable-aggregator pattern, as
+    rows ``(group_col, sketch, rows)`` with the group value as a string.
 
-    Skew-safe two-phase: partials build per (group, salt) — a hot group
-    splits across ``salt_buckets`` tasks — then merge per group. Both
-    stages are ``applyInPandas`` over short keys; sketch blobs are the only
-    wide values that shuffle."""
-    col = F.col(col) if isinstance(col, str) else col
-    # NULL group keys are dropped: the sketch table is keyed by the group
-    # value, and a NULL key breaks downstream estimate maps — callers
-    # wanting a NULL bucket should coalesce to a sentinel first
-    df = df.where(F.col(group_col).isNotNull())
-    if spec.mode == "hash":
-        expr = col.cast("long") if col_is_hash else F.xxhash64(col)
-        sel = df.where(col.isNotNull()).select(F.col(group_col), expr.alias(_HASH_COL))
-        salt = F.pmod(F.col(_HASH_COL), F.lit(salt_buckets))
-    else:
-        sel = df.where(finite_values(col)).select(
-            F.col(group_col), col.cast("double").alias(_VAL_COL)
-        )
-        salt = F.pmod(F.xxhash64(F.col(_VAL_COL)), F.lit(salt_buckets))
-    sel = sel.withColumn("_salt", salt)
-    partial_schema = f"{group_col} string, sketch binary, rows long"
+    Each input partition builds one partial per group value it holds, map
+    side, then one ``applyInPandas`` stage merges the partials per group:
+    only blobs shuffle, so a hot group's rows never converge on one task.
+    NULL group keys are dropped — a NULL key breaks downstream estimate
+    maps; callers wanting a NULL bucket coalesce to a sentinel first.
 
-    def build(key, pdf):
-        sk = spec.make(stable_seed("grouped", *key))  # hash() is per-process-salted
-        if spec.mode == "hash":
-            sk.add_hashes(i64_to_u64(pdf[_HASH_COL].to_numpy()))
-        else:
-            sk.add_values(pdf[_VAL_COL].to_numpy(dtype=np.float64))
-        return pd.DataFrame({group_col: [key[0]], "sketch": [sk.to_bytes()], "rows": [len(pdf)]})
-
-    partials = sel.groupBy(group_col, "_salt").applyInPandas(build, partial_schema)
-    return _merge_by(partials, spec, [group_col])
+    Memory: a build task holds one sketch per distinct group value in its
+    partition, so ``group_col`` must be low-cardinality. Every caller groups
+    by a handful of values: ``lang`` (documents, pages), ``event_type``
+    (events)."""
+    return _merge_by(_map_partials(df, spec, col, [group_col]), spec, [group_col])
 
 
 def grouped_estimates(grouped: DataFrame, spec: SketchSpec, group_col: str) -> DataFrame:

@@ -19,7 +19,12 @@ def main():
     from pyspark.sql import functions as F
 
     from sketchlib.kernels.cuckoo import size_for
-    from sketchlib.spark.agg import SketchSpec, build_sketch_partials, merge_sketch_partials
+    from sketchlib.spark.agg import (
+        SketchSpec,
+        build_sketch_grouped,
+        build_sketch_partials,
+        merge_sketch_partials,
+    )
     from sketchlib.spark.cuckoo import (
         CuckooSpec,
         build_filter_direct,
@@ -70,6 +75,16 @@ def main():
         merge_sketch_partials(build_sketch_partials(docs, hll_spec, key), hll_spec),
         checks=[
             ("scan reads only doc_id", lambda p: "ReadSchema: struct<doc_id:bigint>" in p),
+            ("exactly one exchange", lambda p: p.count("Exchange hashpartitioning") == 1),
+        ],
+    )
+    # grouped partials build map-side, so only their blobs shuffle
+    show(
+        "grouped sibling sketch (map-side partials, one merge stage)",
+        build_sketch_grouped(docs, "lang", hll_spec, key),
+        checks=[
+            ("scan reads only doc_id and lang",
+             lambda p: "ReadSchema: struct<doc_id:bigint,lang:string>" in p),
             ("exactly one exchange", lambda p: p.count("Exchange hashpartitioning") == 1),
         ],
     )
