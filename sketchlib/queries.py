@@ -225,7 +225,7 @@ def cf_probe_auto_lowlimit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CF.CHECK via probe_auto with a deliberately tiny broadcast budget
     (1 byte), forcing the strategy chooser down the co-grouped branch —
     pins the auto-dispatch itself in the gate, not just the two probe
-    implementations it chooses between (VERDICT r2 #10)."""
+    implementations it chooses between."""
     from sketchlib.spark.cuckoo import probe_auto
 
     docs, spec, merged = _build_docs_filter(spark, sf_dir, fpsize=2)
@@ -512,7 +512,7 @@ def segment_shipping_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     # orders is fact-scale (grows with lineitem): no broadcast hint — the
     # lineitem⋈orders join shuffles on the key (AQE converts to broadcast
     # only when orders actually fits). Only the customer dim is hinted
-    # (VERDICT r2 #2; same shape as regional_supplier_volume's dims).
+    # (same shape as regional_supplier_volume's dims).
     return (
         li.filter(F.col("l_shipdate") > F.lit("1995-03-15").cast("date"))
         .join(orders, li.l_orderkey == orders.o_orderkey)
@@ -578,8 +578,8 @@ def regional_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H-Q14-shaped promo share (conditional aggregation, decimal-exact
-    sums ratioed in double). part grows with the corpus (like orders —
-    VERDICT r2 #2's reasoning), so it carries NO forced broadcast hint:
+    sums ratioed in double). part grows with the corpus (like orders in
+    segment_shipping_revenue), so it carries NO forced broadcast hint:
     AQE broadcasts it only when it actually fits."""
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     part = spark.read.parquet(f"{sf_dir}/part.parquet")
@@ -768,7 +768,7 @@ def sketch_semi_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return semi_join_via_filter(ev, cust, "user_id", "c_custkey")
 
 
-#: Driver-gate rotation (VERDICT r3 #1). The driver checks at most the
+#: Driver-gate rotation. The driver checks at most the
 #: FIRST 50 entries of queries() against their oracles; the registry is
 #: larger (len(REGISTRY) — do the math from the live count, not this
 #: comment). _GATE_FRONT pulls the entries that fell past the r1-r3
@@ -778,14 +778,13 @@ def sketch_semi_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: tools/check_oracles.py (which runs ALL entries) and pytest, and
 #: cf_membership_inserted additionally stays smoke-checked via entry().
 _GATE_FRONT = [
-    # r8 rotation (planned from the per-round driver greens; VERDICT
-    # r7 #1). Arithmetic before consolidation: 100 entries, must-front
+    # r8 rotation (planned from the per-round driver greens).
+    # Arithmetic before consolidation: 100 entries, must-front
     # EXACTLY 50 (6 r5-deferred + 44 r6-greens) — zero slack for the
-    # round's 3 new entries. The VERDICT r7 #2 consolidation is therefore
-    # applied WITHIN the must-front set (the judge's "cf_* are must-front
-    # anyway" arithmetic was off — cf_*/single-sketch entries are r7-FRESH
-    # and consolidating them now would ADD never-green composites to a
-    # full window; they consolidate in r9 when they actually front):
+    # round's 3 new entries. The singleton consolidation is therefore
+    # applied WITHIN the must-front set (cf_*/single-sketch entries were
+    # new in r7, and consolidating them then would have ADDED never-green
+    # composites to a full window; they consolidate once they front):
     # 14 must-front singletons fold into 5 composites (mm×3→1, url×2→1,
     # clusters×2→1, ivf-clustered×2→1, sampling×5→1), freeing 9 slots.
     # Window: 6 r5 + 30 remaining r6-greens + 5 composites + 4 new
@@ -805,10 +804,10 @@ _GATE_FRONT = [
     "ann_ivf_clustered_probe",
     "sampling_suite",
     # --- new in r8 — first driver gating (uncommented as each lands)
-    "mm_decode_bmp",                 # real pure-numpy BMP decode (VERDICT r7 #3)
-    "mm_decode_wav",                 # real RIFF/WAVE PCM decode (r7 #3's audio half)
-    "web_host_harmonic",             # HyperBall harmonic centrality (VERDICT r7 #4)
-    "ann_ivf_pq_topk",               # IVF + product quantization (VERDICT r7 #6)
+    "mm_decode_bmp",                 # real pure-numpy BMP decode
+    "mm_decode_wav",                 # real RIFF/WAVE PCM decode (the audio half)
+    "web_host_harmonic",             # HyperBall harmonic centrality
+    "ann_ivf_pq_topk",               # IVF + product quantization
     # --- last driver green r6 (two-round rule)
     "ann_cosine_topk",
     "ann_ivf_topk",

@@ -19,6 +19,11 @@ The Spark-native re-expression of the reference's command surface
   shard; exact-deletion semantics incl. poison-on-miss
 - ``CF.COUNT`` / ``CF.ISBROKEN`` / ``CF.ISTOOFULL`` → additive/OR-ed header
   fields on the partial rows (plain aggregations)
+- incremental maintenance → ``sketchlib.streaming``: the streaming sinks
+  fold each micro-batch into the committed state ON THE DRIVER with the
+  kernel's ``merge`` / ``merge_into`` (no Spark-side fold, no shuffle).
+  :func:`split_by_shard` is the one per-shard split of (hash, fp) arrays
+  shared by the builders here and that fold.
 
 Scale design (10^12 docs, SURVEY.md §4): the input scan only ever reads the
 key column (Catalyst prunes the rest); the only shuffle moves partial blobs
@@ -99,6 +104,19 @@ def _shard_col(hash_col: str, num_shards: int) -> Column:
     return F.pmod(F.shiftrightunsigned(F.col(hash_col), 48), F.lit(num_shards)).cast("int")
 
 
+def split_by_shard(
+    h: np.ndarray, f: np.ndarray, num_shards: int
+) -> dict[int, tuple[np.ndarray, np.ndarray]]:
+    """Unsigned (hash, fp) arrays split into per-shard arrays, keyed by
+    shard id in ascending order; rows keep their order within a shard."""
+    sh = shard_of(h, num_shards)
+    out = {}
+    for s in np.unique(sh):
+        m = sh == s
+        out[int(s)] = (h[m], f[m])
+    return out
+
+
 # ----------------------------------------------------------------- build
 
 
@@ -144,12 +162,9 @@ def build_partials(
                 continue
             h = i64_to_u64(pdf[hash_col].to_numpy())
             f = i64_to_u64(pdf[fp_col].to_numpy())
-            sh = shard_of(h, num_shards)
-            for s in np.unique(sh):
-                m = sh == s
-                s = int(s)
-                rows[s] = rows.get(s, 0) + int(m.sum())
-                b, fp = canonical_pairs(h[m], f[m], size, fpsize)
+            for s, (hs, fs) in split_by_shard(h, f, num_shards).items():
+                rows[s] = rows.get(s, 0) + len(hs)
+                b, fp = canonical_pairs(hs, fs, size, fpsize)
                 pairs_b.setdefault(s, []).append(b)
                 pairs_f.setdefault(s, []).append(fp.astype(np.uint32))
         if pairs_b:
@@ -222,39 +237,6 @@ def build_filter(df: DataFrame, spec: CuckooSpec, key=None, **kw) -> DataFrame:
     return merge_partials(build_partials(df, spec, key=key, **kw))
 
 
-def fold_partials_into(prior: DataFrame, partials: DataFrame, spec: CuckooSpec) -> DataFrame:
-    """NON-canonical incremental fold: merge this batch's partials into an
-    existing merged state in O(new items) — the existing dense blobs are
-    NOT re-built (unlike :func:`merge_partials`, whose canonical re-insert
-    costs O(total filter content) per call).
-
-    Same fp multiset → identical membership/count/remove semantics; byte
-    layout depends on fold order, so blobs are not comparable to the
-    canonical path (see ``CuckooFilter.merge_into``). ``prior`` may be
-    empty (first batch folds into a fresh filter seeded exactly like the
-    canonical merge)."""
-
-    def fold(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        name, shard = key[0], int(key[1])
-        pr = pdf[pdf["_prior"]]
-        rest = pdf[~pdf["_prior"]].sort_values("part_id")
-        if len(pr):
-            flt = CuckooFilter.from_bytes(bytes(pr["sketch"].iloc[0]))
-        else:
-            flt = CuckooFilter.create(
-                spec.size, spec.fpsize, seed=stable_seed("merge", name, shard)
-            )
-        expected = flt.fpcount + int(rest["fpcount"].sum())
-        flt.merge_into([bytes(b) for b in rest["sketch"]], on_toofull="count")
-        dropped = int(pdf["dropped"].sum()) + (expected - flt.fpcount)
-        return pd.DataFrame([_filter_row(name, shard, flt, int(pdf["rows"].sum()), dropped)])
-
-    tagged = prior.withColumn("_prior", F.lit(True)).unionByName(
-        partials.withColumn("_prior", F.lit(False))
-    )
-    return tagged.groupBy("name", "shard").applyInPandas(fold, PARTIAL_SCHEMA)
-
-
 def build_filter_direct(
     df: DataFrame,
     spec: CuckooSpec,
@@ -285,26 +267,22 @@ def build_filter_direct(
     def reduce_shards(batches):
         hs: dict[int, list] = {}
         fs: dict[int, list] = {}
-        rows: dict[int, int] = {}
         for pdf in batches:
             if pdf.empty:
                 continue
             h = i64_to_u64(pdf[hash_col].to_numpy())
             f = i64_to_u64(pdf[fp_col].to_numpy())
-            sh = shard_of(h, num_shards)
-            for s in np.unique(sh):
-                m = sh == s
-                s = int(s)
-                hs.setdefault(s, []).append(h[m])
-                fs.setdefault(s, []).append(f[m])
-                rows[s] = rows.get(s, 0) + int(m.sum())
+            for s, (h_s, f_s) in split_by_shard(h, f, num_shards).items():
+                hs.setdefault(s, []).append(h_s)
+                fs.setdefault(s, []).append(f_s)
         out = []
         for s in sorted(hs):
-            bidx, fp = canonical_pairs(np.concatenate(hs[s]), np.concatenate(fs[s]), size, fpsize)
+            h_s = np.concatenate(hs[s])
+            bidx, fp = canonical_pairs(h_s, np.concatenate(fs[s]), size, fpsize)
             order = np.lexsort((fp, bidx))
             flt = CuckooFilter.create(size, fpsize, seed=stable_seed("merge", name, s))
             dropped = flt.add_batch(bidx[order], fp[order], on_toofull="count")
-            out.append(_filter_row(name, s, flt, rows[s], dropped))
+            out.append(_filter_row(name, s, flt, len(h_s), dropped))
         if out:
             yield pd.DataFrame(out)
 
@@ -330,8 +308,14 @@ class ShardedCuckoo:
 
     @classmethod
     def from_df(cls, merged: DataFrame, spec: CuckooSpec) -> "ShardedCuckoo":
+        return cls.from_rows(merged.collect(), spec)
+
+    @classmethod
+    def from_rows(cls, rows, spec: CuckooSpec) -> "ShardedCuckoo":
+        """From PARTIAL_SCHEMA rows already on the driver (Spark rows or
+        dicts); rows of other filter names are skipped."""
         out = cls(spec)
-        for r in merged.collect():
+        for r in rows:
             if r["name"] != spec.name:
                 continue
             out.filters[r["shard"]] = CuckooFilter.from_bytes(bytes(r["sketch"]))

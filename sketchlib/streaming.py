@@ -3,10 +3,19 @@
 The reference planned client-side sync via Redis Streams but never shipped
 it (``/root/reference/README.md:276-285``, ``RELEASENOTES:71-77``). Here the
 mergeable-aggregator design pays off directly: a streaming ``foreachBatch``
-builds partials over each micro-batch and canonically merges them into a
-persisted filter state — and because the canonical merge is a pure function
-of the accumulated item multiset, the streamed filter is BYTE-IDENTICAL to
-a batch build over the same rows (tested).
+sink folds each micro-batch into a persisted sharded cuckoo filter, and
+because the canonical merge is a pure function of the accumulated item
+multiset, the streamed filter is BYTE-IDENTICAL to a batch build over the
+same rows (tested).
+
+Where the fold runs: on the DRIVER, in one Spark job (an Arrow collect of
+the batch's in-plan hashes) with no shuffle and no Python worker; the state
+file is read and written with pyarrow. The driver holds the committed state
+plus 16 B per batch row, which every reader already collects, so the bound
+is not new. Sized for churn's 4 × 128 KiB shards with 10k-row batches and
+the paragraph-dedup replay's 8 × 2 MiB shards (:func:`incremental_cuckoo_sink`).
+A fold that would drop a fingerprint (a silent false negative) raises
+``TooFullError`` before anything is written.
 
 Exactly-once: the state write is guarded by the epoch id (a replayed
 micro-batch is skipped, not double-counted — multiset adds are not
@@ -25,14 +34,36 @@ import json
 import os
 import shutil
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sketchlib.kernels.cuckoo import CuckooFilter, TooFullError, canonical_pairs, pack_pairs
 from sketchlib.spark.cuckoo import (
+    FP_COL,
+    HASH_COL,
+    PARTIAL_SCHEMA,
     CuckooSpec,
-    build_partials,
-    fold_partials_into,
-    merge_partials,
+    _filter_row,
+    split_by_shard,
+    with_hash_fp,
+)
+from sketchlib.util import i64_to_u64, stable_seed
+
+#: PARTIAL_SCHEMA in Arrow types: the state file a commit writes
+_STATE_SCHEMA = pa.schema(
+    [
+        ("name", pa.string()),
+        ("shard", pa.int32()),
+        ("part_id", pa.int32()),
+        ("sketch", pa.binary()),
+        ("fpcount", pa.int64()),
+        ("toofull", pa.bool_()),
+        ("broken", pa.bool_()),
+        ("rows", pa.int64()),
+        ("dropped", pa.int64()),
+    ]
 )
 
 
@@ -45,13 +76,63 @@ def _read_commit(state_dir: str) -> dict | None:
         return json.load(f)
 
 
+def _load_state(commit: dict | None) -> dict[int, dict]:
+    """The committed state's PARTIAL_SCHEMA rows by shard, read on the
+    driver with pyarrow (no Spark job); empty before the first commit."""
+    if commit is None:
+        return {}
+    return {r["shard"]: r for r in pq.read_table(commit["state"]).to_pylist()}
+
+
+def _collect_hashes(df: DataFrame, key):
+    """The in-plan (hash, fp) of ``key`` over ``df`` as unsigned arrays,
+    collected in one Arrow job."""
+    pdf = with_hash_fp(df, key).select(HASH_COL, FP_COL).toPandas()
+    return i64_to_u64(pdf[HASH_COL].to_numpy()), i64_to_u64(pdf[FP_COL].to_numpy())
+
+
+def _fold(spec: CuckooSpec, prior: dict[int, dict], h, f, mode: str) -> list[dict]:
+    """The new state rows after folding items (h, f) into ``prior``.
+
+    Per touched shard: ``"fast"`` folds the batch's canonical pairs into
+    the committed blob (``merge_into``, O(batch)); ``"canonical"`` re-merges
+    committed blob + batch with ``_merge_group``'s seed, so the blob is
+    byte-identical to a batch build. A shard's first batch is that merge in
+    both modes. Untouched shards keep their row. Raises ``TooFullError``
+    if any shard would drop a fingerprint."""
+    rows = dict(prior)
+    for s, (h_s, f_s) in split_by_shard(h, f, spec.num_shards).items():
+        bidx, fps = canonical_pairs(h_s, f_s, spec.size, spec.fpsize)
+        pairs = pack_pairs(bidx, fps, spec.size, spec.fpsize)
+        old = prior.get(s)
+        if mode == "fast" and old is not None:
+            flt = CuckooFilter.from_bytes(old["sketch"])
+            flt.merge_into([pairs], on_toofull="count")
+        else:
+            parts = [pairs] if old is None else [old["sketch"], pairs]
+            flt = CuckooFilter.merge(
+                parts, seed=stable_seed("merge", spec.name, s), on_toofull="count"
+            )
+        old = old or {"fpcount": 0, "rows": 0, "dropped": 0}
+        dropped = old["fpcount"] + len(h_s) - flt.fpcount
+        if dropped:
+            raise TooFullError(
+                f"sink '{spec.name}' shard {s}: the fold would drop {dropped} "
+                "fingerprint(s), a silent false negative; nothing was committed. "
+                "Increase the filter size or num_shards."
+            )
+        rows[s] = _filter_row(spec.name, s, flt, old["rows"] + len(h_s), old["dropped"])
+    return [rows[s] for s in sorted(rows)]
+
+
 def _commit_state(
-    state_dir: str, merged: DataFrame, name: str, pointer: dict, prior: dict | None
+    state_dir: str, rows: list, name: str, pointer: dict, prior: dict | None
 ) -> None:
-    """Crash-atomic commit of a new filter state: ``merged`` lands in its
-    own ``state_dir/name`` directory, then ``epoch.json`` (``pointer`` plus
-    the new state path) flips via an fsync'd tmp file and ``os.replace``
-    only after the write succeeded.
+    """Crash-atomic commit of a new filter state: the PARTIAL_SCHEMA
+    ``rows`` land as one fsync'd parquet file in their own
+    ``state_dir/name`` directory, then ``epoch.json`` (``pointer`` plus the
+    new state path) flips via an fsync'd tmp file and ``os.replace`` only
+    after the write succeeded.
 
     GC keeps the new AND the ``prior`` commit's state directory.
     read_state returns a LAZY DataFrame over the resolved directory —
@@ -61,7 +142,13 @@ def _commit_state(
     readers held across MULTIPLE commits must materialize
     (collect/localCheckpoint) — see read_state."""
     new_state = os.path.join(state_dir, name)
-    merged.write.mode("overwrite").parquet(new_state)
+    shutil.rmtree(new_state, ignore_errors=True)  # a crashed earlier attempt
+    os.makedirs(new_state)
+    with open(os.path.join(new_state, "part-00000.parquet"), "wb") as f:
+        # zstd: a third smaller than snappy on half-empty bucket arrays
+        pq.write_table(pa.Table.from_pylist(rows, schema=_STATE_SCHEMA), f, compression="zstd")
+        f.flush()
+        os.fsync(f.fileno())
     epoch_path = os.path.join(state_dir, "epoch.json")
     tmp = epoch_path + ".tmp"
     with open(tmp, "w") as f:
@@ -82,18 +169,33 @@ def incremental_cuckoo_sink(spec: CuckooSpec, key, state_dir: str, mode: str = "
     filter under ``state_dir`` (one parquet row per shard, current epoch
     resolved via ``epoch.json``; read it back with :func:`read_state`).
 
+    Each commit folds on the driver: one Spark job collects the batch's
+    (hash, fp) columns through Arrow; the committed state is read with
+    pyarrow, folded per shard, written as one parquet file and published
+    by the atomic pointer flip. Memory: the driver holds the committed
+    state (``num_shards × spec.size`` bytes) plus 16 B per batch row.
+    Readers already collect that same state (``ShardedCuckoo.from_df``,
+    ``probe``'s broadcast), so the sink adds no new bound. Sized for 4
+    shards × 128 KiB with 10k-row batches, 8 shards × 2 MiB
+    (``size_for(262_144, 4)``) and sf0.01 documents; a state too large
+    for the driver is too large for its readers as well.
+
     Cost trade-off, selected by ``mode``:
 
-    - ``"canonical"`` (default): re-fold the full accumulated pair multiset
-      each micro-batch — per-batch cost grows with TOTAL filter content,
-      but the state is BYTE-IDENTICAL to a batch build over the same rows
-      (replay/repair and cross-path verification by blob comparison).
+    - ``"canonical"`` (default): re-merge each touched shard's full pair
+      multiset every micro-batch (``CuckooFilter.merge``) — per-batch cost
+      grows with TOTAL filter content, but the state is BYTE-IDENTICAL to
+      a batch build over the same rows (replay/repair and cross-path
+      verification by blob comparison).
     - ``"fast"``: fold only the new batch's pairs into the existing dense
-      blobs (``fold_partials_into``) — per-batch cost is O(batch). Same fp
-      multiset, so membership/count/remove semantics stay EXACTLY equal to
-      the canonical path (tested); only the byte layout diverges.
+      blobs (``CuckooFilter.merge_into``) — per-batch cost is O(batch).
+      Same fp multiset, so membership/count/remove semantics stay EXACTLY
+      equal to the canonical path (tested); only the byte layout diverges.
       Re-canonicalize offline (``merge_partials`` over the state) when a
       byte-comparable blob is needed.
+
+    A fold that would drop a fingerprint raises ``TooFullError`` before
+    anything is written (see the module docstring).
 
     Usage::
 
@@ -107,20 +209,9 @@ def incremental_cuckoo_sink(spec: CuckooSpec, key, state_dir: str, mode: str = "
         commit = _read_commit(state_dir)
         if commit is not None and epoch_id <= commit["epoch"]:
             return  # replayed micro-batch: already folded in
-        spark = batch_df.sparkSession
-        partials = build_partials(batch_df, spec, key=key)
-        if mode == "fast":
-            if commit is not None:
-                prior = spark.read.parquet(commit["state"])
-            else:
-                prior = spark.createDataFrame([], partials.schema)
-            merged = fold_partials_into(prior, partials, spec)
-        else:
-            if commit is not None:
-                prior = spark.read.parquet(commit["state"])
-                partials = prior.unionByName(partials)
-            merged = merge_partials(partials)
-        _commit_state(state_dir, merged, f"state_epoch{epoch_id}", {"epoch": epoch_id}, commit)
+        h, f = _collect_hashes(batch_df, key)
+        rows = _fold(spec, _load_state(commit), h, f, mode)
+        _commit_state(state_dir, rows, f"state_epoch{epoch_id}", {"epoch": epoch_id}, commit)
 
     return sink
 
@@ -134,9 +225,10 @@ def read_state(spark, state_dir: str) -> DataFrame:
     sink retains the previous epoch alongside the current one, so a reader
     stays valid across ONE subsequent commit; to hold results across more
     than one micro-batch, materialize them (``.collect()`` /
-    ``.localCheckpoint(eager=True)``) before the stream advances twice."""
+    ``.localCheckpoint(eager=True)``) before the stream advances twice.
+    The schema is given, not inferred, so resolving starts no Spark job."""
     with open(os.path.join(state_dir, "epoch.json")) as f:
-        return spark.read.parquet(json.load(f)["state"])
+        return spark.read.schema(PARTIAL_SCHEMA).parquet(json.load(f)["state"])
 
 
 def incremental_paragraph_dedup_sink(spec: CuckooSpec, state_dir: str, out_dir: str):
@@ -157,11 +249,17 @@ def incremental_paragraph_dedup_sink(spec: CuckooSpec, state_dir: str, out_dir: 
       3. within-batch first occurrence by (doc_id, pos) over the 8-byte
          paragraph hash (the batch operator's window, scoped to the
          batch);
-      4. keep = unseen ∧ first; reassemble docs in paragraph order and
-         append (doc_id, kept_text, n_paras, n_kept, epoch) under
-         ``out_dir/batch_epoch{N}``;
-      5. fold the kept paragraphs into the filter (O(batch) fast fold)
-         and flip ``epoch.json``.
+      4. keep = unseen ∧ first; fold the kept paragraphs into the
+         committed state on the driver (O(batch) fast fold, raising
+         ``TooFullError`` before any write if a fingerprint would drop);
+      5. reassemble docs in paragraph order, append (doc_id, kept_text,
+         n_paras, n_kept, epoch) under ``out_dir/batch_epoch{N}`` and
+         flip ``epoch.json``.
+
+    The state is loaded once per batch with pyarrow and serves both the
+    probe's broadcast and the fold; the memory bound and traffic are
+    those of :func:`incremental_cuckoo_sink` (8 shards × 2 MiB in the
+    ``streaming_paragraph_dedup_replay`` gate entry).
 
     With micro-batches arriving in doc_id order the emitted corpus equals
     the batch :func:`sketchlib.dedup.paragraph_dedup` over the
@@ -206,19 +304,19 @@ def incremental_paragraph_dedup_sink(spec: CuckooSpec, state_dir: str, out_dir: 
                     stacklevel=2,
                 )
             return  # replayed micro-batch: output + state already committed
-        spark = batch_df.sparkSession
+        prior = _load_state(commit)
         paras = paragraph_table(batch_df)
-        if commit is not None:
-            prior = spark.read.parquet(commit["state"])
-            sc = ShardedCuckoo.from_df(prior, spec)
+        if prior:
+            sc = ShardedCuckoo.from_rows(prior.values(), spec)
             paras = probe(paras, sc, key=F.col("__norm"), result_col="__seen")
         else:
-            prior = None
             paras = paras.withColumn("__seen", F.lit(False))
         w = Window.partitionBy(F.xxhash64("__norm")).orderBy("doc_id", "pos")
         marked = paras.withColumn(
             "keep", (F.row_number().over(w) == 1) & ~F.col("__seen")
         ).localCheckpoint(eager=True)  # fans out into output + state fold
+        h, f = _collect_hashes(marked.where("keep"), F.col("__norm"))
+        rows = _fold(spec, prior, h, f, "fast")
         out = marked.groupBy("doc_id").agg(
             F.expr(
                 "concat_ws('\\n', transform(array_sort("
@@ -233,12 +331,7 @@ def incremental_paragraph_dedup_sink(spec: CuckooSpec, state_dir: str, out_dir: 
         out.write.mode("overwrite").parquet(
             os.path.join(out_dir, f"batch_epoch{epoch_id}")
         )
-        kept = marked.where("keep").select("doc_id", "__norm")
-        partials = build_partials(kept, spec, key=F.col("__norm"))
-        if prior is None:
-            prior = spark.createDataFrame([], partials.schema)
-        merged = fold_partials_into(prior, partials, spec)
-        _commit_state(state_dir, merged, f"state_epoch{epoch_id}", {"epoch": epoch_id}, commit)
+        _commit_state(state_dir, rows, f"state_epoch{epoch_id}", {"epoch": epoch_id}, commit)
 
     return sink
 
@@ -266,8 +359,7 @@ def retract_paragraphs_from_state(
 
     with open(os.path.join(state_dir, "epoch.json")) as f:
         commit = json.load(f)
-    spark = kept_docs.sparkSession
-    prior = spark.read.parquet(commit["state"])
+    prior = kept_docs.sparkSession.read.schema(PARTIAL_SCHEMA).parquet(commit["state"])
     norms = (
         paragraph_table(kept_docs.select("doc_id", F.col("kept_text").alias("text")))
         .select("__norm")
@@ -275,11 +367,11 @@ def retract_paragraphs_from_state(
         .localCheckpoint(eager=True)  # count + remove both consume it
     )
     n = norms.count()
-    merged = remove_keys(prior, norms, spec, key=F.col("__norm"))
+    rows = [r.asDict() for r in remove_keys(prior, norms, spec, key=F.col("__norm")).collect()]
     k = int(commit.get("retracts", 0)) + 1
     _commit_state(
         state_dir,
-        merged,
+        rows,
         f"state_epoch{commit['epoch']}r{k}",
         {"epoch": commit["epoch"], "retracts": k},
         commit,

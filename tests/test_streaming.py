@@ -3,6 +3,7 @@ batch build byte-for-byte; windowed aggregation with watermark."""
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import tempfile
@@ -72,6 +73,111 @@ def test_incremental_stream_equals_batch(spark, sf_dir):
             r["shard"]: bytes(r["sketch"]) for r in read_state(spark, state_dir).collect()
         }
         assert final == batch_blobs
+
+        # the same crash in fast mode: the orphan holds the next epoch
+        # already folded in, but the pointer still names the previous one,
+        # so the replayed epoch folds its rows in exactly once
+        fast_dir = os.path.join(work, "fast")
+        fast = incremental_cuckoo_sink(spec, key, fast_dir, mode="fast")
+        groups = [docs.filter(F.pmod("doc_id", F.lit(4)) == g) for g in range(4)]
+        for e in range(3):
+            fast(groups[e], e)
+        crashed = os.path.join(work, "fast_crashed")
+        shutil.copytree(fast_dir, crashed)
+        incremental_cuckoo_sink(spec, key, crashed, mode="fast")(groups[3], 3)
+        with open(os.path.join(crashed, "epoch.json")) as f:
+            shutil.copytree(json.load(f)["state"], os.path.join(fast_dir, "state_epoch999"))
+        fast(groups[3], 3)
+        assert ShardedCuckoo.from_df(read_state(spark, fast_dir), spec).count() == docs.count()
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
+@pytest.mark.parametrize("mode", ["canonical", "fast"])
+def test_sink_fold_drop_raises_before_commit(spark, mode):
+    """A fold that would drop a fingerprint (a silent false negative) raises
+    TooFullError naming the shard and the count; the committed pointer and
+    the state directories stay as they were."""
+    from sketchlib.kernels.cuckoo import TooFullError
+
+    spec = CuckooSpec(name="tiny", size=16, fpsize=1, num_shards=1)
+    key = F.col("k")
+    work = tempfile.mkdtemp(prefix="sketchlib-toofull-")
+    state_dir = os.path.join(work, "state")
+    try:
+        sink = incremental_cuckoo_sink(spec, key, state_dir, mode=mode)
+        sink(spark.createDataFrame([(f"a{i}",) for i in range(4)], "k string"), 0)
+        with open(os.path.join(state_dir, "epoch.json")) as f:
+            before = json.load(f)
+        dirs = sorted(os.listdir(state_dir))
+        overfill = spark.createDataFrame([(f"b{i}",) for i in range(200)], "k string")
+        with pytest.raises(TooFullError, match=r"shard 0: .*drop \d+ fingerprint"):
+            sink(overfill, 1)
+        with open(os.path.join(state_dir, "epoch.json")) as f:
+            assert json.load(f) == before
+        assert sorted(os.listdir(state_dir)) == dirs
+        assert not os.path.exists(os.path.join(state_dir, "state_epoch1"))
+        assert ShardedCuckoo.from_df(read_state(spark, state_dir), spec).count() == 4
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
+def _jobs_in_group(spark, group, fn):
+    """Spark jobs started by ``fn()`` under a fresh job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+        return list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_fast_sink_commit_is_one_job(spark, sf_dir):
+    """One fast-mode commit over a committed state starts at most one Spark
+    job: the Arrow collect of the batch's hashes. State load, fold and
+    write run on the driver."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    spec = CuckooSpec(name="onejob", size=size_for(2000, 2), fpsize=2, num_shards=2)
+    key = F.col("doc_id").cast("string")
+    work = tempfile.mkdtemp(prefix="sketchlib-onejob-")
+    state_dir = os.path.join(work, "state")
+    try:
+        sink = incremental_cuckoo_sink(spec, key, state_dir, mode="fast")
+        halves = [docs.filter(F.pmod("doc_id", F.lit(2)) == g) for g in range(2)]
+        sink(halves[0], 0)
+        jobs = _jobs_in_group(spark, "test_fast_sink_commit_is_one_job", lambda: sink(halves[1], 1))
+        assert len(jobs) <= 1, jobs
+        assert ShardedCuckoo.from_df(read_state(spark, state_dir), spec).count() == docs.count()
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
+def test_read_state_starts_no_job(spark, sf_dir):
+    """read_state is lazy and infers no schema, so it starts no Spark job;
+    a plain schema-less parquet read of the driver-written state directory
+    still gives PARTIAL_SCHEMA's column names and types."""
+    from pyspark.sql import types as T
+
+    from sketchlib.spark.cuckoo import PARTIAL_SCHEMA
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    spec = CuckooSpec(name="nojob", size=size_for(2000, 2), fpsize=2, num_shards=2)
+    work = tempfile.mkdtemp(prefix="sketchlib-nojob-")
+    state_dir = os.path.join(work, "state")
+    try:
+        incremental_cuckoo_sink(spec, F.col("doc_id").cast("string"), state_dir)(docs, 0)
+        jobs = _jobs_in_group(
+            spark, "test_read_state_starts_no_job", lambda: read_state(spark, state_dir)
+        )
+        assert jobs == []
+        want = T._parse_datatype_string(PARTIAL_SCHEMA)
+        with open(os.path.join(state_dir, "epoch.json")) as f:
+            plain = spark.read.parquet(json.load(f)["state"])
+        assert [(c.name, c.dataType) for c in plain.schema] == [
+            (c.name, c.dataType) for c in want
+        ]
+        assert plain.count() == spec.num_shards
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
