@@ -78,7 +78,7 @@ class SketchSpec:
     def __post_init__(self):
         if self.kind not in _KINDS:
             raise ValueError(f"unknown sketch kind {self.kind!r}")
-        self.make(0)  # validate params eagerly
+        self.make(0).to_bytes()  # validate params on the driver, serialization included
 
     def make(self, partition_id: int):
         cls = _KINDS[self.kind][0]

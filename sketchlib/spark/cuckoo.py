@@ -22,8 +22,9 @@ The Spark-native re-expression of the reference's command surface
 - incremental maintenance → ``sketchlib.streaming``: the streaming sinks
   fold each micro-batch into the committed state ON THE DRIVER with the
   kernel's ``merge`` / ``merge_into`` (no Spark-side fold, no shuffle).
-  :func:`split_by_shard` is the one per-shard split of (hash, fp) arrays
-  shared by the builders here and that fold.
+  Every state change runs through two per-shard helpers over
+  :func:`split_by_shard`'s arrays: :func:`merged_row` (builds, merges,
+  canonical folds) and :func:`removed_row` (``remove_keys``, retraction).
 
 Scale design (10^12 docs, SURVEY.md §4): the input scan only ever reads the
 key column (Catalyst prunes the rest); the only shuffle moves partial blobs
@@ -117,6 +118,17 @@ def split_by_shard(
     return out
 
 
+def _gather(batches, hash_col: str, fp_col: str, num_shards: int):
+    """A task's Arrow batches of (hash, fp) longs as unsigned per-shard
+    arrays, in :func:`split_by_shard` order."""
+    pdfs = [pdf for pdf in batches if not pdf.empty]
+    if not pdfs:
+        return {}
+    h = i64_to_u64(np.concatenate([pdf[hash_col].to_numpy() for pdf in pdfs]))
+    f = i64_to_u64(np.concatenate([pdf[fp_col].to_numpy() for pdf in pdfs]))
+    return split_by_shard(h, f, num_shards)
+
+
 # ----------------------------------------------------------------- build
 
 
@@ -129,8 +141,8 @@ def build_partials(
     skip_pids: set | None = None,
 ) -> DataFrame:
     """CF.ADD, distributed: one partial per (input partition × shard), built
-    shuffle-free with ``mapInPandas`` (Arrow batches → one vectorized
-    ``canonical_pairs`` call each).
+    shuffle-free with ``mapInPandas`` (a task's Arrow batches → one
+    vectorized ``canonical_pairs`` call per shard).
 
     A partial is a packed canonical-pair blob — ~12 bytes/row, NO kicking,
     no PRNG — so shuffle volume scales with data, never with partitions ×
@@ -154,36 +166,22 @@ def build_partials(
         pid = TaskContext.get().partitionId()
         if skip_pids and pid in skip_pids:
             return
-        pairs_b: dict[int, list] = {}
-        pairs_f: dict[int, list] = {}
-        rows: dict[int, int] = {}
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            h = i64_to_u64(pdf[hash_col].to_numpy())
-            f = i64_to_u64(pdf[fp_col].to_numpy())
-            for s, (hs, fs) in split_by_shard(h, f, num_shards).items():
-                rows[s] = rows.get(s, 0) + len(hs)
-                b, fp = canonical_pairs(hs, fs, size, fpsize)
-                pairs_b.setdefault(s, []).append(b)
-                pairs_f.setdefault(s, []).append(fp.astype(np.uint32))
-        if pairs_b:
-            shards = sorted(pairs_b)
+        shards = _gather(batches, hash_col, fp_col, num_shards)
+        if shards:
+            rows = [len(h) for h, _ in shards.values()]
             yield pd.DataFrame(
                 {
                     "name": name,
-                    "shard": shards,
+                    "shard": list(shards),
                     "part_id": pid,
                     "sketch": [
-                        pack_pairs(
-                            np.concatenate(pairs_b[s]), np.concatenate(pairs_f[s]), size, fpsize
-                        )
-                        for s in shards
+                        pack_pairs(*canonical_pairs(h, f, size, fpsize), size, fpsize)
+                        for h, f in shards.values()
                     ],
-                    "fpcount": [rows[s] for s in shards],
+                    "fpcount": rows,
                     "toofull": False,
                     "broken": False,
-                    "rows": [rows[s] for s in shards],
+                    "rows": rows,
                     "dropped": 0,
                 }
             )
@@ -210,13 +208,18 @@ def _filter_row(name: str, shard: int, flt: CuckooFilter, rows: int, dropped: in
     }
 
 
+def merged_row(name: str, shard: int, parts: list, fpcount: int, rows: int, dropped: int) -> dict:
+    """The row of ``parts`` (holding ``fpcount`` fingerprints) merged
+    canonically with the shard's merge seed, the one place it is chosen, so
+    every build and fold path gives the same bytes; drops add to ``dropped``."""
+    m = CuckooFilter.merge(parts, seed=stable_seed("merge", name, shard), on_toofull="count")
+    return _filter_row(name, shard, m, rows, dropped + fpcount - m.fpcount)
+
+
 def _merge_group(key, pdf):
-    name, shard = str(key[0]), int(key[1])
-    m = CuckooFilter.merge(
-        [bytes(b) for b in pdf["sketch"]], seed=stable_seed("merge", name, shard), on_toofull="count"
-    )
-    dropped = int(pdf["dropped"].sum()) + int(pdf["fpcount"].sum()) - m.fpcount
-    return pd.DataFrame([_filter_row(name, shard, m, int(pdf["rows"].sum()), dropped)])
+    sums = {c: int(pdf[c].sum()) for c in ("fpcount", "rows", "dropped")}
+    parts = [bytes(b) for b in pdf["sketch"]]
+    return pd.DataFrame([merged_row(str(key[0]), int(key[1]), parts, **sums)])
 
 
 def merge_partials(partials: DataFrame) -> DataFrame:
@@ -248,9 +251,9 @@ def build_filter_direct(
     each shard's FINAL filter in a single reduce pass — no partial blobs, no
     merge stage, no extra jobs.
 
-    Byte-identical to ``build_filter``: the reducer inserts the same sorted
-    canonical-pair multiset with the same name-derived seed the tree merge
-    uses, so both paths produce the same blob (tested). Shuffle volume is
+    Byte-identical to ``build_filter``: the reducer runs the same
+    :func:`merged_row` over the shard's canonical pairs, so both paths
+    produce the same blob (tested). Shuffle volume is
     16 B/row — same order as the pairs-partials path — but in ONE stage.
 
     Trade-off vs the partials path: fastest wall-clock and fewest stages,
@@ -265,24 +268,10 @@ def build_filter_direct(
     ).repartition(num_shards, _shard_col(hash_col, num_shards))
 
     def reduce_shards(batches):
-        hs: dict[int, list] = {}
-        fs: dict[int, list] = {}
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            h = i64_to_u64(pdf[hash_col].to_numpy())
-            f = i64_to_u64(pdf[fp_col].to_numpy())
-            for s, (h_s, f_s) in split_by_shard(h, f, num_shards).items():
-                hs.setdefault(s, []).append(h_s)
-                fs.setdefault(s, []).append(f_s)
         out = []
-        for s in sorted(hs):
-            h_s = np.concatenate(hs[s])
-            bidx, fp = canonical_pairs(h_s, np.concatenate(fs[s]), size, fpsize)
-            order = np.lexsort((fp, bidx))
-            flt = CuckooFilter.create(size, fpsize, seed=stable_seed("merge", name, s))
-            dropped = flt.add_batch(bidx[order], fp[order], on_toofull="count")
-            out.append(_filter_row(name, s, flt, len(h_s), dropped))
+        for s, (h, f) in _gather(batches, hash_col, fp_col, num_shards).items():
+            pairs = pack_pairs(*canonical_pairs(h, f, size, fpsize), size, fpsize)
+            out.append(merged_row(name, s, [pairs], len(h), len(h), 0))
         if out:
             yield pd.DataFrame(out)
 
@@ -469,6 +458,13 @@ def probe_cogrouped(
     )
 
 
+def _probe_sized(merged, probes, spec, total, broadcast_limit_bytes, key, **kw) -> DataFrame:
+    """probe_auto's broadcast-or-co-group rule for ``total`` blob bytes."""
+    if total <= broadcast_limit_bytes:
+        return probe(probes, ShardedCuckoo.from_df(merged, spec), key=key, **kw)
+    return probe_cogrouped(merged, probes, spec, key=key, **kw)
+
+
 def probe_auto(
     merged: DataFrame,
     probes: DataFrame,
@@ -485,9 +481,7 @@ def probe_auto(
     never ships the blobs to the driver unless broadcasting anyway. Both
     paths return identical results (tested)."""
     total = merged.select(F.sum(F.octet_length("sketch")).alias("b")).first()["b"] or 0
-    if total <= broadcast_limit_bytes:
-        return probe(probes, ShardedCuckoo.from_df(merged, spec), key=key, **kw)
-    return probe_cogrouped(merged, probes, spec, key=key, **kw)
+    return _probe_sized(merged, probes, spec, total, broadcast_limit_bytes, key, **kw)
 
 
 def semi_join_via_filter(
@@ -523,8 +517,8 @@ def semi_join_via_filter(
     fingerprints and silently drop items), and the build's drop/too-full
     counters are checked — a dropped fingerprint would be a silent false
     negative, so it raises instead. The merged filter is localCheckpointed
-    before probing: the build is lazy, and the guard aggregate, the sizing
-    aggregate and the blob collect would each re-execute its shuffle.
+    before probing: the build is lazy, and the one aggregate (guard plus
+    probe_auto's sizing) and the blob collect would each re-run its shuffle.
     """
     from sketchlib.kernels.cuckoo import TooFullError, size_for
 
@@ -544,7 +538,9 @@ def semi_join_via_filter(
         eager=True
     )
     guard = merged.agg(
-        F.sum("dropped").alias("d"), F.max("toofull").alias("t")
+        F.sum("dropped").alias("d"),
+        F.max("toofull").alias("t"),
+        F.sum(F.octet_length("sketch")).alias("b"),
     ).first()
     if (guard["d"] or 0) > 0 or guard["t"]:
         raise TooFullError(
@@ -552,9 +548,8 @@ def semi_join_via_filter(
             "fingerprint(s) — the pre-filter would silently drop matching rows; "
             "increase the filter size or fpsize"
         )
-    pre = probe_auto(
-        merged, big, spec, key=big_key, broadcast_limit_bytes=broadcast_limit_bytes
-    ).filter(F.col("member")).drop("member")
+    pre = _probe_sized(merged, big, spec, guard["b"] or 0, broadcast_limit_bytes, big_key)
+    pre = pre.filter(F.col("member")).drop("member")
     return (
         pre.withColumn("__bk", big_key)
         .join(keys, F.col("__bk") == F.col("__k"), "left_semi")
@@ -589,6 +584,25 @@ def fix_toofull_shards(merged: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------- remove
 
 
+def removed_row(spec: CuckooSpec, name: str, shard: int, row, h, f) -> dict:
+    """``row`` after CF.REM of the unsigned items (h, f) in canonical order,
+    so the blob does not depend on arrival order. A never-built shard (no
+    ``row``) is a poisoned empty filter (reference semantics); a poisoned
+    shard carries ``broken`` in its row instead of raising."""
+    if row is None:
+        flt = CuckooFilter.create(spec.size, spec.fpsize, seed=stable_seed(name, shard, spec.seed))
+        rows = dropped = 0
+    else:
+        flt = CuckooFilter.from_bytes(bytes(row["sketch"]))
+        rows, dropped = int(row["rows"]), int(row["dropped"])
+    order = np.lexsort((f, h))
+    try:
+        flt.remove_batch(h[order], f[order])
+    except BrokenError:
+        pass
+    return _filter_row(name, shard, flt, rows, dropped)
+
+
 def remove_keys(
     merged: DataFrame,
     keys_df: DataFrame,
@@ -615,25 +629,9 @@ def remove_keys(
     )
 
     def rem(key_tuple, left, right):
-        name, shard = str(key_tuple[0]), int(key_tuple[1])
-        if left.empty:
-            # removing from a shard that was never built = removing
-            # non-members: poisoned empty filter (reference semantics)
-            flt = CuckooFilter.create(spec.size, spec.fpsize, seed=stable_seed(name, shard, spec.seed))
-            rows = drop = 0
-        else:
-            flt = CuckooFilter.from_bytes(bytes(left["sketch"].iloc[0]))
-            rows = int(left["rows"].iloc[0])
-            drop = int(left["dropped"].iloc[0])
-        if not right.empty:
-            h = i64_to_u64(right["h"].to_numpy())
-            f = i64_to_u64(right["f"].to_numpy())
-            order = np.lexsort((f, h))
-            try:
-                flt.remove_batch(h[order], f[order])
-            except BrokenError:
-                pass  # shard poisoned; flag carried in the row
-        return pd.DataFrame([_filter_row(name, shard, flt, rows, drop)])
+        h, f = (i64_to_u64(right[c].to_numpy()) for c in "hf")
+        row = None if left.empty else left.iloc[0]
+        return pd.DataFrame([removed_row(spec, str(key_tuple[0]), int(key_tuple[1]), row, h, f)])
 
     return (
         merged.groupby("name", "shard")

@@ -8,21 +8,26 @@ because the canonical merge is a pure function of the accumulated item
 multiset, the streamed filter is BYTE-IDENTICAL to a batch build over the
 same rows (tested).
 
-Where the fold runs: on the DRIVER, in one Spark job (an Arrow collect of
-the batch's in-plan hashes) with no shuffle and no Python worker; the state
-file is read and written with pyarrow. The driver holds the committed state
-plus 16 B per batch row, which every reader already collects, so the bound
-is not new. Sized for churn's 4 × 128 KiB shards with 10k-row batches and
-the paragraph-dedup replay's 8 × 2 MiB shards (:func:`incremental_cuckoo_sink`).
-A fold that would drop a fingerprint (a silent false negative) raises
-``TooFullError`` before anything is written.
+Where every state change runs: on the DRIVER — a pyarrow load of the
+committed state, a per-shard fold (``merged_row`` / ``merge_into``) or
+removal (``removed_row``), a pyarrow write and the pointer flip. A sink
+commit starts one Spark job (an Arrow collect of the batch's hashes), a
+retraction two (its paragraphs are made distinct first); neither shuffles.
+Memory: the committed state (``num_shards × spec.size``, which every reader
+already collects) plus 16 B per batch row or distinct retracted paragraph.
+Sized for churn's 4 × 128 KiB shards with 10k-row batches, the replay's
+8 × 2 MiB shards and a few retracted documents
+(``test_paragraph_retraction_exact_deletion``, COOKBOOK §6). A fold that
+would drop a fingerprint (a silent false negative) raises ``TooFullError``
+before anything is written.
 
 Exactly-once: the state write is guarded by the epoch id (a replayed
 micro-batch is skipped, not double-counted — multiset adds are not
 idempotent, so the guard is load-bearing). The guard is CRASH-ATOMIC:
 each epoch's merged state is written to its own directory, then
-``epoch.json`` — recording both the epoch AND the state directory to
-read — is atomically replaced (write-tmp + os.replace). A crash at any
+``epoch.json`` — recording the epoch and the state file's directory,
+length and sha256 (checked on every load) — is atomically replaced
+(write-tmp + os.replace). A crash at any
 point leaves the previous epoch.json (and the directory it points to)
 intact, so recovery resumes from consistent state and the interrupted
 micro-batch folds in exactly once on replay.
@@ -30,6 +35,7 @@ micro-batch folds in exactly once on replay.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import shutil
@@ -38,6 +44,8 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _parse_datatype_string
 
 from sketchlib.kernels.cuckoo import CuckooFilter, TooFullError, canonical_pairs, pack_pairs
 from sketchlib.spark.cuckoo import (
@@ -46,25 +54,14 @@ from sketchlib.spark.cuckoo import (
     PARTIAL_SCHEMA,
     CuckooSpec,
     _filter_row,
+    merged_row,
+    removed_row,
     split_by_shard,
     with_hash_fp,
 )
-from sketchlib.util import i64_to_u64, stable_seed
+from sketchlib.util import i64_to_u64
 
-#: PARTIAL_SCHEMA in Arrow types: the state file a commit writes
-_STATE_SCHEMA = pa.schema(
-    [
-        ("name", pa.string()),
-        ("shard", pa.int32()),
-        ("part_id", pa.int32()),
-        ("sketch", pa.binary()),
-        ("fpcount", pa.int64()),
-        ("toofull", pa.bool_()),
-        ("broken", pa.bool_()),
-        ("rows", pa.int64()),
-        ("dropped", pa.int64()),
-    ]
-)
+_STATE_FILE = "part-00000.parquet"
 
 
 def _read_commit(state_dir: str) -> dict | None:
@@ -76,12 +73,29 @@ def _read_commit(state_dir: str) -> dict | None:
         return json.load(f)
 
 
+def _state_bytes(commit: dict) -> bytes | None:
+    """The committed state file's bytes, checked against the length and
+    sha256 in ``epoch.json``: a missing file raises ``FileNotFoundError``,
+    a truncated, replaced or corrupt one ``ValueError``. A pointer written
+    before those fields existed returns None and loads unchecked, as before."""
+    if "sha256" not in commit:
+        return None
+    path = os.path.join(commit["state"], _STATE_FILE)
+    with open(path, "rb") as f:
+        data = f.read()
+    if len(data) != commit["bytes"] or hashlib.sha256(data).hexdigest() != commit["sha256"]:
+        raise ValueError(f"{path} does not match the length and sha256 in epoch.json")
+    return data
+
+
 def _load_state(commit: dict | None) -> dict[int, dict]:
-    """The committed state's PARTIAL_SCHEMA rows by shard, read on the
-    driver with pyarrow (no Spark job); empty before the first commit."""
+    """The committed state's PARTIAL_SCHEMA rows by shard, checked and read
+    on the driver with pyarrow (no Spark job); empty before the first commit."""
     if commit is None:
         return {}
-    return {r["shard"]: r for r in pq.read_table(commit["state"]).to_pylist()}
+    data = _state_bytes(commit)
+    table = pq.read_table(commit["state"] if data is None else pa.BufferReader(data))
+    return {r["shard"]: r for r in table.to_pylist()}
 
 
 def _collect_hashes(df: DataFrame, key):
@@ -91,47 +105,44 @@ def _collect_hashes(df: DataFrame, key):
     return i64_to_u64(pdf[HASH_COL].to_numpy()), i64_to_u64(pdf[FP_COL].to_numpy())
 
 
-def _fold(spec: CuckooSpec, prior: dict[int, dict], h, f, mode: str) -> list[dict]:
+def _fold(spec: CuckooSpec, prior: dict[int, dict], h, f, mode: str) -> dict[int, dict]:
     """The new state rows after folding items (h, f) into ``prior``.
 
     Per touched shard: ``"fast"`` folds the batch's canonical pairs into
     the committed blob (``merge_into``, O(batch)); ``"canonical"`` re-merges
-    committed blob + batch with ``_merge_group``'s seed, so the blob is
+    committed blob + batch through ``merged_row``, so the blob is
     byte-identical to a batch build. A shard's first batch is that merge in
     both modes. Untouched shards keep their row. Raises ``TooFullError``
     if any shard would drop a fingerprint."""
     rows = dict(prior)
     for s, (h_s, f_s) in split_by_shard(h, f, spec.num_shards).items():
-        bidx, fps = canonical_pairs(h_s, f_s, spec.size, spec.fpsize)
-        pairs = pack_pairs(bidx, fps, spec.size, spec.fpsize)
-        old = prior.get(s)
-        if mode == "fast" and old is not None:
+        pairs = pack_pairs(*canonical_pairs(h_s, f_s, spec.size, spec.fpsize), spec.size, spec.fpsize)
+        old = prior.get(s, {"fpcount": 0, "rows": 0, "dropped": 0})
+        fpcount, n = old["fpcount"] + len(h_s), old["rows"] + len(h_s)
+        if mode == "fast" and s in prior:
             flt = CuckooFilter.from_bytes(old["sketch"])
             flt.merge_into([pairs], on_toofull="count")
+            rows[s] = _filter_row(spec.name, s, flt, n, old["dropped"])
         else:
-            parts = [pairs] if old is None else [old["sketch"], pairs]
-            flt = CuckooFilter.merge(
-                parts, seed=stable_seed("merge", spec.name, s), on_toofull="count"
-            )
-        old = old or {"fpcount": 0, "rows": 0, "dropped": 0}
-        dropped = old["fpcount"] + len(h_s) - flt.fpcount
-        if dropped:
+            parts = [old["sketch"], pairs] if s in prior else [pairs]
+            rows[s] = merged_row(spec.name, s, parts, fpcount, n, old["dropped"])
+        if rows[s]["fpcount"] < fpcount:
             raise TooFullError(
-                f"sink '{spec.name}' shard {s}: the fold would drop {dropped} "
+                f"sink '{spec.name}' shard {s}: the fold would drop {fpcount - rows[s]['fpcount']} "
                 "fingerprint(s), a silent false negative; nothing was committed. "
                 "Increase the filter size or num_shards."
             )
-        rows[s] = _filter_row(spec.name, s, flt, old["rows"] + len(h_s), old["dropped"])
-    return [rows[s] for s in sorted(rows)]
+    return rows
 
 
 def _commit_state(
-    state_dir: str, rows: list, name: str, pointer: dict, prior: dict | None
+    state_dir: str, rows: dict, name: str, pointer: dict, prior: dict | None
 ) -> None:
     """Crash-atomic commit of a new filter state: the PARTIAL_SCHEMA
-    ``rows`` land as one fsync'd parquet file in their own
-    ``state_dir/name`` directory, then ``epoch.json`` (``pointer`` plus the
-    new state path) flips via an fsync'd tmp file and ``os.replace`` only
+    ``rows`` (by shard) land in shard order as one fsync'd parquet file in
+    their own ``state_dir/name`` directory, then ``epoch.json`` (``pointer``
+    plus the new state path and the file's length and sha256, which every
+    load checks) flips via an fsync'd tmp file and ``os.replace`` only
     after the write succeeded.
 
     GC keeps the new AND the ``prior`` commit's state directory.
@@ -144,15 +155,21 @@ def _commit_state(
     new_state = os.path.join(state_dir, name)
     shutil.rmtree(new_state, ignore_errors=True)  # a crashed earlier attempt
     os.makedirs(new_state)
-    with open(os.path.join(new_state, "part-00000.parquet"), "wb") as f:
-        # zstd: a third smaller than snappy on half-empty bucket arrays
-        pq.write_table(pa.Table.from_pylist(rows, schema=_STATE_SCHEMA), f, compression="zstd")
+    schema = to_arrow_schema(_parse_datatype_string(PARTIAL_SCHEMA))
+    table = pa.Table.from_pylist([rows[s] for s in sorted(rows)], schema=schema)
+    buf = pa.BufferOutputStream()
+    # zstd: a third smaller than snappy on half-empty bucket arrays
+    pq.write_table(table, buf, compression="zstd")
+    data = buf.getvalue().to_pybytes()
+    with open(os.path.join(new_state, _STATE_FILE), "wb") as f:
+        f.write(data)
         f.flush()
         os.fsync(f.fileno())
+    check = {"bytes": len(data), "sha256": hashlib.sha256(data).hexdigest()}
     epoch_path = os.path.join(state_dir, "epoch.json")
     tmp = epoch_path + ".tmp"
     with open(tmp, "w") as f:
-        json.dump({**pointer, "state": new_state}, f)
+        json.dump({**pointer, "state": new_state, **check}, f)
         f.flush()
         os.fsync(f.fileno())
     os.replace(tmp, epoch_path)
@@ -169,16 +186,8 @@ def incremental_cuckoo_sink(spec: CuckooSpec, key, state_dir: str, mode: str = "
     filter under ``state_dir`` (one parquet row per shard, current epoch
     resolved via ``epoch.json``; read it back with :func:`read_state`).
 
-    Each commit folds on the driver: one Spark job collects the batch's
-    (hash, fp) columns through Arrow; the committed state is read with
-    pyarrow, folded per shard, written as one parquet file and published
-    by the atomic pointer flip. Memory: the driver holds the committed
-    state (``num_shards × spec.size`` bytes) plus 16 B per batch row.
-    Readers already collect that same state (``ShardedCuckoo.from_df``,
-    ``probe``'s broadcast), so the sink adds no new bound. Sized for 4
-    shards × 128 KiB with 10k-row batches, 8 shards × 2 MiB
-    (``size_for(262_144, 4)``) and sf0.01 documents; a state too large
-    for the driver is too large for its readers as well.
+    Each commit folds on the driver; the module docstring gives the path,
+    its memory bound and the sizes it was checked at.
 
     Cost trade-off, selected by ``mode``:
 
@@ -226,9 +235,12 @@ def read_state(spark, state_dir: str) -> DataFrame:
     stays valid across ONE subsequent commit; to hold results across more
     than one micro-batch, materialize them (``.collect()`` /
     ``.localCheckpoint(eager=True)``) before the stream advances twice.
-    The schema is given, not inferred, so resolving starts no Spark job."""
+    The schema is given, not inferred, so resolving starts no Spark job;
+    a missing or mismatching state file raises (``_state_bytes``)."""
     with open(os.path.join(state_dir, "epoch.json")) as f:
-        return spark.read.schema(PARTIAL_SCHEMA).parquet(json.load(f)["state"])
+        commit = json.load(f)
+    _state_bytes(commit)
+    return spark.read.schema(PARTIAL_SCHEMA).parquet(commit["state"])
 
 
 def incremental_paragraph_dedup_sink(spec: CuckooSpec, state_dir: str, out_dir: str):
@@ -258,7 +270,7 @@ def incremental_paragraph_dedup_sink(spec: CuckooSpec, state_dir: str, out_dir: 
 
     The state is loaded once per batch with pyarrow and serves both the
     probe's broadcast and the fold; the memory bound and traffic are
-    those of :func:`incremental_cuckoo_sink` (8 shards × 2 MiB in the
+    those in the module docstring (8 shards × 2 MiB in the
     ``streaming_paragraph_dedup_replay`` gate entry).
 
     With micro-batches arriving in doc_id order the emitted corpus equals
@@ -353,21 +365,24 @@ def retract_paragraphs_from_state(
     poison-on-miss semantics — loud, not silent). Returns the number of
     distinct paragraph classes removed. Commits crash-atomically under a
     retract-suffixed state directory; the epoch counter is untouched, so
-    the stream's replay guard is unaffected."""
+    the stream's replay guard is unaffected.
+
+    The removal runs on the driver, on the sinks' commit path (module
+    docstring): one Arrow collect of the distinct paragraphs' (hash, fp),
+    then ``remove_keys``' per-shard ``removed_row``, so the bytes are the
+    same (tested). Memory: the committed state plus 16 B per distinct
+    paragraph; traffic: two Spark jobs and no shuffle of the state.
+    ``remove_keys`` stays the path for unbounded key sets."""
     from sketchlib.dedup import paragraph_table
-    from sketchlib.spark.cuckoo import remove_keys
 
     with open(os.path.join(state_dir, "epoch.json")) as f:
         commit = json.load(f)
-    prior = kept_docs.sparkSession.read.schema(PARTIAL_SCHEMA).parquet(commit["state"])
-    norms = (
-        paragraph_table(kept_docs.select("doc_id", F.col("kept_text").alias("text")))
-        .select("__norm")
-        .distinct()
-        .localCheckpoint(eager=True)  # count + remove both consume it
-    )
-    n = norms.count()
-    rows = [r.asDict() for r in remove_keys(prior, norms, spec, key=F.col("__norm")).collect()]
+    rows = _load_state(commit)
+    paras = paragraph_table(kept_docs.select("doc_id", F.col("kept_text").alias("text")))
+    # distinct strings, not hashes: two norms with colliding hashes are two removals
+    h, f = _collect_hashes(paras.select("__norm").distinct(), F.col("__norm"))
+    for s, (h_s, f_s) in split_by_shard(h, f, spec.num_shards).items():
+        rows[s] = removed_row(spec, spec.name, s, rows.get(s), h_s, f_s)
     k = int(commit.get("retracts", 0)) + 1
     _commit_state(
         state_dir,
@@ -376,7 +391,7 @@ def retract_paragraphs_from_state(
         {"epoch": commit["epoch"], "retracts": k},
         commit,
     )
-    return n
+    return len(h)
 
 
 def streaming_distinct_per_key(
@@ -453,19 +468,4 @@ def streaming_distinct_per_key(
         stateStructType="sketch binary",
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def windowed_event_counts(stream: DataFrame, window: str = "5 minutes",
-                          watermark: str = "10 minutes") -> DataFrame:
-    """Built-in streaming windowed aggregation with late-data watermark
-    (SURVEY.md §2.10 streaming row): counts + value sums per
-    (event window, event_type)."""
-    # parquet TIMESTAMP_NTZ is not a valid event-time column; cast to
-    # session-TZ timestamp (UTC is pinned in the session factory)
-    stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("total_value"))
     )

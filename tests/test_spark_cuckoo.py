@@ -300,3 +300,25 @@ def test_semi_join_via_filter_cogrouped_branch(spark):
         ).collect()
     )
     assert got == want == [k for k in range(3000) if k % 7 == 0 and k <= 693]
+
+
+def test_semi_join_via_filter_eager_jobs(spark):
+    """The drop guard and probe_auto's sizing read the checkpointed filter
+    in one aggregate: the eager part of a (warm) semi join starts at most 7
+    Spark jobs on the broadcast path and 6 on the co-grouped path."""
+    from sketchlib.spark.cuckoo import semi_join_via_filter
+
+    big = spark.range(0, 5000).selectExpr("id AS k", "id % 7 AS payload")
+    small = spark.range(0, 150).selectExpr("id * 3 AS sk")
+    sc = spark.sparkContext
+    for limit, most in ((256 << 20, 7), (1, 6)):
+        semi_join_via_filter(big, small, "k", "sk", broadcast_limit_bytes=limit)  # warm-up
+        group = f"test_semi_join_via_filter_eager_jobs_{limit}"
+        sc.setJobGroup(group, group)
+        try:
+            out = semi_join_via_filter(big, small, "k", "sk", broadcast_limit_bytes=limit)
+            jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(jobs) <= most, (limit, jobs)
+        assert out.count() == 150

@@ -27,6 +27,15 @@ def docs(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
+def test_sketch_spec_rejects_unserializable_params_on_driver():
+    """A float t-digest delta constructs a sketch but cannot serialize it;
+    the spec must fail on the driver, not later inside an executor."""
+    import struct
+
+    with pytest.raises(struct.error):
+        SketchSpec("t", "tdigest", (100.0,))
+
+
 @pytest.mark.parametrize("kind,params,col", [
     ("bloom", optimal_params(2000, 0.01), "user_id"),
     ("hll", (12,), "user_id"),

@@ -1,5 +1,6 @@
 """Structured Streaming tests: incremental cuckoo maintenance equals the
-batch build byte-for-byte; windowed aggregation with watermark."""
+batch build byte-for-byte; checked, crash-atomic state commits; stateful
+per-key sketches; paragraph dedup and its retraction."""
 
 from __future__ import annotations
 
@@ -13,7 +14,7 @@ from pyspark.sql import functions as F
 
 from sketchlib.kernels.cuckoo import size_for
 from sketchlib.spark.cuckoo import CuckooSpec, ShardedCuckoo, build_filter, probe
-from sketchlib.streaming import incremental_cuckoo_sink, read_state, windowed_event_counts
+from sketchlib.streaming import incremental_cuckoo_sink, read_state
 
 
 def test_incremental_stream_equals_batch(spark, sf_dir):
@@ -178,6 +179,45 @@ def test_read_state_starts_no_job(spark, sf_dir):
             (c.name, c.dataType) for c in want
         ]
         assert plain.count() == spec.num_shards
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
+def test_state_pointer_checks_the_state_file(spark, sf_dir):
+    """epoch.json records the state file's length and sha256: a state file
+    replaced by an older epoch's, or a missing one, raises on the next load
+    (read_state and the sink's fold) instead of returning stale state. A
+    pointer without those fields (written before they existed) still loads."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    spec = CuckooSpec(name="checked", size=size_for(2000, 2), fpsize=2, num_shards=2)
+    key = F.col("doc_id").cast("string")
+    work = tempfile.mkdtemp(prefix="sketchlib-checked-")
+    state_dir = os.path.join(work, "state")
+    try:
+        sink = incremental_cuckoo_sink(spec, key, state_dir)
+        halves = [docs.filter(F.pmod("doc_id", F.lit(2)) == g) for g in range(2)]
+        sink(halves[0], 0)
+        sink(halves[1], 1)
+        # a pointer written without the check fields loads unchecked
+        epoch_path = os.path.join(state_dir, "epoch.json")
+        with open(epoch_path) as f:
+            commit = json.load(f)
+        with open(epoch_path, "w") as f:
+            json.dump({k: v for k, v in commit.items() if k not in ("bytes", "sha256")}, f)
+        assert ShardedCuckoo.from_df(read_state(spark, state_dir), spec).count() == docs.count()
+        with open(epoch_path, "w") as f:
+            json.dump(commit, f)
+        current = os.path.join(state_dir, "state_epoch1", "part-00000.parquet")
+        shutil.copyfile(os.path.join(state_dir, "state_epoch0", "part-00000.parquet"), current)
+        with pytest.raises(ValueError, match="sha256"):
+            read_state(spark, state_dir)
+        with pytest.raises(ValueError, match="sha256"):
+            sink(halves[0], 2)
+        os.remove(current)
+        with pytest.raises(FileNotFoundError):
+            read_state(spark, state_dir)
+        with pytest.raises(FileNotFoundError):
+            sink(halves[0], 2)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -353,33 +393,6 @@ def test_streaming_distinct_per_key_stateful(spark, sf_dir):
         shutil.rmtree(work, ignore_errors=True)
 
 
-def test_windowed_event_counts(spark, sf_dir):
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    work = tempfile.mkdtemp(prefix="sketchlib-winstream-")
-    try:
-        events.write.parquet(os.path.join(work, "src"))
-        stream = spark.readStream.schema(events.schema).parquet(os.path.join(work, "src"))
-        agg = windowed_event_counts(stream, window="60 minutes", watermark="2 hours")
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName("win_counts")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        got = spark.sql("SELECT SUM(n) AS total FROM win_counts").first()["total"]
-        assert got == events.count()
-        # spot-check one window against a batch computation
-        batch = (
-            events.groupBy(F.window("ts", "60 minutes"), "event_type")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        assert spark.sql("SELECT COUNT(*) c FROM win_counts").first()["c"] == batch.count()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-
-
 def test_sink_retains_previous_epoch_for_lazy_readers(spark, sf_dir):
     """The sink keeps the immediately-previous epoch directory (ADVICE r2):
     a lazy read_state resolved before a commit must still be collectable
@@ -550,6 +563,8 @@ def test_paragraph_retraction_exact_deletion(spark):
     paragraphs, re-ingesting the same text keeps them again (exact
     deletion — the bloom-state design cannot do this); untouched
     paragraph classes still dedup."""
+    from sketchlib.dedup import paragraph_table
+    from sketchlib.spark.cuckoo import remove_keys
     from sketchlib.streaming import (
         incremental_paragraph_dedup_sink,
         retract_paragraphs_from_state,
@@ -567,15 +582,55 @@ def test_paragraph_retraction_exact_deletion(spark):
         sink = incremental_paragraph_dedup_sink(spec, state_dir, out_dir)
         sink(docs, 0)
         emitted = spark.read.parquet(os.path.join(out_dir, "batch_epoch0"))
-        n = retract_paragraphs_from_state(
-            spec, state_dir, emitted.where("doc_id = 1").select("doc_id", "kept_text")
+        victim = emitted.where("doc_id = 1").select("doc_id", "kept_text")
+        # the distributed CF.REM over the same norms is the reference state
+        norms = paragraph_table(victim.select("doc_id", F.col("kept_text").alias("text")))
+        want = remove_keys(
+            read_state(spark, state_dir), norms.select("__norm").distinct(), spec, key=F.col("__norm")
         )
+        want = {r["shard"]: r.asDict() for r in want.collect()}
+        n = retract_paragraphs_from_state(spec, state_dir, victim)
         assert n == 3  # doc 1 owned all three of its classes (incl. common line)
+        got = {r["shard"]: r.asDict() for r in read_state(spark, state_dir).collect()}
+        assert got == want
         # re-ingestion: doc 1's paragraphs are novel again; doc 2's
         # surviving class ('other text') still dedups
         sink(spark.createDataFrame(
             [(10, "secret para one\nother text")], "doc_id long, text string"), 1)
         out1 = spark.read.parquet(os.path.join(out_dir, "batch_epoch1")).first()
         assert out1["kept_text"] == "secret para one" and out1["n_kept"] == 1
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
+def test_retraction_starts_at_most_two_jobs(spark):
+    """Retraction runs on the driver like a sink commit: the distinct
+    paragraphs' hashes are the only thing it reads through Spark."""
+    from sketchlib.streaming import (
+        incremental_paragraph_dedup_sink,
+        retract_paragraphs_from_state,
+    )
+
+    docs = spark.createDataFrame(
+        [(i, f"para {i}\nshared line\nother {i % 3}") for i in range(20)],
+        "doc_id long, text string",
+    )
+    spec = CuckooSpec(name="retractjobs", size=size_for(1000, 4), fpsize=4, num_shards=2)
+    work = tempfile.mkdtemp(prefix="sketchlib-retractjobs-")
+    state_dir, out_dir = os.path.join(work, "state"), os.path.join(work, "out")
+    try:
+        incremental_paragraph_dedup_sink(spec, state_dir, out_dir)(docs, 0)
+        victims = (
+            spark.read.parquet(os.path.join(out_dir, "batch_epoch0"))
+            .where("doc_id < 5")
+            .select("doc_id", "kept_text")
+            .localCheckpoint(eager=True)
+        )
+        jobs = _jobs_in_group(
+            spark,
+            "test_retraction_starts_at_most_two_jobs",
+            lambda: retract_paragraphs_from_state(spec, state_dir, victims),
+        )
+        assert len(jobs) <= 2, jobs
     finally:
         shutil.rmtree(work, ignore_errors=True)
