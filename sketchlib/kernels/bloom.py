@@ -84,7 +84,8 @@ class BloomFilter(FoldMerge):
         if magic != _MAGIC or ver != 1:
             raise ValueError("bad magic/version")
         out = cls(m_bits, k)
-        out.words = np.frombuffer(blob[_HEADER.size:], dtype=np.uint64).copy()
+        body = out._body(blob, _HEADER.size, out.words.nbytes)
+        out.words = np.frombuffer(body, dtype=np.uint64).copy()
         out.count = count
         return out
 

@@ -80,7 +80,8 @@ class CountMinSketch(FoldMerge):
         if magic != _MAGIC or ver != 1:
             raise ValueError("bad magic/version")
         out = cls(w, d)
-        out.counters = np.frombuffer(blob[_HEADER.size:], dtype=np.int64).reshape(d, w).copy()
+        body = out._body(blob, _HEADER.size, out.counters.nbytes)
+        out.counters = np.frombuffer(body, dtype=np.int64).reshape(d, w).copy()
         out.total = total
         return out
 

@@ -1,4 +1,5 @@
-"""The one merge fold shared by the sibling sketch kernels."""
+"""The one merge fold, and the blob-length check, shared by the sibling
+sketch kernels."""
 
 from __future__ import annotations
 
@@ -23,3 +24,12 @@ class FoldMerge:
         if out is None:
             raise ValueError("merge needs at least one part")
         return out
+
+    @staticmethod
+    def _body(blob: bytes, header: int, nbytes: int) -> bytes:
+        """The body after a ``header``-byte header, which must be exactly the
+        ``nbytes`` the header declares: a truncated or padded blob raises
+        ``ValueError`` instead of decoding to a different sketch."""
+        if len(blob) != header + nbytes:
+            raise ValueError(f"blob is {len(blob)} bytes, its header declares {header + nbytes}")
+        return blob[header:]

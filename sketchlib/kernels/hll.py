@@ -82,7 +82,8 @@ class HyperLogLog(FoldMerge):
         if magic != _MAGIC or ver != 1:
             raise ValueError("bad magic/version")
         out = cls(p)
-        out.registers = np.frombuffer(blob[_HEADER.size:], dtype=np.uint8).copy()
+        body = out._body(blob, _HEADER.size, out.registers.nbytes)
+        out.registers = np.frombuffer(body, dtype=np.uint8).copy()
         out.count = count
         return out
 

@@ -294,6 +294,8 @@ def checkpointed_build(
         "seed": spec.seed,
         "n_partitions": n_parts,
         "input": _input_fingerprint(df, input_id),
+        # the build filters NULL keys; a checkpoint from before then rebuilds
+        "null_keys": "skipped",
     }
     done: set[int] = set()
     if os.path.exists(meta_path):

@@ -1529,8 +1529,7 @@ _INCR_ORACLE = (
     "WITH seen AS (SELECT {norm} AS nt FROM documents WHERE doc_id % 2 = 0) "
     # NOT EXISTS + IS NOT DISTINCT FROM, never NOT IN: one NULL
     # normalized text in the seen snapshot would empty a NOT-IN result
-    # entirely, while the filter hash treats NULL-equals-NULL
-    # (xxhash64(NULL) is a constant) - fuzz finding
+    # entirely, while the query treats NULL-equals-NULL - fuzz finding
     "SELECT d.doc_id FROM documents d "
     "WHERE d.doc_id % 2 = 1 AND NOT EXISTS "
     "(SELECT 1 FROM seen s WHERE s.nt IS NOT DISTINCT FROM {norm2})"
@@ -1555,14 +1554,14 @@ def incremental_dedup_new_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     norm = _nts("spark")
     prev = docs.filter("doc_id % 2 = 0").selectExpr(f"{norm} AS nt")
     new = docs.filter("doc_id % 2 = 1").selectExpr("doc_id", f"{norm} AS nt")
-    spec = CuckooSpec(
-        "incr-dedup", size_for(max(prev.count(), 1), 4), fpsize=4, num_shards=2
-    )
+    n, n_keyed = prev.agg(F.count(F.lit(1)), F.count("nt")).first()
+    spec = CuckooSpec("incr-dedup", size_for(max(n, 1), 4), fpsize=4, num_shards=2)
     merged = build_filter_direct(prev, spec, key=F.col("nt"))
     sc = ShardedCuckoo.from_df(merged, spec)
+    # the filter skips NULL keys: a NULL text was seen iff the previous snapshot has one
     return (
         probe(new, sc, key=F.col("nt"))
-        .filter(~F.col("member"))
+        .filter(~F.col("member") & (F.col("nt").isNotNull() | F.lit(n == n_keyed)))
         .select("doc_id")
     )
 
@@ -1595,11 +1594,13 @@ def training_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     merged = build_filter_direct(kept, spec, key=F.col("doc_id").cast("string"))
     sc = ShardedCuckoo.from_df(merged, spec)
-    return (
+    members = (
         probe(docs.select("doc_id"), sc, key=F.col("doc_id").cast("string"))
         .filter(F.col("member"))
         .select("doc_id")
     )
+    # the filter skips NULL keys, so a survivor with a NULL id passes exactly
+    return members.unionByName(kept.where(F.col("doc_id").isNull()))
 
 
 # --------------------------------------------------------- similarity

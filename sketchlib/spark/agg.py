@@ -220,9 +220,9 @@ def grouped_estimates(grouped: DataFrame, spec: SketchSpec, group_col: str) -> D
     return _merge_by(grouped, spec, [group_col], estimate=est)
 
 
-def bloom_probe(df: DataFrame, bloom: BloomFilter, key, result_col: str = "member") -> DataFrame:
-    """Distributed Bloom membership: broadcast the bit array, vectorized
-    mapInPandas probe (no false negatives; FP within (1-e^{-kn/m})^k).
+def bloom_probe(df: DataFrame, bloom: BloomFilter, key) -> DataFrame:
+    """Distributed Bloom membership as a boolean ``member`` column: broadcast
+    the bit array, vectorized mapInPandas probe (no false negatives; FP within (1-e^{-kn/m})^k).
 
     CAUTION: ``key`` must be the SAME expression (including type!) used at
     build time — ``xxhash64(long)`` ≠ ``xxhash64(string)``, so probing a
@@ -237,7 +237,7 @@ def bloom_probe(df: DataFrame, bloom: BloomFilter, key, result_col: str = "membe
     bc = df.sparkSession.sparkContext.broadcast(bloom.to_bytes())
     out_schema = T.StructType(
         [f for f in df.schema.fields if f.name != _HASH_COL]
-        + [T.StructField(result_col, T.BooleanType())]
+        + [T.StructField("member", T.BooleanType())]
     )
 
     def run(batches):
@@ -245,6 +245,6 @@ def bloom_probe(df: DataFrame, bloom: BloomFilter, key, result_col: str = "membe
         for pdf in batches:
             h = i64_to_u64(pdf[_HASH_COL].to_numpy()) if len(pdf) else np.empty(0, np.uint64)
             hit = flt.contains_hashes(h) if len(pdf) else np.empty(0, bool)
-            yield pdf.drop(columns=[_HASH_COL]).assign(**{result_col: hit})
+            yield pdf.drop(columns=[_HASH_COL]).assign(member=hit)
 
     return df.mapInPandas(run, out_schema)

@@ -26,6 +26,11 @@ The Spark-native re-expression of the reference's command surface
   :func:`split_by_shard`'s arrays: :func:`merged_row` (builds, merges,
   canonical folds) and :func:`removed_row` (``remove_keys``, retraction).
 
+Hashing: every operator takes ``key`` (an expression :func:`with_hash_fp`
+hashes in-plan) or ``key=None`` over prepared ``HASH_COL`` / ``FP_COL``
+longs. :func:`_hash_fp` is the one place builds, removals and sinks turn
+either into items, and it skips NULL keys; probes answer every row.
+
 Scale design (10^12 docs, SURVEY.md §4): the input scan only ever reads the
 key column (Catalyst prunes the rest); the only shuffle moves partial blobs
 (KBs–MBs each), never rows; ``num_shards`` splits the key space by the HIGH
@@ -70,9 +75,11 @@ class CuckooSpec:
     """CF.INIT equivalent: declares one distributed filter.
 
     ``size`` is bytes PER SHARD (power of two, ≥ 2 buckets). The filter is
-    hashing-agnostic like the reference (README.md:40-76): pass prepared
-    ``hash``/``fp`` columns to the builders, or let :func:`with_hash_fp`
-    derive them in-plan with xxhash64.
+    hashing-agnostic like the reference (README.md:40-76), and there are two
+    ways to hash: pass ``key`` and :func:`with_hash_fp` derives (hash, fp)
+    in-plan with xxhash64, or pass ``key=None`` over prepared ``HASH_COL`` /
+    ``FP_COL`` long columns. Builds, removals and sinks skip a row whose key
+    (or prepared hash or fp) is NULL; probes answer every row.
     """
 
     name: str
@@ -87,17 +94,42 @@ class CuckooSpec:
             raise ValueError("num_shards must be in [1, 65536]")
 
 
-def with_hash_fp(df: DataFrame, key, hash_col: str = HASH_COL, fp_col: str = FP_COL) -> DataFrame:
-    """Derive (hash, fp) from a key column with two independent in-plan
-    xxhash64 expressions — pure Catalyst projections, JVM-side, codegen'd.
+def with_hash_fp(df: DataFrame, key) -> DataFrame:
+    """Derive (HASH_COL, FP_COL) from a key column with two independent
+    in-plan xxhash64 expressions — pure Catalyst projections, JVM-side,
+    codegen'd.
 
     The reference leaves hashing to the client (README.md:40-53); here the
     "client" is the query plan and any expression can be substituted.
     """
     key = F.col(key) if isinstance(key, str) else key
-    return df.withColumn(hash_col, F.xxhash64(key)).withColumn(
-        fp_col, F.xxhash64(key, F.lit(_FP_SALT))
+    return df.withColumn(HASH_COL, F.xxhash64(key)).withColumn(
+        FP_COL, F.xxhash64(key, F.lit(_FP_SALT))
     )
+
+
+def _hash_fp(df: DataFrame, key) -> DataFrame:
+    """The (HASH_COL, FP_COL) longs that builds, removals and sinks insert:
+    derived from ``key``, or the caller's prepared columns when ``key`` is
+    None. NULL keys are skipped, not inserted: xxhash64(NULL) is the seed,
+    so every NULL would otherwise be the same phantom item."""
+    if key is None:
+        df = df.dropna(subset=[HASH_COL, FP_COL])
+    else:
+        key = F.col(key) if isinstance(key, str) else key
+        df = with_hash_fp(df.where(key.isNotNull()), key)
+    return df.select(*(F.col(c).cast("long").alias(c) for c in (HASH_COL, FP_COL)))
+
+
+def _u64_pairs(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    """An Arrow batch's (HASH_COL, FP_COL) longs as unsigned arrays."""
+    return i64_to_u64(pdf[HASH_COL].to_numpy()), i64_to_u64(pdf[FP_COL].to_numpy())
+
+
+def collect_hash_fp(df: DataFrame, key) -> tuple[np.ndarray, np.ndarray]:
+    """The (hash, fp) items ``key`` inserts from ``df``, as unsigned arrays
+    collected to the driver in one Arrow job."""
+    return _u64_pairs(_hash_fp(df, key).toPandas())
 
 
 def _shard_col(hash_col: str, num_shards: int) -> Column:
@@ -118,14 +150,13 @@ def split_by_shard(
     return out
 
 
-def _gather(batches, hash_col: str, fp_col: str, num_shards: int):
+def _gather(batches, num_shards: int):
     """A task's Arrow batches of (hash, fp) longs as unsigned per-shard
     arrays, in :func:`split_by_shard` order."""
-    pdfs = [pdf for pdf in batches if not pdf.empty]
-    if not pdfs:
+    pairs = [_u64_pairs(pdf) for pdf in batches if not pdf.empty]
+    if not pairs:
         return {}
-    h = i64_to_u64(np.concatenate([pdf[hash_col].to_numpy() for pdf in pdfs]))
-    f = i64_to_u64(np.concatenate([pdf[fp_col].to_numpy() for pdf in pdfs]))
+    h, f = (np.concatenate(a) for a in zip(*pairs))
     return split_by_shard(h, f, num_shards)
 
 
@@ -133,12 +164,7 @@ def _gather(batches, hash_col: str, fp_col: str, num_shards: int):
 
 
 def build_partials(
-    df: DataFrame,
-    spec: CuckooSpec,
-    key=None,
-    hash_col: str = HASH_COL,
-    fp_col: str = FP_COL,
-    skip_pids: set | None = None,
+    df: DataFrame, spec: CuckooSpec, key=None, skip_pids: set | None = None
 ) -> DataFrame:
     """CF.ADD, distributed: one partial per (input partition × shard), built
     shuffle-free with ``mapInPandas`` (a task's Arrow batches → one
@@ -155,18 +181,14 @@ def build_partials(
     upstream repartition and this build would change projection pushdown and
     thereby the row→partition assignment of round-robin exchanges.
     """
-    if key is not None:
-        df = with_hash_fp(df, key, hash_col, fp_col)
-    sel = df.select(
-        F.col(hash_col).cast("long").alias(hash_col), F.col(fp_col).cast("long").alias(fp_col)
-    )
+    sel = _hash_fp(df, key)
     name, size, fpsize, num_shards = spec.name, spec.size, spec.fpsize, spec.num_shards
 
     def build(batches):
         pid = TaskContext.get().partitionId()
         if skip_pids and pid in skip_pids:
             return
-        shards = _gather(batches, hash_col, fp_col, num_shards)
+        shards = _gather(batches, num_shards)
         if shards:
             rows = [len(h) for h, _ in shards.values()]
             yield pd.DataFrame(
@@ -235,18 +257,12 @@ def merge_partials(partials: DataFrame) -> DataFrame:
     return partials.groupBy("name", "shard").applyInPandas(_merge_group, PARTIAL_SCHEMA)
 
 
-def build_filter(df: DataFrame, spec: CuckooSpec, key=None, **kw) -> DataFrame:
+def build_filter(df: DataFrame, spec: CuckooSpec, key=None) -> DataFrame:
     """build_partials + merge_partials in one call."""
-    return merge_partials(build_partials(df, spec, key=key, **kw))
+    return merge_partials(build_partials(df, spec, key=key))
 
 
-def build_filter_direct(
-    df: DataFrame,
-    spec: CuckooSpec,
-    key=None,
-    hash_col: str = HASH_COL,
-    fp_col: str = FP_COL,
-) -> DataFrame:
+def build_filter_direct(df: DataFrame, spec: CuckooSpec, key=None) -> DataFrame:
     """One-shuffle build: repartition the (hash, fp) pairs by shard and build
     each shard's FINAL filter in a single reduce pass — no partial blobs, no
     merge stage, no extra jobs.
@@ -260,16 +276,12 @@ def build_filter_direct(
     but no per-input-partition partials for checkpoint/resume; use
     ``checkpointed_build`` when resumability matters.
     """
-    if key is not None:
-        df = with_hash_fp(df, key, hash_col, fp_col)
     name, size, fpsize, num_shards = spec.name, spec.size, spec.fpsize, spec.num_shards
-    sel = df.select(
-        F.col(hash_col).cast("long").alias(hash_col), F.col(fp_col).cast("long").alias(fp_col)
-    ).repartition(num_shards, _shard_col(hash_col, num_shards))
+    sel = _hash_fp(df, key).repartition(num_shards, _shard_col(HASH_COL, num_shards))
 
     def reduce_shards(batches):
         out = []
-        for s, (h, f) in _gather(batches, hash_col, fp_col, num_shards).items():
+        for s, (h, f) in _gather(batches, num_shards).items():
             pairs = pack_pairs(*canonical_pairs(h, f, size, fpsize), size, fpsize)
             out.append(merged_row(name, s, [pairs], len(h), len(h), 0))
         if out:
@@ -353,14 +365,7 @@ class ShardedCuckoo:
 # ----------------------------------------------------------------- probe
 
 
-def probe(
-    df: DataFrame,
-    sharded: ShardedCuckoo,
-    key=None,
-    hash_col: str = HASH_COL,
-    fp_col: str = FP_COL,
-    result_col: str = "member",
-) -> DataFrame:
+def probe(df: DataFrame, sharded: ShardedCuckoo, key=None, result_col: str = "member") -> DataFrame:
     """CF.CHECK, distributed: broadcast the shard blobs once, answer probes
     with a vectorized ``mapInPandas`` (one kernel call per Arrow batch).
 
@@ -374,7 +379,8 @@ def probe(
     CAUTION: ``key`` must be the SAME expression (including type!) used at
     build time — ``xxhash64(long)`` ≠ ``xxhash64(string)``. Hashing
     consistency is the caller's responsibility, mirroring the reference's
-    client-hashes contract (README.md:40-53).
+    client-hashes contract (README.md:40-53). Builds skip NULL keys, so a
+    NULL probe answers like any never-inserted key.
 
     DEVIATION from the reference (SURVEY.md §4.1): operating on a
     nonexistent Redis key errors in the reference
@@ -385,9 +391,8 @@ def probe(
     need strict existence semantics should validate
     ``ShardedCuckoo.filters`` coverage up front.
     """
-    had_key = key is not None
-    if had_key:
-        df = with_hash_fp(df, key, hash_col, fp_col)
+    if key is not None:
+        df = with_hash_fp(df, key)
     spark = df.sparkSession
     bc = spark.sparkContext.broadcast(sharded.blobs())
     spec = sharded.spec
@@ -396,28 +401,13 @@ def probe(
     def run(batches):
         filters = ShardedCuckoo(spec, {s: CuckooFilter.from_bytes(b) for s, b in bc.value.items()})
         for pdf in batches:
-            if pdf.empty:
-                yield pdf.assign(**{result_col: np.empty(0, dtype=bool)})
-                continue
-            h = i64_to_u64(pdf[hash_col].to_numpy())
-            f = i64_to_u64(pdf[fp_col].to_numpy())
-            yield pdf.assign(**{result_col: filters.contains_arrays(h, f)})
+            yield pdf.assign(**{result_col: filters.contains_arrays(*_u64_pairs(pdf))})
 
     out = df.mapInPandas(run, out_schema)
-    if had_key:
-        out = out.drop(hash_col, fp_col)
-    return out
+    return out if key is None else out.drop(HASH_COL, FP_COL)
 
 
-def probe_cogrouped(
-    merged: DataFrame,
-    probes: DataFrame,
-    spec: CuckooSpec,
-    key=None,
-    hash_col: str = HASH_COL,
-    fp_col: str = FP_COL,
-    result_col: str = "member",
-) -> DataFrame:
+def probe_cogrouped(merged: DataFrame, probes: DataFrame, spec: CuckooSpec, key=None) -> DataFrame:
     """CF.CHECK without broadcasting: co-partition probes with their shard's
     blob and answer each shard's probes in one vectorized kernel call.
 
@@ -428,28 +418,24 @@ def probe_cogrouped(
     documented there: probes co-grouped with no blob return
     "definitely absent" rather than erroring like the reference's
     missing-key check (src/redis-cuckoofilter.zig:243-247)."""
-    had_key = key is not None
-    if had_key:
-        probes = with_hash_fp(probes, key, hash_col, fp_col)
-    keep = [c for c in probes.columns if c not in (hash_col, fp_col)] if had_key else list(probes.columns)
-    p = probes.withColumn("shard", _shard_col(hash_col, spec.num_shards)).withColumn(
+    if key is not None:
+        probes = with_hash_fp(probes, key)
+    keep = [c for c in probes.columns if key is None or c not in (HASH_COL, FP_COL)]
+    p = probes.withColumn("shard", _shard_col(HASH_COL, spec.num_shards)).withColumn(
         "name", F.lit(spec.name)
     )
     out_schema = T.StructType(
-        [probes.schema[c] for c in keep] + [T.StructField(result_col, T.BooleanType())]
+        [probes.schema[c] for c in keep] + [T.StructField("member", T.BooleanType())]
     )
-    num_shards = spec.num_shards
 
     def run(key_tuple, left, right):
         if right.empty:
-            return right.reindex(columns=keep).assign(**{result_col: []})
+            return right.reindex(columns=keep).assign(member=[])
         if left.empty:
-            return right[keep].assign(**{result_col: False})
+            return right[keep].assign(member=False)
         flt = CuckooFilter.from_bytes(bytes(left["sketch"].iloc[0]))
-        h = i64_to_u64(right[hash_col].to_numpy())
-        f = i64_to_u64(right[fp_col].to_numpy())
-        hit = flt.contains_batch(h, f, raise_broken_on_miss=False)
-        return right[keep].assign(**{result_col: hit})
+        hit = flt.contains_batch(*_u64_pairs(right), raise_broken_on_miss=False)
+        return right[keep].assign(member=hit)
 
     return (
         merged.groupby("name", "shard")
@@ -458,11 +444,11 @@ def probe_cogrouped(
     )
 
 
-def _probe_sized(merged, probes, spec, total, broadcast_limit_bytes, key, **kw) -> DataFrame:
+def _probe_sized(merged, probes, spec, total, broadcast_limit_bytes, key) -> DataFrame:
     """probe_auto's broadcast-or-co-group rule for ``total`` blob bytes."""
     if total <= broadcast_limit_bytes:
-        return probe(probes, ShardedCuckoo.from_df(merged, spec), key=key, **kw)
-    return probe_cogrouped(merged, probes, spec, key=key, **kw)
+        return probe(probes, ShardedCuckoo.from_df(merged, spec), key=key)
+    return probe_cogrouped(merged, probes, spec, key=key)
 
 
 def probe_auto(
@@ -471,7 +457,6 @@ def probe_auto(
     spec: CuckooSpec,
     key=None,
     broadcast_limit_bytes: int = 256 << 20,
-    **kw,
 ) -> DataFrame:
     """CF.CHECK with automatic physical strategy: broadcast the shard blobs
     when the TOTAL filter size fits comfortably on every executor
@@ -481,7 +466,7 @@ def probe_auto(
     never ships the blobs to the driver unless broadcasting anyway. Both
     paths return identical results (tested)."""
     total = merged.select(F.sum(F.octet_length("sketch")).alias("b")).first()["b"] or 0
-    return _probe_sized(merged, probes, spec, total, broadcast_limit_bytes, key, **kw)
+    return _probe_sized(merged, probes, spec, total, broadcast_limit_bytes, key)
 
 
 def semi_join_via_filter(
@@ -490,7 +475,6 @@ def semi_join_via_filter(
     big_key,
     small_key,
     fpsize: int = 2,
-    num_shards: int = 8,
     name: str = "semijoin",
     broadcast_limit_bytes: int = 256 << 20,
 ) -> DataFrame:
@@ -531,12 +515,8 @@ def semi_join_via_filter(
     # them as `small` to control the lifetime.
     keys = small.select(small_key.alias("__k")).distinct().cache()
     n = keys.count()  # sizing job (CF.SIZEFOR) — also materializes the cache
-    spec = CuckooSpec(
-        name, max(size_for(max(n, 1), fpsize), 1024), fpsize, num_shards=num_shards
-    )
-    merged = build_filter_direct(keys, spec, key=F.col("__k")).localCheckpoint(
-        eager=True
-    )
+    spec = CuckooSpec(name, max(size_for(max(n, 1), fpsize), 1024), fpsize, num_shards=8)
+    merged = build_filter_direct(keys, spec, key=F.col("__k")).localCheckpoint(eager=True)
     guard = merged.agg(
         F.sum("dropped").alias("d"),
         F.max("toofull").alias("t"),
@@ -603,35 +583,27 @@ def removed_row(spec: CuckooSpec, name: str, shard: int, row, h, f) -> dict:
     return _filter_row(name, shard, flt, rows, dropped)
 
 
-def remove_keys(
-    merged: DataFrame,
-    keys_df: DataFrame,
-    spec: CuckooSpec,
-    key=None,
-    hash_col: str = HASH_COL,
-    fp_col: str = FP_COL,
-) -> DataFrame:
+def remove_keys(merged: DataFrame, keys_df: DataFrame, spec: CuckooSpec, key=None) -> DataFrame:
     """CF.REM, distributed: co-group the merged shard rows with the
     to-remove keys per shard and run one vectorized ``remove_batch`` per
     shard. Exact-deletion semantics are the reference's: removing a
     never-inserted key permanently poisons that shard (``broken``).
 
     Keys are sorted canonically inside each shard so the resulting blob is
-    independent of ``keys_df``'s partitioning and row order.
+    independent of ``keys_df``'s partitioning and row order. NULL keys are
+    skipped, as at build time, so they never poison a shard.
     """
-    if key is not None:
-        keys_df = with_hash_fp(keys_df, key, hash_col, fp_col)
-    keys = keys_df.select(
+    keys = _hash_fp(keys_df, key).select(
         F.lit(spec.name).alias("name"),
-        _shard_col(hash_col, spec.num_shards).alias("shard"),
-        F.col(hash_col).cast("long").alias("h"),
-        F.col(fp_col).cast("long").alias("f"),
+        _shard_col(HASH_COL, spec.num_shards).alias("shard"),
+        HASH_COL,
+        FP_COL,
     )
 
     def rem(key_tuple, left, right):
-        h, f = (i64_to_u64(right[c].to_numpy()) for c in "hf")
         row = None if left.empty else left.iloc[0]
-        return pd.DataFrame([removed_row(spec, str(key_tuple[0]), int(key_tuple[1]), row, h, f)])
+        shard = int(key_tuple[1])
+        return pd.DataFrame([removed_row(spec, str(key_tuple[0]), shard, row, *_u64_pairs(right))])
 
     return (
         merged.groupby("name", "shard")

@@ -23,14 +23,15 @@ before anything is written.
 
 Exactly-once: the state write is guarded by the epoch id (a replayed
 micro-batch is skipped, not double-counted — multiset adds are not
-idempotent, so the guard is load-bearing). The guard is CRASH-ATOMIC:
-each epoch's merged state is written to its own directory, then
-``epoch.json`` — recording the epoch and the state file's directory,
+idempotent, so the guard is load-bearing; an epoch below the committed
+one, the sign of a fresh checkpointLocation, also warns). The guard is
+CRASH-ATOMIC: each epoch's merged state is written to its own directory,
+then ``epoch.json`` — recording the epoch and the state file's directory,
 length and sha256 (checked on every load) — is atomically replaced
-(write-tmp + os.replace). A crash at any
-point leaves the previous epoch.json (and the directory it points to)
-intact, so recovery resumes from consistent state and the interrupted
-micro-batch folds in exactly once on replay.
+(write-tmp + os.replace). A crash at any point leaves the previous
+epoch.json (and the directory it points to) intact, so recovery resumes
+from consistent state and the interrupted micro-batch folds in exactly
+once on replay.
 """
 
 from __future__ import annotations
@@ -39,6 +40,7 @@ import hashlib
 import json
 import os
 import shutil
+import warnings
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -49,17 +51,14 @@ from pyspark.sql.types import _parse_datatype_string
 
 from sketchlib.kernels.cuckoo import CuckooFilter, TooFullError, canonical_pairs, pack_pairs
 from sketchlib.spark.cuckoo import (
-    FP_COL,
-    HASH_COL,
     PARTIAL_SCHEMA,
     CuckooSpec,
     _filter_row,
+    collect_hash_fp,
     merged_row,
     removed_row,
     split_by_shard,
-    with_hash_fp,
 )
-from sketchlib.util import i64_to_u64
 
 _STATE_FILE = "part-00000.parquet"
 
@@ -71,6 +70,14 @@ def _read_commit(state_dir: str) -> dict | None:
         return None
     with open(epoch_path) as f:
         return json.load(f)
+
+
+def _committed(state_dir: str) -> dict:
+    """The committed pointer; ``FileNotFoundError`` before the first commit."""
+    commit = _read_commit(state_dir)
+    if commit is None:
+        raise FileNotFoundError(f"no committed state under {state_dir}")
+    return commit
 
 
 def _state_bytes(commit: dict) -> bytes | None:
@@ -98,11 +105,23 @@ def _load_state(commit: dict | None) -> dict[int, dict]:
     return {r["shard"]: r for r in table.to_pylist()}
 
 
-def _collect_hashes(df: DataFrame, key):
-    """The in-plan (hash, fp) of ``key`` over ``df`` as unsigned arrays,
-    collected in one Arrow job."""
-    pdf = with_hash_fp(df, key).select(HASH_COL, FP_COL).toPandas()
-    return i64_to_u64(pdf[HASH_COL].to_numpy()), i64_to_u64(pdf[FP_COL].to_numpy())
+def _replayed(commit: dict | None, epoch_id: int) -> bool:
+    """Whether a sink skips ``epoch_id`` as already committed. A replay
+    re-delivers only the last epoch; an older one is the sign of a restart
+    with a FRESH checkpointLocation, after which every batch would be
+    skipped, so that skip warns."""
+    if commit is None or epoch_id > commit["epoch"]:
+        return False
+    if epoch_id < commit["epoch"]:
+        warnings.warn(
+            f"sink skipping epoch {epoch_id} < committed {commit['epoch']}: if this "
+            "stream was restarted with a fresh checkpointLocation against an existing "
+            "state_dir, its epoch ids restart at 0 and EVERY batch will be skipped as "
+            "a replay. Keep the original checkpoint, or point the sink at a fresh state_dir.",
+            RuntimeWarning,
+            stacklevel=3,
+        )
+    return True
 
 
 def _fold(spec: CuckooSpec, prior: dict[int, dict], h, f, mode: str) -> dict[int, dict]:
@@ -204,7 +223,9 @@ def incremental_cuckoo_sink(spec: CuckooSpec, key, state_dir: str, mode: str = "
       byte-comparable blob is needed.
 
     A fold that would drop a fingerprint raises ``TooFullError`` before
-    anything is written (see the module docstring).
+    anything is written (see the module docstring). Rows with a NULL key
+    are skipped. A replayed epoch is skipped; an epoch below the committed
+    one also warns (:func:`_replayed`).
 
     Usage::
 
@@ -216,9 +237,9 @@ def incremental_cuckoo_sink(spec: CuckooSpec, key, state_dir: str, mode: str = "
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         os.makedirs(state_dir, exist_ok=True)
         commit = _read_commit(state_dir)
-        if commit is not None and epoch_id <= commit["epoch"]:
-            return  # replayed micro-batch: already folded in
-        h, f = _collect_hashes(batch_df, key)
+        if _replayed(commit, epoch_id):
+            return
+        h, f = collect_hash_fp(batch_df, key)
         rows = _fold(spec, _load_state(commit), h, f, mode)
         _commit_state(state_dir, rows, f"state_epoch{epoch_id}", {"epoch": epoch_id}, commit)
 
@@ -237,8 +258,7 @@ def read_state(spark, state_dir: str) -> DataFrame:
     ``.localCheckpoint(eager=True)``) before the stream advances twice.
     The schema is given, not inferred, so resolving starts no Spark job;
     a missing or mismatching state file raises (``_state_bytes``)."""
-    with open(os.path.join(state_dir, "epoch.json")) as f:
-        commit = json.load(f)
+    commit = _committed(state_dir)
     _state_bytes(commit)
     return spark.read.schema(PARTIAL_SCHEMA).parquet(commit["state"])
 
@@ -279,12 +299,9 @@ def incremental_paragraph_dedup_sink(spec: CuckooSpec, state_dir: str, out_dir: 
     first ARRIVAL wins instead of the smallest (doc_id, pos) — the
     streaming-semantics difference, documented not hidden.
 
-    The replay guard is tied to the STREAM's epoch counter: resuming must
-    reuse the original checkpointLocation. Restarting with a fresh
-    checkpoint against an old ``state_dir`` restarts epochs at 0, so
-    every batch would skip as a "replay" — the sink emits a loud
-    RuntimeWarning for that signature (epoch strictly below the
-    committed one) instead of dropping data silently."""
+    The replay guard is the cuckoo sink's (:func:`_replayed`): resuming
+    must reuse the original checkpointLocation, and an epoch strictly
+    below the committed one warns instead of dropping data silently."""
     from pyspark.sql import Window
 
     from sketchlib.dedup import paragraph_table
@@ -294,28 +311,8 @@ def incremental_paragraph_dedup_sink(spec: CuckooSpec, state_dir: str, out_dir: 
         os.makedirs(state_dir, exist_ok=True)
         os.makedirs(out_dir, exist_ok=True)
         commit = _read_commit(state_dir)
-        if commit is not None and epoch_id <= commit["epoch"]:
-            if epoch_id < commit["epoch"]:
-                # a genuine same-checkpoint replay only re-delivers the
-                # LAST epoch (epoch_id == commit.epoch). A strictly older
-                # epoch is the restart-with-a-FRESH-checkpoint signature:
-                # foreachBatch epochs restart at 0 against the old
-                # state_dir and every batch would be silently dropped —
-                # make the skip loud instead of silent
-                import warnings
-
-                warnings.warn(
-                    f"paragraph-dedup sink skipping epoch {epoch_id} < "
-                    f"committed {commit['epoch']}: if this stream was "
-                    "restarted with a fresh checkpointLocation against an "
-                    "existing state_dir, its epoch ids restart at 0 and "
-                    "EVERY batch will be skipped as a replay. Keep the "
-                    "original checkpoint, or point the sink at a fresh "
-                    "state_dir.",
-                    RuntimeWarning,
-                    stacklevel=2,
-                )
-            return  # replayed micro-batch: output + state already committed
+        if _replayed(commit, epoch_id):
+            return  # output + state already committed
         prior = _load_state(commit)
         paras = paragraph_table(batch_df)
         if prior:
@@ -327,7 +324,7 @@ def incremental_paragraph_dedup_sink(spec: CuckooSpec, state_dir: str, out_dir: 
         marked = paras.withColumn(
             "keep", (F.row_number().over(w) == 1) & ~F.col("__seen")
         ).localCheckpoint(eager=True)  # fans out into output + state fold
-        h, f = _collect_hashes(marked.where("keep"), F.col("__norm"))
+        h, f = collect_hash_fp(marked.where("keep"), F.col("__norm"))
         rows = _fold(spec, prior, h, f, "fast")
         out = marked.groupBy("doc_id").agg(
             F.expr(
@@ -375,12 +372,11 @@ def retract_paragraphs_from_state(
     ``remove_keys`` stays the path for unbounded key sets."""
     from sketchlib.dedup import paragraph_table
 
-    with open(os.path.join(state_dir, "epoch.json")) as f:
-        commit = json.load(f)
+    commit = _committed(state_dir)
     rows = _load_state(commit)
     paras = paragraph_table(kept_docs.select("doc_id", F.col("kept_text").alias("text")))
     # distinct strings, not hashes: two norms with colliding hashes are two removals
-    h, f = _collect_hashes(paras.select("__norm").distinct(), F.col("__norm"))
+    h, f = collect_hash_fp(paras.select("__norm").distinct(), F.col("__norm"))
     for s, (h_s, f_s) in split_by_shard(h, f, spec.num_shards).items():
         rows[s] = removed_row(spec, spec.name, s, rows.get(s), h_s, f_s)
     k = int(commit.get("retracts", 0)) + 1

@@ -605,6 +605,34 @@ def test_cuckoo_queries_survive_adversarial_ids(spark, fuzz_ids_dir):
     assert _compare(spark, fuzz_ids_dir, ID_QUERIES) == []
 
 
+def test_filter_queries_match_oracles_on_null_keys(spark, sf_dir, tmp_path):
+    """Cuckoo builds skip NULL keys, while these oracles treat NULL as a
+    value: a NULL text in both snapshots is seen, a NULL-id survivor is
+    returned. Both queries must still agree with them."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    texts = [None, None, "a b", "c d", "a b", "null id " * 6]
+    n = len(texts)
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": pa.array(list(range(n - 1)) + [None], pa.int64()),
+                "text": texts,
+                "lang": ["en"] * n,
+                "source": ["src0"] * n,
+            }
+        ),
+        tmp_path / "documents.parquet",
+    )
+    for t in TABLES:
+        if t != "documents":
+            os.symlink(f"{sf_dir}/{t}.parquet", tmp_path / f"{t}.parquet")
+    _clear_query_caches(str(tmp_path))
+    names = ["incremental_dedup_new_docs", "training_pipeline_e2e"]
+    assert _compare(spark, str(tmp_path), names) == []
+
+
 def test_every_registry_query_is_fuzz_covered():
     """VERDICT r3 #7: the adversarial sweep must stay exhaustive — every
     registry query belongs to a fuzz-corpus list (or a documented

@@ -174,3 +174,34 @@ def test_checkpointed_build_detects_input_change(spark):
         assert sc.count() == 1500  # not 3000: no stale partials from A
     finally:
         shutil.rmtree(d, ignore_errors=True)
+
+
+def test_checkpoint_from_before_null_skipping_rebuilds(spark, pages):
+    """A checkpoint whose meta lacks ``null_keys`` comes from a build that
+    inserted NULL keys under a different plan: it rebuilds in full instead
+    of resuming over its partials."""
+    import json
+    import os
+
+    spec = CuckooSpec(name="ckpt-null", size=size_for(8000, 2), fpsize=2, num_shards=2)
+    key = F.col("url")
+    d = tempfile.mkdtemp(prefix="sketchlib-ckpt-null-")
+    try:
+        src = pages.repartition(4)
+        checkpointed_build(src, spec, key, d)
+        meta_path = os.path.join(d, "meta.json")
+        with open(meta_path) as f:
+            meta = json.load(f)
+        meta.pop("null_keys", None)
+        with open(meta_path, "w") as f:
+            json.dump(meta, f)
+        # a partial a resume would merge in a second time
+        partials = spark.read.parquet(f"{d}/partials")
+        stale = partials.where("part_id = 0").toPandas()
+        spark.createDataFrame(stale, partials.schema).write.mode("append").parquet(f"{d}/partials")
+        m = checkpointed_build(src, spec, key, d)
+        assert ShardedCuckoo.from_df(m, spec).count() == 5000
+        with open(meta_path) as f:
+            assert json.load(f)["null_keys"] == "skipped"
+    finally:
+        shutil.rmtree(d, ignore_errors=True)

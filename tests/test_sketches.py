@@ -32,6 +32,22 @@ def test_mix_u64_deterministic_and_spread():
     assert len(np.unique(a)) == 1000
 
 
+@pytest.mark.parametrize(
+    "sketch",
+    [HyperLogLog(12), BloomFilter(1 << 12, 3), CountMinSketch(256, 4)],
+    ids=["hll", "bloom", "cms"],
+)
+def test_blob_length_checked_against_header(sketch):
+    """A truncated or padded blob raises instead of decoding to a sketch
+    with a different estimate."""
+    sketch.add_hashes(_hashes(3000))
+    blob = sketch.to_bytes()
+    assert type(sketch).from_bytes(blob).to_bytes() == blob
+    for bad in (blob[:-1], blob[:-8], blob[:-64], blob + b"\0", blob + bytes(8)):
+        with pytest.raises(ValueError, match="header declares"):
+            type(sketch).from_bytes(bad)
+
+
 # ------------------------------------------------------------------ bloom
 
 def test_bloom_no_fn_and_fp_bound():

@@ -322,3 +322,73 @@ def test_semi_join_via_filter_eager_jobs(spark):
             sc.setLocalProperty("spark.jobGroup.id", None)
         assert len(jobs) <= most, (limit, jobs)
         assert out.count() == 150
+
+
+def test_null_keys_are_skipped(spark):
+    """A NULL key is not an item: xxhash64(NULL) is the seed, so inserting
+    NULLs would pile identical fingerprints into one bucket pair until they
+    drop. Builds skip them, and removing one is a no-op, not a poisoning."""
+    from sketchlib.spark.cuckoo import build_filter_direct
+
+    spec = CuckooSpec(name="nulls", size=128, fpsize=1)
+    urls = [(f"https://example.org/{i}",) for i in range(50)]
+    clean = spark.createDataFrame(urls, "url string")
+    dirty = spark.createDataFrame([(None,)] * 12 + urls, "url string").repartition(3)
+
+    def blobs(df):
+        return {r["shard"]: bytes(r["sketch"]) for r in df.collect()}
+
+    want = blobs(build_filter_direct(clean, spec, key="url"))
+    for build in (build_filter_direct, build_filter):
+        merged = build(dirty, spec, key="url").cache()
+        sc = ShardedCuckoo.from_df(merged, spec)
+        assert (sc.rows, sc.count(), sc.dropped, sc.is_toofull()) == (50, 50, 0, False)
+        assert blobs(merged) == want
+
+    gone = spark.createDataFrame([(None,), (None,), urls[0]], "url string")
+    after = ShardedCuckoo.from_df(remove_keys(merged, gone, spec, key="url"), spec)
+    assert not after.is_broken()
+    assert after.count() == 49
+
+
+def test_prepared_hash_columns(spark):
+    """key=None takes the caller's own (HASH_COL, FP_COL): any hash works as
+    long as build, probe and removal agree. Rows with a NULL prepared hash
+    are skipped like NULL keys."""
+    from sketchlib.spark.cuckoo import (
+        FP_COL,
+        HASH_COL,
+        build_filter_direct,
+        probe_cogrouped,
+    )
+
+    def prepared(df):
+        k = F.col("k")
+        return df.withColumn(
+            HASH_COL, F.when(k.isNotNull(), F.expr("xxhash64(k, 7)"))
+        ).withColumn(FP_COL, F.expr("hash(k)"))
+
+    spec = CuckooSpec(name="prep", size=size_for(3000, 2), fpsize=2, num_shards=4)
+    keys = spark.range(2000).select(F.concat(F.lit("key-"), F.col("id")).alias("k"))
+    built = prepared(keys.union(spark.createDataFrame([(None,)] * 5, "k string")))
+    merged = build_filter(built.repartition(5), spec).cache()
+    direct = build_filter_direct(built, spec)
+    assert {r["shard"]: r["sketch"] for r in merged.collect()} == {
+        r["shard"]: r["sketch"] for r in direct.collect()
+    }
+    sc = ShardedCuckoo.from_df(merged, spec)
+    assert (sc.rows, sc.count(), sc.dropped) == (2000, 2000, 0)
+
+    held = spark.range(2000).select(F.concat(F.lit("other-"), F.col("id")).alias("k"))
+    probes = prepared(keys.union(held))
+    a = {r["k"]: r["member"] for r in probe(probes, sc).collect()}
+    b = {r["k"]: r["member"] for r in probe_cogrouped(merged, probes, spec).collect()}
+    assert a == b and len(a) == 4000
+    assert all(a[f"key-{i}"] for i in range(2000))
+    assert set(probe(probes, sc).columns) == {"k", HASH_COL, FP_COL, "member"}
+
+    gone = prepared(keys.where(F.col("id") % 4 == 0))
+    rest = ShardedCuckoo.from_df(remove_keys(merged, gone, spec), spec)
+    assert not rest.is_broken() and rest.count() == 1500
+    survivors = prepared(keys.where(F.col("id") % 4 != 0))
+    assert probe(survivors, rest).where(~F.col("member")).count() == 0

@@ -123,6 +123,49 @@ def test_sink_fold_drop_raises_before_commit(spark, mode):
         shutil.rmtree(work, ignore_errors=True)
 
 
+def test_sink_skips_null_keys(spark):
+    """NULL urls are skipped, not folded in: every NULL hashes to the same
+    item, so a few per batch used to fill one bucket pair and wedge the
+    sink with TooFullError for every later batch."""
+    spec = CuckooSpec(name="nullsink", size=size_for(200, 1), fpsize=1)
+    work = tempfile.mkdtemp(prefix="sketchlib-nullsink-")
+    state_dir = os.path.join(work, "state")
+    try:
+        sink = incremental_cuckoo_sink(spec, F.col("url"), state_dir)
+        for e in range(4):
+            urls = [(None,)] * 3 + [(f"https://example.org/{e}/{i}",) for i in range(5)]
+            sink(spark.createDataFrame(urls, "url string"), e)
+            with open(os.path.join(state_dir, "epoch.json")) as f:
+                assert json.load(f)["epoch"] == e
+        sc = ShardedCuckoo.from_df(read_state(spark, state_dir), spec)
+        assert (sc.rows, sc.count(), sc.dropped) == (20, 20, 0)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
+def test_cuckoo_sink_warns_on_an_epoch_below_the_committed_one(spark):
+    """Epoch ids below the committed one mean the stream restarted with a
+    fresh checkpointLocation: the sink skips the batch, as a replay, but
+    warns, and the state stays as it was."""
+    spec = CuckooSpec(name="restart", size=size_for(200, 2), fpsize=2)
+    work = tempfile.mkdtemp(prefix="sketchlib-restart-")
+    state_dir = os.path.join(work, "state")
+    batch = spark.createDataFrame([(f"k{i}",) for i in range(10)], "k string")
+    try:
+        sink = incremental_cuckoo_sink(spec, F.col("k"), state_dir)
+        sink(batch, 0)
+        sink(batch.limit(3), 1)
+        with open(os.path.join(state_dir, "epoch.json")) as f:
+            before = json.load(f)
+        with pytest.warns(RuntimeWarning, match="epoch 0 < committed 1"):
+            sink(batch, 0)
+        with open(os.path.join(state_dir, "epoch.json")) as f:
+            assert json.load(f) == before
+        assert ShardedCuckoo.from_df(read_state(spark, state_dir), spec).count() == 13
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
 def _jobs_in_group(spark, group, fn):
     """Spark jobs started by ``fn()`` under a fresh job group."""
     sc = spark.sparkContext

@@ -37,6 +37,7 @@ def main():
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     spec = CuckooSpec("plans", size_for(2000, 2), 2, num_shards=4)
     key = F.col("doc_id").cast("string")
+    null_keys_pushed = "PushedFilters: [IsNotNull(doc_id)]"
 
     def show(title, df, checks=()):
         plan = df._jdf.queryExecution().executedPlan().toString()
@@ -52,6 +53,7 @@ def main():
         build_partials(docs, spec, key=key),
         checks=[
             ("scan reads only doc_id", lambda p: "ReadSchema: struct<doc_id:bigint>" in p),
+            ("NULL keys filtered at the scan", lambda p: null_keys_pushed in p),
             ("no exchange in build", lambda p: "Exchange" not in p),
         ],
     )
@@ -60,6 +62,7 @@ def main():
         build_filter_direct(docs, spec, key=key),
         checks=[
             ("scan reads only doc_id", lambda p: "ReadSchema: struct<doc_id:bigint>" in p),
+            ("NULL keys filtered at the scan", lambda p: null_keys_pushed in p),
             ("exactly one exchange", lambda p: p.count("Exchange hashpartitioning") == 1),
         ],
     )
