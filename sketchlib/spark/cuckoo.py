@@ -14,9 +14,15 @@ The Spark-native re-expression of the reference's command surface
   partitioning or build path (SURVEY.md §2.3)
 - ``CF.CHECK``  → :func:`probe` — merged blobs broadcast once per executor,
   probes answered by a vectorized ``mapInPandas`` (semantically a broadcast
-  left-semi join with bounded one-sided false positives)
+  left-semi join with bounded one-sided false positives);
+  :func:`probe_cogrouped` for filters too large to broadcast, and
+  :func:`probe_auto` choosing between them from the spec alone
 - ``CF.REM``    → :func:`remove_keys` — co-grouped ``applyInPandas`` per
-  shard; exact-deletion semantics incl. poison-on-miss
+  shard; exact-deletion semantics incl. poison-on-miss. It and
+  :func:`probe_cogrouped` share one shard co-group, :func:`_by_shard`,
+  which keys items by private columns so a caller's columns pass through
+- ``CF.FIXTOOFULL`` → :func:`fix_toofull_shards` — a shuffle-free
+  ``mapInPandas`` over the merged rows
 - ``CF.COUNT`` / ``CF.ISBROKEN`` / ``CF.ISTOOFULL`` → additive/OR-ed header
   fields on the partial rows (plain aggregations)
 - incremental maintenance → ``sketchlib.streaming``: the streaming sinks
@@ -68,6 +74,10 @@ PARTIAL_SCHEMA = (
 HASH_COL = "__cf_hash"
 FP_COL = "__cf_fp"
 _FP_SALT = "sketchlib::fp::v1"
+
+#: the most filter bytes (``num_shards × size``) a CF.CHECK broadcasts to
+#: every executor; a larger filter is probed co-grouped by shard
+BROADCAST_LIMIT_BYTES = 256 << 20
 
 
 @dataclass(frozen=True)
@@ -407,48 +417,47 @@ def probe(df: DataFrame, sharded: ShardedCuckoo, key=None, result_col: str = "me
     return out if key is None else out.drop(HASH_COL, FP_COL)
 
 
+def _by_shard(merged: DataFrame, items: DataFrame, spec: CuckooSpec, fn, schema) -> DataFrame:
+    """Co-group each shard's row of ``merged`` with the ``items`` (rows with
+    HASH_COL) that hash to it, one task per shard, and return the frames of
+    ``fn(key, rows, items)``, which gets the shard's merged rows (at most
+    one) and items as pandas frames. Items are keyed by the private
+    ``__cf_name`` / ``__cf_shard`` columns, so a caller's own columns pass
+    through. An empty side arrives as a zero-row frame with its columns."""
+    keyed = items.withColumn("__cf_name", F.lit(spec.name)).withColumn(
+        "__cf_shard", _shard_col(HASH_COL, spec.num_shards)
+    )
+    return (
+        merged.groupby("name", "shard")
+        .cogroup(keyed.groupby("__cf_name", "__cf_shard"))
+        .applyInPandas(fn, schema)
+    )
+
+
 def probe_cogrouped(merged: DataFrame, probes: DataFrame, spec: CuckooSpec, key=None) -> DataFrame:
-    """CF.CHECK without broadcasting: co-partition probes with their shard's
-    blob and answer each shard's probes in one vectorized kernel call.
+    """CF.CHECK without broadcasting: co-group probes with their shard's
+    blob (:func:`_by_shard`) and answer each shard's probes in one
+    vectorized kernel call.
 
     The scale path when the total filter exceeds what every executor should
     hold: each task receives exactly ONE shard blob plus that shard's
-    probes (both sides shuffle on the 4-byte shard id). Equivalent results
-    to :func:`probe` (tested), including the missing-shard DEVIATION
-    documented there: probes co-grouped with no blob return
-    "definitely absent" rather than erroring like the reference's
-    missing-key check (src/redis-cuckoofilter.zig:243-247)."""
+    probes. Every column of ``probes`` passes through unchanged, as in
+    :func:`probe`, and the results are the same (tested), including the
+    missing-shard DEVIATION documented there: probes co-grouped with no
+    blob return "definitely absent" rather than erroring like the
+    reference's missing-key check (src/redis-cuckoofilter.zig:243-247)."""
     if key is not None:
         probes = with_hash_fp(probes, key)
     keep = [c for c in probes.columns if key is None or c not in (HASH_COL, FP_COL)]
-    p = probes.withColumn("shard", _shard_col(HASH_COL, spec.num_shards)).withColumn(
-        "name", F.lit(spec.name)
-    )
     out_schema = T.StructType(
         [probes.schema[c] for c in keep] + [T.StructField("member", T.BooleanType())]
     )
 
-    def run(key_tuple, left, right):
-        if right.empty:
-            return right.reindex(columns=keep).assign(member=[])
-        if left.empty:
-            return right[keep].assign(member=False)
-        flt = CuckooFilter.from_bytes(bytes(left["sketch"].iloc[0]))
-        hit = flt.contains_batch(*_u64_pairs(right), raise_broken_on_miss=False)
-        return right[keep].assign(member=hit)
+    def run(_, left, right):
+        filters = ShardedCuckoo.from_rows(left.to_dict("records"), spec)
+        return right[keep].assign(member=filters.contains_arrays(*_u64_pairs(right)))
 
-    return (
-        merged.groupby("name", "shard")
-        .cogroup(p.groupby("name", "shard"))
-        .applyInPandas(run, out_schema)
-    )
-
-
-def _probe_sized(merged, probes, spec, total, broadcast_limit_bytes, key) -> DataFrame:
-    """probe_auto's broadcast-or-co-group rule for ``total`` blob bytes."""
-    if total <= broadcast_limit_bytes:
-        return probe(probes, ShardedCuckoo.from_df(merged, spec), key=key)
-    return probe_cogrouped(merged, probes, spec, key=key)
+    return _by_shard(merged, probes, spec, run, out_schema)
 
 
 def probe_auto(
@@ -456,17 +465,18 @@ def probe_auto(
     probes: DataFrame,
     spec: CuckooSpec,
     key=None,
-    broadcast_limit_bytes: int = 256 << 20,
+    broadcast_limit_bytes: int = BROADCAST_LIMIT_BYTES,
 ) -> DataFrame:
-    """CF.CHECK with automatic physical strategy: broadcast the shard blobs
-    when the TOTAL filter size fits comfortably on every executor
-    (default 256 MiB — tune to executor memory), else co-partition probes
-    with their shard (:func:`probe_cogrouped`). The decision reads only
-    the per-shard blob SIZES (one tiny aggregation over the merged table),
-    never ships the blobs to the driver unless broadcasting anyway. Both
-    paths return identical results (tested)."""
-    total = merged.select(F.sum(F.octet_length("sketch")).alias("b")).first()["b"] or 0
-    return _probe_sized(merged, probes, spec, total, broadcast_limit_bytes, key)
+    """CF.CHECK with automatic physical strategy, decided from the spec
+    alone (no Spark job): broadcast the shard blobs (:func:`probe`) when
+    the whole filter, ``num_shards × size`` bytes, fits in
+    ``broadcast_limit_bytes`` (tune to executor memory), else co-group
+    probes with their shard (:func:`probe_cogrouped`). A dense shard blob
+    is always ``size`` bytes plus a fixed header. Both paths return
+    identical results (tested)."""
+    if spec.num_shards * spec.size <= broadcast_limit_bytes:
+        return probe(probes, ShardedCuckoo.from_df(merged, spec), key=key)
+    return probe_cogrouped(merged, probes, spec, key=key)
 
 
 def semi_join_via_filter(
@@ -476,7 +486,6 @@ def semi_join_via_filter(
     small_key,
     fpsize: int = 2,
     name: str = "semijoin",
-    broadcast_limit_bytes: int = 256 << 20,
 ) -> DataFrame:
     """Sketch-accelerated semi join (a distributed runtime filter — the
     classic use of these sketches in a query engine): build a cuckoo filter
@@ -490,8 +499,11 @@ def semi_join_via_filter(
     the SMALL side, like a broadcast join's hash table but ~50× smaller,
     so it fits where a broadcast join wouldn't; the big side is filtered
     map-side (no shuffle), and only ``selectivity + fp_rate`` of it ever
-    reaches the exchange. probe_auto escalates to the co-partitioned probe
-    when even the blobs outgrow ``broadcast_limit_bytes``.
+    reaches the exchange. The pre-filter only pays off map-side: when the
+    filter (``8 × size`` bytes, known from the key count) exceeds
+    ``BROADCAST_LIMIT_BYTES``, a co-grouped probe would shuffle all of
+    ``big`` into 8 tasks before the join shuffles the survivors again, so
+    no filter is built and the result is the exact left-semi join alone.
 
     ``big_key``/``small_key`` must be the same TYPE (the probe hashing
     contract, see :func:`probe`).
@@ -500,9 +512,8 @@ def semi_join_via_filter(
     duplicate-keyed small side would overflow a bucket with identical
     fingerprints and silently drop items), and the build's drop/too-full
     counters are checked — a dropped fingerprint would be a silent false
-    negative, so it raises instead. The merged filter is localCheckpointed
-    before probing: the build is lazy, and the one aggregate (guard plus
-    probe_auto's sizing) and the blob collect would each re-run its shuffle.
+    negative, so it raises instead. One collect of the lazy build returns
+    both the blobs to broadcast and those counters.
     """
     from sketchlib.kernels.cuckoo import TooFullError, size_for
 
@@ -516,22 +527,17 @@ def semi_join_via_filter(
     keys = small.select(small_key.alias("__k")).distinct().cache()
     n = keys.count()  # sizing job (CF.SIZEFOR) — also materializes the cache
     spec = CuckooSpec(name, max(size_for(max(n, 1), fpsize), 1024), fpsize, num_shards=8)
-    merged = build_filter_direct(keys, spec, key=F.col("__k")).localCheckpoint(eager=True)
-    guard = merged.agg(
-        F.sum("dropped").alias("d"),
-        F.max("toofull").alias("t"),
-        F.sum(F.octet_length("sketch")).alias("b"),
-    ).first()
-    if (guard["d"] or 0) > 0 or guard["t"]:
-        raise TooFullError(
-            f"semi_join_via_filter('{name}'): build dropped {guard['d']} "
-            "fingerprint(s) — the pre-filter would silently drop matching rows; "
-            "increase the filter size or fpsize"
-        )
-    pre = _probe_sized(merged, big, spec, guard["b"] or 0, broadcast_limit_bytes, big_key)
-    pre = pre.filter(F.col("member")).drop("member")
+    if spec.num_shards * spec.size <= BROADCAST_LIMIT_BYTES:
+        sc = ShardedCuckoo.from_df(build_filter_direct(keys, spec, key=F.col("__k")), spec)
+        if sc.dropped or sc.is_toofull():
+            raise TooFullError(
+                f"semi_join_via_filter('{name}'): build dropped {sc.dropped} "
+                "fingerprint(s) — the pre-filter would silently drop matching rows; "
+                "increase the filter size or fpsize"
+            )
+        big = probe(big, sc, key=big_key).filter(F.col("member")).drop("member")
     return (
-        pre.withColumn("__bk", big_key)
+        big.withColumn("__bk", big_key)
         .join(keys, F.col("__bk") == F.col("__k"), "left_semi")
         .drop("__bk")
     )
@@ -539,26 +545,25 @@ def semi_join_via_filter(
 
 def fix_toofull_shards(merged: DataFrame) -> DataFrame:
     """CF.FIXTOOFULL, distributed (reference redis-cuckoofilter.zig:325-353):
-    try to re-home each shard's homeless fingerprint. Shards that stay too
-    full keep the flag (the reference errors; the flag carries it here)."""
+    try to re-home each shard's homeless fingerprint, row by row in a
+    shuffle-free ``mapInPandas``. Shards that stay too full keep the flag
+    (the reference errors; the flag carries it here)."""
     from sketchlib.kernels.cuckoo import TooFullError
 
-    def fix(key, pdf):
-        out = pdf.copy()
-        sketches, toofull = [], []
-        for b in pdf["sketch"]:
-            flt = CuckooFilter.from_bytes(bytes(b))
-            try:
-                flt.fix_toofull()
-            except TooFullError:
-                pass
-            sketches.append(flt.to_bytes())
-            toofull.append(flt.is_toofull())
-        out["sketch"] = sketches
-        out["toofull"] = toofull
-        return out
+    def fix(batches):
+        for pdf in batches:
+            out = []
+            for r in pdf.to_dict("records"):
+                flt = CuckooFilter.from_bytes(bytes(r["sketch"]))
+                try:
+                    flt.fix_toofull()
+                except TooFullError:
+                    pass
+                out.append(_filter_row(r["name"], r["shard"], flt, r["rows"], r["dropped"]))
+            if out:
+                yield pd.DataFrame(out)
 
-    return merged.groupby("name", "shard").applyInPandas(fix, PARTIAL_SCHEMA)
+    return merged.mapInPandas(fix, PARTIAL_SCHEMA)
 
 
 # ---------------------------------------------------------------- remove
@@ -585,28 +590,19 @@ def removed_row(spec: CuckooSpec, name: str, shard: int, row, h, f) -> dict:
 
 def remove_keys(merged: DataFrame, keys_df: DataFrame, spec: CuckooSpec, key=None) -> DataFrame:
     """CF.REM, distributed: co-group the merged shard rows with the
-    to-remove keys per shard and run one vectorized ``remove_batch`` per
-    shard. Exact-deletion semantics are the reference's: removing a
-    never-inserted key permanently poisons that shard (``broken``).
+    to-remove keys per shard (:func:`_by_shard`) and run one vectorized
+    ``remove_batch`` per shard. Exact-deletion semantics are the
+    reference's: removing a never-inserted key permanently poisons that
+    shard (``broken``).
 
     Keys are sorted canonically inside each shard so the resulting blob is
     independent of ``keys_df``'s partitioning and row order. NULL keys are
     skipped, as at build time, so they never poison a shard.
     """
-    keys = _hash_fp(keys_df, key).select(
-        F.lit(spec.name).alias("name"),
-        _shard_col(HASH_COL, spec.num_shards).alias("shard"),
-        HASH_COL,
-        FP_COL,
-    )
 
     def rem(key_tuple, left, right):
         row = None if left.empty else left.iloc[0]
         shard = int(key_tuple[1])
         return pd.DataFrame([removed_row(spec, str(key_tuple[0]), shard, row, *_u64_pairs(right))])
 
-    return (
-        merged.groupby("name", "shard")
-        .cogroup(keys.groupby("name", "shard"))
-        .applyInPandas(rem, PARTIAL_SCHEMA)
-    )
+    return _by_shard(merged, _hash_fp(keys_df, key), spec, rem, PARTIAL_SCHEMA)

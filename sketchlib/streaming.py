@@ -80,13 +80,13 @@ def _committed(state_dir: str) -> dict:
     return commit
 
 
-def _state_bytes(commit: dict) -> bytes | None:
+def _state_bytes(commit: dict) -> bytes:
     """The committed state file's bytes, checked against the length and
     sha256 in ``epoch.json``: a missing file raises ``FileNotFoundError``,
-    a truncated, replaced or corrupt one ``ValueError``. A pointer written
-    before those fields existed returns None and loads unchecked, as before."""
-    if "sha256" not in commit:
-        return None
+    a truncated, replaced or corrupt one ``ValueError``, and so does a
+    pointer without those fields, which nothing could check."""
+    if "bytes" not in commit or "sha256" not in commit:
+        raise ValueError("epoch.json carries no length and sha256 for its state file")
     path = os.path.join(commit["state"], _STATE_FILE)
     with open(path, "rb") as f:
         data = f.read()
@@ -100,8 +100,7 @@ def _load_state(commit: dict | None) -> dict[int, dict]:
     on the driver with pyarrow (no Spark job); empty before the first commit."""
     if commit is None:
         return {}
-    data = _state_bytes(commit)
-    table = pq.read_table(commit["state"] if data is None else pa.BufferReader(data))
+    table = pq.read_table(pa.BufferReader(_state_bytes(commit)))
     return {r["shard"]: r for r in table.to_pylist()}
 
 
@@ -257,7 +256,8 @@ def read_state(spark, state_dir: str) -> DataFrame:
     than one micro-batch, materialize them (``.collect()`` /
     ``.localCheckpoint(eager=True)``) before the stream advances twice.
     The schema is given, not inferred, so resolving starts no Spark job;
-    a missing or mismatching state file raises (``_state_bytes``)."""
+    a missing or mismatching state file, or a pointer without its length
+    and sha256, raises (``_state_bytes``)."""
     commit = _committed(state_dir)
     _state_bytes(commit)
     return spark.read.schema(PARTIAL_SCHEMA).parquet(commit["state"])
@@ -406,8 +406,8 @@ def streaming_distinct_per_key(
     (size ``k``, default 256 — exact below k distinct, ~1/sqrt(k-2)
     relative error above; handy for long-tail keys where most groups stay
     small). ``k`` is a separate kwarg so HLL's precision is never
-    silently reused as a tiny KMV size (ADVICE r4: p=12 as k meant ~32%
-    error); both params are validated HERE on the driver — an executor-
+    silently reused as a tiny KMV size (p=12 as k meant ~32% error);
+    both params are validated HERE on the driver — an executor-
     time failure inside the stateful update is far harder to read."""
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
@@ -426,7 +426,7 @@ def streaming_distinct_per_key(
         if p is not None:
             # p is HLL precision only; a caller passing p=100_000 with
             # kind='kmv' would otherwise silently get k=256 (~6% error)
-            # instead of exact counts (ADVICE r5)
+            # instead of exact counts
             raise ValueError(
                 "p is the HLL precision and does not apply to kind='kmv'; "
                 "use k to set the KMV size"

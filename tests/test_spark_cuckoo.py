@@ -5,6 +5,8 @@ equivalence (probe ≡ left-semi join)."""
 
 from __future__ import annotations
 
+from collections import Counter
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -189,15 +191,23 @@ def test_probe_cogrouped_equals_broadcast(spark, docs):
     key = F.col("doc_id").cast("string")
     merged = build_filter(docs, spec, key=key).cache()
     sc = ShardedCuckoo.from_df(merged, spec)
-    # probes: all inserted + disjoint held-out ids
-    probes = docs.select("doc_id").union(
-        docs.select((F.col("doc_id") + 5_000_000).alias("doc_id"))
+    # probes: all inserted + disjoint held-out ids, with a caller's own
+    # `name` and `shard` columns that must pass through unchanged
+    probes = (
+        docs.select("doc_id")
+        .union(docs.select((F.col("doc_id") + 5_000_000).alias("doc_id")))
+        .select(
+            "doc_id",
+            F.concat(F.lit("user-"), "doc_id").alias("name"),
+            (F.col("doc_id") % 7).cast("int").alias("shard"),
+        )
     )
     bkey = F.col("doc_id").cast("string")
-    a = {r["doc_id"]: r["member"] for r in probe(probes, sc, key=bkey).collect()}
-    b = {r["doc_id"]: r["member"] for r in probe_cogrouped(merged, probes, spec, key=bkey).collect()}
+    a = Counter(tuple(r) for r in probe(probes, sc, key=bkey).collect())
+    b = Counter(tuple(r) for r in probe_cogrouped(merged, probes, spec, key=bkey).collect())
     assert a == b
-    assert all(a[r["doc_id"]] for r in docs.select("doc_id").collect())
+    member = {doc_id: hit for doc_id, _, _, hit in a}
+    assert all(member[r["doc_id"]] for r in docs.select("doc_id").collect())
 
 
 def test_probe_auto_picks_equivalent_paths(spark, docs):
@@ -222,6 +232,62 @@ def test_probe_auto_picks_equivalent_paths(spark, docs):
     }
     assert via_bc == via_cg
     assert all(via_bc[r["doc_id"]] for r in docs.select("doc_id").collect())
+
+
+def test_probe_auto_decides_from_the_spec(spark, docs):
+    """probe_auto broadcasts iff num_shards × size fits the limit, read off
+    the spec: the co-grouped branch starts no Spark job before an action."""
+    from sketchlib.spark.cuckoo import probe_auto
+
+    spec = CuckooSpec(name="auto-spec", size=size_for(2000, 2), fpsize=2, num_shards=4)
+    key = F.col("doc_id").cast("string")
+    merged = build_filter(docs, spec, key=key)
+    total = spec.num_shards * spec.size
+    sc = spark.sparkContext
+    group = "test_probe_auto_decides_from_the_spec"
+    sc.setJobGroup(group, group)
+    try:
+        cg = probe_auto(merged, docs, spec, key=key, broadcast_limit_bytes=total - 1)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    bc = probe_auto(merged, docs, spec, key=key, broadcast_limit_bytes=total)
+    assert "CoGroup" in cg._jdf.queryExecution().executedPlan().toString()
+    assert "CoGroup" not in bc._jdf.queryExecution().executedPlan().toString()
+
+
+def test_cogroup_with_an_empty_side(spark):
+    """Shard 2 has a blob but no probes or removal keys; shard 3 has probes
+    but no blob. probe_cogrouped answers every probe row (no blob means
+    absent), and remove_keys keeps shard 2's row byte for byte. Prepared
+    HASH_COL values route each item to its shard (the top 16 bits)."""
+    from sketchlib.spark.cuckoo import FP_COL, HASH_COL, probe_cogrouped
+
+    def items(shard, lo, hi):
+        return spark.range(lo, hi).selectExpr(
+            "id",
+            f"shiftleft({shard}L, 48) | (xxhash64(id) & {(1 << 48) - 1}) AS {HASH_COL}",
+            f"xxhash64(id, 1) AS {FP_COL}",
+        )
+
+    spec = CuckooSpec(name="sides", size=size_for(1000, 2), fpsize=2, num_shards=4)
+    built = items(0, 0, 300).union(items(1, 300, 600)).union(items(2, 600, 900))
+    merged = build_filter(built, spec).cache()
+    before = {r["shard"]: r for r in merged.collect()}
+    assert sorted(before) == [0, 1, 2]
+
+    probes = items(0, 0, 300).union(items(1, 1000, 1300)).union(items(3, 2000, 2300))
+    got = {r["id"]: r["member"] for r in probe_cogrouped(merged, probes, spec).collect()}
+    sc = ShardedCuckoo.from_rows(before.values(), spec)
+    want = {r["id"]: r["member"] for r in probe(probes, sc).collect()}
+    assert got == want and len(got) == 900
+    assert all(got[i] for i in range(300)) and not any(got[i] for i in range(2000, 2300))
+
+    gone = items(0, 0, 100).union(items(1, 300, 400))
+    after = {r["shard"]: r for r in remove_keys(merged, gone, spec).collect()}
+    assert sorted(after) == [0, 1, 2]
+    assert after[2] == before[2]
+    assert [(after[s]["fpcount"], after[s]["broken"]) for s in (0, 1)] == [(200, False)] * 2
 
 
 def test_fix_toofull_shards(spark):
@@ -283,40 +349,48 @@ def test_semi_join_via_filter_duplicate_keyed_small_side(spark):
     assert out == [7, 13, 999]
 
 
-def test_semi_join_via_filter_cogrouped_branch(spark):
-    """With a 1-byte broadcast budget probe_auto must take the co-partitioned
-    probe path; the semi join result is identical to the broadcast path."""
-    from sketchlib.spark.cuckoo import semi_join_via_filter
+def test_semi_join_via_filter_too_large_filter(spark, monkeypatch):
+    """A filter too large to broadcast is not built: a co-grouped probe
+    would shuffle all of ``big`` by shard before the join shuffles the
+    survivors again. The result is the exact left-semi join alone, equal
+    to the broadcast path's rows, with ``big``'s own ``name`` and ``shard``
+    columns intact."""
+    from sketchlib.spark import cuckoo
 
-    big = spark.range(0, 3000).selectExpr("id AS k")
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    big = spark.range(0, 3000).selectExpr(
+        "id AS k", "concat('user-', id) AS name", "CAST(id % 7 AS INT) AS shard"
+    )
     small = spark.range(0, 100).selectExpr("id * 7 AS sk")
-    want = sorted(
-        r["k"] for r in semi_join_via_filter(big, small, "k", "sk").collect()
-    )
-    got = sorted(
-        r["k"]
-        for r in semi_join_via_filter(
-            big, small, "k", "sk", broadcast_limit_bytes=1
-        ).collect()
-    )
-    assert got == want == [k for k in range(3000) if k % 7 == 0 and k <= 693]
+    bc = cuckoo.semi_join_via_filter(big, small, "k", "sk")
+    assert "MapInPandas" in plan(bc)
+    monkeypatch.setattr(cuckoo, "BROADCAST_LIMIT_BYTES", 1)
+    exact = cuckoo.semi_join_via_filter(big, small, "k", "sk")
+    assert "MapInPandas" not in plan(exact)
+    want = [(k, f"user-{k}", k % 7) for k in range(0, 694, 7)]
+    rows = [sorted(tuple(r) for r in df.collect()) for df in (exact, bc)]
+    assert rows == [want, want]
 
 
-def test_semi_join_via_filter_eager_jobs(spark):
-    """The drop guard and probe_auto's sizing read the checkpointed filter
-    in one aggregate: the eager part of a (warm) semi join starts at most 7
-    Spark jobs on the broadcast path and 6 on the co-grouped path."""
-    from sketchlib.spark.cuckoo import semi_join_via_filter
+def test_semi_join_via_filter_eager_jobs(spark, monkeypatch):
+    """One collect of the lazy build returns both the blobs and the drop
+    guard: the eager part of a (warm) semi join starts at most 4 Spark jobs
+    when the filter broadcasts, and at most 2 (the key count) when it is
+    too large to, because then no filter is built."""
+    from sketchlib.spark import cuckoo
 
     big = spark.range(0, 5000).selectExpr("id AS k", "id % 7 AS payload")
     small = spark.range(0, 150).selectExpr("id * 3 AS sk")
     sc = spark.sparkContext
-    for limit, most in ((256 << 20, 7), (1, 6)):
-        semi_join_via_filter(big, small, "k", "sk", broadcast_limit_bytes=limit)  # warm-up
+    for limit, most in ((cuckoo.BROADCAST_LIMIT_BYTES, 4), (1, 2)):
+        monkeypatch.setattr(cuckoo, "BROADCAST_LIMIT_BYTES", limit)
+        cuckoo.semi_join_via_filter(big, small, "k", "sk")  # warm-up
         group = f"test_semi_join_via_filter_eager_jobs_{limit}"
         sc.setJobGroup(group, group)
         try:
-            out = semi_join_via_filter(big, small, "k", "sk", broadcast_limit_bytes=limit)
+            out = cuckoo.semi_join_via_filter(big, small, "k", "sk")
             jobs = list(sc.statusTracker().getJobIdsForGroup(group))
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)

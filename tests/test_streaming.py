@@ -230,7 +230,7 @@ def test_state_pointer_checks_the_state_file(spark, sf_dir):
     """epoch.json records the state file's length and sha256: a state file
     replaced by an older epoch's, or a missing one, raises on the next load
     (read_state and the sink's fold) instead of returning stale state. A
-    pointer without those fields (written before they existed) still loads."""
+    pointer without those fields could not be checked, so it raises too."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     spec = CuckooSpec(name="checked", size=size_for(2000, 2), fpsize=2, num_shards=2)
     key = F.col("doc_id").cast("string")
@@ -241,13 +241,22 @@ def test_state_pointer_checks_the_state_file(spark, sf_dir):
         halves = [docs.filter(F.pmod("doc_id", F.lit(2)) == g) for g in range(2)]
         sink(halves[0], 0)
         sink(halves[1], 1)
-        # a pointer written without the check fields loads unchecked
+        # a pointer without the check fields raises in every loader
+        from sketchlib.streaming import retract_paragraphs_from_state
+
         epoch_path = os.path.join(state_dir, "epoch.json")
         with open(epoch_path) as f:
             commit = json.load(f)
         with open(epoch_path, "w") as f:
             json.dump({k: v for k, v in commit.items() if k not in ("bytes", "sha256")}, f)
-        assert ShardedCuckoo.from_df(read_state(spark, state_dir), spec).count() == docs.count()
+        kept = docs.select("doc_id", F.col("text").alias("kept_text"))
+        for load in (
+            lambda: read_state(spark, state_dir),
+            lambda: sink(halves[0], 2),
+            lambda: retract_paragraphs_from_state(spec, state_dir, kept),
+        ):
+            with pytest.raises(ValueError, match="sha256"):
+                load()
         with open(epoch_path, "w") as f:
             json.dump(commit, f)
         current = os.path.join(state_dir, "state_epoch1", "part-00000.parquet")

@@ -9,6 +9,7 @@ Usage: python tools/explain_plans.py [sf_dir]
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -29,7 +30,9 @@ def main():
         CuckooSpec,
         build_filter_direct,
         build_partials,
+        fix_toofull_shards,
         merge_partials,
+        probe_cogrouped,
     )
     from sketchlib.spark.session import get_spark
 
@@ -81,6 +84,23 @@ def main():
             ("exactly one exchange", lambda p: p.count("Exchange hashpartitioning") == 1),
         ],
     )
+    # a caller's own `name` column passes through: the probe side is
+    # keyed by the private co-group columns, not by `name` and `shard`
+    merged = build_filter_direct(docs, spec, key=key).localCheckpoint(eager=True)
+    show(
+        "cuckoo co-grouped probe (private shard key, caller columns intact)",
+        probe_cogrouped(merged, docs.select("doc_id", F.col("lang").alias("name")), spec, key=key),
+        checks=[
+            ("probe side hash-partitioned on __cf_name, __cf_shard",
+             lambda p: re.search(r"hashpartitioning\(__cf_name#\d+, __cf_shard#\d+", p)
+             is not None),
+        ],
+    )
+    show(
+        "cuckoo fix_toofull_shards (row by row, shuffle-free)",
+        fix_toofull_shards(merged),
+        checks=[("no exchange", lambda p: "Exchange" not in p)],
+    )
     # grouped partials build map-side, so only their blobs shuffle
     show(
         "grouped sibling sketch (map-side partials, one merge stage)",
@@ -118,8 +138,6 @@ def main():
             ("single exchange", lambda p: p.count("Exchange hashpartitioning") == 1),
         ],
     )
-
-    import re
 
     from sketchlib.dedup import embedding_lsh_pairs, minhash_lsh_pairs
 
