@@ -165,14 +165,24 @@ def size2str(size: int) -> str:
     return f"{num}{'KMG'[pow_1024 - 1]}"
 
 
-def fnv1a_vec(fps_u64: np.ndarray, fpsize: int) -> np.ndarray:
-    """Vectorized FNV1a over little-endian fingerprint bytes (reference
-    lib:212-228; 1/2/4 unrolled rounds by width)."""
-    res = np.full(fps_u64.shape, np.uint64(FNV_OFFSET), dtype=np.uint64)
-    prime = np.uint64(FNV_PRIME)
+def _prep_fps(fps, fpsize: int) -> np.ndarray:
+    """Fingerprints truncated to the width (README.md:202-204: high bits
+    dropped) with 0 remapped to 1 (reference lib:111,:127,:157)."""
+    f = np.asarray(fps).astype(DTYPE[fpsize], casting="unsafe", copy=True)
+    f[f == 0] = 1
+    return f
+
+
+def _alt_idx(idx, fps: np.ndarray, nbuckets: int, fpsize: int) -> np.ndarray:
+    """Alternate bucket ``idx ^ fnv1a(fp)`` as uint64: FNV1a over the
+    little-endian fingerprint bytes, 1/2/4 rounds by width (reference
+    lib:212-228). An involution, so it maps either bucket of a pair to the
+    other."""
+    f = fps.astype(np.uint64)
+    res = np.full(f.shape, np.uint64(FNV_OFFSET), dtype=np.uint64)
     for i in range(fpsize):
-        res = (res ^ ((fps_u64 >> np.uint64(8 * i)) & np.uint64(0xFF))) * prime
-    return res
+        res = (res ^ ((f >> np.uint64(8 * i)) & np.uint64(0xFF))) * np.uint64(FNV_PRIME)
+    return (np.asarray(idx, dtype=np.uint64) ^ res) & np.uint64(nbuckets - 1)
 
 
 def canonical_pairs(hashes_u64, fps, size: int, fpsize: int) -> tuple[np.ndarray, np.ndarray]:
@@ -182,13 +192,9 @@ def canonical_pairs(hashes_u64, fps, size: int, fpsize: int) -> tuple[np.ndarray
     they just project items to canonical pairs; all kicking happens once in
     the final per-shard merge insert."""
     nbuckets = size // fpsize // BUCK_SIZE[fpsize]
-    mask = np.uint64(nbuckets - 1)
-    h = np.asarray(hashes_u64, dtype=np.uint64)
-    f = np.asarray(fps).astype(DTYPE[fpsize], casting="unsafe", copy=True)
-    f[f == 0] = 1
-    p = h & mask
-    alt = (p ^ fnv1a_vec(f.astype(np.uint64), fpsize)) & mask
-    return np.minimum(p, alt).astype(np.uint64), f
+    f = _prep_fps(fps, fpsize)
+    p = np.asarray(hashes_u64, dtype=np.uint64) & np.uint64(nbuckets - 1)
+    return np.minimum(p, _alt_idx(p, f, nbuckets, fpsize)), f
 
 
 def pack_pairs(bidx: np.ndarray, fps: np.ndarray, size: int, fpsize: int) -> bytes:
@@ -260,30 +266,46 @@ class CuckooFilter:
     def nbytes(self) -> int:
         return self.buckets.size * self.fpsize
 
-    @property
-    def max_error(self) -> float:
-        return MAX_ERROR[self.fpsize]
-
     # --------------------------------------------------------------- helpers
-
-    def _prep_fps(self, fps) -> np.ndarray:
-        """Truncate to the fingerprint width (README.md:202-204: high bits
-        dropped) and remap 0 → 1 (reference lib:111,:127,:157)."""
-        f = np.asarray(fps).astype(DTYPE[self.fpsize], casting="unsafe", copy=True)
-        f[f == 0] = 1
-        return f
 
     def _primary_idx(self, hashes) -> np.ndarray:
         h = np.asarray(hashes, dtype=np.uint64)
         return (h & np.uint64(self.nbuckets - 1)).astype(np.int64)
 
-    def _fnv1a_vec(self, fps_u64: np.ndarray) -> np.ndarray:
-        return fnv1a_vec(fps_u64, self.fpsize)
-
     def _alt_idx_vec(self, idx: np.ndarray, fps: np.ndarray) -> np.ndarray:
-        mask = np.uint64(self.nbuckets - 1)
-        alt = (idx.astype(np.uint64) ^ self._fnv1a_vec(fps.astype(np.uint64))) & mask
-        return alt.astype(np.int64)
+        return _alt_idx(idx, fps, self.nbuckets, self.fpsize).astype(np.int64)
+
+    def _item(self, hash_: int, fp: int) -> tuple[int, int]:
+        """One item's (primary bucket, fp), the fp prepared as ``_prep_fps``
+        does; raises on a broken filter."""
+        if self.broken:
+            raise BrokenError("filter is broken")
+        fp = int(fp) & ((1 << (8 * self.fpsize)) - 1)
+        return int(hash_) & (self.nbuckets - 1), fp or 1
+
+    def _kth_slots(self, sp: np.ndarray, sf: np.ndarray | None):
+        """The reference's first-qualifying-slot scan (lib:230-259),
+        vectorized over a batch sorted by bucket ``sp``. Items form
+        one-bucket groups, and the k-th item of a group gets the k-th
+        qualifying slot of its bucket, in slot order. A slot qualifies if
+        it is free (``sf`` None) or holds the item's fingerprint in ``sf``
+        (groups then split by fingerprint too). Returns the
+        mask of items that got a slot, and those items' slots."""
+        n = len(sp)
+        boundary = np.empty(n, dtype=bool)
+        boundary[0] = True
+        boundary[1:] = sp[1:] != sp[:-1]
+        if sf is not None:
+            boundary[1:] |= sf[1:] != sf[:-1]
+        starts = np.nonzero(boundary)[0]
+        counts = np.diff(np.append(starts, n))
+        sub = self.buckets[sp[starts]]
+        ok = sub == (0 if sf is None else sf[starts, None])
+        rank = np.arange(n) - np.repeat(starts, counts)
+        got = rank < np.repeat(ok.sum(axis=1), counts)
+        slot_order = np.argsort(~ok, axis=1, kind="stable")
+        grp = np.repeat(np.arange(len(starts)), counts)
+        return got, slot_order[grp[got], rank[got]]
 
     def _alt_idx_scalar(self, idx: int, fp: int) -> int:
         res = FNV_OFFSET
@@ -332,42 +354,18 @@ class CuckooFilter:
 
     def add_one(self, hash_: int, fp: int) -> None:
         """CF.ADD for a single item (reference semantics, incl. errors)."""
-        if self.broken:
-            raise BrokenError("filter is broken")
-        fp = int(fp) & ((1 << (8 * self.fpsize)) - 1)
-        if fp == 0:
-            fp = 1
-        self._add_one(int(hash_) & (self.nbuckets - 1), fp)
+        self._add_one(*self._item(hash_, fp))
 
     def _bulk_place(self, bidx: np.ndarray, fps: np.ndarray) -> np.ndarray:
-        """Place each item into the first free slot of its bucket, k-th
-        arrival taking the k-th free slot in slot order (the reference's
-        first-free-slot scan, lib:230-259, vectorized over the batch).
-        Returns a boolean mask of placed items; fpcount is updated."""
-        n = len(bidx)
-        if np.all(bidx[1:] >= bidx[:-1]):  # pre-sorted (the merge path)
-            order = np.arange(n)
-            sp, sf = bidx, fps
-        else:
-            order = np.argsort(bidx, kind="stable")
-            sp, sf = bidx[order], fps[order]
-        boundary = np.empty(n, dtype=bool)
-        boundary[0] = True
-        boundary[1:] = sp[1:] != sp[:-1]
-        starts = np.nonzero(boundary)[0]
-        counts = np.diff(np.append(starts, n))
-        ub = sp[starts]
-        sub = self.buckets[ub.astype(np.int64)]  # (m, bucksize) gather
-        free_mask = sub == 0
-        nfree = free_mask.sum(axis=1)
-        rank = np.arange(n) - np.repeat(starts, counts)
-        fits = rank < np.repeat(nfree, counts)
-        if fits.any():
-            slot_order = np.argsort(~free_mask, axis=1, kind="stable")
-            grp = np.repeat(np.arange(len(ub)), counts)
-            self.buckets[sp[fits].astype(np.int64), slot_order[grp[fits], rank[fits]]] = sf[fits]
-            self.fpcount += int(fits.sum())
-        placed = np.empty(n, dtype=bool)
+        """Place each item into a free slot of its bucket, the k-th arrival
+        taking the k-th free slot (``_kth_slots``). Returns a boolean mask
+        of placed items; fpcount is updated."""
+        order = np.argsort(bidx, kind="stable")
+        sp = bidx[order]
+        fits, slots = self._kth_slots(sp, None)
+        self.buckets[sp[fits], slots] = fps[order][fits]
+        self.fpcount += int(fits.sum())
+        placed = np.empty(len(order), dtype=bool)
         placed[order] = fits
         return placed
 
@@ -386,10 +384,9 @@ class CuckooFilter:
         multiset are identical (tested)."""
         if self.broken:
             raise BrokenError("filter is broken")
-        f = self._prep_fps(fps)
+        f = _prep_fps(fps, self.fpsize)
         pidx = self._primary_idx(hashes)
-        n = len(f)
-        if n == 0:
+        if len(f) == 0:
             return 0
         placed = self._bulk_place(pidx, f)
         dropped = 0
@@ -412,7 +409,7 @@ class CuckooFilter:
         """Vectorized CF.CHECK: probe primary, alt, homeless (lib:110-123).
         No false negatives. A broken filter still returns True on hits and
         errors only if any probe misses (reference quirk, lib:122)."""
-        f = self._prep_fps(fps)
+        f = _prep_fps(fps, self.fpsize)
         pidx = self._primary_idx(hashes)
         aidx = self._alt_idx_vec(pidx, f)
         fcol = f[:, None]
@@ -453,12 +450,7 @@ class CuckooFilter:
         raise BrokenError(f"removed non-member (hash-bucket {pidx}, fp {fp})")
 
     def remove_one(self, hash_: int, fp: int) -> None:
-        if self.broken:
-            raise BrokenError("filter is broken")
-        fp = int(fp) & ((1 << (8 * self.fpsize)) - 1)
-        if fp == 0:
-            fp = 1
-        self._remove_one(int(hash_) & (self.nbuckets - 1), fp)
+        self._remove_one(*self._item(hash_, fp))
 
     def remove_batch(self, hashes, fps) -> None:
         """Vectorized bulk CF.REM. Duplicate (hash, fp) items each delete one
@@ -466,35 +458,19 @@ class CuckooFilter:
         (reference semantics)."""
         if self.broken:
             raise BrokenError("filter is broken")
-        f = self._prep_fps(fps)
+        f = _prep_fps(fps, self.fpsize)
         pidx = self._primary_idx(hashes)
-        n = len(f)
-        if n == 0:
+        if len(f) == 0:
             return
         # group duplicates by (primary bucket, fp); lexsort is stable so
         # arrival order is preserved within each group
         order = np.lexsort((f, pidx))
-        sp, sf = pidx[order], f[order]
-        boundary = np.empty(n, dtype=bool)
-        boundary[0] = True
-        boundary[1:] = (sp[1:] != sp[:-1]) | (sf[1:] != sf[:-1])
-        starts = np.nonzero(boundary)[0]
-        counts = np.diff(np.append(starts, n))
-        gb, gf = sp[starts], sf[starts]
-        sub = self.buckets[gb]
-        match_mask = sub == gf[:, None]
-        nmatch = match_mask.sum(axis=1)
-        rank = np.arange(n) - np.repeat(starts, counts)
-        hits = rank < np.repeat(nmatch, counts)
-        if hits.any():
-            match_order = np.argsort(~match_mask, axis=1, kind="stable")
-            grp = np.repeat(np.arange(len(gb)), counts)
-            self.buckets[sp[hits], match_order[grp[hits], rank[hits]]] = 0
-            self.fpcount -= int(hits.sum())
-        if not hits.all():
-            residual = np.sort(order[~hits])
-            for i in residual:
-                self._remove_one(int(pidx[i]), int(f[i]))
+        sp = pidx[order]
+        hits, slots = self._kth_slots(sp, f[order])
+        self.buckets[sp[hits], slots] = 0
+        self.fpcount -= int(hits.sum())
+        for i in np.sort(order[~hits]):
+            self._remove_one(int(pidx[i]), int(f[i]))
 
     # ------------------------------------------------------- state / queries
 
@@ -614,11 +590,11 @@ class CuckooFilter:
 
     # ----------------------------------------------------------------- merge
 
-    def extract_pairs(self, canonical: bool = True) -> tuple[np.ndarray, np.ndarray]:
-        """All stored fingerprints as (bucket_idx, fp) pairs, homeless
-        included. With ``canonical=True`` the index is ``min(i, alt(i, fp))``
-        — a pure function of the original item, independent of kick history
-        and input partitioning."""
+    def extract_pairs(self) -> tuple[np.ndarray, np.ndarray]:
+        """All stored fingerprints as canonical (bucket_idx, fp) pairs,
+        homeless included. The index is ``min(i, alt(i, fp))`` — a pure
+        function of the original item, independent of kick history and
+        input partitioning."""
         occ = self.buckets != 0
         flat = np.nonzero(occ.ravel())[0]
         bidx = (flat // self.bucksize).astype(np.int64)
@@ -626,10 +602,7 @@ class CuckooFilter:
         if self.homeless_fp != 0:
             bidx = np.append(bidx, np.int64(self.homeless_bucket_idx))
             fps = np.append(fps, DTYPE[self.fpsize](self.homeless_fp))
-        if canonical and len(bidx):
-            alt = self._alt_idx_vec(bidx, fps)
-            bidx = np.minimum(bidx, alt)
-        return bidx, fps
+        return np.minimum(bidx, self._alt_idx_vec(bidx, fps)), fps
 
     @classmethod
     def merge(cls, parts: list, seed: int = 42, on_toofull: str = "raise") -> CuckooFilter:
@@ -657,28 +630,6 @@ class CuckooFilter:
         out.broken = any(r[4] for r in read)
         return out
 
-    def merge_into(self, parts: list, on_toofull: str = "raise") -> None:
-        """NON-canonical in-place union: fold ``parts`` (dense filters,
-        dense blobs, or packed pair blobs) into THIS filter — O(new items),
-        no re-build of existing content.
-
-        Trade-off vs :meth:`merge`: membership, fpcount, and deletion
-        semantics are identical (the stored fp multiset is the same), but
-        the byte layout depends on arrival order, so blobs are NOT
-        comparable across paths. Use for long-running incremental sinks
-        where per-batch cost must stay O(batch); re-canonicalize offline
-        (``CuckooFilter.merge([self])``) when byte-identity is needed for
-        replay/repair comparisons. Pairs within each part fold in
-        canonical-sorted order so the fast path itself is deterministic
-        for a fixed batch sequence."""
-        for p in parts:
-            size, fpsize, b, fp, broken = _read_part(p)
-            if (size, fpsize) != (self.nbytes, self.fpsize):
-                raise ValueError("merge_into requires equal (size, fpsize)")
-            order = np.lexsort((fp, b))
-            self.add_batch(b[order], fp[order], on_toofull=on_toofull)
-            self.broken = self.broken or broken
-
 
 def _read_part(p) -> tuple[int, int, np.ndarray, np.ndarray, bool]:
     """Any merge input — a filter, a dense blob or a packed pair blob — as
@@ -688,5 +639,5 @@ def _read_part(p) -> tuple[int, int, np.ndarray, np.ndarray, bool]:
         size, fpsize, bidx, fps = unpack_pairs(bytes(p))
         return size, fpsize, bidx, fps, False
     f = p if isinstance(p, CuckooFilter) else CuckooFilter.from_bytes(bytes(p))
-    bidx, fps = f.extract_pairs(canonical=True)
+    bidx, fps = f.extract_pairs()
     return f.nbytes, f.fpsize, bidx.astype(np.uint64), fps, f.broken

@@ -27,7 +27,7 @@ The Spark-native re-expression of the reference's command surface
   fields on the partial rows (plain aggregations)
 - incremental maintenance → ``sketchlib.streaming``: the streaming sinks
   fold each micro-batch into the committed state ON THE DRIVER with the
-  kernel's ``merge`` / ``merge_into`` (no Spark-side fold, no shuffle).
+  kernel's ``merge`` / ``add_batch`` (no Spark-side fold, no shuffle).
   Every state change runs through two per-shard helpers over
   :func:`split_by_shard`'s arrays: :func:`merged_row` (builds, merges,
   canonical folds) and :func:`removed_row` (``remove_keys``, retraction).
@@ -520,10 +520,12 @@ def semi_join_via_filter(
     big_key = F.col(big_key) if isinstance(big_key, str) else big_key
     small_key = F.col(small_key) if isinstance(small_key, str) else small_key
     # the cached key table is referenced by the returned plan, so it can't
-    # be unpersisted here; Spark's ContextCleaner releases it once the
-    # result plan is garbage-collected. Callers issuing MANY semi joins in
-    # one long session should pre-distinct/cache keys themselves and pass
-    # them as `small` to control the lifetime.
+    # be unpersisted here, and ContextCleaner never frees a CacheManager
+    # entry: each distinct `small` plan leaves one cached table for the
+    # session (ROADMAP item 5 has the leak-free variants' job counts).
+    # Callers issuing MANY semi joins in one long session should
+    # pre-distinct/cache keys themselves and pass them as `small` to
+    # control the lifetime.
     keys = small.select(small_key.alias("__k")).distinct().cache()
     n = keys.count()  # sizing job (CF.SIZEFOR) — also materializes the cache
     spec = CuckooSpec(name, max(size_for(max(n, 1), fpsize), 1024), fpsize, num_shards=8)

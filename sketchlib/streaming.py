@@ -9,7 +9,7 @@ multiset, the streamed filter is BYTE-IDENTICAL to a batch build over the
 same rows (tested).
 
 Where every state change runs: on the DRIVER — a pyarrow load of the
-committed state, a per-shard fold (``merged_row`` / ``merge_into``) or
+committed state, a per-shard fold (``merged_row`` / ``add_batch``) or
 removal (``removed_row``), a pyarrow write and the pointer flip. A sink
 commit starts one Spark job (an Arrow collect of the batch's hashes), a
 retraction two (its paragraphs are made distinct first); neither shuffles.
@@ -42,6 +42,7 @@ import os
 import shutil
 import warnings
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
@@ -126,22 +127,27 @@ def _replayed(commit: dict | None, epoch_id: int) -> bool:
 def _fold(spec: CuckooSpec, prior: dict[int, dict], h, f, mode: str) -> dict[int, dict]:
     """The new state rows after folding items (h, f) into ``prior``.
 
-    Per touched shard: ``"fast"`` folds the batch's canonical pairs into
-    the committed blob (``merge_into``, O(batch)); ``"canonical"`` re-merges
-    committed blob + batch through ``merged_row``, so the blob is
+    Per touched shard: ``"fast"`` adds the batch's lexsorted canonical
+    pairs to the committed blob (``add_batch``, O(batch)); ``"canonical"``
+    re-merges committed blob + batch through ``merged_row``, so the blob is
     byte-identical to a batch build. A shard's first batch is that merge in
     both modes. Untouched shards keep their row. Raises ``TooFullError``
     if any shard would drop a fingerprint."""
     rows = dict(prior)
     for s, (h_s, f_s) in split_by_shard(h, f, spec.num_shards).items():
-        pairs = pack_pairs(*canonical_pairs(h_s, f_s, spec.size, spec.fpsize), spec.size, spec.fpsize)
+        b, fp = canonical_pairs(h_s, f_s, spec.size, spec.fpsize)
         old = prior.get(s, {"fpcount": 0, "rows": 0, "dropped": 0})
         fpcount, n = old["fpcount"] + len(h_s), old["rows"] + len(h_s)
         if mode == "fast" and s in prior:
             flt = CuckooFilter.from_bytes(old["sketch"])
-            flt.merge_into([pairs], on_toofull="count")
+            if (flt.nbytes, flt.fpsize) != (spec.size, spec.fpsize):
+                raise ValueError("fold requires the committed filter's (size, fpsize)")
+            # canonical order keeps the fold deterministic per batch sequence
+            order = np.lexsort((fp, b))
+            flt.add_batch(b[order], fp[order], on_toofull="count")
             rows[s] = _filter_row(spec.name, s, flt, n, old["dropped"])
         else:
+            pairs = pack_pairs(b, fp, spec.size, spec.fpsize)
             parts = [old["sketch"], pairs] if s in prior else [pairs]
             rows[s] = merged_row(spec.name, s, parts, fpcount, n, old["dropped"])
         if rows[s]["fpcount"] < fpcount:
@@ -214,8 +220,8 @@ def incremental_cuckoo_sink(spec: CuckooSpec, key, state_dir: str, mode: str = "
       grows with TOTAL filter content, but the state is BYTE-IDENTICAL to
       a batch build over the same rows (replay/repair and cross-path
       verification by blob comparison).
-    - ``"fast"``: fold only the new batch's pairs into the existing dense
-      blobs (``CuckooFilter.merge_into``) — per-batch cost is O(batch).
+    - ``"fast"``: add only the new batch's canonical pairs to the existing
+      dense blobs (``CuckooFilter.add_batch``) — per-batch cost is O(batch).
       Same fp multiset, so membership/count/remove semantics stay EXACTLY
       equal to the canonical path (tested); only the byte layout diverges.
       Re-canonicalize offline (``merge_partials`` over the state) when a
@@ -388,80 +394,3 @@ def retract_paragraphs_from_state(
         commit,
     )
     return len(h)
-
-
-def streaming_distinct_per_key(
-    stream: DataFrame,
-    key_col: str,
-    count_col: str,
-    p: int | None = None,
-    kind: str = "hll",
-    k: int | None = None,
-) -> DataFrame:
-    """Custom stateful streaming operator via ``applyInPandasWithState``:
-    a running cardinality sketch per key, updated each micro-batch,
-    emitting the current distinct-count estimate. The sketch blob IS the
-    state — mergeable aggregators make exactly-once streaming state one
-    binary column. ``kind``: "hll" (precision ``p``, default) or "kmv"
-    (size ``k``, default 256 — exact below k distinct, ~1/sqrt(k-2)
-    relative error above; handy for long-tail keys where most groups stay
-    small). ``k`` is a separate kwarg so HLL's precision is never
-    silently reused as a tiny KMV size (p=12 as k meant ~32% error);
-    both params are validated HERE on the driver — an executor-
-    time failure inside the stateful update is far harder to read."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from sketchlib.kernels.hll import HyperLogLog
-    from sketchlib.kernels.kmv import KMVSketch
-    from sketchlib.util import i64_to_u64
-
-    if kind not in ("hll", "kmv"):
-        raise ValueError("kind must be 'hll' or 'kmv'")
-    if kind == "hll":
-        p = 12 if p is None else p
-        if not 4 <= p <= 18:
-            raise ValueError(f"hll precision p must be in [4, 18], got {p}")
-    else:
-        if p is not None:
-            # p is HLL precision only; a caller passing p=100_000 with
-            # kind='kmv' would otherwise silently get k=256 (~6% error)
-            # instead of exact counts
-            raise ValueError(
-                "p is the HLL precision and does not apply to kind='kmv'; "
-                "use k to set the KMV size"
-            )
-        k = 256 if k is None else k
-        if k < 8:
-            raise ValueError(f"kmv size k must be >= 8, got {k} (rel-err ~1/sqrt(k-2))")
-    cls = HyperLogLog if kind == "hll" else KMVSketch
-    param = p if kind == "hll" else k
-    # NULL counted-values are ignored, matching COUNT(DISTINCT) and the
-    # batch aggregator's hash-mode contract — xxhash64(NULL) evaluates to
-    # the seed, which would otherwise count as one phantom distinct per
-    # key (the agg.py trap, previously unguarded on the streaming path)
-    hashed = stream.where(F.col(count_col).isNotNull()).withColumn(
-        "__h", F.xxhash64(count_col)
-    )
-
-    def update(key, pdfs, state):
-        if state.exists:
-            (blob,) = state.get
-            sk = cls.from_bytes(bytes(blob))
-        else:
-            sk = cls(param)
-        for pdf in pdfs:
-            if len(pdf):
-                sk.add_hashes(i64_to_u64(pdf["__h"].to_numpy()))
-        state.update((sk.to_bytes(),))
-        yield pd.DataFrame(
-            {key_col: [key[0]], "distinct_estimate": [float(sk.estimate())]}
-        )
-
-    return hashed.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=f"{key_col} string, distinct_estimate double",
-        stateStructType="sketch binary",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )

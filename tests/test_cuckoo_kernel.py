@@ -41,7 +41,7 @@ def kstate(cf: CuckooFilter):
 
 
 def pairs_multiset(cf: CuckooFilter):
-    b, f = cf.extract_pairs(canonical=True)
+    b, f = cf.extract_pairs()
     return sorted(zip(b.tolist(), f.tolist()))
 
 
@@ -463,3 +463,103 @@ def test_encoding_version_evolution_v1_v2():
         CuckooFilter.from_bytes(bytes(v3))
     with pytest.raises(ValueError, match="unknown encoding version"):
         cf.to_bytes(version=3)
+
+
+# ------------------------------------------------------- golden bytes
+
+def _golden_run(fpsize: int) -> dict[str, str]:
+    """One fixed-seed pass over the batch kernel: the sha256 of the blob
+    after each step (prefixed by the drop count where one is returned)."""
+    from sketchlib.kernels.cuckoo import canonical_pairs, pack_pairs
+
+    rng = np.random.default_rng(1000 + fpsize)
+    size = 2048
+    slots = capacity(size, fpsize)
+
+    def items(n):
+        return (
+            rng.integers(0, 2**64, size=n, dtype=np.uint64),
+            rng.integers(0, 2**32, size=n, dtype=np.uint64),
+        )
+
+    out = {}
+    # add_batch past capacity: the kick loop runs, one item ends homeless
+    # and the rest drop
+    h, f = items(slots + slots // 8)
+    full = CuckooFilter.create(size, fpsize, seed=1)
+    dropped = full.add_batch(h, f, on_toofull="count")
+    assert dropped > 0 and full.is_toofull()
+    out["add_batch"] = f"{dropped}:{full.digest()}"
+
+    # remove_batch of duplicated members, some stored in their alt bucket
+    u_h, u_f = items(slots // 2)
+    dup = slots // 8
+    flt = CuckooFilter.create(size, fpsize, seed=2)
+    flt.add_batch(np.concatenate([u_h, u_h[:dup]]), np.concatenate([u_f, u_f[:dup]]))
+    rh = np.concatenate([u_h[:dup], u_h[: 2 * dup], u_h[-dup:]])
+    rf = np.concatenate([u_f[:dup], u_f[: 2 * dup], u_f[-dup:]])
+    fp = rf.astype(flt.buckets.dtype)
+    fp[fp == 0] = 1
+    primary = flt.buckets[(rh & np.uint64(flt.nbuckets - 1)).astype(np.int64)]
+    assert not (primary == fp[:, None]).any(axis=1).all()
+    flt.remove_batch(rh, rf)
+    assert flt.count() == slots // 2 + dup - len(rh)
+    out["remove_batch"] = flt.digest()
+    # a non-member in the batch poisons the filter after the members go
+    miss_h, miss_f = items(64)
+    miss = ~flt.contains_batch(miss_h, miss_f)
+    with pytest.raises(BrokenError):
+        flt.remove_batch(
+            np.array([u_h[2 * dup], miss_h[miss][0]]), np.array([u_f[2 * dup], miss_f[miss][0]])
+        )
+    out["poisoned"] = flt.digest()
+
+    # merge of pair partials plus one dense blob
+    dense = CuckooFilter.create(size, fpsize, seed=3)
+    dense.add_batch(*items(slots // 5))
+    parts = [dense.to_bytes()]
+    for _ in range(3):
+        parts.append(pack_pairs(*canonical_pairs(*items(slots // 6), size, fpsize), size, fpsize))
+    merged = CuckooFilter.merge(parts, seed=4)
+    out["merge"] = merged.digest()
+
+    # the sink's fast fold: lexsorted canonical pairs into a committed filter
+    b, fp = canonical_pairs(*items(slots // 8), size, fpsize)
+    order = np.lexsort((fp, b))
+    dropped = merged.add_batch(b[order], fp[order], on_toofull="count")
+    out["fold"] = f"{dropped}:{merged.digest()}"
+    return out
+
+
+#: digests of ``_golden_run`` per fingerprint width
+GOLDEN = {
+    1: {
+        "add_batch": "275:2a1f74a3a189ead329e171130ad2de9229374712f6097798733d1da06ad750a0",
+        "remove_batch": "9d1611744bd8fae25b65d647414bba5274e03dc893884e697d61221fd4268be7",
+        "poisoned": "5db12f62acc2915a7c9ddf6dd89adcc75f6667e0413f3e380e218266b519acc7",
+        "merge": "97a8e4eb3a1891e4b2592924d4061db18aa293d6d35b1bfe8609e41340fc3792",
+        "fold": "0:19a0f6370d7769b090c5bb72fffb3b9c8043b0e0ad065499f4aad0cb524a4b67",
+    },
+    2: {
+        "add_batch": "140:a75d4659081aa11a35f1a43794df79adaa322352a82404d8718924ff8b8bb752",
+        "remove_batch": "720d320e67ea96a1904a1195ecf7fad088857d5bae724b7e00bb21cffe998994",
+        "poisoned": "ffea21cb89a63dbaf9ce0733b771a1bae63319c28f954993d4132c66a3ae0838",
+        "merge": "1f58cbb529712a303acc2a53f78b499ee9eacde3b3d469c5084f4ef85d5b20e8",
+        "fold": "0:c4ae0f9db17268ad32d9de9b1d260ef0e7af7e8a5fdff9383a1cc4cb1f718b16",
+    },
+    4: {
+        "add_batch": "79:8201a3f868e4aea87df89aefd45db26b2d437cedba8a5a3a3c3c27220ee79278",
+        "remove_batch": "05f1e34e7073e56e4eb282926f69c6c36286b93577c2f52bfdae854b9f6d5193",
+        "poisoned": "8dd600da9c47870d235195acce4c6c95aa7e51a316f2313945910f42f378e0d0",
+        "merge": "1148b4c536c0251322ee68ecf1602f4d62dca99e1dffe09d02a6971bb3135d3c",
+        "fold": "0:e6b62bb442c2a01f822002a34f8317d40117ec2fa562524add63d173e772d3c6",
+    },
+}
+
+
+@pytest.mark.parametrize("fpsize", FPSIZES)
+def test_batch_kernel_golden_bytes(fpsize):
+    """Pins the batch kernel's bytes to fixed digests: every other
+    byte-identity test compares one path with another, so a change that
+    moved both paths alike would pass them all."""
+    assert _golden_run(fpsize) == GOLDEN[fpsize]

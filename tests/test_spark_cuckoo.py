@@ -11,7 +11,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from sketchlib.kernels.cuckoo import CuckooFilter, size_for
+from sketchlib.kernels.cuckoo import CuckooFilter, _prep_fps, size_for
 from sketchlib.spark.cuckoo import (
     CuckooSpec,
     ShardedCuckoo,
@@ -100,7 +100,7 @@ def test_merged_blob_partition_invariant(spark, docs):
         order = np.lexsort((f[m], h[m]))
         # local canonical build: insert sorted canonical pairs like merge does
         pidx = local._primary_idx(h[m][order])
-        fps = local._prep_fps(f[m][order])
+        fps = _prep_fps(f[m][order], spec.fpsize)
         alt = local._alt_idx_vec(pidx, fps)
         bidx = np.minimum(pidx, alt)
         o2 = np.lexsort((fps, bidx))

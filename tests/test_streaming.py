@@ -1,6 +1,6 @@
 """Structured Streaming tests: incremental cuckoo maintenance equals the
-batch build byte-for-byte; checked, crash-atomic state commits; stateful
-per-key sketches; paragraph dedup and its retraction."""
+batch build byte-for-byte; checked, crash-atomic state commits; paragraph
+dedup and its retraction."""
 
 from __future__ import annotations
 
@@ -92,6 +92,25 @@ def test_incremental_stream_equals_batch(spark, sf_dir):
         assert ShardedCuckoo.from_df(read_state(spark, fast_dir), spec).count() == docs.count()
     finally:
         shutil.rmtree(work, ignore_errors=True)
+
+
+@pytest.mark.parametrize("mode", ["canonical", "fast"])
+def test_fold_rejects_a_spec_of_another_geometry(mode):
+    """A spec whose (size, fpsize) differs from the committed filter's
+    raises in both modes: folding pairs of one geometry into a filter of
+    another would store them in the wrong buckets."""
+    import numpy as np
+
+    from sketchlib.kernels.cuckoo import CuckooFilter
+    from sketchlib.spark.cuckoo import _filter_row
+    from sketchlib.streaming import _fold
+
+    prior = {0: _filter_row("geo", 0, CuckooFilter.create(1024, 2), 0, 0)}
+    h = np.arange(1, 50, dtype=np.uint64) * np.uint64(0x9E3779B97F4A7C15)
+    for size, fpsize in ((2048, 2), (1024, 1)):
+        spec = CuckooSpec(name="geo", size=size, fpsize=fpsize, num_shards=1)
+        with pytest.raises(ValueError, match=r"\(size, fpsize\)"):
+            _fold(spec, prior, h, h >> np.uint64(40), mode)
 
 
 @pytest.mark.parametrize("mode", ["canonical", "fast"])
@@ -300,8 +319,8 @@ def test_fast_sink_semantics_equal_canonical(spark, sf_dir):
             # identical stored fp multiset ⇒ identical canonical pairs
             fc = CuckooFilter.from_bytes(bytes(canon[s]["sketch"]))
             ff = CuckooFilter.from_bytes(bytes(fast[s]["sketch"]))
-            pc = sorted(zip(*[a.tolist() for a in fc.extract_pairs(canonical=True)]))
-            pf = sorted(zip(*[a.tolist() for a in ff.extract_pairs(canonical=True)]))
+            pc = sorted(zip(*[a.tolist() for a in fc.extract_pairs()]))
+            pf = sorted(zip(*[a.tolist() for a in ff.extract_pairs()]))
             assert pc == pf
         sc = ShardedCuckoo.from_df(read_state(spark, os.path.join(work, "f")), spec)
         assert sc.count() == docs.count()
@@ -399,52 +418,6 @@ def test_streaming_sessions_match_batch(spark, sf_dir):
         shutil.rmtree(work, ignore_errors=True)
 
 
-def test_streaming_distinct_per_key_stateful(spark, sf_dir):
-    """applyInPandasWithState: running per-key HLL across micro-batches;
-    the final update-mode estimate must match the exact batch distinct
-    count within the HLL bound."""
-    from sketchlib.streaming import streaming_distinct_per_key
-
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    work = tempfile.mkdtemp(prefix="sketchlib-state-")
-    try:
-        events.withColumn("g", F.pmod("event_id", F.lit(4))).write.partitionBy("g").parquet(
-            os.path.join(work, "src")
-        )
-        stream = (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(work, "src") + "/g=*")
-        )
-        out = streaming_distinct_per_key(stream, "event_type", "user_id", p=12)
-        q = (
-            out.writeStream.outputMode("update")
-            .format("memory")
-            .queryName("state_out")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        # update mode emits one row per key per batch: take the LAST emission
-        import pandas as pd
-
-        emitted = spark.sql("SELECT * FROM state_out").toPandas()
-        final = emitted.groupby("event_type").last()["distinct_estimate"]
-        exact = {
-            r["event_type"]: r["d"]
-            for r in events.groupBy("event_type")
-            .agg(F.countDistinct("user_id").alias("d"))
-            .collect()
-        }
-        import numpy as np
-
-        for t, d in exact.items():
-            assert abs(final[t] - d) / max(d, 1) <= 3 * 1.04 / np.sqrt(1 << 12) + 0.02, t
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-
-
 def test_sink_retains_previous_epoch_for_lazy_readers(spark, sf_dir):
     """The sink keeps the immediately-previous epoch directory (ADVICE r2):
     a lazy read_state resolved before a commit must still be collectable
@@ -469,98 +442,6 @@ def test_sink_retains_previous_epoch_for_lazy_readers(spark, sf_dir):
         assert ShardedCuckoo.from_df(read_state(spark, state_dir), spec).count() == docs.count()
     finally:
         shutil.rmtree(work, ignore_errors=True)
-
-
-def test_streaming_distinct_per_key_kmv_exact_below_k(spark, sf_dir):
-    """The KMV kind of the stateful streaming distinct: with k larger than
-    any group's true distinct count, the running estimate is EXACT per key
-    after all micro-batches (KMV below-k exactness carried through the
-    binary streaming state)."""
-    from sketchlib.streaming import streaming_distinct_per_key
-
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    work = tempfile.mkdtemp(prefix="sketchlib-state-kmv-")
-    try:
-        events.withColumn("g", F.pmod("event_id", F.lit(3))).write.partitionBy("g").parquet(
-            os.path.join(work, "src")
-        )
-        stream = (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(work, "src") + "/g=*")
-        )
-        out = streaming_distinct_per_key(stream, "event_type", "user_id", kind="kmv", k=100_000)
-        q = (
-            out.writeStream.outputMode("update")
-            .format("memory")
-            .queryName("state_out_kmv")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        emitted = spark.sql("SELECT * FROM state_out_kmv").toPandas()
-        final = emitted.groupby("event_type").last()["distinct_estimate"].to_dict()
-        exact = {
-            r["event_type"]: r["d"]
-            for r in events.filter(F.col("user_id").isNotNull())
-            .groupBy("event_type")
-            .agg(F.countDistinct("user_id").alias("d"))
-            .collect()
-        }
-        for t, d in exact.items():
-            assert final[t] == float(d), (t, final[t], d)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-
-
-def test_streaming_distinct_ignores_null_values(spark, tmp_path):
-    """NULL counted-values must not register as a phantom distinct
-    (xxhash64(NULL) evaluates to the seed — the batch aggregator's
-    hash-mode trap, now guarded on the streaming path too)."""
-    from sketchlib.streaming import streaming_distinct_per_key
-
-    src = str(tmp_path / "src")
-    df = spark.createDataFrame(
-        [("a", 1), ("a", 2), ("a", None), ("b", None), ("b", None)],
-        "k string, v bigint",
-    )
-    df.write.parquet(src)
-    stream = spark.readStream.schema(df.schema).parquet(src)
-    out = streaming_distinct_per_key(stream, "k", "v", kind="kmv", k=64)
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("null_guard_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        r["k"]: r["distinct_estimate"]
-        for r in spark.sql("SELECT * FROM null_guard_out").collect()
-    }
-    assert got.get("a") == 2.0          # NULL row ignored
-    assert "b" not in got               # all-NULL key never emits
-
-
-def test_streaming_distinct_validates_params_on_driver(spark, sf_dir):
-    """ADVICE r4: a too-small KMV size (or an out-of-range HLL precision)
-    must fail at CALL time on the driver, not later inside the stateful
-    executor update where the error surfaces as an opaque task failure."""
-    import pytest
-
-    from sketchlib.streaming import streaming_distinct_per_key
-
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    stream = spark.readStream.schema(events.schema).parquet(f"{sf_dir}/")
-    with pytest.raises(ValueError, match="kmv size k"):
-        streaming_distinct_per_key(stream, "event_type", "user_id", kind="kmv", k=4)
-    with pytest.raises(ValueError, match="hll precision"):
-        streaming_distinct_per_key(stream, "event_type", "user_id", p=25)
-    with pytest.raises(ValueError, match="hll precision"):
-        streaming_distinct_per_key(stream, "event_type", "user_id", p=2)
 
 
 def test_streaming_paragraph_dedup_matches_batch(spark):
