@@ -116,7 +116,7 @@ class KMVSketch(FoldMerge):
     def to_bytes(self) -> bytes:
         # '<u8' pins the mins little-endian like the '<'-packed header —
         # native-endian tobytes() would silently break the byte-identical
-        # blob contract on a big-endian host (ADVICE r4)
+        # blob contract on a big-endian host
         return _HEADER.pack(_MAGIC, 1, 0, self.k, self.count) + np.ascontiguousarray(
             self.mins.astype("<u8", copy=False)
         ).tobytes()

@@ -13,6 +13,11 @@ committed state, a per-shard fold (``merged_row`` / ``add_batch``) or
 removal (``removed_row``), a pyarrow write and the pointer flip. A sink
 commit starts one Spark job (an Arrow collect of the batch's hashes), a
 retraction two (its paragraphs are made distinct first); neither shuffles.
+The commit's file I/O on the caller's thread is one mkdir, two fsync'd
+writes (state file, pointer), one hard link and a few renames; it frees
+no disk blocks. Retired state moves into ``state_dir/.trash`` and one
+background worker deletes it, because on a ``discard``-mounted ext4 each
+freed fsync'd file cost ~50 ms, most of a 204 ms commit (``_commit_state``).
 Memory: the committed state (``num_shards × spec.size``, which every reader
 already collects) plus 16 B per batch row or distinct retracted paragraph.
 Sized for churn's 4 × 128 KiB shards with 10k-row batches, the replay's
@@ -36,11 +41,15 @@ once on replay.
 
 from __future__ import annotations
 
+import contextlib
+import functools
 import hashlib
 import json
 import os
 import shutil
+import uuid
 import warnings
+from concurrent.futures import Future, ThreadPoolExecutor
 
 import numpy as np
 import pyarrow as pa
@@ -159,6 +168,41 @@ def _fold(spec: CuckooSpec, prior: dict[int, dict], h, f, mode: str) -> dict[int
     return rows
 
 
+def _retire(path: str, trash: str) -> None:
+    """Move ``path`` (a file or directory), if it exists, into ``trash``
+    under a unique name: a rename frees no blocks, and a crashed epoch
+    replayed under the same name never collides with its earlier copy."""
+    with contextlib.suppress(FileNotFoundError):
+        os.rename(path, os.path.join(trash, f"{os.path.basename(path)}.{uuid.uuid4().hex}"))
+
+
+def _empty_trash(trash: str) -> None:
+    """Delete everything in ``trash``; runs on the reclaim worker."""
+    with contextlib.suppress(OSError):  # what is left is reclaimed after the next commit
+        for e in os.listdir(trash):
+            path = os.path.join(trash, e)
+            if os.path.isdir(path):
+                shutil.rmtree(path, ignore_errors=True)
+            else:
+                os.unlink(path)
+
+
+_RECLAIM = ThreadPoolExecutor(1, thread_name_prefix="sketchlib-reclaim")
+_last_reclaim: Future | None = None
+
+
+def _reclaimed() -> None:
+    """Wait until the reclaim worker has emptied every trash handed to it."""
+    if _last_reclaim is not None:
+        _last_reclaim.result()
+
+
+@functools.cache
+def _arrow_schema() -> pa.Schema:
+    # parsing the DDL string is a py4j call: once per process, not per commit
+    return to_arrow_schema(_parse_datatype_string(PARTIAL_SCHEMA))
+
+
 def _commit_state(
     state_dir: str, rows: dict, name: str, pointer: dict, prior: dict | None
 ) -> None:
@@ -175,12 +219,26 @@ def _commit_state(
     reader that resolved before this commit and acts after it. One-commit
     retention gives such readers a full micro-batch interval to act;
     readers held across MULTIPLE commits must materialize
-    (collect/localCheckpoint) — see read_state."""
+    (collect/localCheckpoint) — see read_state.
+
+    The caller's thread frees no disk blocks. On an ext4 volume mounted
+    with ``discard`` (measured on a 4-core VM), freeing blocks that were
+    fsync'd costs ~50 ms per file: an ``unlink`` took 42–60 ms and an
+    ``os.replace`` over the old pointer 45–49 ms, while a ``rename`` to a
+    new name or a ``mkdir`` took ~0 ms; those two frees made up most of a
+    204 ms commit. So every retired directory (each non-kept ``state_epoch*``
+    and a crashed earlier attempt at ``name``) is renamed into
+    ``state_dir/.trash``, the old pointer is hard-linked there before the
+    replace (which then only drops a link), and one background worker
+    empties the trash after the commit. A trash left by a crash is
+    emptied after the next commit. The commit's I/O on the caller's
+    thread: one mkdir, two fsync'd file writes, one link and renames."""
+    trash = os.path.join(state_dir, ".trash")
+    os.makedirs(trash, exist_ok=True)
     new_state = os.path.join(state_dir, name)
-    shutil.rmtree(new_state, ignore_errors=True)  # a crashed earlier attempt
+    _retire(new_state, trash)  # a crashed earlier attempt
     os.makedirs(new_state)
-    schema = to_arrow_schema(_parse_datatype_string(PARTIAL_SCHEMA))
-    table = pa.Table.from_pylist([rows[s] for s in sorted(rows)], schema=schema)
+    table = pa.Table.from_pylist([rows[s] for s in sorted(rows)], schema=_arrow_schema())
     buf = pa.BufferOutputStream()
     # zstd: a third smaller than snappy on half-empty bucket arrays
     pq.write_table(table, buf, compression="zstd")
@@ -192,17 +250,21 @@ def _commit_state(
     check = {"bytes": len(data), "sha256": hashlib.sha256(data).hexdigest()}
     epoch_path = os.path.join(state_dir, "epoch.json")
     tmp = epoch_path + ".tmp"
+    _retire(tmp, trash)  # a crashed earlier attempt; reopening would truncate it
     with open(tmp, "w") as f:
         json.dump({**pointer, "state": new_state, **check}, f)
         f.flush()
         os.fsync(f.fileno())
-    os.replace(tmp, epoch_path)
     keep = {name}
     if prior is not None:
         keep.add(os.path.basename(prior["state"]))
+        os.link(epoch_path, os.path.join(trash, f"epoch.json.{uuid.uuid4().hex}"))
+    os.replace(tmp, epoch_path)
     for d in os.listdir(state_dir):
         if d.startswith("state_epoch") and d not in keep:
-            shutil.rmtree(os.path.join(state_dir, d), ignore_errors=True)
+            _retire(os.path.join(state_dir, d), trash)
+    global _last_reclaim
+    _last_reclaim = _RECLAIM.submit(_empty_trash, trash)
 
 
 def incremental_cuckoo_sink(spec: CuckooSpec, key, state_dir: str, mode: str = "canonical"):

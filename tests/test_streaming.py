@@ -419,7 +419,7 @@ def test_streaming_sessions_match_batch(spark, sf_dir):
 
 
 def test_sink_retains_previous_epoch_for_lazy_readers(spark, sf_dir):
-    """The sink keeps the immediately-previous epoch directory (ADVICE r2):
+    """The sink keeps the immediately-previous epoch directory:
     a lazy read_state resolved before a commit must still be collectable
     after that commit; directories older than one epoch are GC'd."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(300)
@@ -440,6 +440,101 @@ def test_sink_retains_previous_epoch_for_lazy_readers(spark, sf_dir):
         assert not os.path.isdir(os.path.join(state_dir, "state_epoch0"))
         assert os.path.isdir(os.path.join(state_dir, "state_epoch1"))
         assert ShardedCuckoo.from_df(read_state(spark, state_dir), spec).count() == docs.count()
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
+def test_sink_commit_frees_nothing_on_the_callers_thread(spark, monkeypatch):
+    """A commit frees no disk blocks on the caller's thread: retired state
+    directories and the old pointer go to ``.trash`` by rename and hard
+    link, so no delete runs there and ``os.replace`` only drops a link of
+    the old pointer. Once the reclaim worker is idle, the state directory
+    holds the pointer, the current and prior states and an empty trash."""
+    import threading
+
+    from sketchlib import streaming
+
+    spec = CuckooSpec(name="trash", size=size_for(200, 2), fpsize=2)
+    work = tempfile.mkdtemp(prefix="sketchlib-trash-")
+    state_dir = os.path.join(work, "state")
+    batches = [
+        spark.createDataFrame([(f"k{e}_{i}",) for i in range(10)], "k string") for e in range(4)
+    ]
+    caller = threading.get_ident()
+    deletes, replaced_links = [], []
+
+    def recorded(name, fn):
+        def call(*args, **kwargs):
+            deletes.append((name, threading.get_ident(), args[0] if args else None))
+            return fn(*args, **kwargs)
+
+        return call
+
+    def replace(src, dst, *args, real=os.replace, **kwargs):
+        if threading.get_ident() == caller and os.path.exists(dst):
+            replaced_links.append(os.stat(dst).st_nlink)
+        return real(src, dst, *args, **kwargs)
+
+    try:
+        sink = incremental_cuckoo_sink(spec, F.col("k"), state_dir)
+        for mod, name in ((os, "unlink"), (os, "remove"), (os, "rmdir"), (shutil, "rmtree")):
+            monkeypatch.setattr(mod, name, recorded(name, getattr(mod, name)))
+        monkeypatch.setattr(os, "replace", replace)
+        for e, batch in enumerate(batches):
+            sink(batch, e)
+        streaming._reclaimed()
+        monkeypatch.undo()
+        assert [d for d in deletes if d[1] == caller] == []
+        assert any(d[0] == "rmtree" for d in deletes)  # the worker reclaimed epochs 0 and 1
+        assert len(replaced_links) == 3 and min(replaced_links) >= 2, replaced_links
+        assert sorted(os.listdir(state_dir)) == [
+            ".trash", "epoch.json", "state_epoch2", "state_epoch3"
+        ]
+        assert os.listdir(os.path.join(state_dir, ".trash")) == []
+        assert ShardedCuckoo.from_df(read_state(spark, state_dir), spec).count() == 40
+    finally:
+        monkeypatch.undo()
+        shutil.rmtree(work, ignore_errors=True)
+
+
+def test_commit_reclaims_crash_leftovers(spark):
+    """A crash can leave entries in ``.trash``, a pointer tmp file and a
+    torn directory of the epoch about to be committed. The next commit
+    succeeds, its retired copy of the torn directory does not collide
+    with a trash entry of the same name, and once the reclaim worker is
+    idle all of them are gone and the loads' length and sha256 checks
+    pass."""
+    from sketchlib import streaming
+
+    spec = CuckooSpec(name="leftover", size=size_for(200, 2), fpsize=2)
+    work = tempfile.mkdtemp(prefix="sketchlib-leftover-")
+    state_dir = os.path.join(work, "state")
+    trash = os.path.join(state_dir, ".trash")
+    batches = [
+        spark.createDataFrame([(f"k{e}_{i}",) for i in range(10)], "k string") for e in range(2)
+    ]
+    try:
+        sink = incremental_cuckoo_sink(spec, F.col("k"), state_dir)
+        sink(batches[0], 0)
+        streaming._reclaimed()
+        torn = os.path.join(state_dir, "state_epoch1")  # the epoch about to be committed
+        for d in (torn, os.path.join(trash, "state_epoch1"), os.path.join(trash, "state_epoch7.0123")):
+            os.makedirs(d)
+            with open(os.path.join(d, "part-00000.parquet"), "wb") as f:
+                f.write(b"torn")
+        for stale in (os.path.join(trash, "epoch.json.0123"), os.path.join(state_dir, "epoch.json.tmp")):
+            with open(stale, "w") as f:
+                f.write("{}")
+        sink(batches[1], 1)
+        streaming._reclaimed()
+        assert os.listdir(trash) == []
+        assert sorted(os.listdir(state_dir)) == [
+            ".trash", "epoch.json", "state_epoch0", "state_epoch1"
+        ]
+        with open(os.path.join(state_dir, "epoch.json")) as f:
+            assert json.load(f)["epoch"] == 1
+        sc = ShardedCuckoo.from_df(read_state(spark, state_dir), spec)
+        assert (sc.rows, sc.count(), sc.dropped) == (20, 20, 0)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
