@@ -10,17 +10,6 @@ Reference semantics: kristoff-it/redis-cuckoofilter (see SURVEY.md). This is
 a brand-new Spark-first design, not a port.
 """
 
-from sketchlib.kernels.cuckoo import (
-    BrokenError,
-    CuckooFilter,
-    TooFullError,
-    capacity,
-    size_for,
-    size_for_exactly,
-    size2str,
-    str2size,
-)
-
 __all__ = [
     "BrokenError",
     "CuckooFilter",
@@ -33,3 +22,13 @@ __all__ = [
 ]
 
 __version__ = "0.1.0"
+
+
+def __getattr__(name: str):
+    # Lazy, so that importing a submodule (e.g. the Python-worker daemon,
+    # sketchlib.spark._pydaemon) does not load numpy.
+    if name in __all__:
+        from sketchlib.kernels import cuckoo
+
+        return getattr(cuckoo, name)
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

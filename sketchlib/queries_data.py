@@ -97,7 +97,7 @@ def _bpe_real_oracle() -> str:
 
 @register("doc_bpe_real_token_count", _bpe_real_oracle())
 def doc_bpe_real_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL byte-level BPE token counting (VERDICT r5 #8): GPT-2-style
+    """REAL byte-level BPE token counting: GPT-2-style
     rank-ordered merges from a fixed deterministic table, applied by the
     vectorized batch kernel (one numpy sweep per merge over the
     sentinel-separated concatenated buffer — no per-document Python). The
@@ -131,7 +131,7 @@ def doc_bpe_token_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_bpe_real_token_count; the oracle slices the anchor-code string
     back into codes and parses each 4-hex payload as the id.
 
-    Gate shape (VERDICT r6 #1): the library API returns
+    Gate shape: the library API returns
     (doc_id, token_ids array<int>), but the driver's canonicalizer cannot
     hash list cells, so the GATE entry serializes the ids to an
     engine-exact CSV scalar (integer→string cast is bit-portable) plus
@@ -220,7 +220,7 @@ def pack_batches_bpe_1024(spark: SparkSession, sf_dir: str) -> DataFrame:
     ids end to end; the oracle rebuilds the same layout with a window
     cumsum and fills bins with list_slice + ordered list aggregation.
 
-    Gate shape (VERDICT r6 #1): the library API (textops.pack_batches)
+    Gate shape: the library API (textops.pack_batches)
     returns the bins as array<int>; the gate serializes each bin to an
     engine-exact CSV scalar so the driver canon can hash it — every id
     in every bin is still value-checked in order. NULL doc_ids drop on
@@ -278,7 +278,7 @@ def _url_canon_dedup_oracle() -> str:
 def url_canonical_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """URL canonicalization + canonical-URL dedup in one gate entry
     (consolidates the r6-green url_canonicalize + url_dedup_canonical
-    singletons — VERDICT r7 #2 window consolidation; both operators stay
+    singletons; both operators stay
     exercised): every doc row carries its raw synthetic url, the
     canonical form (drop fragment, lowercase scheme+host, strip default
     port, normalize path, drop tracking params + bytewise-sort the rest —
@@ -490,7 +490,7 @@ def _link_pagerank_oracle(iterations: int = 3) -> str:
 
 @register("web_link_pagerank", _link_pagerank_oracle())
 def web_link_pagerank_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PageRank from EXTRACTED outlinks end to end (VERDICT r6 #5):
+    """PageRank from EXTRACTED outlinks end to end:
     synth page → href extraction → link resolution (absolute → its own
     host, relative → the page's canonical host) → (src, dst) edge agg →
     the quantized fixed-point recurrence. One corpus-sized projection +
@@ -562,8 +562,8 @@ FROM hb_term"""
 
 @register("web_host_harmonic", _harmonic_oracle())
 def web_host_harmonic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HyperBall harmonic centrality over the host graph (VERDICT r7 #4;
-    Boldi–Vigna 2013 — the algorithm behind Common Crawl's published host
+    """HyperBall harmonic centrality over the host graph
+    (Boldi–Vigna 2013 — the algorithm behind Common Crawl's published host
     ranking), with this repo's HLL registers as the per-node iteration
     state: sparse max-of-rho counters grown one radius per round by a
     regs⋈edges join + (host, j) max-merge (the mergeable-aggregator
@@ -691,8 +691,8 @@ def dedup_paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("streaming_paragraph_dedup_replay", _para_dedup_oracle())
 def streaming_paragraph_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The streaming paragraph-dedup sink under the DRIVER gate (VERDICT
-    r6 #8): replay the corpus as doc_id-ordered micro-batches through
+    """The streaming paragraph-dedup sink under the DRIVER gate:
+    replay the corpus as doc_id-ordered micro-batches through
     ``incremental_paragraph_dedup_sink`` — probe the committed cuckoo
     state, keep within-batch first occurrences, fold kept paragraphs
     back — and compare the union of emitted batches against the BATCH
@@ -891,7 +891,7 @@ def html_extract_links_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     document order — zero-shuffle projection, no explode; the graph
     build downstream joins on the canonicalized target, not here.
 
-    Gate shape (VERDICT r6 #1): the library API
+    Gate shape: the library API
     (htmlops.html_extract_links) returns hrefs as array<string>; the gate
     joins them on an unencodable separator (chr(31) — cannot appear in an
     href attribute value extracted by the regex, which excludes '"' only,
@@ -1366,7 +1366,7 @@ FROM walk GROUP BY id
 def dedup_clusters_cc_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup survivor selection by BOTH clustering algorithms in one
     gate entry (consolidates the r6-green dedup_clusters +
-    dedup_clusters_star singletons — VERDICT r7 #2 window consolidation):
+    dedup_clusters_star singletons):
     connected components over the exact bigram-Jaccard pairs (t=0.5) via
     iterative min-label propagation (cluster_id) and via small-star/
     large-star (cluster_id_star — O(log² n) rounds, diameter-independent,
@@ -1654,7 +1654,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe filters the stored partition column to the query's Hamming ball
     (directory-level pruning — no per-query signature recompute) and
     exact-re-scores only those buckets. Cache is content-addressed +
-    atomically published (sketchlib.cache, VERDICT r4 #1); bump the
+    atomically published (sketchlib.cache); bump the
     version token on any plane-seed/validity-contract change."""
     from sketchlib.cache import content_cache_path, ensure_cached
     from sketchlib.similarity import lsh_cosine_topk_indexed, write_signature_table
@@ -1758,8 +1758,8 @@ def _sampling_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Every sampling/selection operator in one labeled gate entry
     (consolidates the five r6-green singletons doc_sample_deterministic +
     stratified_sample_per_lang + priority_sample_per_lang +
-    doc_priority_sample_weighted + source_mixing_sample — VERDICT r7 #2
-    window consolidation; each operator keeps its own UNION ALL branch and
+    doc_priority_sample_weighted + source_mixing_sample;
+    each operator keeps its own UNION ALL branch and
     its exact oracle, relabeled onto the shared (sampler, doc_id, grp,
     priority) schema):
 
@@ -1954,7 +1954,7 @@ def hourly_continuous_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sketchlib.cache): the path embeds a fingerprint of the input parquet
     files plus a code-version token, and the dir is immutable once
     published — the r4 driver red row traced to a shared basename-keyed
-    path a concurrent run could overwrite mid-read (VERDICT r4 #1)."""
+    path a concurrent run could overwrite mid-read."""
     from sketchlib.cache import content_cache_path, ensure_cached
     from sketchlib.queries import _events
     from sketchlib.relops import continuous_agg, write_time_rollup
@@ -2168,7 +2168,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     algorithm-level parity with zero literals.
 
     nprobe=12/16 is the measured recall@10 ≥ 0.9 operating point on this
-    corpus (VERDICT r3 #4; sf0.1: 0.975, sf0.01: 0.94 over fixed query
+    corpus (sf0.1: 0.975, sf0.01: 0.94 over fixed query
     panels — the synthetic embeddings carry little cluster structure, so
     high absolute recall needs a high probed fraction; the quantizer still
     lifts recall well above the probed-fraction baseline, e.g. 0.825 vs
@@ -2182,7 +2182,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # change (CLAUDE.md invariant — a stale cache silently corrupts the
     # gate; the content fingerprint additionally covers the input data).
     # nprobe is probe-time only — it does not touch the cached index, so
-    # no version bump on nprobe changes. Atomic publish: VERDICT r4 #1.
+    # no version bump on nprobe changes.
     idx = content_cache_path(sf_dir, "emb_ivf16_l2", "v3", ["embeddings"])
 
     def _write(tmp: str) -> None:
@@ -2233,10 +2233,10 @@ WHERE query_id = 0
 def ann_ivf_clustered_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF probing on the clustered fixture, single AND batch paths in one
     gate entry (consolidates the r6-green ann_ivf_topk_clustered +
-    ann_ivf_topk_batch singletons — VERDICT r7 #2 window consolidation;
+    ann_ivf_topk_batch singletons;
     both probe implementations stay exercised against one materialized
     index). The fixture derives a deterministic 16-cluster mixture
-    (bit-identical in both engines — VERDICT r4 #4) and gates the
+    (bit-identical in both engines) and gates the
     operating point an index is FOR: nprobe=2 of 16 lists → measured
     recall 1.0 at ~12-25% of the corpus scanned (floor pinned in
     tests/test_similarity.py). 'single' rows run ivf_topk (query 0;
@@ -2393,7 +2393,7 @@ SELECT 'refined' AS path, vec_id, adc_q FROM refl
 
 @register("ann_ivf_pq_topk", _ivf_pq_oracle())
 def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF + product-quantization ANN (VERDICT r7 #6; Jégou et al. 2011)
+    """IVF + product-quantization ANN (Jégou et al. 2011)
     — the 100-TB embedding story: the index stores 16 4-bit codes (8 B)
     per vector instead of 512 B of float64, partitioned by coarse
     centroid; the probe reads ONLY the nprobe best centroid directories
@@ -2485,7 +2485,7 @@ def sink_roundtrip_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
     the JSON writer/reader surfaces as a gate mismatch. (SURVEY §2.6
     sources/sinks beyond parquet.)
 
-    Hermetic per VERDICT r4 #1: the sink writes to a RUN-SCOPED unique
+    Hermetic: the sink writes to a RUN-SCOPED unique
     dir (never shared with any concurrent run), the read-back aggregate
     is eagerly materialized (localCheckpoint — k rows, one per lang), and
     the dir is removed before returning."""
@@ -2524,7 +2524,7 @@ def sink_roundtrip_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     comment); the gate compares integerized per-row values aggregated
     exactly, vs the oracle over the original parquet.
 
-    Hermetic per VERDICT r4 #1: run-scoped unique sink dir, eager k-row
+    Hermetic: run-scoped unique sink dir, eager k-row
     materialization of the read-back aggregate, dir removed before
     returning — no concurrent run can clobber the path mid-read."""
     from sketchlib.cache import discard, run_scoped_path
@@ -2557,7 +2557,7 @@ def sink_roundtrip_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------- multimodal
 
 
-# mm composite oracle (r8 gate-window consolidation — VERDICT r7 #2):
+# mm composite oracle (r8 gate-window consolidation):
 # decode-meta arithmetic, the fit-within resize integer pipeline, and the
 # 4-frame sampling all derive from the payload byte length in ONE CTE
 # chain (no doc_id join anywhere, so NULL-doc_id rows keep flowing).
@@ -2592,7 +2592,7 @@ FROM s, i
 def mm_payload_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composed multimodal plumbing chain (consolidates the r6-green
     mm_decode_meta + mm_resize_fit + mm_frame_sample singletons into one
-    gate entry — VERDICT r7 #2 window consolidation; each operator is
+    gate entry; each operator is
     still exercised and value-checked, their oracles composed into one
     CTE chain): binary payload → Arrow-batched metadata decode
     (deterministic fake; real codec is mm_decode_bmp / decode_real) →
@@ -2627,7 +2627,7 @@ def mm_payload_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the frame oracle (byte-exact for multibyte text); byte % 16 is exactly
 # the LOW hex nibble, so one strpos per byte suffices. The normalized
 # feature is CAST(c/n AS REAL) = fl32(fl64(c/n)) — the numpy kernel
-# computes the identical double-then-float32 rounding (VERDICT r5 #6).
+# computes the identical double-then-float32 rounding.
 _FEATURES_ORACLE = """
 WITH b AS (SELECT doc_id, hex(encode(text)) AS hx,
                   CAST(octet_length(encode(text)) AS BIGINT) AS n
@@ -2655,7 +2655,7 @@ def mm_extract_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     embedding UDF's). Oracle re-derives the histogram from hex-sliced
     payload bytes and reproduces the float32 normalization bit-for-bit.
 
-    Gate shape (VERDICT r6 #1): the library API returns features as
+    Gate shape: the library API returns features as
     array<float>; the driver canon cannot hash list cells, so the gate
     POSEXPLODES to (doc_id, bin, feature) scalar float32 rows — every
     component is still compared BITWISE (the stronger per-value check; a
@@ -2718,7 +2718,7 @@ FROM agg
 
 @register("mm_decode_bmp", _BMP_ORACLE)
 def mm_decode_bmp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL image decode (VERDICT r7 #3): each doc's text bytes are laid
+    """REAL image decode: each doc's text bytes are laid
     out as a genuine uncompressed 24-bit bottom-up BMP (real
     BITMAPFILEHEADER/BITMAPINFOHEADER, 4-byte row stride, bottom row
     first) and decoded back by the pure-numpy parser
@@ -2775,7 +2775,7 @@ FROM agg
 
 @register("mm_decode_wav", _WAV_ORACLE)
 def mm_decode_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL audio decode (VERDICT r7 #3's audio half): each doc's text
+    """REAL audio decode: each doc's text
     bytes become mono int16 PCM samples ((byte − 128)·256) inside a
     genuine RIFF/WAVE container — canonical fmt chunk, varying sample
     rate, and (for n%3==0 docs) a junk LIST chunk before data so the
@@ -2942,7 +2942,7 @@ FROM ts JOIN bs USING (span) GROUP BY 1
 @register("decontaminate_n13", _decontam13_oracle())
 def decontaminate_n13(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decontamination at the PUBLISHED span length n=13 (GPT-3
-    appendix C; VERDICT r4 #8 — the r4 entry gated only n=5 because
+    appendix C; the r4 entry gated only n=5 because
     random short docs share no 13-grams). Contamination is constructed:
     the benchmark is the 20-token prefix of every 7th document, so every
     such doc (with ≥13 tokens) must report its prefix spans as overlap —
