@@ -12,20 +12,63 @@ re-reads the central directory of every zip archive on the worker's
 under ``local[4]``: one such call inside a worker took 57-59 ms, 0.1 ms
 under the daemon, and an identity ``mapInPandas`` over 10k rows in 4
 partitions went from ~185 to ~133 ms. The daemon re-reads only archives
-that changed. The workers import it from sketchlib, so sketchlib must be
-importable by them, as it already must be for every sketchlib UDF.
+that changed, and forks its workers from a gc-frozen heap that already holds
+pandas and pyarrow (see its docstring). The workers import it from
+sketchlib, so sketchlib must be importable by them, as it already must be
+for every sketchlib UDF.
 
-Sessions built elsewhere keep pyspark's own daemon; that includes
-``jobs/*.py``, which call ``SparkSession.builder`` directly. They can opt in
-with ``--conf spark.python.daemon.module=sketchlib.spark._pydaemon`` when
-sketchlib is on the workers' ``PYTHONPATH``.
+The workers talk to the JVM over Unix-domain sockets
+(``spark.python.unix.domain.socket.enabled``). Over the loopback TCP socket
+each Arrow task stalled ~40 ms: an identity ``mapInPandas`` over 8 x 500
+rows spent ~42 ms per task from its first byte to its end, ~32 ms of it in
+pyarrow's ``open_stream`` waiting for the JVM's first Arrow message;
+``TCP_NODELAY`` on the Python side did not help. Over a Unix-domain socket
+the same task took ~3 ms (4-core VM).
+
+Spark binds each socket at ``<dir>/.<uuid4>.sock``, by default in the JVM's
+``java.io.tmpdir``, and a process that exits without stopping its session
+leaves one of them behind. A socket path holds at most 107 bytes
+(``sun_path``), so a long ``<dir>`` makes every Python task fail with
+``OSError: AF_UNIX path too long``. ``get_spark`` therefore gives each
+process one private directory, made once by ``tempfile.mkdtemp`` in
+``tempfile.gettempdir()`` (so a ``TMPDIR`` keeps the sockets with the
+caller's other scratch files), or in ``/tmp`` when a socket path there would
+exceed 107 bytes, and removes it at exit.
+
+Sessions built elsewhere keep loopback TCP and pyspark's own daemon; that
+includes ``jobs/*.py``, which call ``SparkSession.builder`` directly. They can
+opt in with ``--conf spark.python.daemon.module=sketchlib.spark._pydaemon``
+when sketchlib is on the workers' ``PYTHONPATH``, and with ``--conf
+spark.python.unix.domain.socket.enabled=true --conf
+spark.python.unix.domain.socket.dir=<a short private directory>``, which
+they must then remove themselves.
 """
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
+
+# longest socket path (sockaddr_un.sun_path without its NUL) and the length
+# of the "/.<uuid4>.sock" name Spark appends to the socket directory
+_SUN_PATH_MAX = 107
+_SOCK_NAME_LEN = len("/.") + 36 + len(".sock")
+
+
+@functools.cache
+def _socket_dir() -> str:
+    """This process's private directory for Spark's Unix-domain sockets."""
+    d = tempfile.mkdtemp(prefix="sk")
+    if len(os.fsencode(d)) + _SOCK_NAME_LEN > _SUN_PATH_MAX:
+        os.rmdir(d)
+        d = tempfile.mkdtemp(prefix="sk", dir="/tmp")
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    return d
 
 
 def get_spark(
@@ -49,6 +92,8 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.python.daemon.module", "sketchlib.spark._pydaemon")
+        .config("spark.python.unix.domain.socket.enabled", "true")
+        .config("spark.python.unix.domain.socket.dir", _socket_dir())
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SKETCHLIB_DRIVER_MEM", "8g"))
         # keep bucketed-table state out of the repo / cwd

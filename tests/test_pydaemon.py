@@ -1,6 +1,7 @@
 """The Python-worker daemon of ``get_spark`` sessions (sketchlib.spark._pydaemon):
 an importer re-reads its zip archive only when the archive changed, and the
-workers of a ``get_spark`` session run with that patch."""
+workers of a ``get_spark`` session run with that patch, fork from a gc-frozen
+heap and talk to the JVM over a Unix-domain socket."""
 
 from __future__ import annotations
 
@@ -10,6 +11,8 @@ import subprocess
 import sys
 import zipfile
 import zipimport
+
+import pytest
 
 from sketchlib.spark import _pydaemon
 
@@ -69,6 +72,19 @@ def test_import_loads_no_numpy_and_patches_nothing():
     assert out.split() == ["[]", "False"]
 
 
+def test_worker_whose_socket_the_jvm_closed_ends_quietly():
+    def closed(sock, authenticated):
+        raise BrokenPipeError(32, "Broken pipe")
+
+    def fails(sock, authenticated):
+        raise ValueError("not a closed socket")
+
+    assert _pydaemon.quiet_on_closed_socket(closed, None, True) == 1
+    assert _pydaemon.quiet_on_closed_socket(lambda sock, auth: 0, None, True) == 0
+    with pytest.raises(ValueError):
+        _pydaemon.quiet_on_closed_socket(fails, None, True)
+
+
 def test_get_spark_workers_do_not_reread_unchanged_archives(spark):
     assert spark.conf.get("spark.python.daemon.module") == "sketchlib.spark._pydaemon"
 
@@ -109,3 +125,25 @@ def test_get_spark_workers_do_not_reread_unchanged_archives(spark):
            .mapInPandas(rereads, "rereads long").toPandas())
     assert len(out) == 4
     assert out["rereads"].tolist() == [0, 0, 0, 0]
+
+
+def test_get_spark_workers_fork_frozen_and_use_unix_sockets(spark):
+    assert spark.conf.get("spark.python.unix.domain.socket.enabled") == "true"
+
+    def report(batches):
+        # runs in a Python worker forked by the session's daemon
+        import gc
+        import os
+
+        import pandas as pd
+
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"frozen": [gc.get_freeze_count()],
+                            "uds": [os.environ.get("PYTHON_UNIX_DOMAIN_ENABLED", "")]})
+
+    out = (spark.range(4, numPartitions=4)
+           .mapInPandas(report, "frozen long, uds string").toPandas())
+    assert len(out) == 4
+    assert (out["frozen"] > 0).all()
+    assert out["uds"].str.lower().tolist() == ["true"] * 4
