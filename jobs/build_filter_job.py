@@ -11,6 +11,13 @@ The north-rule execution mode::
         --capacity 1000000000 --fpsize 2 --num-shards 4096 \
         --checkpoint /data/ckpt/urls
 
+Without --checkpoint the filter comes from the one-shuffle direct build
+(``build_filter_direct``). With --checkpoint it comes from the resumable
+partials build (``checkpointed_build``): per-partition partials persist
+under the checkpoint directory, and a re-run rebuilds only the missing
+ones. Both give byte-identical filters, so the report's ``digest`` is the
+same either way.
+
 On a cluster, --num-shards should be sized to the reduce parallelism and
 --capacity to the expected distinct keys (the per-shard byte size is
 derived via the reference's size_for: +20% pad → ≤80% fill).
@@ -34,7 +41,6 @@ def main(argv=None):
     ap.add_argument("--fpsize", type=int, default=2, choices=[1, 2, 4])
     ap.add_argument("--num-shards", type=int, default=32)
     ap.add_argument("--checkpoint", default=None, help="enable resumable build")
-    ap.add_argument("--mode", choices=["direct", "partials"], default="direct")
     args = ap.parse_args(argv)
 
     from pyspark.sql import SparkSession
@@ -42,12 +48,7 @@ def main(argv=None):
 
     from sketchlib.kernels.cuckoo import size_for
     from sketchlib.pipeline import checkpointed_build
-    from sketchlib.spark.cuckoo import (
-        CuckooSpec,
-        ShardedCuckoo,
-        build_filter,
-        build_filter_direct,
-    )
+    from sketchlib.spark.cuckoo import CuckooSpec, ShardedCuckoo, build_filter_direct
 
     spark = SparkSession.builder.appName(f"sketchlib-build-{args.name}").getOrCreate()
     per_shard = size_for(int(args.capacity * 1.05) // args.num_shards, args.fpsize)
@@ -57,12 +58,8 @@ def main(argv=None):
     t0 = time.time()
     if args.checkpoint:
         merged = checkpointed_build(df, spec, F.col(args.key), args.checkpoint)
-    elif args.mode == "direct":
-        merged = build_filter_direct(df, spec, key=F.col(args.key))
-        merged = merged.localCheckpoint(eager=True)
     else:
-        merged = build_filter(df, spec, key=F.col(args.key))
-        merged = merged.localCheckpoint(eager=True)
+        merged = build_filter_direct(df, spec, key=F.col(args.key)).localCheckpoint(eager=True)
     merged.write.mode("overwrite").parquet(args.output)
     merged = spark.read.parquet(args.output)
     sc = ShardedCuckoo.from_df(merged, spec)

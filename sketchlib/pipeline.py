@@ -274,13 +274,15 @@ def checkpointed_build(
     original run; ``meta.json`` records the spec, the partition count, AND
     the input identity (source-file fingerprint + optional caller-supplied
     ``input_id`` for non-file inputs) — any mismatch triggers a clean full
-    rebuild instead of a silently wrong resume.
+    rebuild instead of a silently wrong resume. An unreadable partial
+    raises before the resume appends anything: remove it and re-run, and
+    only its partition rebuilds.
     """
     import json
     import os
     import shutil
 
-    from sketchlib.spark.cuckoo import build_partials, merge_partials
+    from sketchlib.spark.cuckoo import PARTIAL_SCHEMA, build_partials, merge_partials
 
     spark = df.sparkSession
     partials_path = os.path.join(checkpoint_dir, "partials")
@@ -303,12 +305,11 @@ def checkpointed_build(
             prev = json.load(f)
         if prev != meta:
             shutil.rmtree(partials_path, ignore_errors=True)  # incompatible: full rebuild
-        else:
-            try:
-                existing = spark.read.parquet(partials_path).filter(F.col("name") == spec.name)
-                done = {r["part_id"] for r in existing.select("part_id").distinct().collect()}
-            except Exception:
-                done = set()
+        elif os.path.exists(partials_path):
+            # an unreadable partial raises here, before anything is appended
+            existing = spark.read.schema(PARTIAL_SCHEMA).parquet(partials_path)
+            existing = existing.filter(F.col("name") == spec.name)
+            done = {r["part_id"] for r in existing.select("part_id").distinct().collect()}
     os.makedirs(checkpoint_dir, exist_ok=True)
     with open(meta_path, "w") as f:
         json.dump(meta, f)

@@ -24,7 +24,7 @@ from sketchlib.kernels.cuckoo import capacity, size_for, size_for_exactly
 from sketchlib.spark.cuckoo import (
     CuckooSpec,
     ShardedCuckoo,
-    build_filter,
+    build_filter_direct,
     probe,
     remove_keys,
 )
@@ -61,7 +61,7 @@ def _build_docs_filter(spark, sf_dir, fpsize: int, num_shards: int = 2):
     # at test scale for a few KiB (size is per shard)
     size = max(size_for(max(n, 1), fpsize), 1024)
     spec = CuckooSpec(name=f"docs-fp{fpsize * 8}", size=size, fpsize=fpsize, num_shards=num_shards)
-    merged = build_filter(docs, spec, key=_doc_key())
+    merged = build_filter_direct(docs, spec, key=_doc_key())
     return docs, spec, merged
 
 
@@ -253,7 +253,7 @@ def cf_flags_after_misuse(spark: SparkSession, sf_dir: str) -> DataFrame:
     # overfill a tiny filter → toofull; remove some → fix succeeds
     tiny = CuckooSpec(name="tiny-flags", size=64, fpsize=2, num_shards=1)  # 32 slots
     keys = spark.range(40).select(F.col("id").cast("string").alias("k"))
-    m = build_filter(keys, tiny, key="k")
+    m = build_filter_direct(keys, tiny, key="k")
     sc = ShardedCuckoo.from_df(m, tiny)
     toofull = sc.is_toofull()
     # only remove keys that are actually stored — removing one of the keys

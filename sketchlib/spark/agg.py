@@ -73,7 +73,6 @@ class SketchSpec:
     name: str
     kind: str
     params: tuple = ()
-    seed: int = 42
 
     def __post_init__(self):
         if self.kind not in _KINDS:
@@ -83,7 +82,7 @@ class SketchSpec:
     def make(self, partition_id: int):
         cls = _KINDS[self.kind][0]
         if cls is KLLSketch:
-            return cls(*self.params, seed=stable_seed(self.name, self.kind, partition_id, self.seed))
+            return cls(*self.params, seed=stable_seed(self.name, self.kind, partition_id, 42))
         return cls(*self.params)
 
     @property

@@ -31,6 +31,9 @@ The Spark-native re-expression of the reference's command surface
   Every state change runs through two per-shard helpers over
   :func:`split_by_shard`'s arrays: :func:`merged_row` (builds, merges,
   canonical folds) and :func:`removed_row` (``remove_keys``, retraction).
+  :func:`folded_rows` is the one driver-side fold of a bounded item set
+  into rows held on the driver: the sinks' commits and the filter of
+  :func:`semi_join_via_filter` both run through it
 
 Hashing: every operator takes ``key`` (an expression :func:`with_hash_fp`
 hashes in-plan) or ``key=None`` over prepared ``HASH_COL`` / ``FP_COL``
@@ -59,8 +62,11 @@ from pyspark.sql import types as T
 from sketchlib.kernels.cuckoo import (
     BrokenError,
     CuckooFilter,
+    TooFullError,
     canonical_pairs,
+    capacity,
     pack_pairs,
+    size_for,
 )
 from sketchlib.util import i64_to_u64, shard_of, stable_seed
 
@@ -248,6 +254,41 @@ def merged_row(name: str, shard: int, parts: list, fpcount: int, rows: int, drop
     return _filter_row(name, shard, m, rows, dropped + fpcount - m.fpcount)
 
 
+def folded_rows(spec: CuckooSpec, prior: dict[int, dict], h, f, mode: str) -> dict[int, dict]:
+    """The new state rows after folding items (h, f) into ``prior``.
+
+    Per touched shard: ``"fast"`` adds the batch's lexsorted canonical
+    pairs to the committed blob (``add_batch``, O(batch)); ``"canonical"``
+    re-merges committed blob + batch through ``merged_row``, so the blob is
+    byte-identical to a batch build. A shard's first batch is that merge in
+    both modes. Untouched shards keep their row. Raises ``TooFullError``
+    if any shard would drop a fingerprint."""
+    rows = dict(prior)
+    for s, (h_s, f_s) in split_by_shard(h, f, spec.num_shards).items():
+        b, fp = canonical_pairs(h_s, f_s, spec.size, spec.fpsize)
+        old = prior.get(s, {"fpcount": 0, "rows": 0, "dropped": 0})
+        fpcount, n = old["fpcount"] + len(h_s), old["rows"] + len(h_s)
+        if mode == "fast" and s in prior:
+            flt = CuckooFilter.from_bytes(old["sketch"])
+            if (flt.nbytes, flt.fpsize) != (spec.size, spec.fpsize):
+                raise ValueError("fold requires the committed filter's (size, fpsize)")
+            # canonical order keeps the fold deterministic per batch sequence
+            order = np.lexsort((fp, b))
+            flt.add_batch(b[order], fp[order], on_toofull="count")
+            rows[s] = _filter_row(spec.name, s, flt, n, old["dropped"])
+        else:
+            pairs = pack_pairs(b, fp, spec.size, spec.fpsize)
+            parts = [old["sketch"], pairs] if s in prior else [pairs]
+            rows[s] = merged_row(spec.name, s, parts, fpcount, n, old["dropped"])
+        if rows[s]["fpcount"] < fpcount:
+            raise TooFullError(
+                f"sink '{spec.name}' shard {s}: the fold would drop {fpcount - rows[s]['fpcount']} "
+                "fingerprint(s), a silent false negative; nothing was committed. "
+                "Increase the filter size or num_shards."
+            )
+    return rows
+
+
 def _merge_group(key, pdf):
     sums = {c: int(pdf[c].sum()) for c in ("fpcount", "rows", "dropped")}
     parts = [bytes(b) for b in pdf["sketch"]]
@@ -267,19 +308,14 @@ def merge_partials(partials: DataFrame) -> DataFrame:
     return partials.groupBy("name", "shard").applyInPandas(_merge_group, PARTIAL_SCHEMA)
 
 
-def build_filter(df: DataFrame, spec: CuckooSpec, key=None) -> DataFrame:
-    """build_partials + merge_partials in one call."""
-    return merge_partials(build_partials(df, spec, key=key))
-
-
 def build_filter_direct(df: DataFrame, spec: CuckooSpec, key=None) -> DataFrame:
     """One-shuffle build: repartition the (hash, fp) pairs by shard and build
     each shard's FINAL filter in a single reduce pass — no partial blobs, no
     merge stage, no extra jobs.
 
-    Byte-identical to ``build_filter``: the reducer runs the same
-    :func:`merged_row` over the shard's canonical pairs, so both paths
-    produce the same blob (tested). Shuffle volume is
+    Byte-identical to ``merge_partials(build_partials(...))``: the reducer
+    runs the same :func:`merged_row` over the shard's canonical pairs, so
+    both paths produce the same blob (tested). Shuffle volume is
     16 B/row — same order as the pairs-partials path — but in ONE stage.
 
     Trade-off vs the partials path: fastest wall-clock and fewest stages,
@@ -508,35 +544,34 @@ def semi_join_via_filter(
     ``big_key``/``small_key`` must be the same TYPE (the probe hashing
     contract, see :func:`probe`).
 
-    Exactness guard: the filter is built from the DISTINCT key set (a
-    duplicate-keyed small side would overflow a bucket with identical
-    fingerprints and silently drop items), and the build's drop/too-full
-    counters are checked — a dropped fingerprint would be a silent false
-    negative, so it raises instead. One collect of the lazy build returns
-    both the blobs to broadcast and those counters.
-    """
-    from sketchlib.kernels.cuckoo import TooFullError, size_for
+    The filter is built on the DRIVER, like a sink commit: one Arrow
+    collect of the distinct keys' (hash, fp), at most ``cap + 1`` rows
+    where ``cap`` is the slot count of 8 shards under
+    ``BROADCAST_LIMIT_BYTES`` (no larger key set could broadcast), folded
+    per shard by :func:`folded_rows`. No key table is cached, and the
+    collect both sizes and fills the filter. Driver memory: 16 B per
+    collected row, at most 512 MiB at FP8, 256 MiB at FP16 and 128 MiB at
+    FP32; the broadcast then holds up to ``8 × size`` ≤ 256 MiB of blobs.
+    When the key set is too large, the same collect stops at ``cap + 1``
+    rows, which costs one single-partition exchange of at most ``cap + 1``
+    16-byte rows per input partition; this has not been measured at scale.
 
+    Exactness guard: the filter holds the DISTINCT keys (a duplicate-keyed
+    small side would overflow a bucket with identical fingerprints), and
+    the fold raises ``TooFullError`` when any fingerprint would drop, a
+    silent false negative. A homeless fingerprint is not a drop: probes
+    check the homeless slot, so a too-full filter alone does not raise.
+    """
     big_key = F.col(big_key) if isinstance(big_key, str) else big_key
     small_key = F.col(small_key) if isinstance(small_key, str) else small_key
-    # the cached key table is referenced by the returned plan, so it can't
-    # be unpersisted here, and ContextCleaner never frees a CacheManager
-    # entry: each distinct `small` plan leaves one cached table for the
-    # session (ROADMAP item 5 has the leak-free variants' job counts).
-    # Callers issuing MANY semi joins in one long session should
-    # pre-distinct/cache keys themselves and pass them as `small` to
-    # control the lifetime.
-    keys = small.select(small_key.alias("__k")).distinct().cache()
-    n = keys.count()  # sizing job (CF.SIZEFOR) — also materializes the cache
-    spec = CuckooSpec(name, max(size_for(max(n, 1), fpsize), 1024), fpsize, num_shards=8)
+    keys = small.select(small_key.alias("__k")).distinct()
+    cap = capacity(BROADCAST_LIMIT_BYTES // 8, fpsize)
+    # hashed before the limit, so its exchange moves 16-byte rows, not keys
+    h, f = _u64_pairs(_hash_fp(keys, F.col("__k")).limit(cap + 1).toPandas())
+    spec = CuckooSpec(name, max(size_for(max(len(h), 1), fpsize), 1024), fpsize, num_shards=8)
+    # size_for gives each key >= fpsize bytes, so cap + 1 keys never fit
     if spec.num_shards * spec.size <= BROADCAST_LIMIT_BYTES:
-        sc = ShardedCuckoo.from_df(build_filter_direct(keys, spec, key=F.col("__k")), spec)
-        if sc.dropped or sc.is_toofull():
-            raise TooFullError(
-                f"semi_join_via_filter('{name}'): build dropped {sc.dropped} "
-                "fingerprint(s) — the pre-filter would silently drop matching rows; "
-                "increase the filter size or fpsize"
-            )
+        sc = ShardedCuckoo.from_rows(folded_rows(spec, {}, h, f, "canonical").values(), spec)
         big = probe(big, sc, key=big_key).filter(F.col("member")).drop("member")
     return (
         big.withColumn("__bk", big_key)
@@ -550,7 +585,6 @@ def fix_toofull_shards(merged: DataFrame) -> DataFrame:
     try to re-home each shard's homeless fingerprint, row by row in a
     shuffle-free ``mapInPandas``. Shards that stay too full keep the flag
     (the reference errors; the flag carries it here)."""
-    from sketchlib.kernels.cuckoo import TooFullError
 
     def fix(batches):
         for pdf in batches:

@@ -51,7 +51,6 @@ import uuid
 import warnings
 from concurrent.futures import Future, ThreadPoolExecutor
 
-import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
@@ -59,13 +58,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import _parse_datatype_string
 
-from sketchlib.kernels.cuckoo import CuckooFilter, TooFullError, canonical_pairs, pack_pairs
 from sketchlib.spark.cuckoo import (
     PARTIAL_SCHEMA,
     CuckooSpec,
-    _filter_row,
     collect_hash_fp,
-    merged_row,
+    folded_rows,
     removed_row,
     split_by_shard,
 )
@@ -131,41 +128,6 @@ def _replayed(commit: dict | None, epoch_id: int) -> bool:
             stacklevel=3,
         )
     return True
-
-
-def _fold(spec: CuckooSpec, prior: dict[int, dict], h, f, mode: str) -> dict[int, dict]:
-    """The new state rows after folding items (h, f) into ``prior``.
-
-    Per touched shard: ``"fast"`` adds the batch's lexsorted canonical
-    pairs to the committed blob (``add_batch``, O(batch)); ``"canonical"``
-    re-merges committed blob + batch through ``merged_row``, so the blob is
-    byte-identical to a batch build. A shard's first batch is that merge in
-    both modes. Untouched shards keep their row. Raises ``TooFullError``
-    if any shard would drop a fingerprint."""
-    rows = dict(prior)
-    for s, (h_s, f_s) in split_by_shard(h, f, spec.num_shards).items():
-        b, fp = canonical_pairs(h_s, f_s, spec.size, spec.fpsize)
-        old = prior.get(s, {"fpcount": 0, "rows": 0, "dropped": 0})
-        fpcount, n = old["fpcount"] + len(h_s), old["rows"] + len(h_s)
-        if mode == "fast" and s in prior:
-            flt = CuckooFilter.from_bytes(old["sketch"])
-            if (flt.nbytes, flt.fpsize) != (spec.size, spec.fpsize):
-                raise ValueError("fold requires the committed filter's (size, fpsize)")
-            # canonical order keeps the fold deterministic per batch sequence
-            order = np.lexsort((fp, b))
-            flt.add_batch(b[order], fp[order], on_toofull="count")
-            rows[s] = _filter_row(spec.name, s, flt, n, old["dropped"])
-        else:
-            pairs = pack_pairs(b, fp, spec.size, spec.fpsize)
-            parts = [old["sketch"], pairs] if s in prior else [pairs]
-            rows[s] = merged_row(spec.name, s, parts, fpcount, n, old["dropped"])
-        if rows[s]["fpcount"] < fpcount:
-            raise TooFullError(
-                f"sink '{spec.name}' shard {s}: the fold would drop {fpcount - rows[s]['fpcount']} "
-                "fingerprint(s), a silent false negative; nothing was committed. "
-                "Increase the filter size or num_shards."
-            )
-    return rows
 
 
 def _retire(path: str, trash: str) -> None:
@@ -307,7 +269,7 @@ def incremental_cuckoo_sink(spec: CuckooSpec, key, state_dir: str, mode: str = "
         if _replayed(commit, epoch_id):
             return
         h, f = collect_hash_fp(batch_df, key)
-        rows = _fold(spec, _load_state(commit), h, f, mode)
+        rows = folded_rows(spec, _load_state(commit), h, f, mode)
         _commit_state(state_dir, rows, f"state_epoch{epoch_id}", {"epoch": epoch_id}, commit)
 
     return sink
@@ -393,7 +355,7 @@ def incremental_paragraph_dedup_sink(spec: CuckooSpec, state_dir: str, out_dir: 
             "keep", (F.row_number().over(w) == 1) & ~F.col("__seen")
         ).localCheckpoint(eager=True)  # fans out into output + state fold
         h, f = collect_hash_fp(marked.where("keep"), F.col("__norm"))
-        rows = _fold(spec, prior, h, f, "fast")
+        rows = folded_rows(spec, prior, h, f, "fast")
         out = marked.groupBy("doc_id").agg(
             F.expr(
                 "concat_ws('\\n', transform(array_sort("

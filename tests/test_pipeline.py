@@ -18,7 +18,13 @@ from sketchlib.pipeline import (
     salted_repartition,
     with_extracted_text,
 )
-from sketchlib.spark.cuckoo import CuckooSpec, ShardedCuckoo, build_filter, probe
+from sketchlib.spark.cuckoo import (
+    CuckooSpec,
+    ShardedCuckoo,
+    build_partials,
+    merge_partials,
+    probe,
+)
 
 
 @pytest.fixture(scope="module")
@@ -107,7 +113,7 @@ def test_heavy_keys_approx_survives_batch_local_camouflage(spark):
 def test_checkpointed_build_resume(spark, pages):
     spec = CuckooSpec(name="ckpt", size=size_for(8000, 2), fpsize=2, num_shards=2)
     key = F.col("url")
-    ref = build_filter(pages.repartition(8), spec, key=key)
+    ref = merge_partials(build_partials(pages.repartition(8), spec, key=key))
     ref_blobs = {r["shard"]: bytes(r["sketch"]) for r in ref.collect()}
 
     d = tempfile.mkdtemp(prefix="sketchlib-ckpt-")
@@ -167,7 +173,8 @@ def test_checkpointed_build_detects_input_change(spark):
         b = spark.read.parquet(src_b).repartition(4)
         checkpointed_build(a, spec, key, ck)
         m = checkpointed_build(b, spec, key, ck)  # same spec+parts, new input
-        ref = {r["shard"]: bytes(r["sketch"]) for r in build_filter(b, spec, key=key).collect()}
+        ref = merge_partials(build_partials(b, spec, key=key))
+        ref = {r["shard"]: bytes(r["sketch"]) for r in ref.collect()}
         got = {r["shard"]: bytes(r["sketch"]) for r in m.collect()}
         assert got == ref  # byte-identical to a clean build over input B
         sc = ShardedCuckoo.from_df(m, spec)
@@ -203,5 +210,38 @@ def test_checkpoint_from_before_null_skipping_rebuilds(spark, pages):
         assert ShardedCuckoo.from_df(m, spec).count() == 5000
         with open(meta_path) as f:
             assert json.load(f)["null_keys"] == "skipped"
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def test_checkpointed_build_raises_on_an_unreadable_partial(spark, pages):
+    """A resume that cannot read an existing partial raises before it
+    appends anything; once the bad file is removed, only its partition
+    rebuilds and no partial is inserted twice."""
+    import glob
+    import os
+
+    from py4j.protocol import Py4JJavaError
+
+    spec = CuckooSpec(name="ckpt-bad", size=size_for(8000, 2), fpsize=2, num_shards=2)
+    key = F.col("url")
+    d = tempfile.mkdtemp(prefix="sketchlib-ckpt-bad-")
+    try:
+        src = pages.repartition(8)
+        first = checkpointed_build(src, spec, key, d)
+        want = {r["shard"]: bytes(r["sketch"]) for r in first.collect()}
+        files = sorted(glob.glob(f"{d}/partials/*.parquet"))
+        assert len(files) == 8
+        with open(files[0], "wb") as f:
+            f.write(b"not a parquet file")
+        with pytest.raises(Py4JJavaError):
+            checkpointed_build(src, spec, key, d)
+        assert sorted(glob.glob(f"{d}/partials/*.parquet")) == files
+
+        os.remove(files[0])
+        m = checkpointed_build(src, spec, key, d)
+        sc = ShardedCuckoo.from_df(m, spec)
+        assert (sc.count(), sc.rows) == (5000, 5000)
+        assert {r["shard"]: bytes(r["sketch"]) for r in m.collect()} == want
     finally:
         shutil.rmtree(d, ignore_errors=True)

@@ -15,7 +15,7 @@ from sketchlib.kernels.cuckoo import CuckooFilter, _prep_fps, size_for
 from sketchlib.spark.cuckoo import (
     CuckooSpec,
     ShardedCuckoo,
-    build_filter,
+    build_filter_direct,
     build_partials,
     merge_partials,
     probe,
@@ -46,7 +46,7 @@ def test_build_probe_remove_end_to_end(spark, docs, num_shards):
     spec = CuckooSpec(
         name=f"docs16-{num_shards}", size=size_for(2000, 2), fpsize=2, num_shards=num_shards
     )
-    merged = build_filter(docs, spec, key=F.col("doc_id").cast("string")).cache()
+    merged = build_filter_direct(docs, spec, key=F.col("doc_id").cast("string")).cache()
     sc = ShardedCuckoo.from_df(merged, spec)
     n_docs = docs.count()
     assert sc.count() == n_docs
@@ -130,11 +130,10 @@ def test_pairs_and_dense_partials_merge_identically(spark, docs):
 def test_direct_build_matches_tree_merge(spark, docs):
     """One-shuffle direct build must be byte-identical to the partials+tree
     path: same sorted canonical pairs, same merge seed."""
-    from sketchlib.spark.cuckoo import build_filter_direct
-
     spec = CuckooSpec(name="direct", size=size_for(2000, 2), fpsize=2, num_shards=4)
     key = F.col("doc_id").cast("string")
-    tree = {r["shard"]: bytes(r["sketch"]) for r in build_filter(docs, spec, key=key).collect()}
+    tree = merge_partials(build_partials(docs, spec, key=key))
+    tree = {r["shard"]: bytes(r["sketch"]) for r in tree.collect()}
     direct = {
         r["shard"]: bytes(r["sketch"])
         for r in build_filter_direct(docs.repartition(7), spec, key=key).collect()
@@ -147,8 +146,6 @@ def test_direct_build_matches_tree_merge(spark, docs):
 def test_merge_partials_is_lazy(spark, docs):
     """merge_partials over checkpointed partials starts no Spark job; one
     action on its result gives the direct build's filter."""
-    from sketchlib.spark.cuckoo import build_filter_direct
-
     spec = CuckooSpec(name="lazy", size=size_for(2000, 2), fpsize=2, num_shards=4)
     key = F.col("doc_id").cast("string")
     parts = build_partials(docs.repartition(7), spec, key=key).localCheckpoint(eager=True)
@@ -168,7 +165,7 @@ def test_merge_partials_is_lazy(spark, docs):
 
 def test_remove_nonmember_poisons_shard(spark, docs):
     spec = CuckooSpec(name="poison", size=size_for(2000, 2), fpsize=2)
-    merged = build_filter(docs, spec, key=F.col("doc_id").cast("string"))
+    merged = build_filter_direct(docs, spec, key=F.col("doc_id").cast("string"))
     ghosts = spark.range(5).select((F.col("id") + 99_000_000).cast("string").alias("k"))
     removed = remove_keys(merged, ghosts, spec, key="k")
     sc = ShardedCuckoo.from_df(removed, spec)
@@ -177,7 +174,7 @@ def test_remove_nonmember_poisons_shard(spark, docs):
 
 def test_probe_carries_columns(spark, docs):
     spec = CuckooSpec(name="cols", size=size_for(2000, 2), fpsize=2)
-    merged = build_filter(docs, spec, key=F.col("doc_id").cast("string"))
+    merged = build_filter_direct(docs, spec, key=F.col("doc_id").cast("string"))
     sc = ShardedCuckoo.from_df(merged, spec)
     out = probe(docs.select("doc_id", "lang"), sc, key=F.col("doc_id").cast("string"))
     assert set(out.columns) == {"doc_id", "lang", "member"}
@@ -189,7 +186,7 @@ def test_probe_cogrouped_equals_broadcast(spark, docs):
 
     spec = CuckooSpec(name="cog", size=size_for(2000, 2), fpsize=2, num_shards=4)
     key = F.col("doc_id").cast("string")
-    merged = build_filter(docs, spec, key=key).cache()
+    merged = build_filter_direct(docs, spec, key=key).cache()
     sc = ShardedCuckoo.from_df(merged, spec)
     # probes: all inserted + disjoint held-out ids, with a caller's own
     # `name` and `shard` columns that must pass through unchanged
@@ -217,7 +214,7 @@ def test_probe_auto_picks_equivalent_paths(spark, docs):
 
     spec = CuckooSpec(name="auto", size=size_for(2000, 2), fpsize=2, num_shards=4)
     key = F.col("doc_id").cast("string")
-    merged = build_filter(docs, spec, key=key).cache()
+    merged = build_filter_direct(docs, spec, key=key).cache()
     probes = docs.select("doc_id").union(
         docs.select((F.col("doc_id") + 5_000_000).alias("doc_id"))
     )
@@ -241,7 +238,7 @@ def test_probe_auto_decides_from_the_spec(spark, docs):
 
     spec = CuckooSpec(name="auto-spec", size=size_for(2000, 2), fpsize=2, num_shards=4)
     key = F.col("doc_id").cast("string")
-    merged = build_filter(docs, spec, key=key)
+    merged = build_filter_direct(docs, spec, key=key)
     total = spec.num_shards * spec.size
     sc = spark.sparkContext
     group = "test_probe_auto_decides_from_the_spec"
@@ -272,7 +269,7 @@ def test_cogroup_with_an_empty_side(spark):
 
     spec = CuckooSpec(name="sides", size=size_for(1000, 2), fpsize=2, num_shards=4)
     built = items(0, 0, 300).union(items(1, 300, 600)).union(items(2, 600, 900))
-    merged = build_filter(built, spec).cache()
+    merged = build_filter_direct(built, spec).cache()
     before = {r["shard"]: r for r in merged.collect()}
     assert sorted(before) == [0, 1, 2]
 
@@ -295,7 +292,7 @@ def test_fix_toofull_shards(spark):
 
     tiny = CuckooSpec(name="fixme", size=64, fpsize=2)  # 32 slots
     keys = spark.range(40).select(F.col("id").cast("string").alias("k"))
-    m = build_filter(keys, tiny, key="k").cache()
+    m = build_filter_direct(keys, tiny, key="k").cache()
     sc = ShardedCuckoo.from_df(m, tiny)
     assert sc.is_toofull()
     # fixing while full fails (flag stays); after freeing slots it succeeds
@@ -313,7 +310,7 @@ def test_build_counts_toofull_drops(spark):
     the merged row (reference per-op error becomes an accounted drop)."""
     spec = CuckooSpec(name="tiny", size=64, fpsize=2)  # 32 slots
     df = spark.range(0, 500).select(F.col("id").cast("string").alias("k"))
-    merged = build_filter(df, spec, key="k")
+    merged = merge_partials(build_partials(df, spec, key="k"))
     sc = ShardedCuckoo.from_df(merged, spec)
     assert sc.dropped > 0
     assert sc.count() + sc.dropped <= 500 + len(sc.filters)  # homeless per partial
@@ -398,12 +395,103 @@ def test_semi_join_via_filter_eager_jobs(spark, monkeypatch):
         assert out.count() == 150
 
 
+def test_semi_join_via_filter_caches_nothing(spark):
+    """The semi join builds its filter on the driver and registers no
+    cached table: after 8 calls over 8 distinct small sides and a Python
+    and JVM gc, no persistent RDD and no CacheManager entry for a key
+    table remain, and no plan scans an in-memory table."""
+    import gc
+
+    from sketchlib.spark.cuckoo import semi_join_via_filter
+
+    sc = spark.sparkContext
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = sc._jsc.getPersistentRDDs().size()
+    big = spark.range(0, 2000).selectExpr("id AS k")
+    smalls = [spark.range(0, 50 + i).selectExpr(f"id * {i + 2} AS sk") for i in range(8)]
+    for i, small in enumerate(smalls):
+        out = semi_join_via_filter(big, small, "k", "sk")
+        assert out.count() == 50 + i
+        assert "InMemoryTableScan" not in out._jdf.queryExecution().executedPlan().toString()
+    gc.collect()
+    spark._jvm.System.gc()
+    assert sc._jsc.getPersistentRDDs().size() <= before
+    for small in smalls:
+        keys = small.select(F.col("sk").alias("__k")).distinct()
+        assert cache.lookupCachedData(keys._jdf).isEmpty()
+
+
+@pytest.mark.parametrize("fpsize", [1, 2, 4])
+def test_semi_join_via_filter_matches_direct_build(spark, monkeypatch, fpsize):
+    """The filter the semi join probes with is byte-identical to
+    build_filter_direct over the small side's distinct keys, with
+    duplicate and NULL small keys present."""
+    from sketchlib.spark import cuckoo
+
+    seen = []
+
+    def spy(df, sharded, **kw):
+        seen.append(sharded)
+        return probe(df, sharded, **kw)
+
+    monkeypatch.setattr(cuckoo, "probe", spy)
+    big = spark.range(0, 12000).selectExpr("id AS k")
+    small = spark.createDataFrame(
+        [(i * 4,) for i in range(3000)] + [(8,)] * 64 + [(None,)] * 3, "sk long"
+    ).repartition(3)
+    out = cuckoo.semi_join_via_filter(big, small, "k", "sk", fpsize=fpsize)
+    assert sorted(r["k"] for r in out.collect()) == list(range(0, 12000, 4))
+    spec = CuckooSpec("semijoin", max(size_for(3000, fpsize), 1024), fpsize, num_shards=8)
+    keys = small.select(F.col("sk").alias("__k")).distinct()
+    want = ShardedCuckoo.from_df(build_filter_direct(keys, spec, key="__k"), spec)
+    [got] = seen
+    assert got.spec == spec
+    assert (got.rows, got.count(), got.dropped) == (3000, 3000, 0)
+    assert got.digest() == want.digest()
+
+
+def test_semi_join_via_filter_two_eager_jobs(spark, monkeypatch):
+    """A warm semi join starts at most 2 eager Spark jobs on each branch:
+    the bounded collect of the distinct keys' (hash, fp) both sizes and
+    fills the filter, and the too-large branch runs that collect alone."""
+    from sketchlib.spark import cuckoo
+
+    big = spark.range(0, 5000).selectExpr("id AS k", "id % 7 AS payload")
+    small = spark.range(0, 150).selectExpr("id * 3 AS sk")
+    sc = spark.sparkContext
+    for limit in (cuckoo.BROADCAST_LIMIT_BYTES, 1):
+        monkeypatch.setattr(cuckoo, "BROADCAST_LIMIT_BYTES", limit)
+        cuckoo.semi_join_via_filter(big, small, "k", "sk")  # warm-up
+        group = f"test_semi_join_via_filter_two_eager_jobs_{limit}"
+        sc.setJobGroup(group, group)
+        try:
+            out = cuckoo.semi_join_via_filter(big, small, "k", "sk")
+            jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(jobs) <= 2, (limit, jobs)
+        assert ("MapInPandas" in out._jdf.queryExecution().executedPlan().toString()) == (
+            limit > 1
+        )
+
+
+def test_semi_join_via_filter_raises_on_a_drop(spark, monkeypatch):
+    """The fold's TooFullError is the semi join's one drop guard: a filter
+    too small for its keys raises instead of dropping matching rows."""
+    from sketchlib.kernels.cuckoo import TooFullError
+    from sketchlib.spark import cuckoo
+
+    monkeypatch.setattr(cuckoo, "size_for", lambda n, fpsize: 0)  # 8 × 1 KiB
+    big = spark.range(0, 100).selectExpr("id AS k")
+    small = spark.range(0, 20000).selectExpr("id AS sk")
+    with pytest.raises(TooFullError, match="would drop"):
+        cuckoo.semi_join_via_filter(big, small, "k", "sk")
+
+
 def test_null_keys_are_skipped(spark):
     """A NULL key is not an item: xxhash64(NULL) is the seed, so inserting
     NULLs would pile identical fingerprints into one bucket pair until they
     drop. Builds skip them, and removing one is a no-op, not a poisoning."""
-    from sketchlib.spark.cuckoo import build_filter_direct
-
     spec = CuckooSpec(name="nulls", size=128, fpsize=1)
     urls = [(f"https://example.org/{i}",) for i in range(50)]
     clean = spark.createDataFrame(urls, "url string")
@@ -413,8 +501,10 @@ def test_null_keys_are_skipped(spark):
         return {r["shard"]: bytes(r["sketch"]) for r in df.collect()}
 
     want = blobs(build_filter_direct(clean, spec, key="url"))
-    for build in (build_filter_direct, build_filter):
-        merged = build(dirty, spec, key="url").cache()
+    for merged in (
+        build_filter_direct(dirty, spec, key="url").cache(),
+        merge_partials(build_partials(dirty, spec, key="url")).cache(),
+    ):
         sc = ShardedCuckoo.from_df(merged, spec)
         assert (sc.rows, sc.count(), sc.dropped, sc.is_toofull()) == (50, 50, 0, False)
         assert blobs(merged) == want
@@ -429,12 +519,7 @@ def test_prepared_hash_columns(spark):
     """key=None takes the caller's own (HASH_COL, FP_COL): any hash works as
     long as build, probe and removal agree. Rows with a NULL prepared hash
     are skipped like NULL keys."""
-    from sketchlib.spark.cuckoo import (
-        FP_COL,
-        HASH_COL,
-        build_filter_direct,
-        probe_cogrouped,
-    )
+    from sketchlib.spark.cuckoo import FP_COL, HASH_COL, probe_cogrouped
 
     def prepared(df):
         k = F.col("k")
@@ -445,7 +530,7 @@ def test_prepared_hash_columns(spark):
     spec = CuckooSpec(name="prep", size=size_for(3000, 2), fpsize=2, num_shards=4)
     keys = spark.range(2000).select(F.concat(F.lit("key-"), F.col("id")).alias("k"))
     built = prepared(keys.union(spark.createDataFrame([(None,)] * 5, "k string")))
-    merged = build_filter(built.repartition(5), spec).cache()
+    merged = merge_partials(build_partials(built.repartition(5), spec)).cache()
     direct = build_filter_direct(built, spec)
     assert {r["shard"]: r["sketch"] for r in merged.collect()} == {
         r["shard"]: r["sketch"] for r in direct.collect()

@@ -13,7 +13,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from sketchlib.kernels.cuckoo import size_for
-from sketchlib.spark.cuckoo import CuckooSpec, ShardedCuckoo, build_filter, probe
+from sketchlib.spark.cuckoo import (
+    CuckooSpec,
+    ShardedCuckoo,
+    build_partials,
+    merge_partials,
+    probe,
+)
 from sketchlib.streaming import incremental_cuckoo_sink, read_state
 
 
@@ -22,7 +28,8 @@ def test_incremental_stream_equals_batch(spark, sf_dir):
     spec = CuckooSpec(name="stream", size=size_for(2000, 2), fpsize=2, num_shards=2)
     key = F.col("doc_id").cast("string")
     batch_blobs = {
-        r["shard"]: bytes(r["sketch"]) for r in build_filter(docs, spec, key=key).collect()
+        r["shard"]: bytes(r["sketch"])
+        for r in merge_partials(build_partials(docs, spec, key=key)).collect()
     }
 
     work = tempfile.mkdtemp(prefix="sketchlib-stream-")
@@ -102,15 +109,14 @@ def test_fold_rejects_a_spec_of_another_geometry(mode):
     import numpy as np
 
     from sketchlib.kernels.cuckoo import CuckooFilter
-    from sketchlib.spark.cuckoo import _filter_row
-    from sketchlib.streaming import _fold
+    from sketchlib.spark.cuckoo import _filter_row, folded_rows
 
     prior = {0: _filter_row("geo", 0, CuckooFilter.create(1024, 2), 0, 0)}
     h = np.arange(1, 50, dtype=np.uint64) * np.uint64(0x9E3779B97F4A7C15)
     for size, fpsize in ((2048, 2), (1024, 1)):
         spec = CuckooSpec(name="geo", size=size, fpsize=fpsize, num_shards=1)
         with pytest.raises(ValueError, match=r"\(size, fpsize\)"):
-            _fold(spec, prior, h, h >> np.uint64(40), mode)
+            folded_rows(spec, prior, h, h >> np.uint64(40), mode)
 
 
 @pytest.mark.parametrize("mode", ["canonical", "fast"])

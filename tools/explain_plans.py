@@ -1043,6 +1043,8 @@ def main():
              lambda p: "LeftSemi" in p),
             ("no cartesian/nested loop",
              lambda p: "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p),
+            # the filter is built on the driver: no cached key table
+            ("no cached table", lambda p: "InMemoryTableScan" not in p),
         ],
     )
     from sketchlib.relops import mix_sources
