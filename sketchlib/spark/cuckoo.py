@@ -282,9 +282,8 @@ def folded_rows(spec: CuckooSpec, prior: dict[int, dict], h, f, mode: str) -> di
             rows[s] = merged_row(spec.name, s, parts, fpcount, n, old["dropped"])
         if rows[s]["fpcount"] < fpcount:
             raise TooFullError(
-                f"sink '{spec.name}' shard {s}: the fold would drop {fpcount - rows[s]['fpcount']} "
-                "fingerprint(s), a silent false negative; nothing was committed. "
-                "Increase the filter size or num_shards."
+                f"filter '{spec.name}' shard {s}: the fold would drop {fpcount - rows[s]['fpcount']} "
+                f"fingerprint(s), a silent false negative ({spec.size} B at fpsize {spec.fpsize})"
             )
     return rows
 

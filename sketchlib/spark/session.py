@@ -27,13 +27,13 @@ the same task took ~3 ms (4-core VM).
 
 Spark binds each socket at ``<dir>/.<uuid4>.sock``, by default in the JVM's
 ``java.io.tmpdir``, and a process that exits without stopping its session
-leaves one of them behind. A socket path holds at most 107 bytes
-(``sun_path``), so a long ``<dir>`` makes every Python task fail with
-``OSError: AF_UNIX path too long``. ``get_spark`` therefore gives each
+leaves one of them behind. Spark rejects a ``<dir>`` longer than 61
+characters (a 104-byte ``sun_path`` less the socket's name), and every
+Python task then fails. ``get_spark`` therefore gives each
 process one private directory, made once by ``tempfile.mkdtemp`` in
 ``tempfile.gettempdir()`` (so a ``TMPDIR`` keeps the sockets with the
-caller's other scratch files), or in ``/tmp`` when a socket path there would
-exceed 107 bytes, and removes it at exit.
+caller's other scratch files), or in ``/tmp`` when the directory there would
+be longer than that, and removes it at exit.
 
 Sessions built elsewhere keep loopback TCP and pyspark's own daemon; that
 includes ``jobs/*.py``, which call ``SparkSession.builder`` directly. They can
@@ -54,17 +54,16 @@ import tempfile
 
 from pyspark.sql import SparkSession
 
-# longest socket path (sockaddr_un.sun_path without its NUL) and the length
-# of the "/.<uuid4>.sock" name Spark appends to the socket directory
-_SUN_PATH_MAX = 107
-_SOCK_NAME_LEN = len("/.") + 36 + len(".sock")
+# the longest socket directory Spark accepts: a 104-byte sun_path less the
+# "/.<uuid4>.sock" name it appends; a longer one fails every Python task
+_SOCK_DIR_MAX = 104 - len("/.") - 36 - len(".sock")
 
 
 @functools.cache
 def _socket_dir() -> str:
     """This process's private directory for Spark's Unix-domain sockets."""
     d = tempfile.mkdtemp(prefix="sk")
-    if len(os.fsencode(d)) + _SOCK_NAME_LEN > _SUN_PATH_MAX:
+    if len(os.fsencode(d)) > _SOCK_DIR_MAX:
         os.rmdir(d)
         d = tempfile.mkdtemp(prefix="sk", dir="/tmp")
     atexit.register(shutil.rmtree, d, ignore_errors=True)

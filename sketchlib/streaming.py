@@ -18,8 +18,9 @@ writes (state file, pointer), one hard link and a few renames; it frees
 no disk blocks. Retired state moves into ``state_dir/.trash`` and one
 background worker deletes it, because on a ``discard``-mounted ext4 each
 freed fsync'd file cost ~50 ms, most of a 204 ms commit (``_commit_state``).
-Memory: the committed state (``num_shards × spec.size``, which every reader
-already collects) plus 16 B per batch row or distinct retracted paragraph.
+Memory: the committed state (``num_shards × spec.size``; ``read_state``
+holds the same checked bytes as a local relation, with no Spark job)
+plus 16 B per batch row or distinct retracted paragraph.
 Sized for churn's 4 × 128 KiB shards with 10k-row batches, the replay's
 8 × 2 MiB shards and a few retracted documents
 (``test_paragraph_retraction_exact_deletion``, COOKBOOK §6). A fold that
@@ -102,13 +103,19 @@ def _state_bytes(commit: dict) -> bytes:
     return data
 
 
+def _state_table(commit: dict) -> pa.Table:
+    """The committed state as a PARTIAL_SCHEMA Arrow table, read on the
+    driver with pyarrow (no Spark job) from the bytes ``_state_bytes``
+    checked: the one reader of the state file."""
+    return pq.read_table(pa.BufferReader(_state_bytes(commit)))
+
+
 def _load_state(commit: dict | None) -> dict[int, dict]:
-    """The committed state's PARTIAL_SCHEMA rows by shard, checked and read
-    on the driver with pyarrow (no Spark job); empty before the first commit."""
+    """The committed state's PARTIAL_SCHEMA rows by shard; empty before the
+    first commit."""
     if commit is None:
         return {}
-    table = pq.read_table(pa.BufferReader(_state_bytes(commit)))
-    return {r["shard"]: r for r in table.to_pylist()}
+    return {r["shard"]: r for r in _state_table(commit).to_pylist()}
 
 
 def _replayed(commit: dict | None, epoch_id: int) -> bool:
@@ -175,13 +182,9 @@ def _commit_state(
     load checks) flips via an fsync'd tmp file and ``os.replace`` only
     after the write succeeded.
 
-    GC keeps the new AND the ``prior`` commit's state directory.
-    read_state returns a LAZY DataFrame over the resolved directory —
-    deleting the previous state at commit time would FileNotFound any
-    reader that resolved before this commit and acts after it. One-commit
-    retention gives such readers a full micro-batch interval to act;
-    readers held across MULTIPLE commits must materialize
-    (collect/localCheckpoint) — see read_state.
+    GC keeps the new AND the ``prior`` commit's state directory, for one
+    reader only: one that read the old pointer before this commit and
+    opens the state file after it.
 
     The caller's thread frees no disk blocks. On an ext4 volume mounted
     with ``discard`` (measured on a 4-core VM), freeing blocks that were
@@ -276,21 +279,17 @@ def incremental_cuckoo_sink(spec: CuckooSpec, key, state_dir: str, mode: str = "
 
 
 def read_state(spark, state_dir: str) -> DataFrame:
-    """Read the current committed filter state of an
-    :func:`incremental_cuckoo_sink` (resolves the state directory through
-    the atomic epoch.json pointer).
+    """The current committed filter state of an
+    :func:`incremental_cuckoo_sink` (resolved through the atomic epoch.json
+    pointer) as a DataFrame with PARTIAL_SCHEMA's columns.
 
-    The returned DataFrame is LAZY over the resolved epoch directory. The
-    sink retains the previous epoch alongside the current one, so a reader
-    stays valid across ONE subsequent commit; to hold results across more
-    than one micro-batch, materialize them (``.collect()`` /
-    ``.localCheckpoint(eager=True)``) before the stream advances twice.
-    The schema is given, not inferred, so resolving starts no Spark job;
-    a missing or mismatching state file, or a pointer without its length
-    and sha256, raises (``_state_bytes``)."""
-    commit = _committed(state_dir)
-    _state_bytes(commit)
-    return spark.read.schema(PARTIAL_SCHEMA).parquet(commit["state"])
+    The rows are the checked bytes read on the driver (``_state_table``),
+    held as a local relation: neither this call nor a collect of its
+    result (``ShardedCuckoo.from_df``) starts a Spark job, and the result
+    never reads the state directory again, however far the stream
+    advances. A missing or mismatching state file, or a pointer without
+    its length and sha256, raises (``_state_bytes``)."""
+    return spark.createDataFrame(_state_table(_committed(state_dir)))
 
 
 def incremental_paragraph_dedup_sink(spec: CuckooSpec, state_dir: str, out_dir: str):

@@ -223,9 +223,11 @@ def test_fast_sink_commit_is_one_job(spark, sf_dir):
 
 
 def test_read_state_starts_no_job(spark, sf_dir):
-    """read_state is lazy and infers no schema, so it starts no Spark job;
-    a plain schema-less parquet read of the driver-written state directory
-    still gives PARTIAL_SCHEMA's column names and types."""
+    """read_state serves the checked state bytes as a local relation, so
+    neither it nor ShardedCuckoo.from_df over its result starts a Spark
+    job. Its result, and a plain schema-less parquet read of the
+    driver-written state directory, have PARTIAL_SCHEMA's column names and
+    types."""
     from pyspark.sql import types as T
 
     from sketchlib.spark.cuckoo import PARTIAL_SCHEMA
@@ -236,16 +238,19 @@ def test_read_state_starts_no_job(spark, sf_dir):
     state_dir = os.path.join(work, "state")
     try:
         incremental_cuckoo_sink(spec, F.col("doc_id").cast("string"), state_dir)(docs, 0)
+        got = {}
         jobs = _jobs_in_group(
-            spark, "test_read_state_starts_no_job", lambda: read_state(spark, state_dir)
+            spark,
+            "test_read_state_starts_no_job",
+            lambda: got.update(sc=ShardedCuckoo.from_df(read_state(spark, state_dir), spec)),
         )
         assert jobs == []
-        want = T._parse_datatype_string(PARTIAL_SCHEMA)
+        assert got["sc"].count() == docs.count()
+        want = [(c.name, c.dataType) for c in T._parse_datatype_string(PARTIAL_SCHEMA)]
+        assert [(c.name, c.dataType) for c in read_state(spark, state_dir).schema] == want
         with open(os.path.join(state_dir, "epoch.json")) as f:
             plain = spark.read.parquet(json.load(f)["state"])
-        assert [(c.name, c.dataType) for c in plain.schema] == [
-            (c.name, c.dataType) for c in want
-        ]
+        assert [(c.name, c.dataType) for c in plain.schema] == want
         assert plain.count() == spec.num_shards
     finally:
         shutil.rmtree(work, ignore_errors=True)
@@ -424,10 +429,11 @@ def test_streaming_sessions_match_batch(spark, sf_dir):
         shutil.rmtree(work, ignore_errors=True)
 
 
-def test_sink_retains_previous_epoch_for_lazy_readers(spark, sf_dir):
-    """The sink keeps the immediately-previous epoch directory:
-    a lazy read_state resolved before a commit must still be collectable
-    after that commit; directories older than one epoch are GC'd."""
+def test_read_state_outlives_later_commits(spark, sf_dir):
+    """A read_state result holds its epoch's rows: resolved before two more
+    commits, it still collects that epoch after the sink has retired its
+    directory. The sink keeps only the immediately-previous epoch
+    directory; older ones are GC'd."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(300)
     spec = CuckooSpec(name="retain", size=size_for(1000, 2), fpsize=2, num_shards=2)
     key = F.col("doc_id").cast("string")
@@ -437,15 +443,37 @@ def test_sink_retains_previous_epoch_for_lazy_readers(spark, sf_dir):
         sink = incremental_cuckoo_sink(spec, key, state_dir)
         parts = [docs.filter(F.pmod("doc_id", F.lit(3)) == i) for i in range(3)]
         sink(parts[0], 0)
-        lazy = read_state(spark, state_dir)  # resolves epoch 0's directory
+        held = read_state(spark, state_dir)  # epoch 0's rows
         sink(parts[1], 1)  # commit epoch 1 — epoch 0 dir must survive
         assert os.path.isdir(os.path.join(state_dir, "state_epoch0"))
-        n0 = ShardedCuckoo.from_df(lazy, spec).count()  # acts AFTER the commit
-        assert n0 == parts[0].count()
         sink(parts[2], 2)  # commit epoch 2 — epoch 0 GC'd, epoch 1 retained
         assert not os.path.isdir(os.path.join(state_dir, "state_epoch0"))
         assert os.path.isdir(os.path.join(state_dir, "state_epoch1"))
+        assert ShardedCuckoo.from_df(held, spec).count() == parts[0].count()
         assert ShardedCuckoo.from_df(read_state(spark, state_dir), spec).count() == docs.count()
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
+def test_read_state_ignores_a_later_replaced_state_file(spark, sf_dir):
+    """read_state's result is the state file's checked bytes at the time of
+    the call: replacing that file afterwards (here by an older epoch's)
+    does not change what the result yields."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    spec = CuckooSpec(name="replaced", size=size_for(2000, 2), fpsize=2, num_shards=2)
+    work = tempfile.mkdtemp(prefix="sketchlib-replaced-")
+    state_dir = os.path.join(work, "state")
+    try:
+        sink = incremental_cuckoo_sink(spec, F.col("doc_id").cast("string"), state_dir)
+        halves = [docs.filter(F.pmod("doc_id", F.lit(2)) == g) for g in range(2)]
+        sink(halves[0], 0)
+        sink(halves[1], 1)
+        held = read_state(spark, state_dir)
+        want = sorted((r["shard"], bytes(r["sketch"])) for r in held.collect())
+        current = os.path.join(state_dir, "state_epoch1", "part-00000.parquet")
+        shutil.copyfile(os.path.join(state_dir, "state_epoch0", "part-00000.parquet"), current)
+        assert sorted((r["shard"], bytes(r["sketch"])) for r in held.collect()) == want
+        assert ShardedCuckoo.from_df(held, spec).count() == docs.count()
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
