@@ -9,8 +9,9 @@ group. Only blobs shuffle, never rows, so a hot group needs no special
 handling. A merge task holds one partial per non-empty input partition; a
 caller with very many input partitions bounds it by coalescing the input.
 Bloom/HLL/CMS/KMV merges (OR/max/add/union) are byte-deterministic under
-any order or partitioning; KLL/t-digest are estimate-stable within their
-published error.
+any order or partitioning; KLL/t-digest merges depend on fold order, so
+every merge folds a group's blobs in sorted byte order, and their bytes
+do not depend on shuffle order either.
 
 Built-in cross-checks at query level: ``approx_count_distinct`` (Spark's
 HLL++) and ``percentile_approx`` — our sketches must agree with the exact
@@ -158,7 +159,9 @@ def _merge_by(df: DataFrame, spec: SketchSpec, keys: list, estimate=None) -> Dat
     schema = ", ".join([f"{k} string" for k in keys] + [f"{out_col} {out_type}", "rows long"])
 
     def mrg(key, pdf):
-        m = spec.merge_blobs(bytes(b) for b in pdf["sketch"])
+        # sorted: KLL and t-digest merges depend on fold order, and rows
+        # arrive in shuffle order
+        m = spec.merge_blobs(sorted(bytes(b) for b in pdf["sketch"]))
         out = {k: [v] for k, v in zip(keys, key)}
         out[out_col] = [m.to_bytes() if estimate is None else float(estimate(m))]
         out["rows"] = [int(pdf["rows"].sum())]

@@ -10,14 +10,13 @@ same rows (tested).
 
 Where every state change runs: on the DRIVER — a pyarrow load of the
 committed state, a per-shard fold (``merged_row`` / ``add_batch``) or
-removal (``removed_row``), a pyarrow write and the pointer flip. A sink
-commit starts one Spark job (an Arrow collect of the batch's hashes), a
-retraction two (its paragraphs are made distinct first); neither shuffles.
-The commit's file I/O on the caller's thread is one mkdir, two fsync'd
-writes (state file, pointer), one hard link and a few renames; it frees
-no disk blocks. Retired state moves into ``state_dir/.trash`` and one
-background worker deletes it, because on a ``discard``-mounted ext4 each
-freed fsync'd file cost ~50 ms, most of a 204 ms commit (``_commit_state``).
+removal (``removed_row``) and a write of the new state into one of two
+slot files. A sink commit starts one Spark job (an Arrow collect of the
+batch's hashes), a retraction two (its paragraphs are made distinct
+first); neither shuffles. The commit's file I/O is two fsync'd writes
+into a slot file that already exists. It deletes, renames and truncates
+nothing and starts no thread, so it frees no disk blocks: on a
+``discard``-mounted ext4 each freed fsync'd file had cost ~50 ms.
 Memory: the committed state (``num_shards × spec.size``; ``read_state``
 holds the same checked bytes as a local relation, with no Spark job)
 plus 16 B per batch row or distinct retracted paragraph.
@@ -31,26 +30,24 @@ Exactly-once: the state write is guarded by the epoch id (a replayed
 micro-batch is skipped, not double-counted — multiset adds are not
 idempotent, so the guard is load-bearing; an epoch below the committed
 one, the sign of a fresh checkpointLocation, also warns). The guard is
-CRASH-ATOMIC: each epoch's merged state is written to its own directory,
-then ``epoch.json`` — recording the epoch and the state file's directory,
-length and sha256 (checked on every load) — is atomically replaced
-(write-tmp + os.replace). A crash at any point leaves the previous
-epoch.json (and the directory it points to) intact, so recovery resumes
-from consistent state and the interrupted micro-batch folds in exactly
-once on replay.
+CRASH-ATOMIC. The state lives in two slot files, ``state.0`` and
+``state.1`` (the A/B meta-page scheme of LMDB): commit ``seq`` rewrites
+slot ``seq % 2``, the one not holding the newest commit, body first and
+then the checksummed header that makes it the newest (``_write_commit``).
+A crash at any point leaves the newest complete commit intact, so
+recovery resumes from consistent state and the interrupted micro-batch
+folds in exactly once on replay. Slot files are not parquet files: read
+the state with :func:`read_state`.
 """
 
 from __future__ import annotations
 
-import contextlib
 import functools
 import hashlib
-import json
 import os
-import shutil
-import uuid
+import struct
 import warnings
-from concurrent.futures import Future, ThreadPoolExecutor
+import zlib
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -68,20 +65,66 @@ from sketchlib.spark.cuckoo import (
     split_by_shard,
 )
 
-_STATE_FILE = "part-00000.parquet"
+_SLOTS = ("state.0", "state.1")
+#: a slot's header: magic, version, seq, epoch, retracts, body length and
+#: body sha256, then the crc32 of those fields; the body follows it
+_HEAD = struct.Struct("<4sHQqQQ32s")
+_CRC = struct.Struct("<I")
+_HEADER_BYTES = _HEAD.size + _CRC.size
+_MAGIC, _VERSION = b"SKST", 1
+
+
+def _slot_header(path: str) -> dict | None:
+    """The commit a slot's header records, or None for an unwritten slot:
+    a header of zeros, or a file shorter than one. Any other header must
+    pass its magic, version and crc, or ``ValueError``."""
+    with open(path, "rb") as f:
+        head = f.read(_HEADER_BYTES)
+    if len(head) < _HEADER_BYTES or not any(head):
+        return None
+    magic, version, seq, epoch, retracts, length, sha = _HEAD.unpack_from(head)
+    (crc,) = _CRC.unpack_from(head, _HEAD.size)
+    if (magic, version) != (_MAGIC, _VERSION) or crc != zlib.crc32(head[: _HEAD.size]):
+        raise ValueError(f"{path}: corrupt slot header")
+    return {"path": path, "seq": seq, "epoch": epoch, "retracts": retracts,
+            "bytes": length, "sha256": sha}
 
 
 def _read_commit(state_dir: str) -> dict | None:
-    """The committed ``epoch.json`` pointer, or None before the first commit."""
-    epoch_path = os.path.join(state_dir, "epoch.json")
-    if not os.path.exists(epoch_path):
+    """The newest commit under ``state_dir``, or None before the first.
+    The load rules are the store's whole contract:
+
+    - no slot file means no commit yet, and so do two unwritten slots;
+    - only one slot file raises ``FileNotFoundError``;
+    - any entry besides the two slots (an earlier layout's ``epoch``
+      pointer, say) raises ``ValueError``: starting from an empty filter
+      there would be a silent false negative;
+    - a slot header is unwritten or passes its checks (``_slot_header``),
+      and a written one sits in slot ``seq % 2``, or ``ValueError``;
+    - the newest ``seq`` wins; if it is ≥ 1 the other slot must hold
+      ``seq − 1``, or ``ValueError`` (a slot overwritten by the other's
+      copy); its body is checked by ``_state_bytes``."""
+    names = set(os.listdir(state_dir))
+    extra = names - set(_SLOTS)
+    if extra:
+        raise ValueError(f"{state_dir} holds {sorted(extra)}: not sink state")
+    if not names:
         return None
-    with open(epoch_path) as f:
-        return json.load(f)
+    if len(names) == 1:
+        raise FileNotFoundError(f"{state_dir} holds {names.pop()} without its twin slot")
+    heads = [_slot_header(os.path.join(state_dir, s)) for s in _SLOTS]
+    if any(h is not None and h["seq"] % 2 != i for i, h in enumerate(heads)):
+        raise ValueError(f"{state_dir}: a slot holds a commit of the other slot")
+    new = max((h for h in heads if h is not None), key=lambda h: h["seq"], default=None)
+    if new is not None and new["seq"] > 0:
+        old = heads[1 - new["seq"] % 2]
+        if old is None or old["seq"] != new["seq"] - 1:
+            raise ValueError(f"{state_dir}: commit {new['seq']} without commit {new['seq'] - 1}")
+    return new
 
 
 def _committed(state_dir: str) -> dict:
-    """The committed pointer; ``FileNotFoundError`` before the first commit."""
+    """The newest commit; ``FileNotFoundError`` before the first commit."""
     commit = _read_commit(state_dir)
     if commit is None:
         raise FileNotFoundError(f"no committed state under {state_dir}")
@@ -89,24 +132,20 @@ def _committed(state_dir: str) -> dict:
 
 
 def _state_bytes(commit: dict) -> bytes:
-    """The committed state file's bytes, checked against the length and
-    sha256 in ``epoch.json``: a missing file raises ``FileNotFoundError``,
-    a truncated, replaced or corrupt one ``ValueError``, and so does a
-    pointer without those fields, which nothing could check."""
-    if "bytes" not in commit or "sha256" not in commit:
-        raise ValueError("epoch.json carries no length and sha256 for its state file")
-    path = os.path.join(commit["state"], _STATE_FILE)
-    with open(path, "rb") as f:
-        data = f.read()
-    if len(data) != commit["bytes"] or hashlib.sha256(data).hexdigest() != commit["sha256"]:
-        raise ValueError(f"{path} does not match the length and sha256 in epoch.json")
+    """The commit's body, checked against its header's length and sha256:
+    a truncated, overwritten or corrupt body raises ``ValueError``."""
+    with open(commit["path"], "rb") as f:
+        f.seek(_HEADER_BYTES)
+        data = f.read(commit["bytes"])
+    if len(data) != commit["bytes"] or hashlib.sha256(data).digest() != commit["sha256"]:
+        raise ValueError(f"{commit['path']}: body does not match its header's length and sha256")
     return data
 
 
 def _state_table(commit: dict) -> pa.Table:
     """The committed state as a PARTIAL_SCHEMA Arrow table, read on the
     driver with pyarrow (no Spark job) from the bytes ``_state_bytes``
-    checked: the one reader of the state file."""
+    checked: the one reader of the state."""
     return pq.read_table(pa.BufferReader(_state_bytes(commit)))
 
 
@@ -137,33 +176,38 @@ def _replayed(commit: dict | None, epoch_id: int) -> bool:
     return True
 
 
-def _retire(path: str, trash: str) -> None:
-    """Move ``path`` (a file or directory), if it exists, into ``trash``
-    under a unique name: a rename frees no blocks, and a crashed epoch
-    replayed under the same name never collides with its earlier copy."""
-    with contextlib.suppress(FileNotFoundError):
-        os.rename(path, os.path.join(trash, f"{os.path.basename(path)}.{uuid.uuid4().hex}"))
+def _write_commit(
+    state_dir: str, body: bytes, prior: dict | None, epoch: int, retracts: int = 0
+) -> None:
+    """Crash-atomic commit of ``body`` after ``prior`` (the newest commit,
+    or None): commit ``seq`` rewrites slot ``seq % 2`` in place, which
+    never holds the newest commit. The body goes after the header and is
+    fsync'd, then the header and its fsync, the commit point. A crash
+    before it leaves ``prior`` the newest commit. The first commit creates
+    both slots, unwritten, and fsyncs the directory before it writes.
 
-
-def _empty_trash(trash: str) -> None:
-    """Delete everything in ``trash``; runs on the reclaim worker."""
-    with contextlib.suppress(OSError):  # what is left is reclaimed after the next commit
-        for e in os.listdir(trash):
-            path = os.path.join(trash, e)
-            if os.path.isdir(path):
-                shutil.rmtree(path, ignore_errors=True)
-            else:
-                os.unlink(path)
-
-
-_RECLAIM = ThreadPoolExecutor(1, thread_name_prefix="sketchlib-reclaim")
-_last_reclaim: Future | None = None
-
-
-def _reclaimed() -> None:
-    """Wait until the reclaim worker has emptied every trash handed to it."""
-    if _last_reclaim is not None:
-        _last_reclaim.result()
+    A reader that read ``prior``'s header before this commit can still
+    read its body after it: the next commit overwrites that body, and a
+    reader that is later still fails the sha256 check (``_state_bytes``).
+    A reader that reads a header while it is being written can see it
+    torn, and fails the crc check (``_slot_header``)."""
+    seq = 0 if prior is None else prior["seq"] + 1
+    if prior is None:
+        for s in _SLOTS:
+            open(os.path.join(state_dir, s), "ab").close()
+        fd = os.open(state_dir, os.O_RDONLY)
+        try:
+            os.fsync(fd)
+        finally:
+            os.close(fd)
+    head = _HEAD.pack(_MAGIC, _VERSION, seq, epoch, retracts, len(body),
+                      hashlib.sha256(body).digest())
+    with open(os.path.join(state_dir, _SLOTS[seq % 2]), "r+b") as f:
+        for offset, data in ((_HEADER_BYTES, body), (0, head + _CRC.pack(zlib.crc32(head)))):
+            f.seek(offset)
+            f.write(data)
+            f.flush()
+            os.fsync(f.fileno())
 
 
 @functools.cache
@@ -173,69 +217,21 @@ def _arrow_schema() -> pa.Schema:
 
 
 def _commit_state(
-    state_dir: str, rows: dict, name: str, pointer: dict, prior: dict | None
+    state_dir: str, rows: dict, prior: dict | None, epoch: int, retracts: int = 0
 ) -> None:
-    """Crash-atomic commit of a new filter state: the PARTIAL_SCHEMA
-    ``rows`` (by shard) land in shard order as one fsync'd parquet file in
-    their own ``state_dir/name`` directory, then ``epoch.json`` (``pointer``
-    plus the new state path and the file's length and sha256, which every
-    load checks) flips via an fsync'd tmp file and ``os.replace`` only
-    after the write succeeded.
-
-    GC keeps the new AND the ``prior`` commit's state directory, for one
-    reader only: one that read the old pointer before this commit and
-    opens the state file after it.
-
-    The caller's thread frees no disk blocks. On an ext4 volume mounted
-    with ``discard`` (measured on a 4-core VM), freeing blocks that were
-    fsync'd costs ~50 ms per file: an ``unlink`` took 42–60 ms and an
-    ``os.replace`` over the old pointer 45–49 ms, while a ``rename`` to a
-    new name or a ``mkdir`` took ~0 ms; those two frees made up most of a
-    204 ms commit. So every retired directory (each non-kept ``state_epoch*``
-    and a crashed earlier attempt at ``name``) is renamed into
-    ``state_dir/.trash``, the old pointer is hard-linked there before the
-    replace (which then only drops a link), and one background worker
-    empties the trash after the commit. A trash left by a crash is
-    emptied after the next commit. The commit's I/O on the caller's
-    thread: one mkdir, two fsync'd file writes, one link and renames."""
-    trash = os.path.join(state_dir, ".trash")
-    os.makedirs(trash, exist_ok=True)
-    new_state = os.path.join(state_dir, name)
-    _retire(new_state, trash)  # a crashed earlier attempt
-    os.makedirs(new_state)
+    """Commits the PARTIAL_SCHEMA ``rows`` (by shard), in shard order, as
+    one zstd parquet body (``_write_commit``)."""
     table = pa.Table.from_pylist([rows[s] for s in sorted(rows)], schema=_arrow_schema())
     buf = pa.BufferOutputStream()
     # zstd: a third smaller than snappy on half-empty bucket arrays
     pq.write_table(table, buf, compression="zstd")
-    data = buf.getvalue().to_pybytes()
-    with open(os.path.join(new_state, _STATE_FILE), "wb") as f:
-        f.write(data)
-        f.flush()
-        os.fsync(f.fileno())
-    check = {"bytes": len(data), "sha256": hashlib.sha256(data).hexdigest()}
-    epoch_path = os.path.join(state_dir, "epoch.json")
-    tmp = epoch_path + ".tmp"
-    _retire(tmp, trash)  # a crashed earlier attempt; reopening would truncate it
-    with open(tmp, "w") as f:
-        json.dump({**pointer, "state": new_state, **check}, f)
-        f.flush()
-        os.fsync(f.fileno())
-    keep = {name}
-    if prior is not None:
-        keep.add(os.path.basename(prior["state"]))
-        os.link(epoch_path, os.path.join(trash, f"epoch.json.{uuid.uuid4().hex}"))
-    os.replace(tmp, epoch_path)
-    for d in os.listdir(state_dir):
-        if d.startswith("state_epoch") and d not in keep:
-            _retire(os.path.join(state_dir, d), trash)
-    global _last_reclaim
-    _last_reclaim = _RECLAIM.submit(_empty_trash, trash)
+    _write_commit(state_dir, buf.getvalue().to_pybytes(), prior, epoch, retracts)
 
 
 def incremental_cuckoo_sink(spec: CuckooSpec, key, state_dir: str, mode: str = "canonical"):
     """Returns a ``foreachBatch`` function maintaining a merged cuckoo
-    filter under ``state_dir`` (one parquet row per shard, current epoch
-    resolved via ``epoch.json``; read it back with :func:`read_state`).
+    filter under ``state_dir`` (one PARTIAL_SCHEMA row per shard in the
+    newest of two slot files; read it back with :func:`read_state`).
 
     Each commit folds on the driver; the module docstring gives the path,
     its memory bound and the sizes it was checked at.
@@ -273,22 +269,22 @@ def incremental_cuckoo_sink(spec: CuckooSpec, key, state_dir: str, mode: str = "
             return
         h, f = collect_hash_fp(batch_df, key)
         rows = folded_rows(spec, _load_state(commit), h, f, mode)
-        _commit_state(state_dir, rows, f"state_epoch{epoch_id}", {"epoch": epoch_id}, commit)
+        _commit_state(state_dir, rows, commit, epoch_id)
 
     return sink
 
 
 def read_state(spark, state_dir: str) -> DataFrame:
     """The current committed filter state of an
-    :func:`incremental_cuckoo_sink` (resolved through the atomic epoch.json
-    pointer) as a DataFrame with PARTIAL_SCHEMA's columns.
+    :func:`incremental_cuckoo_sink` (its newest commit) as a DataFrame
+    with PARTIAL_SCHEMA's columns.
 
     The rows are the checked bytes read on the driver (``_state_table``),
     held as a local relation: neither this call nor a collect of its
     result (``ShardedCuckoo.from_df``) starts a Spark job, and the result
     never reads the state directory again, however far the stream
-    advances. A missing or mismatching state file, or a pointer without
-    its length and sha256, raises (``_state_bytes``)."""
+    advances. State that breaks a load rule raises (``_read_commit``,
+    ``_state_bytes``)."""
     return spark.createDataFrame(_state_table(_committed(state_dir)))
 
 
@@ -300,7 +296,7 @@ def incremental_paragraph_dedup_sink(spec: CuckooSpec, state_dir: str, out_dir: 
     use-case): membership answers "seen in any prior batch", deletions
     stay available for retraction workflows.
 
-    Per micro-batch (exactly-once via the crash-atomic epoch pointer):
+    Per micro-batch (exactly-once via the crash-atomic slot commit):
       1. explode to normalized paragraphs (``dedup.paragraph_table`` —
          the SAME identity as the batch operator);
       2. PROBE the committed filter — no false negatives, so a duplicate
@@ -314,8 +310,8 @@ def incremental_paragraph_dedup_sink(spec: CuckooSpec, state_dir: str, out_dir: 
          committed state on the driver (O(batch) fast fold, raising
          ``TooFullError`` before any write if a fingerprint would drop);
       5. reassemble docs in paragraph order, append (doc_id, kept_text,
-         n_paras, n_kept, epoch) under ``out_dir/batch_epoch{N}`` and
-         flip ``epoch.json``.
+         n_paras, n_kept, epoch) under ``out_dir/batch_epoch{N}``, then
+         commit the state.
 
     The state is loaded once per batch with pyarrow and serves both the
     probe's broadcast and the fold; the memory bound and traffic are
@@ -369,7 +365,7 @@ def incremental_paragraph_dedup_sink(spec: CuckooSpec, state_dir: str, out_dir: 
         out.write.mode("overwrite").parquet(
             os.path.join(out_dir, f"batch_epoch{epoch_id}")
         )
-        _commit_state(state_dir, rows, f"state_epoch{epoch_id}", {"epoch": epoch_id}, commit)
+        _commit_state(state_dir, rows, commit, epoch_id)
 
     return sink
 
@@ -389,9 +385,9 @@ def retract_paragraphs_from_state(
     those docs own). Retracting paragraphs that were never kept removes
     non-members and permanently poisons the touched shard (reference
     poison-on-miss semantics — loud, not silent). Returns the number of
-    distinct paragraph classes removed. Commits crash-atomically under a
-    retract-suffixed state directory; the epoch counter is untouched, so
-    the stream's replay guard is unaffected.
+    distinct paragraph classes removed. Commits crash-atomically, counting
+    the retraction in the header's ``retracts``; the epoch counter is
+    untouched, so the stream's replay guard is unaffected.
 
     The removal runs on the driver, on the sinks' commit path (module
     docstring): one Arrow collect of the distinct paragraphs' (hash, fp),
@@ -408,12 +404,5 @@ def retract_paragraphs_from_state(
     h, f = collect_hash_fp(paras.select("__norm").distinct(), F.col("__norm"))
     for s, (h_s, f_s) in split_by_shard(h, f, spec.num_shards).items():
         rows[s] = removed_row(spec, spec.name, s, rows.get(s), h_s, f_s)
-    k = int(commit.get("retracts", 0)) + 1
-    _commit_state(
-        state_dir,
-        rows,
-        f"state_epoch{commit['epoch']}r{k}",
-        {"epoch": commit["epoch"], "retracts": k},
-        commit,
-    )
+    _commit_state(state_dir, rows, commit, commit["epoch"], commit["retracts"] + 1)
     return len(h)

@@ -135,3 +135,20 @@ def test_kmv_vs_exact_distinct(spark, events):
     exact = events.filter(F.col("user_id").isNotNull()).select("user_id").distinct().count()
     assert abs(sk.estimate() - exact) <= 3 * sk.rel_error * exact + 1
     assert sk.count == events.filter(F.col("user_id").isNotNull()).count()
+
+
+@pytest.mark.parametrize("kind,params", [("kll", (64,)), ("tdigest", (50,))])
+def test_order_dependent_merges_ignore_row_order(spark, events, kind, params):
+    """KLL and t-digest merges depend on the order they fold their parts
+    in, so a merge folds a group's blobs in sorted byte order: the same
+    partials arriving in two row orders merge to equal bytes."""
+    spec = SketchSpec(f"order-{kind}", kind, params)
+    partials = build_sketch_partials(events.repartition(6), spec, "value")
+    rows = partials.collect()
+    assert len(rows) == 6
+
+    def merged(ordered):
+        df = spark.createDataFrame(ordered, partials.schema).coalesce(1)
+        return bytes(merge_sketch_partials(df, spec).first()["sketch"])
+
+    assert merged(rows) == merged(rows[::-1])

@@ -4,7 +4,6 @@ dedup and its retraction."""
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import tempfile
@@ -12,6 +11,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from sketchlib import streaming
 from sketchlib.kernels.cuckoo import size_for
 from sketchlib.spark.cuckoo import (
     CuckooSpec,
@@ -21,6 +21,16 @@ from sketchlib.spark.cuckoo import (
     probe,
 )
 from sketchlib.streaming import incremental_cuckoo_sink, read_state
+
+
+def _torn_write(state_dir, body):
+    """A crash between a commit's body write and its header write:
+    ``body`` lands in the slot the next commit rewrites, whose header still
+    names the commit before the newest."""
+    commit = streaming._read_commit(state_dir)
+    with open(os.path.join(state_dir, streaming._SLOTS[(commit["seq"] + 1) % 2]), "r+b") as f:
+        f.seek(streaming._HEADER_BYTES)
+        f.write(body)
 
 
 def test_incremental_stream_equals_batch(spark, sf_dir):
@@ -66,25 +76,21 @@ def test_incremental_stream_equals_batch(spark, sf_dir):
         }
         assert again == batch_blobs
 
-        # crash-atomicity: a crash after the state write but BEFORE the
-        # pointer flip leaves the committed pointer on the previous epoch —
-        # recovery re-reads consistent state and replays the batch once
-        import json as _json
-
-        with open(os.path.join(state_dir, "epoch.json")) as f:
-            commit = _json.load(f)
-        orphan = os.path.join(state_dir, "state_epoch999")
-        spark.read.parquet(commit["state"]).write.mode("overwrite").parquet(orphan)
-        # pointer still names the old epoch → replaying the next epoch folds in
+        # crash-atomicity: a crash after the body write but BEFORE the
+        # header write leaves the previous commit the newest — recovery
+        # re-reads consistent state and replays the batch once
+        commit = streaming._read_commit(state_dir)
+        _torn_write(state_dir, streaming._state_bytes(commit))
+        # the newest header still names the old epoch → the next epoch folds in
         sink(docs.limit(0), commit["epoch"] + 1)  # empty replay: state unchanged
         final = {
             r["shard"]: bytes(r["sketch"]) for r in read_state(spark, state_dir).collect()
         }
         assert final == batch_blobs
 
-        # the same crash in fast mode: the orphan holds the next epoch
-        # already folded in, but the pointer still names the previous one,
-        # so the replayed epoch folds its rows in exactly once
+        # the same crash in fast mode: the torn body holds the next epoch
+        # already folded in, but the newest header still names the previous
+        # one, so the replayed epoch folds its rows in exactly once
         fast_dir = os.path.join(work, "fast")
         fast = incremental_cuckoo_sink(spec, key, fast_dir, mode="fast")
         groups = [docs.filter(F.pmod("doc_id", F.lit(4)) == g) for g in range(4)]
@@ -93,8 +99,7 @@ def test_incremental_stream_equals_batch(spark, sf_dir):
         crashed = os.path.join(work, "fast_crashed")
         shutil.copytree(fast_dir, crashed)
         incremental_cuckoo_sink(spec, key, crashed, mode="fast")(groups[3], 3)
-        with open(os.path.join(crashed, "epoch.json")) as f:
-            shutil.copytree(json.load(f)["state"], os.path.join(fast_dir, "state_epoch999"))
+        _torn_write(fast_dir, streaming._state_bytes(streaming._read_commit(crashed)))
         fast(groups[3], 3)
         assert ShardedCuckoo.from_df(read_state(spark, fast_dir), spec).count() == docs.count()
     finally:
@@ -119,11 +124,19 @@ def test_fold_rejects_a_spec_of_another_geometry(mode):
             folded_rows(spec, prior, h, h >> np.uint64(40), mode)
 
 
+def _slot_bytes(state_dir):
+    out = {}
+    for name in os.listdir(state_dir):
+        with open(os.path.join(state_dir, name), "rb") as f:
+            out[name] = f.read()
+    return out
+
+
 @pytest.mark.parametrize("mode", ["canonical", "fast"])
 def test_sink_fold_drop_raises_before_commit(spark, mode):
     """A fold that would drop a fingerprint (a silent false negative) raises
-    TooFullError naming the shard and the count; the committed pointer and
-    the state directories stay as they were."""
+    TooFullError naming the shard and the count; the slot files stay as
+    they were."""
     from sketchlib.kernels.cuckoo import TooFullError
 
     spec = CuckooSpec(name="tiny", size=16, fpsize=1, num_shards=1)
@@ -133,16 +146,11 @@ def test_sink_fold_drop_raises_before_commit(spark, mode):
     try:
         sink = incremental_cuckoo_sink(spec, key, state_dir, mode=mode)
         sink(spark.createDataFrame([(f"a{i}",) for i in range(4)], "k string"), 0)
-        with open(os.path.join(state_dir, "epoch.json")) as f:
-            before = json.load(f)
-        dirs = sorted(os.listdir(state_dir))
+        before = _slot_bytes(state_dir)
         overfill = spark.createDataFrame([(f"b{i}",) for i in range(200)], "k string")
         with pytest.raises(TooFullError, match=r"shard 0: .*drop \d+ fingerprint"):
             sink(overfill, 1)
-        with open(os.path.join(state_dir, "epoch.json")) as f:
-            assert json.load(f) == before
-        assert sorted(os.listdir(state_dir)) == dirs
-        assert not os.path.exists(os.path.join(state_dir, "state_epoch1"))
+        assert _slot_bytes(state_dir) == before
         assert ShardedCuckoo.from_df(read_state(spark, state_dir), spec).count() == 4
     finally:
         shutil.rmtree(work, ignore_errors=True)
@@ -160,8 +168,7 @@ def test_sink_skips_null_keys(spark):
         for e in range(4):
             urls = [(None,)] * 3 + [(f"https://example.org/{e}/{i}",) for i in range(5)]
             sink(spark.createDataFrame(urls, "url string"), e)
-            with open(os.path.join(state_dir, "epoch.json")) as f:
-                assert json.load(f)["epoch"] == e
+            assert streaming._read_commit(state_dir)["epoch"] == e
         sc = ShardedCuckoo.from_df(read_state(spark, state_dir), spec)
         assert (sc.rows, sc.count(), sc.dropped) == (20, 20, 0)
     finally:
@@ -180,12 +187,10 @@ def test_cuckoo_sink_warns_on_an_epoch_below_the_committed_one(spark):
         sink = incremental_cuckoo_sink(spec, F.col("k"), state_dir)
         sink(batch, 0)
         sink(batch.limit(3), 1)
-        with open(os.path.join(state_dir, "epoch.json")) as f:
-            before = json.load(f)
+        before = streaming._read_commit(state_dir)
         with pytest.warns(RuntimeWarning, match="epoch 0 < committed 1"):
             sink(batch, 0)
-        with open(os.path.join(state_dir, "epoch.json")) as f:
-            assert json.load(f) == before
+        assert streaming._read_commit(state_dir) == before
         assert ShardedCuckoo.from_df(read_state(spark, state_dir), spec).count() == 13
     finally:
         shutil.rmtree(work, ignore_errors=True)
@@ -225,10 +230,10 @@ def test_fast_sink_commit_is_one_job(spark, sf_dir):
 def test_read_state_starts_no_job(spark, sf_dir):
     """read_state serves the checked state bytes as a local relation, so
     neither it nor ShardedCuckoo.from_df over its result starts a Spark
-    job. Its result, and a plain schema-less parquet read of the
-    driver-written state directory, have PARTIAL_SCHEMA's column names and
-    types."""
+    job. Its result, and the Arrow table the driver reads from the state
+    (``_state_table``), have PARTIAL_SCHEMA's column names and types."""
     from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     from sketchlib.spark.cuckoo import PARTIAL_SCHEMA
 
@@ -246,60 +251,103 @@ def test_read_state_starts_no_job(spark, sf_dir):
         )
         assert jobs == []
         assert got["sc"].count() == docs.count()
-        want = [(c.name, c.dataType) for c in T._parse_datatype_string(PARTIAL_SCHEMA)]
+        schema = T._parse_datatype_string(PARTIAL_SCHEMA)
+        want = [(c.name, c.dataType) for c in schema]
         assert [(c.name, c.dataType) for c in read_state(spark, state_dir).schema] == want
-        with open(os.path.join(state_dir, "epoch.json")) as f:
-            plain = spark.read.parquet(json.load(f)["state"])
-        assert [(c.name, c.dataType) for c in plain.schema] == want
-        assert plain.count() == spec.num_shards
+        table = streaming._state_table(streaming._read_commit(state_dir))
+        assert [(c.name, c.type) for c in table.schema] == [
+            (c.name, c.type) for c in to_arrow_schema(schema)
+        ]
+        assert table.num_rows == spec.num_shards
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
 
-def test_state_pointer_checks_the_state_file(spark, sf_dir):
-    """epoch.json records the state file's length and sha256: a state file
-    replaced by an older epoch's, or a missing one, raises on the next load
-    (read_state and the sink's fold) instead of returning stale state. A
-    pointer without those fields could not be checked, so it raises too."""
+def _copy_older_over_newer(state_dir):
+    shutil.copyfile(*(os.path.join(state_dir, s) for s in streaming._SLOTS))
+
+
+def _flip(path, offset):
+    with open(path, "r+b") as f:
+        f.seek(offset)
+        byte = f.read(1)
+        f.seek(offset)
+        f.write(bytes([byte[0] ^ 0xFF]))
+
+
+def test_state_slots_are_checked(spark, sf_dir):
+    """Each slot's header carries a crc and its body's length and sha256,
+    and the newest commit's slot must sit beside its predecessor: a
+    corrupt body or header, an older slot copied over the newer one and a
+    deleted slot each raise in read_state, in the sink and in retraction,
+    instead of yielding stale or empty state."""
+    from sketchlib.streaming import retract_paragraphs_from_state
+
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     spec = CuckooSpec(name="checked", size=size_for(2000, 2), fpsize=2, num_shards=2)
     key = F.col("doc_id").cast("string")
     work = tempfile.mkdtemp(prefix="sketchlib-checked-")
     state_dir = os.path.join(work, "state")
+    newest = os.path.join(state_dir, streaming._SLOTS[1])
+    breaks = {
+        "body": (lambda: _flip(newest, streaming._HEADER_BYTES + 100), ValueError),
+        "header": (lambda: _flip(newest, 8), ValueError),
+        "older over newer": (lambda: _copy_older_over_newer(state_dir), ValueError),
+        "deleted slot": (lambda: os.remove(newest), FileNotFoundError),
+    }
     try:
         sink = incremental_cuckoo_sink(spec, key, state_dir)
         halves = [docs.filter(F.pmod("doc_id", F.lit(2)) == g) for g in range(2)]
         sink(halves[0], 0)
         sink(halves[1], 1)
-        # a pointer without the check fields raises in every loader
-        from sketchlib.streaming import retract_paragraphs_from_state
+        good = _slot_bytes(state_dir)
+        kept = docs.select("doc_id", F.col("text").alias("kept_text"))
+        for case, (corrupt, error) in breaks.items():
+            corrupt()
+            for load in (
+                lambda: read_state(spark, state_dir),
+                lambda: sink(halves[0], 2),
+                lambda: retract_paragraphs_from_state(spec, state_dir, kept),
+            ):
+                with pytest.raises(error):
+                    load()
+            for name, data in good.items():
+                with open(os.path.join(state_dir, name), "wb") as f:
+                    f.write(data)
+            assert ShardedCuckoo.from_df(read_state(spark, state_dir), spec).count() == docs.count(), case
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
 
-        epoch_path = os.path.join(state_dir, "epoch.json")
-        with open(epoch_path) as f:
-            commit = json.load(f)
-        with open(epoch_path, "w") as f:
-            json.dump({k: v for k, v in commit.items() if k not in ("bytes", "sha256")}, f)
+
+def test_an_earlier_layout_is_loud(spark):
+    """A state directory in the earlier layout (an ``epoch.json`` pointer
+    beside ``state_epoch*`` directories) raises ValueError in every
+    loader: a sink starting from an empty filter there would answer
+    "never seen" for every key it had folded in."""
+    from sketchlib.streaming import (
+        incremental_paragraph_dedup_sink,
+        retract_paragraphs_from_state,
+    )
+
+    spec = CuckooSpec(name="earlier", size=size_for(200, 2), fpsize=2)
+    work = tempfile.mkdtemp(prefix="sketchlib-earlier-")
+    state_dir = os.path.join(work, "state")
+    try:
+        os.makedirs(os.path.join(state_dir, "state_epoch0"))
+        with open(os.path.join(state_dir, "epoch.json"), "w") as f:
+            f.write('{"epoch": 0}')
+        docs = spark.createDataFrame([(1, "a para")], "doc_id long, text string")
         kept = docs.select("doc_id", F.col("text").alias("kept_text"))
         for load in (
             lambda: read_state(spark, state_dir),
-            lambda: sink(halves[0], 2),
+            lambda: incremental_cuckoo_sink(spec, F.col("text"), state_dir)(docs, 1),
+            lambda: incremental_paragraph_dedup_sink(spec, state_dir, os.path.join(work, "out"))(
+                docs, 1
+            ),
             lambda: retract_paragraphs_from_state(spec, state_dir, kept),
         ):
-            with pytest.raises(ValueError, match="sha256"):
+            with pytest.raises(ValueError, match="epoch.json"):
                 load()
-        with open(epoch_path, "w") as f:
-            json.dump(commit, f)
-        current = os.path.join(state_dir, "state_epoch1", "part-00000.parquet")
-        shutil.copyfile(os.path.join(state_dir, "state_epoch0", "part-00000.parquet"), current)
-        with pytest.raises(ValueError, match="sha256"):
-            read_state(spark, state_dir)
-        with pytest.raises(ValueError, match="sha256"):
-            sink(halves[0], 2)
-        os.remove(current)
-        with pytest.raises(FileNotFoundError):
-            read_state(spark, state_dir)
-        with pytest.raises(FileNotFoundError):
-            sink(halves[0], 2)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -431,9 +479,8 @@ def test_streaming_sessions_match_batch(spark, sf_dir):
 
 def test_read_state_outlives_later_commits(spark, sf_dir):
     """A read_state result holds its epoch's rows: resolved before two more
-    commits, it still collects that epoch after the sink has retired its
-    directory. The sink keeps only the immediately-previous epoch
-    directory; older ones are GC'd."""
+    commits, it still collects that epoch after the sink has rewritten its
+    slot. The state directory holds the two slots throughout."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(300)
     spec = CuckooSpec(name="retain", size=size_for(1000, 2), fpsize=2, num_shards=2)
     key = F.col("doc_id").cast("string")
@@ -444,11 +491,10 @@ def test_read_state_outlives_later_commits(spark, sf_dir):
         parts = [docs.filter(F.pmod("doc_id", F.lit(3)) == i) for i in range(3)]
         sink(parts[0], 0)
         held = read_state(spark, state_dir)  # epoch 0's rows
-        sink(parts[1], 1)  # commit epoch 1 — epoch 0 dir must survive
-        assert os.path.isdir(os.path.join(state_dir, "state_epoch0"))
-        sink(parts[2], 2)  # commit epoch 2 — epoch 0 GC'd, epoch 1 retained
-        assert not os.path.isdir(os.path.join(state_dir, "state_epoch0"))
-        assert os.path.isdir(os.path.join(state_dir, "state_epoch1"))
+        sink(parts[1], 1)  # commit epoch 1 into the other slot
+        sink(parts[2], 2)  # commit epoch 2 over epoch 0's slot
+        assert streaming._read_commit(state_dir)["path"] == os.path.join(state_dir, "state.0")
+        assert sorted(os.listdir(state_dir)) == list(streaming._SLOTS)
         assert ShardedCuckoo.from_df(held, spec).count() == parts[0].count()
         assert ShardedCuckoo.from_df(read_state(spark, state_dir), spec).count() == docs.count()
     finally:
@@ -456,8 +502,8 @@ def test_read_state_outlives_later_commits(spark, sf_dir):
 
 
 def test_read_state_ignores_a_later_replaced_state_file(spark, sf_dir):
-    """read_state's result is the state file's checked bytes at the time of
-    the call: replacing that file afterwards (here by an older epoch's)
+    """read_state's result is the newest slot's checked bytes at the time
+    of the call: replacing that file afterwards (here by the older slot)
     does not change what the result yields."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     spec = CuckooSpec(name="replaced", size=size_for(2000, 2), fpsize=2, num_shards=2)
@@ -470,103 +516,89 @@ def test_read_state_ignores_a_later_replaced_state_file(spark, sf_dir):
         sink(halves[1], 1)
         held = read_state(spark, state_dir)
         want = sorted((r["shard"], bytes(r["sketch"])) for r in held.collect())
-        current = os.path.join(state_dir, "state_epoch1", "part-00000.parquet")
-        shutil.copyfile(os.path.join(state_dir, "state_epoch0", "part-00000.parquet"), current)
+        _copy_older_over_newer(state_dir)
         assert sorted((r["shard"], bytes(r["sketch"])) for r in held.collect()) == want
         assert ShardedCuckoo.from_df(held, spec).count() == docs.count()
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
 
-def test_sink_commit_frees_nothing_on_the_callers_thread(spark, monkeypatch):
-    """A commit frees no disk blocks on the caller's thread: retired state
-    directories and the old pointer go to ``.trash`` by rename and hard
-    link, so no delete runs there and ``os.replace`` only drops a link of
-    the old pointer. Once the reclaim worker is idle, the state directory
-    holds the pointer, the current and prior states and an empty trash."""
+def test_sink_commits_rewrite_two_slots_in_place(spark, monkeypatch):
+    """A commit frees no disk blocks: on any thread it deletes, renames,
+    replaces, links and truncates nothing in the state directory, and it
+    starts no thread. After four commits the directory holds exactly the
+    two slots, with the inodes the first commit gave them."""
+    import builtins
     import threading
 
-    from sketchlib import streaming
-
-    spec = CuckooSpec(name="trash", size=size_for(200, 2), fpsize=2)
-    work = tempfile.mkdtemp(prefix="sketchlib-trash-")
+    spec = CuckooSpec(name="inplace", size=size_for(200, 2), fpsize=2)
+    work = tempfile.mkdtemp(prefix="sketchlib-inplace-")
     state_dir = os.path.join(work, "state")
     batches = [
         spark.createDataFrame([(f"k{e}_{i}",) for i in range(10)], "k string") for e in range(4)
     ]
-    caller = threading.get_ident()
-    deletes, replaced_links = [], []
+    calls = []
 
     def recorded(name, fn):
         def call(*args, **kwargs):
-            deletes.append((name, threading.get_ident(), args[0] if args else None))
+            if any(str(a).startswith(state_dir) for a in args[:2]):
+                calls.append((name, args[:2]))
             return fn(*args, **kwargs)
 
         return call
 
-    def replace(src, dst, *args, real=os.replace, **kwargs):
-        if threading.get_ident() == caller and os.path.exists(dst):
-            replaced_links.append(os.stat(dst).st_nlink)
-        return real(src, dst, *args, **kwargs)
+    def opened(file, mode="r", *args, real=builtins.open, **kwargs):
+        if "w" in mode and str(file).startswith(state_dir):
+            calls.append(("open", file, mode))
+        return real(file, mode, *args, **kwargs)
+
+    def start(self, real=threading.Thread.start):
+        calls.append(("thread", self.name))
+        return real(self)
 
     try:
         sink = incremental_cuckoo_sink(spec, F.col("k"), state_dir)
-        for mod, name in ((os, "unlink"), (os, "remove"), (os, "rmdir"), (shutil, "rmtree")):
-            monkeypatch.setattr(mod, name, recorded(name, getattr(mod, name)))
-        monkeypatch.setattr(os, "replace", replace)
-        for e, batch in enumerate(batches):
+        sink(batches[0], 0)
+        inodes = {s: os.stat(os.path.join(state_dir, s)).st_ino for s in streaming._SLOTS}
+        for mod, names in (
+            (os, ("unlink", "remove", "rmdir", "rename", "replace", "link", "truncate")),
+            (shutil, ("rmtree", "move")),
+        ):
+            for name in names:
+                monkeypatch.setattr(mod, name, recorded(name, getattr(mod, name)))
+        monkeypatch.setattr(builtins, "open", opened)
+        monkeypatch.setattr(threading.Thread, "start", start)
+        for e, batch in enumerate(batches[1:], 1):
             sink(batch, e)
-        streaming._reclaimed()
         monkeypatch.undo()
-        assert [d for d in deletes if d[1] == caller] == []
-        assert any(d[0] == "rmtree" for d in deletes)  # the worker reclaimed epochs 0 and 1
-        assert len(replaced_links) == 3 and min(replaced_links) >= 2, replaced_links
-        assert sorted(os.listdir(state_dir)) == [
-            ".trash", "epoch.json", "state_epoch2", "state_epoch3"
-        ]
-        assert os.listdir(os.path.join(state_dir, ".trash")) == []
+        assert calls == []
+        assert sorted(os.listdir(state_dir)) == list(streaming._SLOTS)
+        assert {s: os.stat(os.path.join(state_dir, s)).st_ino for s in streaming._SLOTS} == inodes
         assert ShardedCuckoo.from_df(read_state(spark, state_dir), spec).count() == 40
     finally:
         monkeypatch.undo()
         shutil.rmtree(work, ignore_errors=True)
 
 
-def test_commit_reclaims_crash_leftovers(spark):
-    """A crash can leave entries in ``.trash``, a pointer tmp file and a
-    torn directory of the epoch about to be committed. The next commit
-    succeeds, its retired copy of the torn directory does not collide
-    with a trash entry of the same name, and once the reclaim worker is
-    idle all of them are gone and the loads' length and sha256 checks
+def test_commit_overwrites_a_torn_write(spark):
+    """A crash can leave a torn body, longer than any commit's, in the
+    slot the next commit rewrites. That commit overwrites it in place
+    without truncating the file, and the loads' length and sha256 checks
     pass."""
-    from sketchlib import streaming
-
-    spec = CuckooSpec(name="leftover", size=size_for(200, 2), fpsize=2)
-    work = tempfile.mkdtemp(prefix="sketchlib-leftover-")
+    spec = CuckooSpec(name="torn", size=size_for(200, 2), fpsize=2)
+    work = tempfile.mkdtemp(prefix="sketchlib-torn-")
     state_dir = os.path.join(work, "state")
-    trash = os.path.join(state_dir, ".trash")
     batches = [
         spark.createDataFrame([(f"k{e}_{i}",) for i in range(10)], "k string") for e in range(2)
     ]
     try:
         sink = incremental_cuckoo_sink(spec, F.col("k"), state_dir)
         sink(batches[0], 0)
-        streaming._reclaimed()
-        torn = os.path.join(state_dir, "state_epoch1")  # the epoch about to be committed
-        for d in (torn, os.path.join(trash, "state_epoch1"), os.path.join(trash, "state_epoch7.0123")):
-            os.makedirs(d)
-            with open(os.path.join(d, "part-00000.parquet"), "wb") as f:
-                f.write(b"torn")
-        for stale in (os.path.join(trash, "epoch.json.0123"), os.path.join(state_dir, "epoch.json.tmp")):
-            with open(stale, "w") as f:
-                f.write("{}")
+        _torn_write(state_dir, b"torn" * 100_000)
         sink(batches[1], 1)
-        streaming._reclaimed()
-        assert os.listdir(trash) == []
-        assert sorted(os.listdir(state_dir)) == [
-            ".trash", "epoch.json", "state_epoch0", "state_epoch1"
-        ]
-        with open(os.path.join(state_dir, "epoch.json")) as f:
-            assert json.load(f)["epoch"] == 1
+        commit = streaming._read_commit(state_dir)
+        assert (commit["seq"], commit["epoch"]) == (1, 1)
+        assert os.path.getsize(commit["path"]) == streaming._HEADER_BYTES + 400_000
         sc = ShardedCuckoo.from_df(read_state(spark, state_dir), spec)
         assert (sc.rows, sc.count(), sc.dropped) == (20, 20, 0)
     finally:
@@ -602,14 +634,10 @@ def test_streaming_paragraph_dedup_matches_batch(spark):
             for r in spark.read.parquet(os.path.join(out_dir, "batch_epoch*")).collect()
         }
         assert got == want
-        # replayed epoch: no-op (same output dirs, same state pointer)
-        import json as _json
-
-        with open(os.path.join(state_dir, "epoch.json")) as f:
-            before = _json.load(f)
+        # replayed epoch: no-op (same output dirs, same newest commit)
+        before = streaming._read_commit(state_dir)
         sink(docs.limit(5), 1)
-        with open(os.path.join(state_dir, "epoch.json")) as f:
-            assert _json.load(f) == before
+        assert streaming._read_commit(state_dir) == before
         # cross-batch guarantee: each normalized paragraph at most once
         kept_paras = []
         for (text, _, _) in got.values():
