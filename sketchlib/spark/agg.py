@@ -20,6 +20,7 @@ oracle within bound wherever those do.
 
 from __future__ import annotations
 
+from collections.abc import Iterator
 from dataclasses import dataclass
 
 import numpy as np
@@ -27,6 +28,7 @@ import pandas as pd
 from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from sketchlib.kernels.bloom import BloomFilter
 from sketchlib.kernels.cms import CountMinSketch
@@ -223,8 +225,13 @@ def grouped_estimates(grouped: DataFrame, spec: SketchSpec, group_col: str) -> D
 
 
 def bloom_probe(df: DataFrame, bloom: BloomFilter, key) -> DataFrame:
-    """Distributed Bloom membership as a boolean ``member`` column: broadcast
-    the bit array, vectorized mapInPandas probe (no false negatives; FP within (1-e^{-kn/m})^k).
+    """Distributed Bloom membership as a boolean ``member`` column after
+    ``df``'s columns: broadcast the bit array, and answer with a
+    scalar-iterator ``pandas_udf`` over ``xxhash64(key)`` that decodes the
+    bits once per task and probes each Arrow batch in one vectorized call
+    (no false negatives; FP within (1-e^{-kn/m})^k). Only the 8-byte hash
+    goes to the Python worker and the 1-byte answer comes back; the
+    caller's columns stay in the JVM.
 
     CAUTION: ``key`` must be the SAME expression (including type!) used at
     build time — ``xxhash64(long)`` ≠ ``xxhash64(string)``, so probing a
@@ -232,21 +239,12 @@ def bloom_probe(df: DataFrame, bloom: BloomFilter, key) -> DataFrame:
     everything. This mirrors the reference's client-hashes contract
     (README.md:40-53): hashing consistency is the caller's responsibility.
     """
-    from pyspark.sql import types as T
-
     key = F.col(key) if isinstance(key, str) else key
-    df = df.withColumn(_HASH_COL, F.xxhash64(key))
     bc = df.sparkSession.sparkContext.broadcast(bloom.to_bytes())
-    out_schema = T.StructType(
-        [f for f in df.schema.fields if f.name != _HASH_COL]
-        + [T.StructField("member", T.BooleanType())]
-    )
 
-    def run(batches):
+    def member(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
         flt = BloomFilter.from_bytes(bc.value)
-        for pdf in batches:
-            h = i64_to_u64(pdf[_HASH_COL].to_numpy()) if len(pdf) else np.empty(0, np.uint64)
-            hit = flt.contains_hashes(h) if len(pdf) else np.empty(0, bool)
-            yield pdf.drop(columns=[_HASH_COL]).assign(member=hit)
+        for h in batches:
+            yield pd.Series(flt.contains_hashes(i64_to_u64(h)))
 
-    return df.mapInPandas(run, out_schema)
+    return df.select("*", F.pandas_udf(member, T.BooleanType())(F.xxhash64(key)).alias("member"))

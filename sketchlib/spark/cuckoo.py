@@ -13,8 +13,10 @@ The Spark-native re-expression of the reference's command surface
   blobs; canonical merge makes the result byte-identical for ANY input
   partitioning or build path (SURVEY.md §2.3)
 - ``CF.CHECK``  → :func:`probe` — merged blobs broadcast once per executor,
-  probes answered by a vectorized ``mapInPandas`` (semantically a broadcast
-  left-semi join with bounded one-sided false positives);
+  probes answered by a scalar-iterator ``pandas_udf`` that receives only
+  the (hash, fp) longs, one vectorized kernel call per Arrow batch
+  (semantically a broadcast left-semi join with bounded one-sided false
+  positives);
   :func:`probe_cogrouped` for filters too large to broadcast, and
   :func:`probe_auto` choosing between them from the spec alone
 - ``CF.REM``    → :func:`remove_keys` — co-grouped ``applyInPandas`` per
@@ -50,6 +52,7 @@ broadcast ships each executor only the blob dictionary once.
 
 from __future__ import annotations
 
+from collections.abc import Iterator
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -110,18 +113,21 @@ class CuckooSpec:
             raise ValueError("num_shards must be in [1, 65536]")
 
 
+def _hash_exprs(key) -> tuple[Column, Column]:
+    """The two independent in-plan xxhash64 expressions of a key: (hash, fp)."""
+    key = F.col(key) if isinstance(key, str) else key
+    return F.xxhash64(key), F.xxhash64(key, F.lit(_FP_SALT))
+
+
 def with_hash_fp(df: DataFrame, key) -> DataFrame:
     """Derive (HASH_COL, FP_COL) from a key column with two independent
-    in-plan xxhash64 expressions — pure Catalyst projections, JVM-side,
+    in-plan xxhash64 expressions — one Catalyst projection, JVM-side,
     codegen'd.
 
     The reference leaves hashing to the client (README.md:40-53); here the
     "client" is the query plan and any expression can be substituted.
     """
-    key = F.col(key) if isinstance(key, str) else key
-    return df.withColumn(HASH_COL, F.xxhash64(key)).withColumn(
-        FP_COL, F.xxhash64(key, F.lit(_FP_SALT))
-    )
+    return df.withColumns(dict(zip((HASH_COL, FP_COL), _hash_exprs(key))))
 
 
 def _hash_fp(df: DataFrame, key) -> DataFrame:
@@ -131,10 +137,12 @@ def _hash_fp(df: DataFrame, key) -> DataFrame:
     so every NULL would otherwise be the same phantom item."""
     if key is None:
         df = df.dropna(subset=[HASH_COL, FP_COL])
+        cols = (F.col(c).cast("long") for c in (HASH_COL, FP_COL))
     else:
         key = F.col(key) if isinstance(key, str) else key
-        df = with_hash_fp(df.where(key.isNotNull()), key)
-    return df.select(*(F.col(c).cast("long").alias(c) for c in (HASH_COL, FP_COL)))
+        df = df.where(key.isNotNull())
+        cols = _hash_exprs(key)
+    return df.select(*(e.alias(c) for c, e in zip((HASH_COL, FP_COL), cols)))
 
 
 def _u64_pairs(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
@@ -412,20 +420,24 @@ class ShardedCuckoo:
 
 def probe(df: DataFrame, sharded: ShardedCuckoo, key=None, result_col: str = "member") -> DataFrame:
     """CF.CHECK, distributed: broadcast the shard blobs once, answer probes
-    with a vectorized ``mapInPandas`` (one kernel call per Arrow batch).
+    with a scalar-iterator ``pandas_udf`` over the two hash columns: each
+    task decodes the filter once and answers each Arrow batch with one
+    vectorized kernel call, no per-row Python.
 
     No false negatives; false positives within the width's published bound.
     The exact-SQL oracle of this operator is a left-semi join on the key.
 
-    Performance: every column of ``df`` rides through Arrow to the Python
-    worker and back — select only the columns you need before probing
-    (probing a key-only projection is several times faster than a wide row).
+    Performance: only the (hash, fp) longs travel to the Python worker,
+    16 B per row, and only the answer comes back, 1 B per row. The caller's
+    columns never leave the JVM, and Catalyst prunes those a later select
+    drops. The result is ``df``'s columns plus ``result_col``.
 
     CAUTION: ``key`` must be the SAME expression (including type!) used at
     build time — ``xxhash64(long)`` ≠ ``xxhash64(string)``. Hashing
     consistency is the caller's responsibility, mirroring the reference's
     client-hashes contract (README.md:40-53). Builds skip NULL keys, so a
-    NULL probe answers like any never-inserted key.
+    NULL probe answers like any never-inserted key; with ``key=None`` a
+    row whose prepared hash or fp is NULL answers False.
 
     DEVIATION from the reference (SURVEY.md §4.1): operating on a
     nonexistent Redis key errors in the reference
@@ -436,20 +448,25 @@ def probe(df: DataFrame, sharded: ShardedCuckoo, key=None, result_col: str = "me
     need strict existence semantics should validate
     ``ShardedCuckoo.filters`` coverage up front.
     """
-    if key is not None:
-        df = with_hash_fp(df, key)
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(sharded.blobs())
+    bc = df.sparkSession.sparkContext.broadcast(sharded.blobs())
     spec = sharded.spec
-    out_schema = T.StructType(df.schema.fields + [T.StructField(result_col, T.BooleanType())])
 
-    def run(batches):
+    def member(batches: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.Series]:
         filters = ShardedCuckoo(spec, {s: CuckooFilter.from_bytes(b) for s, b in bc.value.items()})
-        for pdf in batches:
-            yield pdf.assign(**{result_col: filters.contains_arrays(*_u64_pairs(pdf))})
+        for h, f in batches:
+            yield pd.Series(filters.contains_arrays(i64_to_u64(h), i64_to_u64(f)))
 
-    out = df.mapInPandas(run, out_schema)
-    return out if key is None else out.drop(HASH_COL, FP_COL)
+    udf = F.pandas_udf(member, T.BooleanType())
+    if key is None:
+        # one NULL would turn its whole Arrow batch into lossy float64, so
+        # the UDF sees no NULL; a NULL prepared hash, never built, is absent
+        h, f = (F.col(c).cast("long") for c in (HASH_COL, FP_COL))
+        hit = F.when(
+            h.isNotNull() & f.isNotNull(), udf(F.coalesce(h, F.lit(0)), F.coalesce(f, F.lit(0)))
+        ).otherwise(False)
+    else:
+        hit = udf(*_hash_exprs(key))
+    return df.select("*", hit.alias(result_col))
 
 
 def _by_shard(merged: DataFrame, items: DataFrame, spec: CuckooSpec, fn, schema) -> DataFrame:

@@ -5,6 +5,7 @@ equivalence (probe ≡ left-semi join)."""
 
 from __future__ import annotations
 
+import re
 from collections import Counter
 
 import numpy as np
@@ -179,6 +180,80 @@ def test_probe_carries_columns(spark, docs):
     out = probe(docs.select("doc_id", "lang"), sc, key=F.col("doc_id").cast("string"))
     assert set(out.columns) == {"doc_id", "lang", "member"}
     assert out.count() == docs.count()
+
+
+def test_probe_ships_only_hash_and_fp(spark, arrow_udf_inputs):
+    """The probe is one ArrowEvalPython node whose UDF receives the two
+    in-plan xxhash64 longs and nothing else: a wide payload column never
+    reaches the Python worker, and a select that drops it prunes it."""
+    spec = CuckooSpec(name="ship", size=size_for(3000, 2), fpsize=2, num_shards=4)
+    wide = spark.range(3000).selectExpr(
+        "CAST(id AS STRING) AS k", "repeat(CAST(id AS STRING), 500) AS payload"
+    )
+    sc = ShardedCuckoo.from_df(build_filter_direct(wide, spec, key="k"), spec)
+    plan, udfs = arrow_udf_inputs(probe(wide, sc, key="k").select("member"))
+    assert plan.count("ArrowEvalPython") == 1 and "MapInPandas" not in plan
+    [(h, f)] = udfs
+    key = r"(?:k#\d+|cast\(id#\d+L as string\))"
+    assert re.fullmatch(rf"xxhash64\({key}, 42\)", h), h
+    assert re.fullmatch(rf"xxhash64\({key}, sketchlib::fp::v1, 42\)", f), f
+    assert "payload" not in plan
+
+
+def test_probe_answers_equal_the_semi_join_oracle(spark):
+    """At FP32 the probe's answers are the left-semi join on the key, over
+    probes that carry a binary payload, unchanged: keys of a shard with no
+    blob answer False, ``result_col`` names the answer column, and an
+    empty frame answers nothing."""
+    from sketchlib.spark.cuckoo import HASH_COL, _shard_col
+
+    spec = CuckooSpec(name="oracle", size=size_for(2000, 4), fpsize=4, num_shards=4)
+    probes = spark.range(0, 8000, 2, numPartitions=3).selectExpr(
+        "concat('key-', id) AS k", "unhex(sha2(concat('key-', id), 256)) AS payload"
+    )
+    # every third key inserted, none of them in shard 0
+    built = (
+        with_hash_fp(spark.range(0, 8000, 3).selectExpr("concat('key-', id) AS k"), "k")
+        .where(_shard_col(HASH_COL, 4) != 0)
+        .select("k")
+    )
+    sc = ShardedCuckoo.from_df(build_filter_direct(built, spec, key="k"), spec)
+    assert sorted(sc.filters) == [1, 2, 3]
+    out = probe(probes, sc, key="k", result_col="seen")
+    assert out.columns == ["k", "payload", "seen"]
+    rows = out.collect()
+    assert sorted((r["k"], bytes(r["payload"])) for r in rows) == sorted(
+        (r["k"], bytes(r["payload"])) for r in probes.collect()
+    )
+    want = {r["k"] for r in probes.join(built, "k", "left_semi").collect()}
+    assert {r["k"] for r in rows if r["seen"]} == want and len(want) > 300
+    empty = probe(probes.limit(0), sc, key="k", result_col="seen")
+    assert empty.columns == ["k", "payload", "seen"] and empty.collect() == []
+
+
+def test_probe_null_prepared_hash_is_absent(spark):
+    """With key=None, a row whose prepared hash or fp is NULL answers
+    False, as the co-grouped probe answers, and leaves the answers of the
+    other rows in its Arrow batch exact (a NULL would turn the batch's
+    longs into float64 and lose their low bits)."""
+    from sketchlib.spark.cuckoo import FP_COL, HASH_COL, probe_cogrouped
+
+    spec = CuckooSpec(name="nullprep", size=size_for(400, 2), fpsize=2, num_shards=2)
+    k = F.col("k")
+    keys = spark.range(300, numPartitions=1).select(F.col("id").alias("k"))
+    built = keys.withColumns(
+        {HASH_COL: F.xxhash64(k), FP_COL: F.xxhash64(k, F.lit("fp"))}
+    )
+    merged = build_filter_direct(built, spec)
+    sc = ShardedCuckoo.from_df(merged, spec)
+    probes = built.withColumn(HASH_COL, F.when(k % 10 != 3, F.col(HASH_COL))).withColumn(
+        FP_COL, F.when(k % 10 != 7, F.col(FP_COL))
+    )
+    got = {r["k"]: r["member"] for r in probe(probes, sc).collect()}
+    assert got == {i: i % 10 not in (3, 7) for i in range(300)}
+    cog = probe_cogrouped(merged, probes.where(k % 10 != 7), spec)
+    cog = {r["k"]: r["member"] for r in cog.collect()}
+    assert cog == {i: got[i] for i in range(300) if i % 10 != 7}
 
 
 def test_probe_cogrouped_equals_broadcast(spark, docs):
@@ -362,10 +437,10 @@ def test_semi_join_via_filter_too_large_filter(spark, monkeypatch):
     )
     small = spark.range(0, 100).selectExpr("id * 7 AS sk")
     bc = cuckoo.semi_join_via_filter(big, small, "k", "sk")
-    assert "MapInPandas" in plan(bc)
+    assert "ArrowEvalPython" in plan(bc)
     monkeypatch.setattr(cuckoo, "BROADCAST_LIMIT_BYTES", 1)
     exact = cuckoo.semi_join_via_filter(big, small, "k", "sk")
-    assert "MapInPandas" not in plan(exact)
+    assert "ArrowEvalPython" not in plan(exact)
     want = [(k, f"user-{k}", k % 7) for k in range(0, 694, 7)]
     rows = [sorted(tuple(r) for r in df.collect()) for df in (exact, bc)]
     assert rows == [want, want]
@@ -446,7 +521,7 @@ def test_semi_join_via_filter_two_eager_jobs(spark, monkeypatch):
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         assert len(jobs) <= 2, (limit, jobs)
-        assert ("MapInPandas" in out._jdf.queryExecution().executedPlan().toString()) == (
+        assert ("ArrowEvalPython" in out._jdf.queryExecution().executedPlan().toString()) == (
             limit > 1
         )
         assert out.count() == 150

@@ -3,6 +3,8 @@ vs exact aggregates, distributed Bloom probe (SURVEY.md §5 items 3-4)."""
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -126,6 +128,24 @@ def test_bloom_probe_distributed(spark, docs):
     held = docs.select((F.col("doc_id") + 5_000_000).cast("string").alias("key"))
     fp = bloom_probe(held, bf, "key").filter(F.col("member")).count()
     assert fp <= max(2, 0.01 * docs.count())
+
+
+def test_bloom_probe_ships_only_the_hash(spark, arrow_udf_inputs):
+    """The Bloom probe is one ArrowEvalPython node whose UDF receives the
+    in-plan xxhash64 of the key and nothing else; a wide payload column
+    never reaches the Python worker, and a select that drops it prunes it."""
+    wide = spark.range(2000).selectExpr(
+        "CAST(id AS STRING) AS k", "repeat(CAST(id AS STRING), 500) AS payload"
+    )
+    bf = build_sketch(wide, SketchSpec("bloom-ship", "bloom", optimal_params(2000, 0.01)), "k")
+    probed = bloom_probe(wide, bf, "k")
+    assert probed.columns == ["k", "payload", "member"]
+    plan, udfs = arrow_udf_inputs(probed.select("member"))
+    assert plan.count("ArrowEvalPython") == 1 and "MapInPandas" not in plan
+    [[h]] = udfs
+    assert re.fullmatch(r"xxhash64\((?:k#\d+|cast\(id#\d+L as string\)), 42\)", h), h
+    assert "payload" not in plan
+    assert probed.where(~F.col("member")).count() == 0
 
 
 def test_kmv_vs_exact_distinct(spark, events):

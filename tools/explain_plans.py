@@ -573,13 +573,13 @@ def main():
         checks=[
             # the map-side probe must be a CHILD of the survivors' distinct
             # exchange — parents print first, so the (doc_id, span_h)
-            # exchange must appear BEFORE the probe MapInPandas in the
+            # exchange must appear BEFORE the probe's ArrowEvalPython in the
             # plan string (review finding r4: it used to probe after the
             # distinct, shuffling the full span set)
             ("probe runs before any (doc_id, span_h) shuffle",
              lambda p: (lambda m, i: m is not None and i != -1 and m.start() < i)(
                  re.search(r"Exchange hashpartitioning\(doc_id#\d+L, span_h#\d+", p),
-                 p.find("MapInPandas run"),
+                 p.find("ArrowEvalPython [member("),
              )),
             # VERDICT r4 #3: span STRINGS must never shuffle — every
             # exchange is keyed on the 8-byte xxhash64 (span_h), and no
@@ -1035,10 +1035,10 @@ def main():
         semi_join_via_filter(ev_k, cust_k, "user_id", "c_custkey"),
         checks=[
             # the big side is filtered through the broadcast filter blobs in
-            # a MapInPandas under the join (plan prints root-first, so the
-            # probe appears below it) — survivors only reach the exchange
-            ("big side probed via MapInPandas under the join",
-             lambda p: "MapInPandas" in p.split("LeftSemi")[-1]),
+            # an ArrowEvalPython under the join (plan prints root-first, so
+            # the probe appears below it) — survivors only reach the exchange
+            ("big side probed via ArrowEvalPython under the join",
+             lambda p: "ArrowEvalPython" in p.split("LeftSemi")[-1]),
             ("semi join is an equi-join",
              lambda p: "LeftSemi" in p),
             ("no cartesian/nested loop",
