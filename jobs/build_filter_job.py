@@ -11,16 +11,18 @@ The north-rule execution mode::
         --capacity 1000000000 --fpsize 2 --num-shards 4096 \
         --checkpoint /data/ckpt/urls
 
-Without --checkpoint the filter comes from the one-shuffle direct build
-(``build_filter_direct``). With --checkpoint it comes from the resumable
-partials build (``checkpointed_build``): per-partition partials persist
-under the checkpoint directory, and a re-run rebuilds only the missing
-ones. Both give byte-identical filters, so the report's ``digest`` is the
+Both modes run one build: each input partition makes map-side
+canonical-pair partials (~12 B/key shuffled), and one per-(name, shard)
+stage merges them. Without --checkpoint that is ``build_filter_direct``.
+With --checkpoint it is ``checkpointed_build``, which also persists the
+partials under the checkpoint directory, so a re-run rebuilds only the
+missing ones. The bytes are the same, so the report's ``digest`` is the
 same either way.
 
-On a cluster, --num-shards should be sized to the reduce parallelism and
---capacity to the expected distinct keys (the per-shard byte size is
-derived via the reference's size_for: +20% pad → ≤80% fill).
+The merge stage runs in ``spark.sql.shuffle.partitions`` tasks, each
+merging whole shards, so use at least that many shards to keep every merge
+task busy. Size --capacity to the expected distinct keys (the per-shard
+byte size is derived via the reference's size_for: +20% pad → ≤80% fill).
 """
 
 from __future__ import annotations

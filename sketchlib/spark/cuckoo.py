@@ -4,14 +4,14 @@ The Spark-native re-expression of the reference's command surface
 (``/root/reference/src/redis-cuckoofilter.zig:157-183``; SURVEY.md §2.1):
 
 - ``CF.INIT``   → :class:`CuckooSpec` (declares name/size/fpsize/shards)
-- ``CF.ADD``    → :func:`build_partials` — per-input-partition partials of
-  packed canonical pairs via Arrow-batched ``mapInPandas`` (NO shuffle for
-  the build; no per-row Python: each Arrow batch is one vectorized kernel
-  call)
-- merge (distributed-only need) → :func:`merge_partials` — one lazy
-  ``applyInPandas`` stage per (name, shard) shuffling only the partial
-  blobs; canonical merge makes the result byte-identical for ANY input
-  partitioning or build path (SURVEY.md §2.3)
+- ``CF.ADD``    → :func:`build_filter_direct`, which is
+  ``merge_partials(build_partials(...))``: :func:`build_partials` makes
+  per-input-partition partials of packed canonical pairs via Arrow-batched
+  ``mapInPandas`` (NO shuffle for the build; no per-row Python: each Arrow
+  batch is one vectorized kernel call), and :func:`merge_partials` merges
+  them in one lazy ``applyInPandas`` stage per (name, shard) shuffling only
+  the partial blobs; canonical merge makes the result byte-identical for
+  ANY input partitioning or fold path (SURVEY.md §2.3)
 - ``CF.CHECK``  → :func:`probe` — merged blobs broadcast once per executor,
   probes answered by a scalar-iterator ``pandas_udf`` that receives only
   the (hash, fp) longs, one vectorized kernel call per Arrow batch
@@ -119,6 +119,19 @@ def _hash_exprs(key) -> tuple[Column, Column]:
     return F.xxhash64(key), F.xxhash64(key, F.lit(_FP_SALT))
 
 
+def _probe_items(key) -> tuple[Column, Column, Column]:
+    """CF.CHECK's NULL rule, for both probes: ``(h, f, ok)``, the (hash, fp)
+    longs a row is answered with, never NULL, and whether it holds an item.
+    A keyed row always does (a NULL key hashes like any never-inserted
+    key). With ``key=None`` a row whose prepared hash or fp is NULL does
+    not and answers False; its longs stand in 0, because one NULL turns a
+    pandas batch's longs into lossy float64."""
+    if key is not None:
+        return (*_hash_exprs(key), F.lit(True))
+    h, f = (F.col(c).cast("long") for c in (HASH_COL, FP_COL))
+    return F.coalesce(h, F.lit(0)), F.coalesce(f, F.lit(0)), h.isNotNull() & f.isNotNull()
+
+
 def with_hash_fp(df: DataFrame, key) -> DataFrame:
     """Derive (HASH_COL, FP_COL) from a key column with two independent
     in-plan xxhash64 expressions — one Catalyst projection, JVM-side,
@@ -174,16 +187,6 @@ def split_by_shard(
     return out
 
 
-def _gather(batches, num_shards: int):
-    """A task's Arrow batches of (hash, fp) longs as unsigned per-shard
-    arrays, in :func:`split_by_shard` order."""
-    pairs = [_u64_pairs(pdf) for pdf in batches if not pdf.empty]
-    if not pairs:
-        return {}
-    h, f = (np.concatenate(a) for a in zip(*pairs))
-    return split_by_shard(h, f, num_shards)
-
-
 # ----------------------------------------------------------------- build
 
 
@@ -212,8 +215,9 @@ def build_partials(
         pid = TaskContext.get().partitionId()
         if skip_pids and pid in skip_pids:
             return
-        shards = _gather(batches, num_shards)
-        if shards:
+        pairs = [_u64_pairs(pdf) for pdf in batches if not pdf.empty]
+        if pairs:
+            shards = split_by_shard(*(np.concatenate(a) for a in zip(*pairs)), num_shards)
             rows = [len(h) for h, _ in shards.values()]
             yield pd.DataFrame(
                 {
@@ -308,39 +312,23 @@ def merge_partials(partials: DataFrame) -> DataFrame:
 
     One stage suffices: pair partials cost ~12 B/key, so a shard's task
     holds exactly the pairs it re-inserts, and pre-merging them in earlier
-    stages would bound nothing. The result is lazy, like
-    :func:`build_filter_direct`: a caller that acts on it more than once
-    materializes it first.
+    stages would bound nothing. The result is lazy: a caller that acts on
+    it more than once materializes it first.
     """
     return partials.groupBy("name", "shard").applyInPandas(_merge_group, PARTIAL_SCHEMA)
 
 
 def build_filter_direct(df: DataFrame, spec: CuckooSpec, key=None) -> DataFrame:
-    """One-shuffle build: repartition the (hash, fp) pairs by shard and build
-    each shard's FINAL filter in a single reduce pass — no partial blobs, no
-    merge stage, no extra jobs.
+    """CF.ADD in one call: ``merge_partials(build_partials(df, spec, key))``.
 
-    Byte-identical to ``merge_partials(build_partials(...))``: the reducer
-    runs the same :func:`merged_row` over the shard's canonical pairs, so
-    both paths produce the same blob (tested). Shuffle volume is
-    16 B/row — same order as the pairs-partials path — but in ONE stage.
-
-    Trade-off vs the partials path: fastest wall-clock and fewest stages,
-    but no per-input-partition partials for checkpoint/resume; use
-    ``checkpointed_build`` when resumability matters.
+    Each input partition builds map-side packed canonical-pair partials
+    (~12 B/key shuffled, no kicking), and one ``applyInPandas`` stage per
+    (name, shard) merges them, so this is the build every path shares by
+    construction. The result is lazy: a caller that acts on it more than
+    once materializes it first. ``pipeline.checkpointed_build`` differs
+    only by persisting the partials for resume.
     """
-    name, size, fpsize, num_shards = spec.name, spec.size, spec.fpsize, spec.num_shards
-    sel = _hash_fp(df, key).repartition(num_shards, _shard_col(HASH_COL, num_shards))
-
-    def reduce_shards(batches):
-        out = []
-        for s, (h, f) in _gather(batches, num_shards).items():
-            pairs = pack_pairs(*canonical_pairs(h, f, size, fpsize), size, fpsize)
-            out.append(merged_row(name, s, [pairs], len(h), len(h), 0))
-        if out:
-            yield pd.DataFrame(out)
-
-    return sel.mapInPandas(reduce_shards, PARTIAL_SCHEMA)
+    return merge_partials(build_partials(df, spec, key))
 
 
 # ------------------------------------------------------------ driver view
@@ -456,29 +444,24 @@ def probe(df: DataFrame, sharded: ShardedCuckoo, key=None, result_col: str = "me
         for h, f in batches:
             yield pd.Series(filters.contains_arrays(i64_to_u64(h), i64_to_u64(f)))
 
-    udf = F.pandas_udf(member, T.BooleanType())
-    if key is None:
-        # one NULL would turn its whole Arrow batch into lossy float64, so
-        # the UDF sees no NULL; a NULL prepared hash, never built, is absent
-        h, f = (F.col(c).cast("long") for c in (HASH_COL, FP_COL))
-        hit = F.when(
-            h.isNotNull() & f.isNotNull(), udf(F.coalesce(h, F.lit(0)), F.coalesce(f, F.lit(0)))
-        ).otherwise(False)
-    else:
-        hit = udf(*_hash_exprs(key))
+    h, f, ok = _probe_items(key)
+    hit = F.when(ok, F.pandas_udf(member, T.BooleanType())(h, f)).otherwise(False)
     return df.select("*", hit.alias(result_col))
 
 
-def _by_shard(merged: DataFrame, items: DataFrame, spec: CuckooSpec, fn, schema) -> DataFrame:
-    """Co-group each shard's row of ``merged`` with the ``items`` (rows with
-    HASH_COL) that hash to it, one task per shard, and return the frames of
-    ``fn(key, rows, items)``, which gets the shard's merged rows (at most
-    one) and items as pandas frames. Items are keyed by the private
-    ``__cf_name`` / ``__cf_shard`` columns, so a caller's own columns pass
-    through. An empty side arrives as a zero-row frame with its columns."""
-    keyed = items.withColumn("__cf_name", F.lit(spec.name)).withColumn(
-        "__cf_shard", _shard_col(HASH_COL, spec.num_shards)
-    )
+def _by_shard(
+    merged: DataFrame, items: DataFrame, spec: CuckooSpec, fn, schema, shard: Column | None = None
+) -> DataFrame:
+    """Co-group each shard's row of ``merged`` with the ``items`` that
+    ``shard`` routes to it (by default HASH_COL's shard), one task per
+    shard, and return the frames of ``fn(key, rows, items)``, which gets
+    the shard's merged rows (at most one) and items as pandas frames. Items
+    are keyed by the private ``__cf_name`` / ``__cf_shard`` columns, so a
+    caller's own columns pass through; items routed to a NULL shard meet
+    no blob. An empty side arrives as a zero-row frame with its columns."""
+    if shard is None:
+        shard = _shard_col(HASH_COL, spec.num_shards)
+    keyed = items.withColumns({"__cf_name": F.lit(spec.name), "__cf_shard": shard})
     return (
         merged.groupby("name", "shard")
         .cogroup(keyed.groupby("__cf_name", "__cf_shard"))
@@ -498,18 +481,20 @@ def probe_cogrouped(merged: DataFrame, probes: DataFrame, spec: CuckooSpec, key=
     missing-shard DEVIATION documented there: probes co-grouped with no
     blob return "definitely absent" rather than erroring like the
     reference's missing-key check (src/redis-cuckoofilter.zig:243-247)."""
-    if key is not None:
-        probes = with_hash_fp(probes, key)
-    keep = [c for c in probes.columns if key is None or c not in (HASH_COL, FP_COL)]
-    out_schema = T.StructType(
-        [probes.schema[c] for c in keep] + [T.StructField("member", T.BooleanType())]
-    )
+    keep = probes.columns
+    out_schema = T.StructType(probes.schema.fields + [T.StructField("member", T.BooleanType())])
+    h, f, ok = _probe_items(key)
+    # a row without an item joins no shard, so no group mixes NULLs into
+    # the longs of rows that have one
+    items = probes.select("*", h.alias("__cf_h"), f.alias("__cf_f"))
 
     def run(_, left, right):
         filters = ShardedCuckoo.from_rows(left.to_dict("records"), spec)
-        return right[keep].assign(member=filters.contains_arrays(*_u64_pairs(right)))
+        hf = (i64_to_u64(right[c].to_numpy()) for c in ("__cf_h", "__cf_f"))
+        return right[keep].assign(member=filters.contains_arrays(*hf))
 
-    return _by_shard(merged, probes, spec, run, out_schema)
+    shard = F.when(ok, _shard_col("__cf_h", spec.num_shards))
+    return _by_shard(merged, items, spec, run, out_schema, shard)
 
 
 def probe_auto(

@@ -128,9 +128,10 @@ def test_pairs_and_dense_partials_merge_identically(spark, docs):
         assert nbytes <= 12 * rows + 64
 
 
-def test_direct_build_matches_tree_merge(spark, docs):
-    """One-shuffle direct build must be byte-identical to the partials+tree
-    path: same sorted canonical pairs, same merge seed."""
+def test_direct_build_bytes_ignore_partitioning(spark, docs):
+    """The direct build over ``repartition(7)`` gives the same bytes as the
+    partials merge over the file's own partitioning: same sorted canonical
+    pairs, same merge seed."""
     spec = CuckooSpec(name="direct", size=size_for(2000, 2), fpsize=2, num_shards=4)
     key = F.col("doc_id").cast("string")
     tree = merge_partials(build_partials(docs, spec, key=key))
@@ -162,6 +163,32 @@ def test_merge_partials_is_lazy(spark, docs):
         sc.setLocalProperty("spark.jobGroup.id", None)
     direct = ShardedCuckoo.from_df(build_filter_direct(docs, spec, key=key), spec)
     assert lazy.digest() == direct.digest()
+
+
+def test_build_plans(spark, docs):
+    """The build reads only the key column, drops NULL keys at the scan and
+    shuffles nothing; the direct build is that build under one merge stage:
+    one exchange on (name, shard) between the map-side partials and the
+    per-shard merge, and no reducer over shuffled rows."""
+    spec = CuckooSpec(name="plans", size=size_for(2000, 2), fpsize=2, num_shards=4)
+    key = F.col("doc_id").cast("string")
+
+    def plan(df):
+        p = df._jdf.queryExecution().executedPlan().toString()
+        assert "ReadSchema: struct<doc_id:bigint>" in p
+        assert "PushedFilters: [IsNotNull(doc_id)]" in p
+        return p
+
+    assert "Exchange" not in plan(build_partials(docs, spec, key=key))
+    lines = plan(build_filter_direct(docs, spec, key=key)).splitlines()
+
+    def at(node):
+        [i] = [i for i, line in enumerate(lines) if node in line]
+        return i
+
+    exchange = at("Exchange hashpartitioning")
+    assert re.search(r"Exchange hashpartitioning\(name#\d+, shard#\d+, \d+\)", lines[exchange])
+    assert at("FlatMapGroupsInPandas [name#") < exchange < at("MapInPandas")
 
 
 def test_remove_nonmember_poisons_shard(spark, docs):
@@ -254,6 +281,27 @@ def test_probe_null_prepared_hash_is_absent(spark):
     cog = probe_cogrouped(merged, probes.where(k % 10 != 7), spec)
     cog = {r["k"]: r["member"] for r in cog.collect()}
     assert cog == {i: got[i] for i in range(300) if i % 10 != 7}
+
+
+def test_probe_cogrouped_null_prepared_fp_is_absent(spark):
+    """With key=None, a probe row whose prepared fp is NULL answers False
+    and leaves its shard's other answers exact (in the shard's pandas frame
+    one NULL would turn every fp long into float64 and drop its low bits,
+    so inserted keys would answer False). The caller's HASH_COL and FP_COL
+    come back unchanged."""
+    from sketchlib.spark.cuckoo import FP_COL, HASH_COL, probe_cogrouped
+
+    spec = CuckooSpec(name="nullfp", size=size_for(400, 2), fpsize=2)
+    built = spark.range(300, numPartitions=1).select(
+        F.col("id").alias("k"),
+        F.xxhash64("id").alias(HASH_COL),
+        F.xxhash64("id", F.lit("fp")).alias(FP_COL),
+    )
+    merged = build_filter_direct(built, spec).cache()
+    probes = built.withColumn(FP_COL, F.when(F.col("k") != 5, F.col(FP_COL)))
+    rows = probe_cogrouped(merged, probes, spec).collect()
+    assert {r["k"]: r["member"] for r in rows} == {i: i != 5 for i in range(300)}
+    assert sorted(tuple(r)[:3] for r in rows) == sorted(tuple(r) for r in probes.collect())
 
 
 def test_probe_cogrouped_equals_broadcast(spark, docs):

@@ -29,9 +29,7 @@ def main():
     from sketchlib.spark.cuckoo import (
         CuckooSpec,
         build_filter_direct,
-        build_partials,
         fix_toofull_shards,
-        merge_partials,
         probe_cogrouped,
     )
     from sketchlib.spark.session import get_spark
@@ -40,7 +38,6 @@ def main():
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     spec = CuckooSpec("plans", size_for(2000, 2), 2, num_shards=4)
     key = F.col("doc_id").cast("string")
-    null_keys_pushed = "PushedFilters: [IsNotNull(doc_id)]"
 
     def show(title, df, checks=()):
         plan = df._jdf.queryExecution().executedPlan().toString()
@@ -51,30 +48,6 @@ def main():
             print(f"  CHECK {name}: {'PASS' if ok else 'FAIL'}")
             assert ok, f"plan check failed: {title} / {name}"
 
-    show(
-        "cuckoo build partials (shuffle-free, key-pruned scan)",
-        build_partials(docs, spec, key=key),
-        checks=[
-            ("scan reads only doc_id", lambda p: "ReadSchema: struct<doc_id:bigint>" in p),
-            ("NULL keys filtered at the scan", lambda p: null_keys_pushed in p),
-            ("no exchange in build", lambda p: "Exchange" not in p),
-        ],
-    )
-    show(
-        "cuckoo direct build (single shuffle on shard)",
-        build_filter_direct(docs, spec, key=key),
-        checks=[
-            ("scan reads only doc_id", lambda p: "ReadSchema: struct<doc_id:bigint>" in p),
-            ("NULL keys filtered at the scan", lambda p: null_keys_pushed in p),
-            ("exactly one exchange", lambda p: p.count("Exchange hashpartitioning") == 1),
-        ],
-    )
-    # both partial merges are one lazy stage: a fan-in tree would add exchanges
-    show(
-        "cuckoo merge of partials (one per-shard stage)",
-        merge_partials(build_partials(docs, spec, key=key)),
-        checks=[("exactly one exchange", lambda p: p.count("Exchange hashpartitioning") == 1)],
-    )
     hll_spec = SketchSpec("plans-hll", "hll", (12,))
     show(
         "sibling sketch merge of partials (one stage, key-pruned scan)",
