@@ -3,15 +3,13 @@
 One shape for every sibling sketch (SURVEY.md §2.6 "aggregations"): build
 partials map-side with one ``mapInPandas`` pass (zero shuffle, Arrow
 batches → vectorized kernel updates) — one per input partition, or one
-per group value in each input partition for grouped sketches — then merge
-the partial blobs in one lazy ``applyInPandas`` stage keyed by sketch or
-group. Only blobs shuffle, never rows, so a hot group needs no special
-handling. A merge task holds one partial per non-empty input partition; a
-caller with very many input partitions bounds it by coalescing the input.
-Bloom/HLL/CMS/KMV merges (OR/max/add/union) are byte-deterministic under
-any order or partitioning; KLL/t-digest merges depend on fold order, so
-every merge folds a group's blobs in sorted byte order, and their bytes
-do not depend on shuffle order either.
+per group value in each input partition for grouped sketches — then fold
+them on the driver from one Arrow collect (``_fold``), with no exchange.
+The driver holds every partial at once: one per non-empty input partition
+(and group), m/8 bytes for a Bloom partial; a caller with very many input
+partitions coalesces its input. Bloom/HLL/CMS/KMV merges (OR/max/add/union)
+are byte-deterministic in any order; KLL/t-digest merges depend on fold
+order, so every merge folds a group's blobs in sorted byte order.
 
 Built-in cross-checks at query level: ``approx_count_distinct`` (Spark's
 HLL++) and ``percentile_approx`` — our sketches must agree with the exact
@@ -25,6 +23,7 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -151,42 +150,40 @@ def build_sketch_partials(df: DataFrame, spec: SketchSpec, col) -> DataFrame:
     )
 
 
-def _merge_by(df: DataFrame, spec: SketchSpec, keys: list, estimate=None) -> DataFrame:
-    """One ``applyInPandas`` stage over the string columns ``keys``: fold
-    each group's blobs into one sketch, decoding one blob at a time, and
-    emit one row per group — the keys, the merged ``sketch`` (or
-    ``estimate(sketch)`` as a double column ``estimate``) and summed
-    ``rows``."""
-    out_col, out_type = ("sketch", "binary") if estimate is None else ("estimate", "double")
-    schema = ", ".join([f"{k} string" for k in keys] + [f"{out_col} {out_type}", "rows long"])
-
-    def mrg(key, pdf):
-        # sorted: KLL and t-digest merges depend on fold order, and rows
-        # arrive in shuffle order
-        m = spec.merge_blobs(sorted(bytes(b) for b in pdf["sketch"]))
-        out = {k: [v] for k, v in zip(keys, key)}
-        out[out_col] = [m.to_bytes() if estimate is None else float(estimate(m))]
-        out["rows"] = [int(pdf["rows"].sum())]
-        return pd.DataFrame(out)
-
-    return df.groupBy(*keys).applyInPandas(mrg, schema)
+def _fold(partials: DataFrame, spec: SketchSpec, keys: list, estimate=None) -> pa.Table:
+    """One Spark job, one ``toArrow()`` of the string columns ``keys``,
+    ``sketch`` and ``rows``; then, on the driver, each group's blobs merge
+    in sorted byte order into one row — the keys, the merged ``sketch`` (or
+    ``estimate(sketch)`` as a double ``estimate``) and summed ``rows`` — of
+    an Arrow table with that explicit schema, empty for empty partials."""
+    groups = {}  # key tuple -> [blobs, rows]
+    got = partials.select(*keys, "sketch", "rows").toArrow()
+    for *key, blob, rows in zip(*(c.to_pylist() for c in got.columns)):
+        g = groups.setdefault(tuple(key), [[], 0])
+        g[0].append(blob)
+        g[1] += rows
+    out_col, out_type = ("sketch", pa.binary()) if estimate is None else ("estimate", pa.float64())
+    schema = pa.schema([(k, pa.string()) for k in keys] + [(out_col, out_type), ("rows", pa.int64())])
+    out = []
+    for key, (blobs, rows) in groups.items():
+        m = spec.merge_blobs(sorted(blobs))
+        out.append((*key, m.to_bytes() if estimate is None else float(estimate(m)), rows))
+    return pa.Table.from_pylist([dict(zip(schema.names, r)) for r in out], schema=schema)
 
 
 def merge_sketch_partials(partials: DataFrame, spec: SketchSpec) -> DataFrame:
-    """One row per (name, kind), from one lazy stage in which only the
-    blobs shuffle. The merge task holds one partial per non-empty input
-    partition; callers with very many input partitions coalesce first."""
-    return _merge_by(partials, spec, ["name", "kind"])
+    """One row per (name, kind), folded on the driver by this call's one
+    Spark job, as a local relation (acting on it starts no job). The driver
+    holds every partial blob at once (module docstring)."""
+    return partials.sparkSession.createDataFrame(_fold(partials, spec, ["name", "kind"]))
 
 
 def build_sketch(df: DataFrame, spec: SketchSpec, col):
-    """build + merge + collect: returns the kernel object on the driver."""
-    rows = merge_sketch_partials(build_sketch_partials(df, spec, col), spec).collect()
-    if not rows:
-        return spec.make(0)
-    assert len(rows) == 1
-    blob = bytes(rows[0]["sketch"])
-    return spec.merge_blobs([blob])
+    """build + fold in one Spark job: the kernel object on the driver,
+    ``spec.make(0)`` for an empty input. The driver holds every partial
+    blob at once (module docstring)."""
+    blobs = _fold(build_sketch_partials(df, spec, col), spec, []).column("sketch").to_pylist()
+    return spec.merge_blobs(blobs) if blobs else spec.make(0)
 
 
 def build_sketch_grouped(df: DataFrame, group_col: str, spec: SketchSpec, col) -> DataFrame:
@@ -195,16 +192,19 @@ def build_sketch_grouped(df: DataFrame, group_col: str, spec: SketchSpec, col) -
     rows ``(group_col, sketch, rows)`` with the group value as a string.
 
     Each input partition builds one partial per group value it holds, map
-    side, then one ``applyInPandas`` stage merges the partials per group:
-    only blobs shuffle, so a hot group's rows never converge on one task.
+    side, then ``_fold`` merges them per group on the driver in this call's
+    one Spark job, as a local relation: nothing shuffles, so a hot group's
+    rows never converge on one task.
     NULL group keys are dropped — a NULL key breaks downstream estimate
     maps; callers wanting a NULL bucket coalesce to a sentinel first.
 
     Memory: a build task holds one sketch per distinct group value in its
-    partition, so ``group_col`` must be low-cardinality. Every caller groups
-    by a handful of values: ``lang`` (documents, pages), ``event_type``
+    partition, and the driver holds groups × non-empty input partitions
+    blobs at once, so ``group_col`` must be low-cardinality. Every caller groups by a
+    handful of values: ``lang`` (documents, pages), ``event_type``
     (events)."""
-    return _merge_by(_map_partials(df, spec, col, [group_col]), spec, [group_col])
+    partials = _map_partials(df, spec, col, [group_col])
+    return df.sparkSession.createDataFrame(_fold(partials, spec, [group_col]))
 
 
 def grouped_estimates(grouped: DataFrame, spec: SketchSpec, group_col: str) -> DataFrame:
@@ -221,7 +221,7 @@ def grouped_estimates(grouped: DataFrame, spec: SketchSpec, group_col: str) -> D
             return m.approx_count_distinct()
         return m.quantile(0.5)
 
-    return _merge_by(grouped, spec, [group_col], estimate=est)
+    return grouped.sparkSession.createDataFrame(_fold(grouped, spec, [group_col], est))
 
 
 def bloom_probe(df: DataFrame, bloom: BloomFilter, key) -> DataFrame:

@@ -1,5 +1,5 @@
 """Grouped-sketch tests: per-group HLL/t-digest accuracy, a hot group,
-determinism across partitionings, one shuffle of partials only."""
+determinism across partitionings, partials folded on the driver."""
 
 from __future__ import annotations
 
@@ -7,7 +7,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from sketchlib.spark.agg import SketchSpec, build_sketch_grouped, grouped_estimates
+from sketchlib.spark.agg import SketchSpec, _map_partials, build_sketch_grouped, grouped_estimates
 
 
 @pytest.fixture(scope="module")
@@ -59,14 +59,19 @@ def test_grouped_hll_partition_invariant_bytes(spark, events, kind, params):
     )
 
 
-def test_grouped_build_shuffles_only_partials(spark, events):
-    """The grouped build plans one exchange — the per-group merge of
-    map-side partials; rows never shuffle — and each group's ``rows`` is
-    its exact count of non-NULL keys."""
+def test_grouped_build_shuffles_nothing(spark, sf_dir, events):
+    """The grouped partials read only the key and group columns and plan no
+    exchange; the merged result is a local relation (folded on the
+    driver), and each group's ``rows`` is its exact count of non-NULL
+    keys."""
     spec = SketchSpec("g-plan", "hll", (12,))
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    parts = _map_partials(docs, spec, F.col("doc_id").cast("string"), ["lang"])
+    plan = parts._jdf.queryExecution().executedPlan().toString()
+    assert "ReadSchema: struct<doc_id:bigint,lang:string>" in plan
+    assert "Exchange" not in plan, plan
     grouped = build_sketch_grouped(events, "event_type", spec, "user_id")
-    plan = grouped._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert "LocalTableScan" in grouped._jdf.queryExecution().executedPlan().toString()
     rows = {r["event_type"]: r["rows"] for r in grouped.collect()}
     exact = {
         r["event_type"]: r["count"]
@@ -76,6 +81,19 @@ def test_grouped_build_shuffles_only_partials(spark, events):
         .collect()
     }
     assert rows == exact
+
+
+def test_grouped_all_null_groups(spark, events):
+    """Every group key NULL: the grouped build and its estimates are empty
+    frames of their merged schemas."""
+    spec = SketchSpec("g-null", "hll", (12,))
+    df = events.select(F.lit(None).cast("string").alias("g"), "user_id")
+    grouped = build_sketch_grouped(df, "g", spec, "user_id")
+    assert grouped.dtypes == [("g", "string"), ("sketch", "binary"), ("rows", "bigint")]
+    assert grouped.collect() == []
+    est = grouped_estimates(grouped, spec, "g")
+    assert est.dtypes == [("g", "string"), ("estimate", "double"), ("rows", "bigint")]
+    assert est.collect() == []
 
 
 def test_grouped_skewed_group(spark):

@@ -191,6 +191,34 @@ def test_build_plans(spark, docs):
     assert at("FlatMapGroupsInPandas [name#") < exchange < at("MapInPandas")
 
 
+def test_probe_fix_and_semi_join_plans(spark, sf_dir, docs):
+    """The co-grouped probe shuffles its probe side on the private
+    (__cf_name, __cf_shard) columns, so a caller's own ``name`` passes
+    through; fix_toofull_shards works row by row with no exchange; the semi
+    join probes the big side map-side under the exact LeftSemi join, with
+    no nested loop and no cached table."""
+    from sketchlib.spark.cuckoo import fix_toofull_shards, probe_cogrouped, semi_join_via_filter
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    spec = CuckooSpec("plans", size_for(2000, 2), 2, num_shards=4)
+    key = F.col("doc_id").cast("string")
+    merged = build_filter_direct(docs, spec, key=key).localCheckpoint(eager=True)
+    probes = docs.select("doc_id", F.col("lang").alias("name"))
+    p = plan(probe_cogrouped(merged, probes, spec, key=key))
+    assert re.search(r"hashpartitioning\(__cf_name#\d+, __cf_shard#\d+", p), p
+    assert "Exchange" not in plan(fix_toofull_shards(merged))
+    events = spark.read.parquet(f"{sf_dir}/events.parquet").select("event_id", "user_id", "event_type")
+    building = spark.read.parquet(f"{sf_dir}/customer.parquet").where(F.col("c_mktsegment") == "BUILDING")
+    p = plan(semi_join_via_filter(events, building.select("c_custkey"), "user_id", "c_custkey"))
+    assert "LeftSemi" in p and "ArrowEvalPython" in p.split("LeftSemi")[-1], p
+    assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
+    # no cached key table: any cached scan is the big side's own (another
+    # module may have cached events.parquet in this session)
+    assert p.count("InMemoryTableScan") == plan(events).count("InMemoryTableScan"), p
+
+
 def test_remove_nonmember_poisons_shard(spark, docs):
     spec = CuckooSpec(name="poison", size=size_for(2000, 2), fpsize=2)
     merged = build_filter_direct(docs, spec, key=F.col("doc_id").cast("string"))

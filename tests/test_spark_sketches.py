@@ -58,25 +58,57 @@ def test_merge_partition_invariant_bytes(spark, events, kind, params, col):
     assert a == b == c
 
 
-def test_merge_sketch_partials_is_lazy(spark, events):
-    """merge_sketch_partials over checkpointed partials starts no Spark job;
-    one action on its result gives one row with the 2-partition blob."""
-    spec = SketchSpec("lazy-hll", "hll", (12,))
+def _jobs(sc, group, call):
+    """``call()``'s result and the ids of the Spark jobs it started."""
+    sc.setJobGroup(group, group)
+    try:
+        out = call()
+        return out, list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_merge_sketch_partials_runs_one_job(spark, events):
+    """merge_sketch_partials over checkpointed partials starts exactly one
+    Spark job inside its call (the partials' collect) and returns a local
+    relation: collecting it starts none and gives one row with the
+    2-partition blob. build_sketch is that same one job."""
+    spec = SketchSpec("one-job-hll", "hll", (12,))
     parts = build_sketch_partials(events.repartition(7), spec, "user_id")
     parts = parts.localCheckpoint(eager=True)
     sc = spark.sparkContext
-    group = "test_merge_sketch_partials_is_lazy"
-    sc.setJobGroup(group, "merge_sketch_partials")
-    try:
-        merged = merge_sketch_partials(parts, spec)
-        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
-        rows = merged.collect()
-        assert list(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    merged, jobs = _jobs(sc, "merge_sketch_partials_call", lambda: merge_sketch_partials(parts, spec))
+    assert len(jobs) == 1, jobs
+    rows, jobs = _jobs(sc, "merge_sketch_partials_collect", merged.collect)
+    assert jobs == []
+    assert "LocalTableScan" in merged._jdf.queryExecution().executedPlan().toString()
     assert len(rows) == 1
     ref = merge_sketch_partials(build_sketch_partials(events.repartition(2), spec, "user_id"), spec)
     assert bytes(rows[0]["sketch"]) == bytes(ref.first()["sketch"])
+    hll, jobs = _jobs(sc, "build_sketch", lambda: build_sketch(events, spec, "user_id"))
+    assert len(jobs) == 1, jobs
+    assert hll.to_bytes() == bytes(rows[0]["sketch"])
+
+
+def test_partials_plan(spark, docs):
+    """The partial build reads only the key column and shuffles nothing."""
+    spec = SketchSpec("plans-hll", "hll", (12,))
+    parts = build_sketch_partials(docs, spec, F.col("doc_id").cast("string"))
+    plan = parts._jdf.queryExecution().executedPlan().toString()
+    assert "ReadSchema: struct<doc_id:bigint>" in plan
+    assert "Exchange" not in plan, plan
+
+
+def test_empty_inputs(spark, events):
+    """An empty input builds ``spec.make(0)``, and zero partials merge to an
+    empty frame of the merged schema."""
+    spec = SketchSpec("empty-kll", "kll", (64,))
+    none = events.where(F.lit(False))
+    assert build_sketch(none, spec, "value").to_bytes() == spec.make(0).to_bytes()
+    merged = merge_sketch_partials(build_sketch_partials(none, spec, "value"), spec)
+    assert merged.dtypes == [("name", "string"), ("kind", "string"), ("sketch", "binary"),
+                             ("rows", "bigint")]
+    assert merged.collect() == []
 
 
 def test_hll_vs_exact_distinct(spark, events):

@@ -1,7 +1,8 @@
-"""Physical-plan evidence: prints `.explain("formatted")` for the core
-operators and checks the scale-critical properties (column pruning to the
-key, broadcast where expected, no stray shuffles). A failed check raises, so
-the script exits non-zero.
+"""Physical-plan evidence: prints `.explain("formatted")` for the webtext
+operators and queries and checks the scale-critical properties (column
+pruning, broadcast where expected, no stray shuffles). A failed check
+raises, so the script exits non-zero. The sketch and cuckoo plan checks
+run in the Tier-1 tests beside their code.
 
 Usage: python tools/explain_plans.py [sf_dir]
 """
@@ -19,25 +20,10 @@ def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     from pyspark.sql import functions as F
 
-    from sketchlib.kernels.cuckoo import size_for
-    from sketchlib.spark.agg import (
-        SketchSpec,
-        build_sketch_grouped,
-        build_sketch_partials,
-        merge_sketch_partials,
-    )
-    from sketchlib.spark.cuckoo import (
-        CuckooSpec,
-        build_filter_direct,
-        fix_toofull_shards,
-        probe_cogrouped,
-    )
     from sketchlib.spark.session import get_spark
 
     spark = get_spark(app="plans", cores=4, shuffle_partitions=8)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    spec = CuckooSpec("plans", size_for(2000, 2), 2, num_shards=4)
-    key = F.col("doc_id").cast("string")
 
     def show(title, df, checks=()):
         plan = df._jdf.queryExecution().executedPlan().toString()
@@ -47,43 +33,6 @@ def main():
             ok = pred(plan)
             print(f"  CHECK {name}: {'PASS' if ok else 'FAIL'}")
             assert ok, f"plan check failed: {title} / {name}"
-
-    hll_spec = SketchSpec("plans-hll", "hll", (12,))
-    show(
-        "sibling sketch merge of partials (one stage, key-pruned scan)",
-        merge_sketch_partials(build_sketch_partials(docs, hll_spec, key), hll_spec),
-        checks=[
-            ("scan reads only doc_id", lambda p: "ReadSchema: struct<doc_id:bigint>" in p),
-            ("exactly one exchange", lambda p: p.count("Exchange hashpartitioning") == 1),
-        ],
-    )
-    # a caller's own `name` column passes through: the probe side is
-    # keyed by the private co-group columns, not by `name` and `shard`
-    merged = build_filter_direct(docs, spec, key=key).localCheckpoint(eager=True)
-    show(
-        "cuckoo co-grouped probe (private shard key, caller columns intact)",
-        probe_cogrouped(merged, docs.select("doc_id", F.col("lang").alias("name")), spec, key=key),
-        checks=[
-            ("probe side hash-partitioned on __cf_name, __cf_shard",
-             lambda p: re.search(r"hashpartitioning\(__cf_name#\d+, __cf_shard#\d+", p)
-             is not None),
-        ],
-    )
-    show(
-        "cuckoo fix_toofull_shards (row by row, shuffle-free)",
-        fix_toofull_shards(merged),
-        checks=[("no exchange", lambda p: "Exchange" not in p)],
-    )
-    # grouped partials build map-side, so only their blobs shuffle
-    show(
-        "grouped sibling sketch (map-side partials, one merge stage)",
-        build_sketch_grouped(docs, "lang", hll_spec, key),
-        checks=[
-            ("scan reads only doc_id and lang",
-             lambda p: "ReadSchema: struct<doc_id:bigint,lang:string>" in p),
-            ("exactly one exchange", lambda p: p.count("Exchange hashpartitioning") == 1),
-        ],
-    )
 
     import sketchlib.queries as q
 
@@ -995,29 +944,6 @@ def main():
             ("no forced broadcast anywhere", lambda p: "BroadcastExchange" not in p),
             ("no cartesian/nested loop",
              lambda p: "CartesianProduct" not in p and "NestedLoop" not in p),
-        ],
-    )
-    from sketchlib.spark.cuckoo import semi_join_via_filter
-
-    ev_k = ev.select("event_id", "user_id", "event_type")
-    cust_k = spark.read.parquet(f"{sf_dir}/customer.parquet").filter(
-        F.col("c_mktsegment") == "BUILDING"
-    ).select("c_custkey")
-    show(
-        "sketch semi join (runtime filter: probe big map-side, then exact join)",
-        semi_join_via_filter(ev_k, cust_k, "user_id", "c_custkey"),
-        checks=[
-            # the big side is filtered through the broadcast filter blobs in
-            # an ArrowEvalPython under the join (plan prints root-first, so
-            # the probe appears below it) — survivors only reach the exchange
-            ("big side probed via ArrowEvalPython under the join",
-             lambda p: "ArrowEvalPython" in p.split("LeftSemi")[-1]),
-            ("semi join is an equi-join",
-             lambda p: "LeftSemi" in p),
-            ("no cartesian/nested loop",
-             lambda p: "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p),
-            # the filter is built on the driver: no cached key table
-            ("no cached table", lambda p: "InMemoryTableScan" not in p),
         ],
     )
     from sketchlib.relops import mix_sources
